@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -91,6 +92,48 @@ def test_ntile_of_matches_window_ntile(spark):
         assert {(x.id, x.t) for x in got.collect()} == {
             (x.id, x.t) for x in want.collect()
         }, (n, k)
+
+
+def test_ntile_of_exact_above_2_53(spark):
+    # past 2^53 a double quotient rounds; the floors must be exact integers
+    k = 3
+    rows = [(2**55 + 5, 2**55 + 5), (2**55, 2**55 + 5), (2**60 + 3, 2**61 + 1)]
+
+    def exact(rank, n):
+        q, m = divmod(n, k)
+        big = m * (q + 1)
+        if rank <= big:
+            return (rank - 1) // (q + 1) + 1
+        return m + (rank - big - 1) // q + 1
+
+    df = spark.createDataFrame(rows, "rank bigint, n bigint")
+    got = df.select("rank", "n", ntile_of(F.col("rank"), F.col("n"), k).alias("t"))
+    assert {(x.rank, x.n, x.t) for x in got.collect()} == {
+        (r, n, exact(r, n)) for r, n in rows
+    }
+
+
+@pytest.mark.parametrize(
+    "name", ["_mid", "_pid", "_cnt", "_coff", "_ctot", "_s0", "_soff0", "_stot0"]
+)
+def test_reserved_column_names_fail_before_any_job(spark, name):
+    df = spark.range(10).select("id", F.col("id").alias(name))
+    run = {"col": "id", "acc": "decimal(20,0)", "running": "run"}
+    calls = [
+        {"project": ["id", name], "sums": [run]},
+        {"project": ["id"], "sums": [dict(run, running=name)]},
+        {"project": ["id"], "sums": [dict(run, total=name)]},
+    ]
+    sc = spark.sparkContext
+    group = f"distrib-collision-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        for kw in calls:
+            with pytest.raises(ValueError, match=name):
+                two_level_order(df, ["id"], **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_grid_rank_matches_window_rank(spark):

@@ -1,8 +1,9 @@
 """Driver-session hostility: the correctness driver owns the SparkSession and
-its config is unknown (timezone, shuffle partitions). Every query must
-self-tune (`tune_session`) — these tests run the most timezone/partitioning-
-sensitive queries in a deliberately hostile session and still demand oracle
-hash parity.
+its config is unknown (timezone, shuffle partitions). ``register()`` wraps
+every query so each call applies ``tune_session`` first — these tests run
+the most timezone/partitioning-sensitive queries in a deliberately hostile
+session and still demand oracle hash parity, through ``REGISTRY`` and
+through a direct module-level call.
 
 (A full 114-query hostile sweep runs ad hoc; this pinned subset keeps the
 suite fast while covering each sensitivity class: timestamp extraction,
@@ -15,6 +16,7 @@ import pytest
 from pyspark.sql import SparkSession
 
 from watermill_spark.analytics.registry import REGISTRY
+from watermill_spark.analytics.tpch import q01_pricing_summary
 
 from .oracle_harness import compare, duck_connect
 
@@ -69,3 +71,12 @@ def test_sensitive_query_survives_hostile_session(hostile_spark, duck, name):
     q = REGISTRY[name]
     report = compare(q.fn(hostile_spark, SF_DIR), duck, q.oracle)
     assert report["ok"], f"{name}: {report['detail']}"
+
+
+def test_direct_module_call_tunes_hostile_session(hostile_spark, duck):
+    # entry() calls the module-level function, not REGISTRY[...].fn
+    hostile_spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    df = q01_pricing_summary(hostile_spark, SF_DIR)
+    assert hostile_spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    report = compare(df, duck, REGISTRY["q01_pricing_summary"].oracle)
+    assert report["ok"], report["detail"]

@@ -28,8 +28,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register, spread
 
@@ -301,7 +299,6 @@ _SQL_MINHASH_STAR_CTES = _SQL_MINHASH_BASE + """, stars AS (
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on full text; emit duplicate clusters."""
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     return (
         docs.groupBy(F.md5("text").alias("text_hash"))
@@ -320,7 +317,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature computation (8 hash functions over token sets)."""
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     return minhash_signatures(docs)
 
@@ -353,7 +349,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation is probabilistic, and the oracle replays the exact
     same banding).
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     sigs = minhash_signatures(docs)
     cand = lsh_candidate_pairs(sigs)
@@ -396,7 +391,6 @@ def q_dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherently quadratic when the corpus is self-similar. One shuffle for
     signatures, one for the cluster group-by — both on uniform hash keys.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     sigs = minhash_signatures(docs)
     sig_cols = [f"mh{i}" for i in range(N_HASHES)]
@@ -451,7 +445,6 @@ def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH pipeline next door (q_dedup_minhash_lsh); this is the exact
     kernel.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     # bucket width: ratio 0.9 per bucket (ln(1/0.9))
     toksets = docs.select(
@@ -540,7 +533,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``substr(h,p,1) >= '8'`` is exactly ``instr(hex, c)-1 >= 8`` on the
     lowercase-hex alphabet.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents")).filter(F.col("text").isNotNull())
     hs = F.transform(F.array_distinct(F.split("text", " ")), F.md5)
     sim = F.concat_ws(
@@ -643,7 +635,6 @@ def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
        round, nothing before the floor.
     Each round shuffles 2×|edges| label lookups on uniform keys — no skew.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     sigs = minhash_signatures(docs)
     edges = lsh_star_edges(sigs).localCheckpoint(eager=True)

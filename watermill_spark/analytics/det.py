@@ -17,8 +17,9 @@ order must not matter. Rules used by every registered query:
    are INT/LONG — explicit casts align the schema comparison).
 4. **Every ORDER BY ... LIMIT has a total-order tiebreak** (a unique key as
    the last sort column) so top-k sets are identical.
-5. **Session timezone is UTC** (see ``session.tune_session``) so timestamp
-   extraction and rendering match DuckDB's naive reading of parquet.
+5. **Session timezone is UTC** (``registry.register`` applies
+   ``session.tune_session`` before every query) so timestamp extraction
+   and rendering match DuckDB's naive reading of parquet.
 
 At 100-TB scale these choices also stay healthy: decimal sums are JVM
 codegen'd fixed-width arithmetic (no UDFs), and partial aggregation (map-side

@@ -104,13 +104,23 @@ def two_level_order(
         ``_mid`` itself). Columns referenced by ``sums`` MUST be listed
         (they feed the per-partition aggregate after the projection).
 
-    Returns the ``project`` columns plus the requested outputs.
+    Returns the ``project`` columns plus the requested outputs. Raises
+    ``ValueError`` (before any Spark job) when a carried column or a
+    ``sums`` output is named like an internal one: ``_mid _pid _cnt
+    _coff _ctot`` or ``_s{i} _soff{i} _stot{i}`` for the i-th ``sums``.
     """
     sums = list(sums or [])
     spark = df.sparkSession
     if nparts is None:
         nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
     keep = list(project) if project is not None else list(df.columns)
+    reserved = {"_mid", "_pid", "_cnt", "_coff", "_ctot"}
+    for i in range(len(sums)):
+        reserved |= {f"_s{i}", f"_soff{i}", f"_stot{i}"}
+    names = keep + [s.get(o) for s in sums for o in ("running", "total")]
+    clash = sorted(reserved.intersection(names))
+    if clash:
+        raise ValueError(f"two_level_order: {clash} collide with its internal columns")
 
     g = (
         df.repartitionByRange(nparts, *order_cols)
@@ -224,11 +234,17 @@ def ntile_of(rank: Column, n: Column, k: int) -> Column:
     total row count n: the first n % k tiles get ⌈n/k⌉ rows, the rest
     ⌊n/k⌋ — identical bucket boundaries to the window function.
     """
-    q = (n / k).cast("bigint")  # floor: n, k nonnegative
+    q = _div(n, F.lit(k))
     m = n - q * k
     big = m * (q + 1)
     return (
-        F.when(rank <= big, ((rank - 1) / (q + 1)).cast("bigint") + 1)
-        .otherwise(m + ((rank - big - 1) / q).cast("bigint") + 1)
+        F.when(rank <= big, _div(rank - 1, q + 1) + 1)
+        .otherwise(m + _div(rank - big - 1, q) + 1)
         .cast("bigint")
     )
+
+
+def _div(a: Column, b: Column) -> Column:
+    """Exact integer floor of a / b for nonnegative operands (SQL ``div``);
+    a double quotient would round once the operands pass 2^53."""
+    return F.call_function("div", a, b)

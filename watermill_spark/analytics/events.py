@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec, dsum
 from .registry import load, register
 
@@ -47,7 +45,6 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation collapses before the shuffle. The streaming twin uses
     `window()` + watermark with identical semantics.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
@@ -72,7 +69,6 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON payload decode (get_json_object ≙ CQRS JSON marshaler,
     reference `components/cqrs/marshaler_json.go:15-53`)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     return ev.select((k % 10).cast("bigint").alias("k_mod"), k.alias("_k")).groupBy(
@@ -105,7 +101,6 @@ def q_events_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     is `dropDuplicatesWithinWatermark` whose state store holds only keys
     inside the watermark horizon.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
@@ -147,7 +142,6 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per user is bounded by their own event count; skewed users are split by
     AQE skew handling on the shuffle.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -195,7 +189,6 @@ def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion or per-row lookup. The oracle uses DuckDB's LATERAL for the
     same semantics (ties broken toward the latest event_id).
     """
-    tune_session(spark)
     from watermill_spark.operators import asof_join
 
     ev = load(spark, sf_dir, "events")
@@ -241,7 +234,6 @@ def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO equi-key one would bucket time into 5-minute bins and join on the bin
     (bin-and-verify) — that variant lives in operators/range_join.py.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     errors = ev.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"), F.col("user_id").alias("e_user"), F.col("ts").alias("error_ts")
@@ -284,7 +276,6 @@ def q_events_delayed_holdback(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliverable at a given poll instant (fixed here so the oracle is
     deterministic). The streaming twin re-scans on a processing-time trigger.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     delayed = F.col("ts") + F.expr("INTERVAL 1 HOUR")
     poll = F.lit("2024-01-03 00:00:00").cast("timestamp")
@@ -316,7 +307,6 @@ def q_events_fanin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: union is a zero-shuffle narrow op; Kafka-native form is
     `option("subscribe", "t1,t2")`.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     cols = ["event_id", "user_id", "event_type", "ts"]
     clicks = ev.filter(F.col("event_type") == "click").select(*cols)
@@ -350,7 +340,6 @@ def q_events_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared result is the round-trip — wrap with to_json, unwrap with
     get_json_object — whose extracted fields are engine-independent.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     env = F.to_json(
         F.struct(
@@ -390,7 +379,6 @@ def q_events_poison_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single pass stamps each row ok/poisoned + reason; the streaming sink
     writes the two partitions to main/DLQ topics in one foreachBatch.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     is_err = F.col("event_type") == "error"
     bad_val = F.col("value").isNull() | (F.col("value") < 0)
@@ -426,7 +414,6 @@ def q_events_requeue_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in for accumulated metadata) and incremented — the metadata-column
     arithmetic is the operator; topic movement is a sink concern.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     prior = F.get_json_object("props", "$.k").cast("bigint") % 3
     return ev.filter(F.col("event_type") == "error").select(

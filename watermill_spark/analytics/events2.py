@@ -6,8 +6,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dsum
 from .registry import load, register
 
@@ -40,7 +38,6 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each stage is aggregate-then-join (min timestamp per user shrinks
     before joining the next stage) — at scale every stage is one shuffle on
     user_id, and stages share that partitioning."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     su = (
         ev.filter(F.col("event_type") == "signup")
@@ -90,7 +87,6 @@ def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: per-user event-type counts as columns. Spark's pivot with an
     explicit value list is a single-pass conditional aggregation (same plan
     as the CASE form — no second scan to discover values)."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     pivoted = (
         ev.groupBy("user_id").pivot("event_type", EVENT_TYPES).agg(F.count(F.lit(1)))
@@ -118,7 +114,6 @@ def q_events_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Events have unique timestamps per user in this data; a production
     deployment adds event_id to the ordering struct for total order."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"),
@@ -144,7 +139,6 @@ def q_events_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_events_gap_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead(): time-to-next-event and next-event-type per user."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "click")
     )
@@ -178,7 +172,6 @@ def q_events_gap_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_value_by_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup over (event_type, day): per-day subtotals, per-type totals,
     grand total in one pass."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     day_epoch = F.unix_timestamp(F.date_trunc("day", "ts")).alias("day_epoch")
     return (

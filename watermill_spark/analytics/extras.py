@@ -13,11 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import DEC, bcount, dec, dsum, sql_dsum
+from .det import bcount, dec, dsum, sql_dsum
 from .registry import load, register, spread
-from .similarity import K, N_QUERIES, cosine, _dot
+from .similarity import K, N_QUERIES, _dot
 
 
 @register(
@@ -37,7 +35,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: like rollup, Spark expands the sets before the shuffle and keeps
     partial aggregation — one data pass, three output granularities.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("ws_orders_gs")
     return spark.sql(
@@ -69,7 +66,6 @@ def q_window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partitioned by mktsegment (bounded cardinality) — each partition
     sorts independently after one shuffle; no global sort.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return cust.select(
@@ -103,7 +99,6 @@ def q_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows). Scale: window assignment is a narrow flatMap; the aggregation
     shuffles on (window_start) — uniform keys, partial agg applies.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     win = F.window("ts", "2 hours", "1 hour")
     return (
@@ -141,7 +136,6 @@ def q_events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     with AQE the join reuses the shuffle; months arithmetic is integer
     (engine-independent, unlike months_between's fractional semantics).
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # single scan (r6): the cohort map and the activity join each
     # re-scanned events; both derive exactly from ONE deduped
@@ -186,7 +180,6 @@ def q_salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is registered because at 100 TB with high-cardinality *values* per
     key (e.g. collect-type aggs) map-side combine stops being enough.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     phase1 = (
         ev.withColumn("salt", F.pmod(F.col("event_id"), F.lit(16)))
@@ -220,7 +213,6 @@ def q_doc_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, which is how edit distance stays tractable in a 100-TB scan (full
     document-pair levenshtein is never the plan — prefix/blocked only).
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
@@ -283,7 +275,6 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only the probed cell (~1/n_cells of the corpus per query).
     n_probe>1 is the same plan with the top-n cells exploded.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -369,7 +360,6 @@ def q_events_approx_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     through its metrics layer; this is the Spark-side analog with a
     cross-engine-checkable estimator.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     m = 4096
     bucket = ((F.col("user_id") * F.lit(2654435761)) % F.lit(4294967296)) % F.lit(m)

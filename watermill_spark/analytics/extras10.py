@@ -10,8 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dsum
 from .registry import load, register, spread
 
@@ -30,7 +28,6 @@ def q_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Activity heatmap: events by ISO day-of-week × hour (the ops-dashboard
     matrix). ≤168 output rows regardless of input size — partial aggregation
     collapses everything map-side."""
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(
         (F.weekday("ts") + 1).cast("bigint").alias("dow"),
@@ -59,7 +56,6 @@ def q_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_interorder_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchase cadence: per-customer stats over day-gaps between consecutive
     orders (lag + datediff; integer day arithmetic, exact mean as Σ/n)."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = orders.select(
@@ -92,7 +88,6 @@ def q_interorder_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_order_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-size distribution: histogram of lines-per-order with shares —
     two stacked aggregations, the second over |distinct sizes| rows only."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the total and the histogram both re-derived
     # the rollup (2 lineitem scans in the plan); the order-domain grid
@@ -141,7 +136,6 @@ def q_price_outliers_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fences are |brands| rows broadcast back onto the scan; the data
     pass is a map-side filtered count.
     """
-    tune_session(spark)
     part = load(spark, sf_dir, "part")
     part.createOrReplaceTempView("part_iqr_v")
     fences = spark.sql("""
@@ -190,7 +184,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie behavior is unspecified). One uniform-key shuffle, same as min-id
     dedup.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     scored = docs.select(
         "doc_id",
@@ -238,7 +231,6 @@ def q_user_power_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE division of exact integer sums. Tiebreak user_id keeps decile
     boundaries engine-identical.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the total and the decile rank both
     # re-derived the rollup (2 events scans in the plan); the
@@ -288,7 +280,6 @@ def q_join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     key value) — same single shuffle as the equi join, no fallback to
     nested-loop.
     """
-    tune_session(spark)
     c = load(spark, sf_dir, "customer").select(
         F.nullif(F.col("c_nationkey"), F.lit(3)).alias("ck")
     )
@@ -334,7 +325,6 @@ def q_events_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-user max — no self-join against time buckets, no explode. Integer
     counts only.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -371,7 +361,6 @@ def q_order_status_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one orderkey-co-partitioned join; the cross-tab output is
     |statuses|² rows.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     return (

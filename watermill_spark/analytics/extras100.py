@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -123,7 +121,6 @@ def q_bayes_ab_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of data size (whitelisted BNLJ/cartesian by design).
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
@@ -312,7 +309,6 @@ def q_poisson_glm_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata relation). §2.B [NS]. Oracle: 4-step chained-CTE Newton
     (the q_cox_ph_newton pattern) — full value-hash parity.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         bcount("n_events"),
@@ -448,7 +444,6 @@ def q_james_stein(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup to |nations| rows, then constant-size math
     with 1-row pooled stats broadcast (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation")
     x = cust.join(

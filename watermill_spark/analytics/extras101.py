@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -86,7 +84,6 @@ def q_fairness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined cell rollup; the min/max windows run over the ≤|segments|
     grid. 1-row threshold broadcast is a whitelisted BNLJ. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     cust = load(spark, sf_dir, "customer")
     mu = ev.agg(
@@ -180,7 +177,6 @@ def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_supplier_audience_overlap); brand totals broadcast back onto the
     ≤|brands|² pair grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     part = load(spark, sf_dir, "part")
@@ -284,7 +280,6 @@ def q_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid with the 64-row global-dim table joined back (broadcast).
     §2.B [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     ex = emb.select(
         "label", F.posexplode("embedding").alias("dim0", "xf")

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -94,7 +92,6 @@ def q_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rest is constant-size (1-row dims broadcast — whitelisted
     BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     part = load(spark, sf_dir, "part")
@@ -229,7 +226,6 @@ def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile cuts replace NTILE, same downstream math); everything
     after is a ≤3-category grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the three rating windows each re-derived
     # this per-user rollup from the events scan (9 scans in the plan)
@@ -323,7 +319,6 @@ def q_dirichlet_multinomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined type rollup (≤|types| rows) with the
     1-row total broadcast (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the total and the posterior pass both
     # re-derived the counts (2 events scans in the plan); the ≤|types|

@@ -21,9 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import dec
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -84,7 +82,6 @@ def q_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on part — lag stencil shares a single sorted frame; the
     final per-part row is a filter, not a second aggregation. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     demand = li.groupBy(
         F.col("l_partkey").alias("pk"), F.col("l_shipdate").alias("d")
@@ -186,7 +183,6 @@ def q_sortino_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day rollup (map-side combine) to ≤|days| rows; all windows
     are single-partition over that bounded grid only. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(dec("value")).cast("double").alias("rev")
@@ -277,7 +273,6 @@ def q_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a single conditional-aggregation scan — no shuffle beyond the
     1-row global agg. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wk = F.dayofweek("ts").isin(1, 7)  # Sun=1, Sat=7 ≙ isodow 6/7
     pur = F.col("event_type") == "purchase"

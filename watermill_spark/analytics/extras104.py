@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -83,7 +81,6 @@ def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-able join to orders, one map-side-combined rollup, then a
     2-row aggregation — no shuffle beyond the join and group-by. §2.B [NS].
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     base = (
@@ -203,7 +200,6 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     |classes|×10 via a broadcast of the 10-row global distribution; the
     EMD window partitions by class over 10 rows each. §2.B [NS].
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     b = F.least(
         F.greatest(F.floor(F.col("c_acctbal") / 1200) + 1, F.lit(0)),
@@ -307,7 +303,6 @@ def q_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     user: linear in users, never quadratic in the catalog. One shuffle
     for ratings, one keyed self-join, one pair rollup. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     part = load(spark, sf_dir, "part")

@@ -18,9 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register, spread
 from .similarity import _SQL_BUCKET, lsh_bucket
 
@@ -80,7 +78,6 @@ def q_semdedup_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size), never all-pairs; one groupBy for representatives, one
     equi-join on bucket, one rollup. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -187,7 +184,6 @@ def q_data_mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; everything after is constant-size window math. §2.B [NS] /
     LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.groupBy("source").agg(
         F.sum(F.size(F.split("text", " ")).cast("bigint"))
@@ -291,7 +287,6 @@ def q_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_token_freq), one per-doc rollup, one per-source rollup — all
     map-side combinable; no UDFs. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     pertok = docs.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("tok")

@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -126,7 +124,6 @@ def q_cox_ph_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
     that bounded grid — iteration cost is 4×(one aggregation), never a
     per-user driver loop. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     first_pur = F.unix_micros(
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts")))
@@ -283,7 +280,6 @@ def q_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     star-join rollup; each round is a grid-sized join-aggregate (a
     broadcast at any scale). §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     orders = load(spark, sf_dir, "orders")
@@ -436,7 +432,6 @@ def q_dfa_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-factor explode of that bounded grid; per-box fits are
     map-side-combinable closed forms, no iteration. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(dec("value")).cast("double").alias("rev")

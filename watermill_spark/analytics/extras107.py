@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -159,7 +157,6 @@ def q_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin, not the fact table; nothing here touches events twice.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wk = F.dayofweek("ts").isin(1, 7)
     pur = F.col("event_type") == "purchase"
@@ -289,7 +286,6 @@ def q_shapiro_francia(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day rollup; ranking and moments run over the bounded
     ≤|days| grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     # checkpointed once (r6): the row count and the ordered scoring both
     # re-derived the rollup (2 events scans in the plan); the
@@ -377,7 +373,6 @@ def q_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     span that is ~3.7k² ≈ 13M lightweight rows, one shuffle. For
     per-key curves the same shape partitions by key. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         (F.sum(dec("value")).cast("double") / F.count(F.lit(1))).alias("y")

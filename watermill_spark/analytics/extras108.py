@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -81,7 +79,6 @@ def q_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SF-invariant after the first rollup); at a 10-year span that is
     ~3.7k × 7 rows per pass. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(dec("value")).cast("double").alias("y")
@@ -174,7 +171,6 @@ def q_boxcox_lambda_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation); no shuffle beyond the 5-group rollup.
     §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     lams = spark.range(1).select(
         F.explode(F.array(*[F.lit(l) for l in _BOXCOX_LAMBDAS])).alias("lam")
@@ -291,7 +287,6 @@ def q_ransac_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scoring is one conditional aggregation per candidate (constant
     fan-out), never per-candidate scans. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_quantity").cast("double").alias("x"),

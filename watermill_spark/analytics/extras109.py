@@ -16,9 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register, spread
 
 _D15 = "decimal(38,15)"
@@ -108,7 +106,6 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     |vocab|²-bounded edges; each round is a grid-sized join-aggregate.
     §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     # r7 (guide §3.3, the 13c q_bigram_perplexity pattern): adjacent-token
     # pairs came from a TOKEN-VOLUME self-join on (doc_id, pos+1) — the
@@ -263,7 +260,6 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast decision belongs to AQE's measured sizes, not a hint
     (the r5 broadcast-audit rule). §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     base = docs.select(
         (F.col("doc_id") % 2 == 0).alias("is_train"),
@@ -344,7 +340,6 @@ def q_prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix hash doubles as a cheap blocking key for deeper near-dup
     passes. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     ts = F.split("text", " ")
     pre = docs.filter(F.size(ts) >= _PREFIX_TOKENS).select(

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -58,7 +56,6 @@ def q_events_ewma8(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame so there is no extra pass per term. Reference analog: watermill has
     no analytics ops — this is §2.B [NS] surface (BASELINE.json north star).
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     num = F.col("value")
@@ -116,7 +113,6 @@ def q_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan shape, skew-proofed. Here the nation graph is tiny, so every
     join after the edge aggregation broadcasts. §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -196,7 +192,6 @@ def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates. Scale: two windows over the same (user_id, start) sort — one
     shuffle + one sort total, islands collapse map-side. §2.B [NS] surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & (F.col("value") > 0)
     )
@@ -270,7 +265,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant swaps the full sort for approx_percentile pre-bracketing, then
     sorts only the bracket — same final compare. §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("bigint")
     w_cum = (
@@ -334,7 +328,6 @@ def q_hourly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour; the lag + moments run on that tiny series (single partition is
     fine — it IS small after aggregation, at any input scale). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hr")).agg(bcount("n"))
     w = Window.orderBy("hr")
@@ -406,7 +399,6 @@ def q_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     size — everything after the first map-side-combined groupBy is
     effectively free. §2.B [NS] surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the chi2 pass and the dof aggregate both
     # re-derived the counts (2 events scans in the plan); the

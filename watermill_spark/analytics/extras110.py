@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -97,7 +95,6 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day rollup, then constant-size closed forms over the
     bounded day grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("d"))
@@ -242,7 +239,6 @@ def q_transfer_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded hour grid, and an 8-row histogram — the fact table is
     touched once. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
@@ -360,7 +356,6 @@ def q_lad_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPILLS instead of OOMing). The loss pass is a plain map-side-combined
     sum, never buffered. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_quantity").cast("double").alias("x"),

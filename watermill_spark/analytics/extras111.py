@@ -14,13 +14,11 @@ q_data_mixture_allocation).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .det import bcount
+from .distrib import two_level_order
 from .registry import load, register, spread
 
 _D15 = "decimal(38,15)"
@@ -80,7 +78,6 @@ def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (array_slice on the token array) stays a narrow map whenever a
     downstream encoder consumes it. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     n_tok = F.size(F.split("text", " ")).cast("bigint")
     meta = docs.select(
@@ -197,7 +194,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment; the token text itself is never shuffled. §2.B [NS] /
     LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     d = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tok")
@@ -284,7 +280,6 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one explode + one per-lang rollup (map-side combinable);
     no joins. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select(
         "lang", F.explode(F.split("text", " ")).alias("tok")

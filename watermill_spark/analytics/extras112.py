@@ -17,11 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
-from .similarity import _SQL_BUCKET, _SQL_COSINE, N_QUERIES, _dot, cosine, lsh_bucket
+from .similarity import _SQL_BUCKET, _SQL_COSINE, N_QUERIES, _dot, lsh_bucket
 
 _D15 = "decimal(38,15)"
 _NDCG_K = 10
@@ -91,7 +89,6 @@ def q_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (deliberate, query-bounded) brute-force pass — per query, not
     per corpus pair. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -208,7 +205,6 @@ def q_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, two ntile windows over it, a 9-cell
     grid — fact table touched once. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         bcount("n_ev"),
@@ -303,7 +299,6 @@ def q_rank_biased_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one star-join rollup to the year×brand grid; the rank join is
     grid-sized. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     part = load(spark, sf_dir, "part")

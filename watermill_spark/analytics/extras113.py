@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras107 import phi_inv_col, phi_inv_sql
 from .registry import load, register
@@ -87,7 +85,6 @@ def q_safety_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-brand moment aggregation — the 1-row span broadcast is the only
     non-equi piece. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     span = li.agg(
@@ -173,7 +170,6 @@ def q_pert_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one conditional rollup to (mode, delay) — bounded support —
     then constant-size grids. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     delays = (
@@ -284,7 +280,6 @@ def q_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one day rollup; everything else is constant-size. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("d"))

@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -96,7 +94,6 @@ def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, one per-arm moment pass with the 2-row
     means broadcast back. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy(
         "user_id", (F.col("user_id") % 2 == 1).alias("is_b")
@@ -201,7 +198,6 @@ def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, one ntile window per arm (both
     partition-parallel), a 10-row join. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy(
         "user_id", (F.col("user_id") % 2 == 1).alias("is_b")
@@ -286,7 +282,6 @@ def q_evalue_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     e-process runs as a streaming stateful aggregation (the increment is
     associative in log space). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     seq = ev.select(
         "ts",

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -94,7 +92,6 @@ def q_adstock_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day rollup, one lag window over the bounded day grid,
     one moment aggregation. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
@@ -187,7 +184,6 @@ def q_join_cardinality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two keyed left-join rollups (the natural shuffle) collapsing
     to bounded (relation, k) histograms. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     cust = load(spark, sf_dir, "customer")
@@ -310,7 +306,6 @@ def q_competing_risks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, windows over the bounded hour grid.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.unix_micros(F.min("ts")).alias("t0"),

@@ -17,10 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import grid_rank_of
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -70,7 +68,6 @@ def q_siegel_repeated_medians(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SF-invariant, same argument as q_theil_sen_trend / isotonic);
     per-day medians partition by day. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("d"))
@@ -155,7 +152,6 @@ def q_sessionization_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation — the sweep adds NO extra shuffles over a
     single sessionize. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -244,7 +240,6 @@ def q_cuzick_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one global ranking window (the same sort q_mannwhitney_u
     pays) and one aggregation. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     grp = (
         F.when(F.hour("ts") < 8, 0).when(F.hour("ts") < 16, 1).otherwise(2)

@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -86,7 +84,6 @@ def q_iv_wald_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, one 2-row arm aggregation with means
     broadcast back for the deviation pass. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wk = F.dayofweek("ts").isin(1, 7)
     per_user = ev.groupBy("user_id").agg(
@@ -216,7 +213,6 @@ def q_oaxaca_blinder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-user rollup, one 2-group moment pass. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wk = F.dayofweek("ts").isin(1, 7)
     per_user = ev.groupBy("user_id").agg(
@@ -315,7 +311,6 @@ def q_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one star-join rollup to the brand×year grid; ranking windows
     partition by brand over ≤|years| rows. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     part = load(spark, sf_dir, "part")

@@ -19,9 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register, spread
 from .similarity import _plane_sign
 
@@ -77,7 +75,6 @@ def q_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     |dims| rows regardless of corpus size. §2.B [NS] / LLM-pipeline
     surface.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
@@ -164,7 +161,6 @@ def q_matryoshka_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation itself is a narrow slice. §2.B [NS] / LLM-pipeline
     surface.
     """
-    tune_session(spark)
     from .similarity import cosine
 
     emb = spread(load(spark, sf_dir, "embeddings")).select(
@@ -321,7 +317,6 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     on tiny keys; no pairwise anything. §2.B [NS] / LLM-pipeline
     surface.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )

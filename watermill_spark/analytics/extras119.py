@@ -17,9 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -86,7 +84,6 @@ def q_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded hour grid. In streaming this is the q_events_sliding_window
     shape with two widths. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
@@ -178,7 +175,6 @@ def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one group rollup, one deviation pass with the k-row means
     broadcast, then a k-row aggregate. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     # single scan (r6): the group means and the deviation pass each
     # re-scanned events; both derive exactly from ONE (group, value)
@@ -291,7 +287,6 @@ def q_moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one global median (single sort), one conditional rollup per
     group with the 1-row median broadcast. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     obs = ev.select(F.col("event_type").alias("grp"), F.col("value").alias("v"))
     gm = obs.agg(F.median("v").alias("gmed"))

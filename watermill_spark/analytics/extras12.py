@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import DEC, bcount, dec, dsum, sql_dsum
 from .registry import load, register
 
@@ -59,7 +57,6 @@ def q_snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shuffle on the same key, so the full outer join co-partitions with
     no extra exchange. §2.B [NS] surface — watermill has no analytics ops.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
 
     def snap(cutoff: str) -> DataFrame:
@@ -116,7 +113,6 @@ def q_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ≤ years×12 rows after the first map-side-combined aggregate;
     the window is free. §2.B [NS] surface.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     m = orders.groupBy(
         F.year("o_orderdate").cast("bigint").alias("yr"),
@@ -179,7 +175,6 @@ def q_ab_conversion_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-user conversion is one map-side-combined groupBy; everything
     downstream operates on a 2-row table. §2.B [NS] surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     u = ev.groupBy("user_id", (F.col("user_id") % 2).alias("cohort")).agg(
         F.max(
@@ -256,7 +251,6 @@ def q_brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere, and the pair fan-out is capped at C(7,2) per order. Per-brand
     counts come off the same sets and broadcast back. §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     sets = (
@@ -323,7 +317,6 @@ def q_value_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map-side-combined groupBy with a handful of output rows per
     type. §2.B [NS] surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & (F.col("value") >= 1.0)
     )

@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .det import bcount
+from .distrib import two_level_order
 from .registry import load, register, spread
 
 _D15 = "decimal(38,15)"
@@ -92,7 +90,6 @@ def q_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, one global ordered window (same sort
     class as q_decile_lift), a 10-row output. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         bcount("n_ev"),
@@ -202,7 +199,6 @@ def q_dedup_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup where shards arrive separately. §2.B [NS] / LLM-pipeline
     surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     # checkpointed once (r6): the shard-local and the direct global
     # aggregation each re-scanned documents and re-ran the full-text md5
@@ -302,7 +298,6 @@ def q_group_sequential_looks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one ordered window pass + a 4-row rollup. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     n = ev.count()
     # r7 (guide §2.5): look assignment needed a single-task row_number

@@ -19,9 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register, spread
 
 _D15 = "decimal(38,15)"
@@ -113,7 +111,6 @@ def q_rouge1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks); scoring explodes only candidate pairs' tokens — never the
     corpus cross product. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     ts = F.split("text", " ")
     pre = docs.filter(F.size(ts) >= 8).select(
@@ -234,7 +231,6 @@ def q_embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, one member→centroid scoring pass (linear), and a
     |labels|² centroid grid. §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     from .similarity import cosine
 
     from .similarity import _dot
@@ -354,7 +350,6 @@ def q_doc_length_lognormal_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map + moments, one global sort for the ECDF (the
     KS shape of q_ks_hash_uniformity). §2.B [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     x = docs.filter(F.col("n_chars") > 0).select(
         "doc_id", F.log(F.col("n_chars").cast("double")).alias("lx")

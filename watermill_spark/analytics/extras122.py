@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -97,7 +95,6 @@ def q_gehan_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-user rollup, one bounded-grid window pass. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     first_pur = F.unix_micros(
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts")))
@@ -195,7 +192,6 @@ def q_mean_excess_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass over events fanned ×5 (map-side combinable). §2.B
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     th = spark.range(1).select(
         F.explode(F.array(*[F.lit(u) for u in _ME_THRESH])).alias("u")
@@ -301,7 +297,6 @@ def q_walkforward_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     expanding refit costs nothing extra — cumulative sums ARE the
     refit), then a 10-row scoring join. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("d"))

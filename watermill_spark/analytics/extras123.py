@@ -17,9 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -93,7 +91,6 @@ def q_model_selection_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, one O(max k) factorial table (bounded by
     the busiest user, not the corpus), one scoring join. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     y = ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -215,7 +212,6 @@ def q_bayes_factor_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one conditional aggregation + an O(n)-row factorial table
     (single window pass). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     cells = ev.agg(
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -332,7 +328,6 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user rollup, one ntile window, two tiny joins.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         bcount("n_ev"),

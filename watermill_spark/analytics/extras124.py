@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -71,7 +69,6 @@ def q_p_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one day rollup + 1-row centerline broadcast. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
@@ -163,7 +160,6 @@ def q_rule_metrics_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair join keys on customer (≤25 brands per user — the
     q_slope_one bound); support tables broadcast. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     part = load(spark, sf_dir, "part")
@@ -268,7 +264,6 @@ def q_turning_points_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day rollup + one lag/lead window over the bounded grid.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(dec("value")).cast("double").alias("y")

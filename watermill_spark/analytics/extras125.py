@@ -14,10 +14,8 @@ shingles sharpen near-dup contrast at the cost of recall.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from watermill_spark.session import tune_session
 
 from .dedup import (
     _SQL_MINHASH_CTES_SAMPLED,
@@ -25,7 +23,7 @@ from .dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
 )
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register, spread
 
 _D15 = "decimal(38,15)"
@@ -98,7 +96,6 @@ def q_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     only the grading does, and grading samples. §2.B [NS] /
     LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = diagnostic_doc_sample(spread(load(spark, sf_dir, "documents")))
     # checkpointed once (r6): cand + both signature sides + both tokenset
     # sides re-derived the sample scan and the 8-hash map per reference
@@ -211,7 +208,6 @@ def q_data_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     same narrow map a writer would partition by. §2.B [NS] /
     LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     digit = (
         F.instr(
@@ -309,7 +305,6 @@ def q_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join); shingling is a narrow per-row transform ×3. §2.B [NS] /
     LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     ts = F.split("text", " ")
     # checkpointed once (r6): both candidate-join sides re-scanned

@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .distrib import two_level_order
 from .registry import load, register
@@ -135,7 +133,6 @@ def q_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: three moment passes over the bounded day grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("d"))
@@ -227,7 +224,6 @@ def q_goldfeld_quandt(spark: SparkSession, sf_dir: str) -> DataFrame:
     session's shuffle-partition setting (a deployment knob, not a core
     count). §2.B [NS], guide §2.5.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # r7: the ad-hoc zipWithIndex scaffold moved to the shared
     # distrib.two_level_order helper (same mid/offset-grid mechanics,
@@ -320,7 +316,6 @@ def q_buishand_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day rollup + one window pass over the bounded grid.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(dec("value")).cast("double").alias("y")

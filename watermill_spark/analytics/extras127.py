@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .extras121 import phi_cdf_col, phi_cdf_sql
 from .registry import load, register
 
@@ -129,7 +127,6 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: day rollup + one rank pass over the bounded day grid; 1-row
     result. §2.B [NS].
     """
-    tune_session(spark)
     zs = _daily_z(spark, sf_dir)
     u = phi_cdf_col(F.col("z"))
     e = (2.0 * F.col("i") - 1.0) / (2.0 * F.col("n"))
@@ -201,7 +198,6 @@ def q_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-stable past ~10⁵ rows — at 100 TB run it on a deterministic hash
     sample, the same contract as q_ad_uniformity). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     u = ev.select(
         (
@@ -275,7 +271,6 @@ def q_anderson_darling_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical shape to q_cramer_von_mises — day rollup + bounded
     rank pass, 1-row result. §2.B [NS].
     """
-    tune_session(spark)
     zs = _daily_z(spark, sf_dir)
     p = F.least(
         F.greatest(phi_cdf_col(F.col("z")), F.lit(1e-12)), F.lit(1.0 - 1e-12)

@@ -24,8 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import dec
 from .registry import load, register
 
@@ -90,7 +88,6 @@ def q_kalman_local_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one distributed agg pass; O(#days) sequential tail. §2.B [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
 
     def kalman(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -217,7 +214,6 @@ def q_holt_winters_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to q_holt_linear — one distributed agg, O(#days)
     sequential tail over the bounded grid. §2.B [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
 
     def hw(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -323,7 +319,6 @@ def q_garch_volatility_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one distributed agg; O(#days) tail. §2.B [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
 
     def garch(pdf: pd.DataFrame) -> pd.DataFrame:

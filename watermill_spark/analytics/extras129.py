@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -130,7 +128,6 @@ def q_dagostino_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the bounded day grid); the transform chain is 1-row math. §2.B
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the mean and the central-moment pass both
     # re-derived the rollup (2 lineitem scans in the plan); the
@@ -322,7 +319,6 @@ def q_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses first); the unpartitioned window is over that grid only.
     §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -461,7 +457,6 @@ def q_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop over that bounded grid only (whitelisted), never the fact table.
     At ≥1e9 rows per cell, cast the cnt³ sums to DECIMAL(38,0). §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     v = li.join(orders, li.l_orderkey == orders.o_orderkey).select(

@@ -13,10 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec, dsum
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register, spread
 
 _WEEK_US = 7 * 86_400_000_000  # 7 days in microseconds
@@ -66,7 +64,6 @@ def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes stay two map-side-combined aggregations with one broadcast join —
     no large shuffle at any point. §2.B [NS] training-pipeline surface.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     ex = emb.select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "x")
@@ -135,7 +132,6 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window + one groupBy, both on user_id (single shuffle); the
     final stats run on the small converted-users aggregate. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
     marked = ev.select(
@@ -197,7 +193,6 @@ def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a single window shuffle on user_id followed by a tiny per-channel
     aggregate; no joins. §2.B [NS] surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -266,7 +261,6 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: degree is one groupBy over the edge endpoints; the histogram is a
     second tiny aggregate. §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -329,7 +323,6 @@ def q_gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     zipWithIndex decomposition); the Σ(i·x) form is chosen precisely because
     it only needs ranks, not pairwise differences. §2.B [NS] surface.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(F.sum(dec("o_totalprice")).alias("x"))
     # r7 (guide §2.5): the two-pass distributed rank the docstring promised

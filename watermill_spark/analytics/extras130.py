@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register, spread
 
@@ -96,7 +94,6 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5 first 5 hex chars) — the model stays broadcastable. LLM-pipeline
     surface, SCALE.md §"Dedup / similarity".
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
@@ -201,7 +198,6 @@ def q_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the document grain — repartition by lang range at 100 TB). §2.B
     [NS] / LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
@@ -294,7 +290,6 @@ def q_code_detection_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: narrow per-row map + one low-cardinality groupBy — no
     shuffles beyond the ≤|sources| aggregation. LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents")).filter(F.length("text") > 0)
     sym_ratio = (
         (

@@ -24,8 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import dec
 from .extras47 import _spark_hexval8, _sql_hexval8
 from .registry import load, register, spread
@@ -110,7 +108,6 @@ def q_binary_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_knn_bruteforce (whitelisted); production keeps only the bit stage +
     25-candidate re-rank. LLM-pipeline / similarity surface.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     bits = emb.select(
         "vec_id",
@@ -245,7 +242,6 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three distinct+bottom-k passes (per-partition WindowGroupLimit
     keeps k rows per task); estimate math is 1-row. §2.B sketches [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
 
     # single scan (r6): the three bottom-k passes (clickers, purchasers,
@@ -376,7 +372,6 @@ def q_hmm_forward_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one distributed agg collapses facts to the day grid; the
     O(#days) DP runs on the bounded grid in one applyInPandas. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -119,7 +117,6 @@ def q_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q_prefix_dup_groups key); only candidate pairs' n-grams explode —
     never the corpus cross product. LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     ts = F.split("text", " ")
     pre = docs.filter(F.size(ts) >= 8).select(
@@ -298,7 +295,6 @@ def q_generalized_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitelisted). Rounds are fixed at 3 — the plan does not grow with
     data. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the bounded day grid is re-derived by every
     # reference in the 3 unrolled rounds (3 refs/round, chained) — the
@@ -436,7 +432,6 @@ def q_l_diversity_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one groupBy(QI, sensitive) with map-side combine, then per-QI
     window/rollup on the bounded class table. §2.B [NS] privacy surface.
     """
-    tune_session(spark)
     c = load(spark, sf_dir, "customer")
     sens = c.groupBy(
         "c_nationkey",

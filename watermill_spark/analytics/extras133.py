@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras47 import _spark_hexval8, _sql_hexval8
 from .registry import load, register
@@ -70,7 +68,6 @@ def q_weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     that keys are comparable across partitions means no coordination
     beyond one k-row shuffle. §2.B sampling [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     u = (
         _spark_hexval8(
@@ -175,7 +172,6 @@ def q_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast cross onto that bounded grid (whitelisted BNLJ); per-slope
     windows partition by k. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the OLS seed and the 21-slope residual
     # sweep both re-derived the rollup (2 lineitem scans in the plan);
@@ -324,7 +320,6 @@ def q_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined pass to the ≤25-nation grid; ranking /
     step-up windows run on that grid. §2.B [NS].
     """
-    tune_session(spark)
     c = load(spark, sf_dir, "customer")
     m = c.groupBy("c_nationkey").agg(
         bcount("n"),

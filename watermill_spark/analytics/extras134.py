@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -102,7 +100,6 @@ def q_permutation_test_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast cross onto the bounded grid (whitelisted), B fixed at
     200 — never the fact table. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         F.date_trunc("day", "l_shipdate").cast("date").alias("d"),
@@ -235,7 +232,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     with map-side combine; the novelty join is per-language equi-join of
     the two distinct sets. LLM-pipeline surface.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     ts = F.split("text", " ")
     pre = docs.filter(F.size(ts) >= 2).select(
@@ -396,7 +392,6 @@ def q_fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    tune_session(spark)
     c = (
         load(spark, sf_dir, "customer")
         .select(

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -88,7 +86,6 @@ def q_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-season pair join is over that bounded grid only (whitelisted).
     §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.year("l_shipdate").cast("bigint").alias("yr"),
@@ -221,7 +218,6 @@ def q_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window partitions by region/nation over that bounded grid.
     §2.B rollup family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
@@ -392,7 +388,6 @@ def q_causal_impact_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring broadcast the 1-row model back onto the bounded grid
     (whitelisted). §2.B causal family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("d"))

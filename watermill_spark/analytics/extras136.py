@@ -27,8 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -130,7 +128,6 @@ def q_benford_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to the 9 digit rows is a whitelisted 1-row broadcast. §2.B
     aggregation family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
     p = (
         F.when(F.col("o_totalprice") >= 1000000, 1000000.0)
@@ -232,7 +229,6 @@ def q_cusum_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows run on that bounded, SF-invariant grid. §2.B window/quality
     -control family [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
     mm = _moments(daily)
     z = daily.crossJoin(F.broadcast(mm)).select(
@@ -317,7 +313,6 @@ def q_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one distributed agg pass; the Python boundary sees O(#days)
     rows. §2.B window/quality-control family [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
     mm = _moments(daily)
     grid = daily.crossJoin(F.broadcast(mm.select("mu", "sd")))

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .distrib import two_level_order
 from .registry import load, register
@@ -82,7 +80,6 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts — at 100 TB use range-partitioned sort; the per-row work stays
     O(1)). §2.B window family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     mx = o.agg(F.max(F.col("o_orderdate").cast("date")).alias("maxd"))
     rfm = (
@@ -218,7 +215,6 @@ def q_abc_xyz_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ABC-XYZ join is part-keyed. §2.B window/aggregation family
     [NS], guide §2.5.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # NOT merged into one scan (r7, measured): the (part, month) grid is
     # nearly fact-sized at TPC-H-like distributions (~30 lineitems per
@@ -336,7 +332,6 @@ def q_cohort_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ~84-row month dimension (broadcast). §2.B aggregation family
     [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     om = (
         o.select(

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -85,7 +83,6 @@ def q_edit_distance_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 64-char head cap bounds per-pair cost at O(13·64) cells. §2.B
     join family + dedup mandate [NS].
     """
-    tune_session(spark)
     S = 32  # salt chunks: max-block pairs per task ~ (4.5k)^2/S at sf5
     d = (
         load(spark, sf_dir, "documents")
@@ -200,7 +197,6 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     sublinear); the regression reads 200 rows. §2.B aggregation family
     + text-analysis mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = (
         docs.select(
@@ -295,7 +291,6 @@ def q_functional_dependency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     unions same-table candidates into a single pass). §2.B aggregation
     family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")

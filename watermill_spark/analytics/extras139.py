@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -90,7 +88,6 @@ def q_ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-grid self-equi-join — never the fact table. §2.B window
     family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(
@@ -208,7 +205,6 @@ def q_dow_effect_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row Monday-reference broadcasts onto the 7 rows are whitelisted
     1-row aggregates. §2.B aggregation family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -311,7 +307,6 @@ def q_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is an equi-join on that bounded grid. §2.B aggregation/drift
     family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & (F.col("value") > 0)
     )

@@ -14,9 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import DEC, RATE, bcount, dec
+from .det import RATE, bcount, dec
 from .registry import load, register
 
 
@@ -72,7 +70,6 @@ def q_proration_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame
     l_orderkey — the whole allocate-rank-reconcile pipeline is one shuffle
     plus a broadcast-able totals join. §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     w = li.select(
@@ -144,7 +141,6 @@ def q_order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg per order on the fact table, a co-partitioned join on the
     order key, then a 4-row aggregate. §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     comp = li.groupBy("l_orderkey").agg(
@@ -207,7 +203,6 @@ def q_dupe_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered by hash (same uniform-key discipline as the dedup family).
     §2.B [NS] training-pipeline surface.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     sh = docs.groupBy("source", F.md5("text").alias("h")).agg(bcount("cnt"))
     aug = sh.withColumn(
@@ -250,7 +245,6 @@ def q_benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-side-combined groupBy to ≤9 rows; the total for the share is
     a broadcast 1-row aggregate. §2.B [NS] surface.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     d = orders.select(
         F.substring(F.col("o_totalprice").cast("decimal(18,2)").cast("string"), 1, 1)
@@ -307,7 +301,6 @@ def q_event_rate_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-type counts collapse map-side; the total is a broadcast
     1-row aggregate; the CI math runs on ≤|types| rows. §2.B [NS] surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the total and the CI pass both re-derived
     # the counts (2 events scans in the plan); the ≤|types| grid

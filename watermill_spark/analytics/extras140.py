@@ -20,8 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -80,7 +78,6 @@ def q_erlang_c_staffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two count aggregates (hour-of-day histogram + distinct
     days); the recursion reads one row. §2.B queueing family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # single scan (r6): the hourly totals and the distinct-day count each
     # re-scanned events; both derive exactly from ONE (date, hour) count
@@ -181,7 +178,6 @@ def q_price_elasticity_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — two shuffles total, no joins. §2.B aggregation family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     per_part = (
         li.groupBy("l_partkey")
@@ -274,7 +270,6 @@ def q_eoq_order_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitelisted broadcast; top-10 is a sort-limit. §2.B aggregation/
     top-k family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     yrs = li.agg(
         F.countDistinct(F.year("l_shipdate")).cast("bigint").alias("ny")

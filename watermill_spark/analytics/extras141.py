@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -94,7 +92,6 @@ def q_theil_u_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded grid; one 1-row aggregate. No joins at all. §2.B forecast
     family [NS].
     """
-    tune_session(spark)
     idx = _idx(spark, sf_dir)
     w = Window.orderBy("x")
     yl = F.lag("y").over(w)
@@ -173,7 +170,6 @@ def q_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitelisted); everything downstream lives on the (tau, block)
     grid. §2.B window family [NS].
     """
-    tune_session(spark)
     idx = _idx(spark, sf_dir)
     taus = spark.createDataFrame(
         [(1,), (2,), (4,), (8,), (16,)], "tau long"
@@ -266,7 +262,6 @@ def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitelisted like the Hampel/DFA family; never the fact table
     squared. §2.B statistics family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

@@ -21,8 +21,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -115,7 +113,6 @@ def q_periodogram_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts) for a 29×days bounded expansion; one groupBy ends it.
     §2.B window family [NS].
     """
-    tune_session(spark)
     # checkpointed once (r6): the bounded day grid feeds the demeaning
     # moments and the projection pass — each re-derived the fact
     # aggregation (2 lineitem scans in the plan)
@@ -216,7 +213,6 @@ def q_recurrence_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is equi-keyed on the recurrent-pair set. §2.B statistics family
     [NS].
     """
-    tune_session(spark)
     # checkpointed once (r6): the bounded day grid feeds moments, the
     # z map, and both sides of the pair product — each reference
     # re-derived the fact aggregation (12 lineitem scans in the plan)
@@ -333,7 +329,6 @@ def q_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto parts is a whitelisted 1-row aggregate; top-10 is a
     sort-limit. §2.B statistics family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     rates = (
         li.groupBy("l_partkey")

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -72,7 +70,6 @@ def q_boilerplate_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit key for the groupBy and keep one exemplar string via min().
     §2.B aggregation family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     sents = docs.select(
         "doc_id",
@@ -156,7 +153,6 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-side probe touches |keys|×4 rows. §2.B aggregation/sketch
     family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     depths = spark.range(0, 4).select(F.col("id").cast("bigint").alias("j"))
 
@@ -263,7 +259,6 @@ def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead (δ = 2U/(nm) − 1), no pair expansion. §2.B statistics
     family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,6)"))

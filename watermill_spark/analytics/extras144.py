@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -74,7 +72,6 @@ def q_unicode_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain — no shuffle of text, only counts; the per-class scans fuse
     into one codegen stage. §2.B scalar family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
@@ -146,7 +143,6 @@ def q_html_tag_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: narrow regex maps + one groupBy to the source grain; counts
     shuffle, text never does. §2.B scalar family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     per_doc = docs.select(
         "source",
@@ -209,7 +205,6 @@ def q_url_extraction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (Heaps-sublinear); top-15 is a sort-limit. §2.B scalar
     family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     urls = docs.select(
         "doc_id",

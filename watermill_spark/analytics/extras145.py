@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras107 import phi_inv_col, phi_inv_sql
 from .registry import load, register
@@ -121,7 +119,6 @@ def q_median_absolute_pct_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the median rank window runs on the bounded grid. §2.B
     window family [NS].
     """
-    tune_session(spark)
     scored = _scored(spark, sf_dir)
     ranked = scored.select(
         "ape",
@@ -199,7 +196,6 @@ def q_forecast_bias_tracking_signal(
     Scale: one lag window + two prefix windows on the bounded day
     grid. §2.B window family [NS].
     """
-    tune_session(spark)
     scored = _scored(spark, sf_dir)
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     ts = scored.select(
@@ -263,7 +259,6 @@ def q_process_sigma_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB via bucketing) + one 1-row aggregate. §2.B aggregation
     family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     perf = li.join(o, li.l_orderkey == o.o_orderkey).select(

@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 from .text import _SQL_STOPLIST, EN_STOPWORDS
@@ -84,7 +82,6 @@ def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; no joins, text never shuffles. §2.B statistics family +
     text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     stoplist = ",".join(f"'{w}'" for w in EN_STOPWORDS)
     hits = F.expr(f"size(filter(split(text, ' '), x -> x IN ({stoplist})))")
@@ -183,7 +180,6 @@ def q_icc_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine, one 1-row aggregate. §2.B aggregation family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     meas = (
         li.groupBy("l_partkey", "l_suppkey")
@@ -295,7 +291,6 @@ def q_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; the 1-row limits broadcast back onto parts is a whitelisted
     1-row aggregate. §2.B aggregation family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     sale = (

@@ -19,8 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -110,7 +108,6 @@ def q_silver_meal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one distributed agg; the Python boundary sees O(#months)
     rows. §2.B aggregation/planning family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.date_trunc("month", "l_shipdate").cast("date").alias("ym")
@@ -215,7 +212,6 @@ def q_intermittency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row calendar count broadcast onto parts is a whitelisted
     1-row aggregate. §2.B aggregation family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     cal = li.agg(
         F.countDistinct(F.date_trunc("month", "l_shipdate"))
@@ -317,7 +313,6 @@ def q_fill_rate_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid; the moving window runs on the bounded grid. §2.B window
     family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     lines = li.join(o, li.l_orderkey == o.o_orderkey).select(

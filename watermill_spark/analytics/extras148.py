@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .distrib import two_level_order
 from .registry import load, register
@@ -88,7 +86,6 @@ def q_mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup to the day grid, one lag window, one 1-row
     aggregate — no joins. §2.B regression/forecast family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -208,7 +205,6 @@ def q_monetary_unit_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem scan instead of two). §2.B window/sampling family [NS],
     guide §2.5.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # r7: the ad-hoc two-level prefix scaffold moved to the shared
     # distrib.two_level_order helper — same range grid, same per-partition
@@ -322,7 +318,6 @@ def q_cohens_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map + one 1-row conditional aggregate — a single
     fact pass, no joins. §2.B statistics family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     lab = li.select(
         F.when(

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -67,7 +65,6 @@ def q_source_cap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources; a skewed giant source range-partitions within the key) +
     one rollup. §2.B window family + pipeline mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     ranked = docs.select(
         "source",
@@ -161,7 +158,6 @@ def q_ancova(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row pooled slope broadcast trivially (whitelisted). §2.B
     regression family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -283,7 +279,6 @@ def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map + a 7-row group rollup + one 1-row aggregate
     — a single fact pass, no joins. §2.B statistics family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     lab = li.select(
         (((F.dayofweek(F.col("l_shipdate").cast("date")) + 5) % 7) + 1)

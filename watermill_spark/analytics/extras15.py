@@ -14,10 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import grid_rank_of
 from .registry import load, register
 
 def _w_all():
@@ -81,7 +79,6 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     interface). BIGINT products hold to ~3e9 rows per side; beyond that cast
     the cumulative counts to DECIMAL(38,0). §2.B [NS] surface.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     v = orders.select(
         F.col("o_totalprice").cast("decimal(18,2)").alias("v"),
@@ -181,7 +178,6 @@ def q_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie group per million-distinct — at 100 TB cast the cube to
     DECIMAL(38,0). §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     v = li.select(
         F.col("l_quantity").cast("bigint").alias("q"),
@@ -280,7 +276,6 @@ def q_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (dimension-sized — at 100 TB this is the classic sort-based rank,
     range-partitioned by the sort key). §2.B [NS] surface.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
@@ -357,7 +352,6 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, user), then a per-type re-aggregation — uniform keys, two
     shuffles, no windows, no joins. §2.B [NS] training-pipeline surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     cu = ev.groupBy("event_type", "user_id").agg(bcount("cnt"))
     tot = F.sum("cnt").cast("double")
@@ -418,7 +412,6 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     EWMA family — everything after the hourly rollup runs on a tiny
     per-hour series where single-partition windows are free. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hr")).agg(bcount("n"))
     c = hourly.select(

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -73,7 +71,6 @@ def q_subword_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine); the 676-row-max vocabulary joins broadcast. §2.B
     aggregation family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     norm = docs.select(
         "lang",
@@ -174,7 +171,6 @@ def q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     source count (~5), never quadratic in corpus size. §2.B join
     family + dedup mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     # checkpointed once (r6): both self-join sides re-scanned documents
     # and re-ran the full-text md5 (2 scans in the plan); the deduped
@@ -235,7 +231,6 @@ def q_context_budget_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the counts (whitelisted); one rollup per budget. §2.B
     aggregation family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         F.size(F.split("text", " ")).cast("bigint").alias("n_tok")

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -107,7 +105,6 @@ def q_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     age grid; all windows run on that grid. §2.B window/survival
     family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
         F.date_trunc("month", F.min("o_orderdate")).cast("date").alias("f"),
@@ -236,7 +233,6 @@ def q_customer_lifetime_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row calendar broadcast is whitelisted. §2.B aggregation family
     [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     cal = o.agg(
@@ -339,7 +335,6 @@ def q_ses_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     270×days expansion, one groupBy per (alpha, t). §2.B forecast
     family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the forecast side and the lag side both
     # re-derived the rollup (2 lineitem scans in the plan); the

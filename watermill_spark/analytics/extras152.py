@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -118,7 +116,6 @@ def q_placebo_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 5 models share one plan instead of five sequential fits. §2.B
     causal family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("d"))
@@ -285,7 +282,6 @@ def q_difference_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row date-range broadcast (whitelisted); the 4-cell rollup pivots
     in a single aggregate. §2.B causal family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     rng = o.agg(
@@ -399,7 +395,6 @@ def q_event_study_car(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 1-row broadcasts (whitelisted); the ±5 window is 11 rows. §2.B
     window/causal family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

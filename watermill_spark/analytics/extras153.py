@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -84,7 +82,6 @@ def q_cluster_rand_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     content), marginals by rollup — never O(n²) pairs. §2.B
     aggregation family + dedup mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     parts = docs.select(
         F.md5("text").alias("a"),
@@ -167,7 +164,6 @@ def q_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 10-row reference are bounded; the mapping join broadcasts.
     §2.B window family + pipeline mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     deciled = docs.select(
         "source",
@@ -283,7 +279,6 @@ def q_westgard_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     share the same ordered bounded-grid pass; the unpivot is 5×days.
     §2.B window/quality-control family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the day grid feeds the moments and the z
     # map (and through it five windowed rules) — each reference

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .extras35 import _hexval, _sql_hexval
 from .extras9 import _PR_EDGE_SQL
@@ -124,7 +122,6 @@ def q_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge is a second 256-row max per month. §2.B sketch family
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hx = F.md5(F.col("user_id").cast("string"))
     rest = F.substring(hx, 3, 30)
@@ -257,7 +254,6 @@ def q_weighted_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     source pairs, never documents². §2.B join family + text mandate
     [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = (
         docs.select(
@@ -354,7 +350,6 @@ def q_two_hop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop-2 is one edge-keyed self-join on that bounded graph. §2.B
     join/graph family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")

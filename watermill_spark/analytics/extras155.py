@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -91,7 +89,6 @@ def q_quantile_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup + one rank window on the bounded day grid;
     the octile pivot reads 7 rows. §2.B window/statistics family [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
     ranked = daily.select(
         "y",
@@ -172,7 +169,6 @@ def q_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one prefix-max window over the bounded day grid + one
     aggregate. §2.B window family [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     dd = daily.select(
@@ -251,7 +247,6 @@ def q_kelly_criterion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lag window + one 1-row aggregate on the bounded day
     grid. §2.B window family [NS].
     """
-    tune_session(spark)
     daily = _daily(spark, sf_dir)
     chg = daily.select(
         (F.col("y") - F.lag("y").over(Window.orderBy("d"))).alias("dy")

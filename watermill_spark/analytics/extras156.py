@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras9 import _PR_EDGE_SQL
 from .registry import load, register
@@ -81,7 +79,6 @@ def q_random_walk_hitting(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized forever; per round one small join + groupBy with
     lineage kept flat by the bounded state. §2.B graph family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -202,7 +199,6 @@ def q_bcg_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row max-revenue and date-range broadcasts are whitelisted. §2.B
     aggregation family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
@@ -321,7 +317,6 @@ def q_cohort_revenue_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix window partitions by cohort on the bounded grid; the
     cohort-size join broadcasts. §2.B window family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     om = o.groupBy(
         "o_custkey",

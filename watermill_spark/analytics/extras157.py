@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .extras9 import _PR_EDGE_SQL
 from .registry import load, register
@@ -117,7 +115,6 @@ def q_ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Heaps-sublinear); scoring is three equi-joins against them. §2.B
     aggregation family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = (
         docs.select(
@@ -260,7 +257,6 @@ def q_burt_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the P·P self-join is bounded-graph quadratic. §2.B graph family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -374,7 +370,6 @@ def q_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, m) frequency-of-frequencies grain — two map-side-combined
     groupBys, no joins. §2.B aggregation family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = (
         docs.select(

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .extras9 import _PR_EDGE_SQL
 from .registry import load, register
@@ -143,7 +141,6 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     12 rounds of equi-joins on it; the one fact shuffle is the
     per-user lead window. §2.B graph/causal family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
@@ -314,7 +311,6 @@ def q_eccentricity_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance table; each round is one equi-join + min-groupBy on it.
     §2.B graph family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -435,7 +431,6 @@ def q_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     isotropy estimates sample-per-partition first. §2.B similarity
     mandate [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     comp = emb.select(
         "vec_id",

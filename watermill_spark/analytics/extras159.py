@@ -19,11 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
-from .similarity import N_QUERIES, cosine
+from .similarity import N_QUERIES
 
 _D15 = "decimal(38,15)"
 _STRIDE = 200  # centroid stride (q_knn_ivf convention)
@@ -126,7 +124,6 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded brute-force oracle over fixed queries. §2.B similarity
     mandate [NS].
     """
-    tune_session(spark)
     from .similarity import _dot
 
     emb = load(spark, sf_dir, "embeddings").select(
@@ -302,7 +299,6 @@ def q_reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .similarity import _dot
 
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     ).withColumn("nrm", F.sqrt(_dot("emb", "emb")))
@@ -435,7 +431,6 @@ def q_embedding_outlier_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine; the 64-row centroid broadcasts. §2.B similarity
     mandate [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     comp = emb.select(
         "vec_id", F.posexplode(F.col("embedding")).alias("k0", "v0")

@@ -14,9 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import DEC, RATE, bcount, dec
+from .det import RATE, bcount, dec
 from .registry import load, register
 
 
@@ -59,7 +57,6 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact medians need the second pass by definition; at 100 TB swap the
     exact median for a t-digest and it becomes one pass). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.percentile("value", 0.5).alias("med"), bcount("n")
@@ -127,7 +124,6 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank, one aggregate — no joins; the rank window and the groupBy share
     the same partitioning so AQE keeps them in one stage. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     v = F.col("o_totalprice").cast("decimal(18,2)")
     wp = Window.partitionBy("o_orderpriority")
@@ -210,7 +206,6 @@ def q_ols_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a MIN() OVER () on the ~2.4k-row daily table (no self-join, no
     driver round-trip). §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").alias("d")).agg(
         (
@@ -289,7 +284,6 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is a deliberate broadcast nested loop (whitelisted); the raw
     fact table is never self-joined. §2.B [NS] surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice") * (F.lit(1) - dec("l_discount", RATE)))
@@ -359,7 +353,6 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort sizes broadcast onto the ≤(months × ages) result; the cumsum
     window runs per cohort on that tiny grid. §2.B [NS] surface.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # single scan (r6): the cohort map (consumed twice) and the aged
     # rollup each re-scanned orders; ONE scan now builds the

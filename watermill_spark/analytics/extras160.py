@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras9 import _PR_EDGE_SQL
 from .registry import load, register
@@ -100,7 +98,6 @@ def q_percolation_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     round is a keyed equi-join + min-groupBy on it (lineage truncated
     per round). §2.B graph family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -274,7 +271,6 @@ def q_huber_regression_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + a broadcast of the 1-row fit back onto the grid
     (whitelisted). §2.B regression family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -420,7 +416,6 @@ def q_concentration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 5-row pivot with a 1-row total broadcast (whitelisted). §2.B
     window family [NS].
     """
-    tune_session(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     spend = (

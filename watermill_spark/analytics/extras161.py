@@ -20,12 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras107 import phi_inv_col, phi_inv_sql
 from .registry import load, register, spread
-from .similarity import _SQL_BUCKET, _dot, cosine, lsh_bucket
+from .similarity import _SQL_BUCKET, _dot, lsh_bucket
 
 _D15 = "decimal(38,15)"
 
@@ -77,7 +75,6 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricts candidates to ANN buckets (q_ann_lsh_hyperplane) before
     scoring. §2.B similarity mandate [NS].
     """
-    tune_session(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("emb"),
@@ -221,7 +218,6 @@ def q_hard_negative_mining_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage needs the largest bucket's vectors to fit one executor
     (17 MB at sf5; chunk rows if a bucket outgrows that).
     """
-    tune_session(spark)
     sig = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("emb"),
@@ -394,7 +390,6 @@ def q_fisher_z_corr_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup to the day grid + one 1-row moment
     aggregate — no joins. §2.B statistics family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(
@@ -532,7 +527,6 @@ def q_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded grid (group median, pooled scores); 2-group pivot ends it.
     §2.B statistics family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -126,7 +124,6 @@ def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-joins the grid (the q_ccf_lead_lag shape). §2.B window
     family [NS].
     """
-    tune_session(spark)
     idx = _idx(spark, sf_dir)
     mu = idx.agg(
         (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
@@ -272,7 +269,6 @@ def q_engle_granger_coint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitelisted), one lag window, two 1-row aggregates. §2.B
     regression family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(
@@ -421,7 +417,6 @@ def q_extremal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: facts collapse to the day grid; exceedances and gaps are
     two windows on the bounded grid. §2.B statistics family [NS].
     """
-    tune_session(spark)
     idx = _idx(spark, sf_dir)
     ranked = idx.select(
         "y",

@@ -19,10 +19,8 @@ Reference parity: watermill has no analytics surface; [NS] SURVEY.md
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from watermill_spark.session import tune_session
 
 from .det import bcount, dec
 from .registry import load, register
@@ -178,7 +176,6 @@ def q_adf_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment aggregate + a 1-row fit broadcast for the SSE pass
     (whitelisted). §2.B regression family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y0")
@@ -292,7 +289,6 @@ def q_var_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded grid; one grouped moment aggregate ends it — no iterative
     fitting, no joins. §2.B regression family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(
@@ -394,7 +390,6 @@ def q_dp_sensitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one rollup to the (type, user) grain + one rank window per
     type partition. §2.B aggregation/privacy family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("event_type", "user_id").agg(
         bcount("n_events"),

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -75,7 +73,6 @@ def q_sample_ratio_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup — no joins, the whole guardrail is one scan. §2.B
     aggregation family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     assigned = ev.select(
         F.date_trunc("week", "ts").cast("date").alias("wk"),
@@ -177,7 +174,6 @@ def q_recommendation_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     novelty is one join against the part-popularity dimension. §2.B
     aggregation family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     # Single-evaluation restructure (sf5 engine-sweep finding): the basket
@@ -349,7 +345,6 @@ def q_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine; one 1-row summary — no joins. §2.B aggregation family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     supply = li.groupBy("l_partkey", "l_suppkey").agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("rev")

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -93,7 +91,6 @@ def q_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     the crossing-point aggregates are 1-row (whitelisted broadcast
     shape). §2.B window family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(dec("o_totalprice")).cast("double").alias("y")
@@ -205,7 +202,6 @@ def q_price_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parallel across parts), and a 1-row summary. §2.B window family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     pm = (
         li.groupBy(
@@ -312,7 +308,6 @@ def q_acf_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: facts collapse to the day grid; the 20-row lag dimension
     broadcast-joins the bounded grid once. §2.B window family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -75,7 +73,6 @@ def q_null_rate_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup to the month grid + a 1-row slope broadcast
     onto it (whitelisted). §2.B aggregation/quality family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     monthly = ev.groupBy(
         F.date_trunc("month", "ts").cast("date").alias("ym")
@@ -164,7 +161,6 @@ def q_duplicate_rate_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a weekly rollup; the overall-rate window runs on the bounded
     week grid. §2.B aggregation/quality family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     keyed = ev.groupBy(
         F.date_trunc("week", "ts").cast("date").alias("wk"),
@@ -248,7 +244,6 @@ def q_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map + a 10-group aggregate; the 10-row expected
     table joins broadcast. §2.B aggregation family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 10)
     p = (
         F.when(F.col("o_totalprice") >= 1000000, 1000000.0)

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras121 import phi_cdf_col, phi_cdf_sql
 from .registry import load, register
@@ -169,7 +167,6 @@ def q_storey_qvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     test machinery runs on ≤|nations| rows. §2.B statistics family
     [NS].
     """
-    tune_session(spark)
     eff = _nation_eff(spark, sf_dir)
     pv = eff.select(
         "nation",
@@ -267,7 +264,6 @@ def q_eggers_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; the test itself reads 25 rows. §2.B statistics family
     [NS].
     """
-    tune_session(spark)
     eff = _nation_eff(spark, sf_dir)
     pts = eff.select(
         (F.col("diff") / F.col("se")).alias("y"),
@@ -399,7 +395,6 @@ def q_mediation_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row fit broadcast for the SSE (whitelisted). §2.B causal family
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(

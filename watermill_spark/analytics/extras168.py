@@ -17,10 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -94,7 +92,6 @@ def q_cusum_ols_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitelisted) + one prefix window. §2.B window/regression family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -217,7 +214,6 @@ def q_palma_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup + one rank window + one aggregate. §2.B
     window family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(dec("o_totalprice")).cast("double").alias("y")
@@ -299,7 +295,6 @@ def q_hoover_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup + a 1-row total broadcast (whitelisted) +
     one aggregate. §2.B aggregation family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the totals and the deviation pass both
     # re-derived the rollup (2 orders scans in the plan); the

@@ -22,8 +22,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -91,7 +89,6 @@ def q_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (whitelisted) for the tail pass. §2.B window/risk family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the VaR rank and the tail aggregate both
     # re-derived the rollup (2 lineitem scans in the plan); the
@@ -213,7 +210,6 @@ def q_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast for the SSE pass (whitelisted). §2.B regression family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the normal-equation moments and the
     # residual pass both re-derived the rollup (2 lineitem scans in the
@@ -361,7 +357,6 @@ def q_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two prefix windows + one rollup on the bounded day grid.
     §2.B window family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

@@ -14,10 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import DEC, bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .det import bcount, dec
 from .extras9 import _PR_EDGE_SQL
 from .registry import load, register
 
@@ -64,7 +61,6 @@ def q_skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition frontiers), so a local-skyline mapPartitions pre-filter
     shrinks the sort input to ~|frontier|·n_partitions first. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     pc = orders.groupBy("o_custkey").agg(bcount("n_orders"))
@@ -122,7 +118,6 @@ def q_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning — the whole query is ONE shuffle (pinned:
     test_twap_single_exchange). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -204,7 +199,6 @@ def q_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the global max date comes from the same grid, not a fact
     rescan. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     life = orders.groupBy("o_custkey").agg(
         F.datediff(F.max("o_orderdate"), F.min("o_orderdate"))
@@ -297,7 +291,6 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts to approx_count_distinct (HLL) and the expansion disappears;
     the interface stays fixed. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     aggs = [bcount("n")]
     for i, c in enumerate(_PROFILE_COLS):
@@ -358,7 +351,6 @@ def q_sample_md5_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepted hash range; the work per partition stays O(rows + k log k).
     §2.B [NS] training-pipeline surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     h = F.md5(
         F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
@@ -415,7 +407,6 @@ def q_bfs_nation_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same loop holds with the frontier kept hash-partitioned instead of
     broadcast, plus lineage checkpoints every ~5 rounds. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")

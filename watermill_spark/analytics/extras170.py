@@ -22,8 +22,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -138,7 +136,6 @@ def q_gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row parameter broadcast (whitelisted). §2.B regression family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -313,7 +310,6 @@ def q_spectral_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins on (t mod p); two bounded aggregates end it. §2.B window
     family [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(
@@ -465,7 +461,6 @@ def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins once; everything after reads 3 rows. §2.B regression family
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

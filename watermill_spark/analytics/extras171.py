@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras167 import _NATION_EFF_SQL, _nation_eff
 from .registry import load, register
@@ -76,7 +74,6 @@ def q_wilson_lower_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup to the part grain + a sort-limit — no
     joins. §2.B statistics/top-k family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     rates = (
         li.groupBy("l_partkey")
@@ -159,7 +156,6 @@ def q_i2_heterogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; Q and I² read it twice with a 1-row pooled broadcast.
     §2.B statistics family [NS].
     """
-    tune_session(spark)
     eff = _nation_eff(spark, sf_dir)
     w = eff.select(
         "diff", (1.0 / (F.col("se") * F.col("se"))).alias("wt")
@@ -257,7 +253,6 @@ def q_gamma_fit_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup + one 1-row aggregate — no joins. §2.B
     statistics family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(dec("o_totalprice")).cast("double").alias("y")

@@ -20,10 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -82,7 +80,6 @@ def q_species_richness_chao(spark: SparkSession, sf_dir: str) -> DataFrame:
     no joins (the q_yule_k plan shape). §2.B aggregation family + text
     mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = (
         docs.select(
@@ -178,7 +175,6 @@ def q_rarefaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsample is an md5-range predicate, not a sort). §2.B
     aggregation family + text mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -286,7 +282,6 @@ def q_assortment_overlap_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     group bounded by |nations|), never nations²×parts. §2.B join
     family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")

@@ -20,10 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
 from .extras121 import phi_cdf_sql, phi_cdf_col
 from .extras167 import _NATION_EFF_SQL, _nation_eff
 from .registry import load, register
@@ -75,7 +72,6 @@ def q_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast-star rollup; the correction reads ≤|nations|
     rows. §2.B statistics family [NS].
     """
-    tune_session(spark)
     eff = _nation_eff(spark, sf_dir)
     pv = eff.select(
         "nation",
@@ -151,7 +147,6 @@ def q_dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parallel across groups) + one rollup; the rewrite this sizes is
     a rk=1 filter. §2.B window family + dedup mandate [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id",
@@ -250,7 +245,6 @@ def q_fractional_knapsack(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (range-partitioned sort at 100 TB) + a 1-row capacity
     broadcast (whitelisted). §2.B window family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # r7: the capacity aggregate and the ranked prefix stream each
     # re-derived the part rollup (2 identical lineitem scans); the

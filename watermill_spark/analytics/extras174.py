@@ -16,10 +16,8 @@ Reference parity: watermill has no analytics surface; [NS] SURVEY.md
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from watermill_spark.session import tune_session
 
 from .det import bcount, dec
 from .registry import load, register
@@ -74,7 +72,6 @@ def q_net_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacent months (co-partitioned on the customer key at 100 TB).
     §2.B aggregation family [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     cm = o.groupBy(
         "o_custkey",
@@ -166,7 +163,6 @@ def q_discount_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map + a ~12-bucket rollup + a 1-row baseline
     broadcast (whitelisted). §2.B aggregation family [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     bucketed = li.select(
         F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint").alias(
@@ -239,7 +235,6 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     month-keyed join on the bounded calendar. §2.B aggregation family
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # single scan (r6): DAU and MAU each re-scanned events for their
     # distinct grain; both derive exactly from ONE deduped

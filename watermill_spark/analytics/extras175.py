@@ -30,8 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .dedup import (
     _SQL_SDOCS,
     diagnostic_doc_sample,
@@ -41,7 +39,7 @@ from .dedup import (
 from .det import bcount
 from .extras66 import _TFIDF_MIN_SIM
 from .registry import load, register, spread
-from .similarity import _SQL_BUCKET, _dot, cosine, lsh_bucket
+from .similarity import _SQL_BUCKET, _dot, lsh_bucket
 
 # ---------------------------------------------------------------------------
 # Shared ANN-candidate machinery
@@ -239,7 +237,6 @@ def q_retrieval_mrr_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul inside — the mega-bucket fix); the settle join + per-query
     top-10 is linear in |queries|. §2.B similarity mandate [NS].
     """
-    tune_session(spark)
     nb = _ann_neighbors(spark, sf_dir, k=10)
     firsts = (
         nb.select(
@@ -345,7 +342,6 @@ def q_knn_classifier_eval_sampled(spark: SparkSession, sf_dir: str) -> DataFrame
     grows; per-bucket BLAS prune emits O(5) candidates per query; one
     settle join + two small groupBys. §2.B [NS].
     """
-    tune_session(spark)
     nb = _ann_neighbors(spark, sf_dir, k=5, sampled=True)
     votes = nb.groupBy("qid", "true_label", "nb_label").agg(bcount("v"))
     wp = Window.partitionBy("qid").orderBy(F.desc("v"), F.asc("nb_label"))
@@ -447,7 +443,6 @@ def q_tfidf_cosine_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf, sample keeps this corpus's saturated token distribution
     bounded. §2.B dedup surface [NS].
     """
-    tune_session(spark)
     docs = diagnostic_doc_sample(spread(load(spark, sf_dir, "documents")))
     tok = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("t")

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import RATE, bcount, dec
 from .registry import load, register
 
@@ -77,7 +75,6 @@ def q_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact shuffle for the brand-year rollup (part dim broadcasts);
     the year window and pivot run on the |brands|·|years| grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     by = (
@@ -146,7 +143,6 @@ def q_revenue_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     on orderkey and the join is shuffle-free (see layout operators).
     §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     tax = dec("l_tax", RATE)
@@ -199,7 +195,6 @@ def q_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges total, no joins (pinned: test_new_vs_returning_two_shuffles).
     §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = orders.select(
@@ -256,7 +251,6 @@ def q_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fact shuffle → monthly grid (months×priorities, SF-invariant);
     the 12-month lag and the error rollup both run on that grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     monthly = (
@@ -327,7 +321,6 @@ def q_fulfillment_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     one fact shuffle reused by both; the priority rollup is a second small
     exchange. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     ful = (
@@ -361,7 +354,6 @@ def q_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check. Scale: one shuffle + one aggregate; the report is a
     single row regardless of SF.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     per = (
         li.repartition(32, "l_suppkey")

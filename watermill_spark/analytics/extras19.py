@@ -16,9 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec, dsum
+from .det import bcount, dec
 from .distrib import ntile_of, two_level_order
 from .registry import load, register
 
@@ -81,7 +79,6 @@ def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the only shuffle moves ≤|event_type| moment rows. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     g = (
         ev.filter(F.col("event_type").isin("click", "purchase"))
@@ -150,7 +147,6 @@ def q_anova_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: single moment-shuffle of ≤|event_type| rows. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(*_moments())
     sxd = F.col("sx").cast("double")
@@ -216,7 +212,6 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition but over calendar days — bounded by time span, not
     data volume (a century ≈ 36k rows). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     d = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
         F.sum(dec("o_totalprice")).alias("rev")
@@ -279,7 +274,6 @@ def q_bollinger_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fact shuffle to |days|, then one bounded single-partition
     windowed pass (calendar-bounded, as in q_max_drawdown). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     d = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")
@@ -358,7 +352,6 @@ def q_ccf_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fact → |hours| grid shuffle with partial agg; the lead window is
     single-partition over calendar hours (time-bounded). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     h = ev.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
         F.count(F.when(F.col("event_type") == "click", 1))
@@ -451,7 +444,6 @@ def q_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (percentile boundaries from approxQuantile, then a map-side bucket
     join); pinned by the decile-boundary tests either way. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     c = orders.groupBy("o_custkey").agg(F.sum(dec("o_totalprice")).alias("spend"))
     # r7 (guide §2.5): ntile is now a pure expression of the distributed
@@ -537,7 +529,6 @@ def q_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     any conceivable scale; values are exact at scale 12 either way).
     §2.B [NS], guide §2.5.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     p = li.groupBy("l_partkey").agg(
         F.sum(

@@ -12,9 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import DEC, bcount, dec, dsum, sql_dsum
+from .det import DEC, bcount, dec
 from .registry import load, register, spread
 
 
@@ -38,7 +36,6 @@ def q_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all four aggregates run in the same partial-agg pass — predicates
     inside the aggregate never force extra scans or shuffles.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.count_if(F.col("o_totalprice") > 150000).cast("bigint").alias("n_big"),
@@ -86,7 +83,6 @@ def q_stat_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 6dp: the sqrt-of-difference denominator can differ by 1 ulp
     across engines even with identical inputs.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     s = li.groupBy("l_returnflag").agg(
@@ -134,7 +130,6 @@ def q_window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id, one sort; running frames are streaming-
     friendly (bounded state per partition).
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     pv = F.when(F.col("event_type") == "purchase", F.col("value"))
     w = (
@@ -175,7 +170,6 @@ def q_part_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     behave identically in both dialects, which is the constraint any shared
     regex surface must respect.
     """
-    tune_session(spark)
     part = load(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -216,7 +210,6 @@ def q_events_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable; final per-user pick is a k=1 window (WindowGroupLimit
     keeps one row per partition).
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_typ = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
@@ -258,7 +251,6 @@ def q_mode_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: count group-by then a k=1 window on the (small) group table.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     counts = docs.groupBy("lang", "source").agg(bcount("cnt"))
     w = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("source"))

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -83,7 +81,6 @@ def q_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     [NS] (feature-engineering surface: input covariances feed PCA/whitening
     in a training pipeline).
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     q, p, d = F.col("l_quantity"), F.col("l_extendedprice"), F.col("l_discount")
     m = li.agg(
@@ -172,7 +169,6 @@ def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rank window and final groupBy share the l_returnflag clustering
     — one hash exchange for the whole pipeline, no joins. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     wr = Window.partitionBy("l_returnflag").orderBy(
         "l_quantity", "l_orderkey", "l_linenumber"
@@ -252,7 +248,6 @@ def q_zscore_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact shuffle for the join); partial aggregation collapses the
     normalized rows before the final |types| exchange. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # single scan (r6): the per-type stats and the scoring join-back each
     # re-scanned events; every output is an aggregate, so both derive
@@ -356,7 +351,6 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming twin: the same groupBy runs incrementally under
     Structured Streaming, counters merge by addition).
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     seeds = F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("s")
     bucket = (
@@ -456,7 +450,6 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: |days| grid throughout after one fact shuffle; the rank and lag
     windows are calendar-bounded single-partition passes. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the median rank and the sign sequence both
     # re-derived the rollup (2 orders scans in the plan); the
@@ -565,7 +558,6 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized table — the fact table is touched exactly once. §2.B
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -68,7 +66,6 @@ def q_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, so a 90-day window on years of data is still dimension
     work. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the 7-day fan-out and the final join both
     # re-derived the rollup (2 orders scans in the plan); the
@@ -146,7 +143,6 @@ def q_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles once on event_type — at 100 TB pre-reduce with a per-partition
     top-1 (max_by) before the global rank if |types| is small. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     s = ev.groupBy(F.col("event_type").alias("t")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -218,7 +214,6 @@ def q_top_movers_dod(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag partitions by brand — no global window; the top-15 compiles to
     TakeOrderedAndProject. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     bd = (
@@ -291,7 +286,6 @@ def q_entropy_daily_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two shuffles on day-keyed grids (type counts, then day rollup);
     the rank window partitions by day. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the day totals and the entropy join both
     # re-derived the counts (2 events scans in the plan); the
@@ -338,7 +332,6 @@ def q_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle of ≤25 cells; this is the histogram shape that
     replaces collect-and-bin driver code at any size. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.least(F.floor(F.col("l_quantity") / 10), F.lit(4))
@@ -404,7 +397,6 @@ def q_funnel_timebound(spark: SparkSession, sf_dir: str) -> DataFrame:
     also caps state for the Structured Streaming twin
     (applyInPandasWithState with a 2 h timeout). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     v = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view")

@@ -15,9 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import dec
 from .registry import load, register
 
 
@@ -63,7 +61,6 @@ def q_assoc_rules_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     item and order counts broadcast onto the ≤|types|² rule grid. §2.B
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load(spark, sf_dir, "part").select("p_partkey", "p_type")
     items = (
@@ -167,7 +164,6 @@ def q_mix_shift_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact shuffle to the year×priority rollup; both window
     passes (min/max year, share totals) run on that tiny grid. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     yp = orders.groupBy(
         F.year("o_orderdate").alias("y"), "o_orderpriority"
@@ -251,7 +247,6 @@ def q_product_adoption_ramp(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup broadcasts). Conditional month-relative sums avoid a pivot
     shuffle. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # single pass (r6): intro_month via a partkey window min instead of a
     # groupBy-min joined back (3 lineitem scans -> 1; the window rides the
@@ -333,7 +328,6 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform. At 100 TB swap exact distinct for per-anchor HLL sketches
     merged additively — same shape, sketch-sized shuffle. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     du = ev.select(
         F.date_trunc("day", "ts").alias("day"), "user_id"

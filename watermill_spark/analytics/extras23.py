@@ -13,9 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import dec
 from .registry import load, register
 
 
@@ -61,7 +59,6 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact shuffle to |customers|, then a local top-101; the Hill
     window/aggregate runs on 101 rows. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(F.sum(dec("o_totalprice")).alias("s"))
     top = spend.orderBy(F.col("s").desc(), "o_custkey").limit(101)
@@ -139,7 +136,6 @@ def q_quintile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row cross join (one Spark job, no driver collect). §2.B
     [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     yy = orders.agg(
         F.min(F.year("o_orderdate")).alias("y0"),
@@ -248,7 +244,6 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set, the top-100 is a local TakeOrdered and both degree joins
     broadcast; moments reduce to one row. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -362,7 +357,6 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fact → |days| grid; the lead window is a single calendar-bounded
     pass; 7 lags multiply grid rows, not cardinality. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     d = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")

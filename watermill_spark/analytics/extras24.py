@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -74,7 +72,6 @@ def q_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a map-side cross with 10 centroid rows — vectors never shuffle.
     §2.B [NS] (training-pipeline surface).
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     u = emb.select(
         "label",
@@ -160,7 +157,6 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (drop shingles in >0.1% of docs) bounds hot keys the way dedup's band
     buckets do. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     sh = (
@@ -250,7 +246,6 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the knob — PMI over the full vocabulary is the LSH-free quadratic
     trap. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     # ONE tokenize pass (r6): the distinct (doc, token) stream is
     # checkpointed once — df, the n_docs count, and BOTH sides of the
@@ -339,7 +334,6 @@ def q_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three windows partition by region (or the one-row world total) on
     dimension-sized data. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
@@ -421,7 +415,6 @@ def q_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast — the same whitelisted 1-row BNLJ shape as q_runs_test.
     §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the control limits and the flagging join
     # both re-derived the rollup (2 orders scans in the plan); the

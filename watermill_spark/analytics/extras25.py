@@ -13,9 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register, spread
 
 
@@ -49,7 +47,6 @@ def q_order_frequency_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: two integer-count reductions (customer, then k) plus windows on
     the ≤max(k) grid. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     per = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("k"))
     freq = per.groupBy("k").agg(F.count(F.lit(1)).alias("n_customers"))
@@ -105,7 +102,6 @@ def q_shipping_delay_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank window and final conditional aggregation share the priority
     clustering — one exchange after the join. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
@@ -174,7 +170,6 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map-side splitting + one |langs| aggregation; no shuffle of
     text itself. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     n_words = F.size(F.split("text", " ")).cast("bigint")
     n_sent = F.greatest(
@@ -234,7 +229,6 @@ def q_catalog_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     month <= m) rescan. The same shape runs incrementally under streaming
     (first-appearance = dropDuplicates on partkey). §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     intro = li.groupBy("l_partkey").agg(
         F.min(F.date_trunc("month", "l_shipdate")).alias("m")
@@ -286,7 +280,6 @@ def q_charclass_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-side regexp counting into a |langs| aggregation — the scan
     reads text once and shuffles only counters. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     n_total = F.length("text").cast("bigint")
     n_alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")).cast("bigint")

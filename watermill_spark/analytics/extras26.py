@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .dedup import (
     _SQL_MINHASH_CTES_SAMPLED,
     diagnostic_doc_sample,
@@ -69,7 +67,6 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole history build rides one exchange. The streaming twin is
     applyInPandasWithState keeping one open segment per key. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wut = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
@@ -137,7 +134,6 @@ def q_dormancy_winback(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is the second; integers and exact decimals throughout. §2.B
     [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     g = orders.select(
@@ -200,7 +196,6 @@ def q_vwap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded single-partition pass like the Bollinger window.
     §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     d = li.groupBy(F.date_trunc("day", "l_shipdate").alias("day")).agg(
         F.sum(dec("l_extendedprice")).alias("value_sum"),
@@ -289,7 +284,6 @@ def q_lsh_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE. Production dedup (star edges / clusters) runs in full and never
     enumerates cliques. §2.B [NS].
     """
-    tune_session(spark)
     docs = diagnostic_doc_sample(spread(load(spark, sf_dir, "documents")))
     cand = lsh_candidate_pairs(minhash_signatures(docs))
     toksets = docs.select(

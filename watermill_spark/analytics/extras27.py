@@ -13,9 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import dec
 from .registry import load, register
 
 
@@ -53,7 +51,6 @@ def q_weekly_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     week+7d) — co-partitioned on user_id, one shuffle; week sizes
     broadcast onto the ≤|weeks| pair rows. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wu = ev.select(
         F.date_trunc("week", "ts").alias("wk"), "user_id"
@@ -145,7 +142,6 @@ def q_brand_cannibalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-keyed over ≤5 rows/day. Correlations reduce to 10 moment rows.
     §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     joined = li.join(part, li.l_partkey == part.p_partkey)
@@ -246,7 +242,6 @@ def q_missing_calendar_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized from data); present-days is one distinct rollup; the
     anti-join runs on two calendar-bounded grids. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the bounds, the anti-join and the two
     # count actions each re-derived the dedup (2 orders scans in the
@@ -322,7 +317,6 @@ def q_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sort (calendar-bounded); the top-25 is TakeOrderedAndProject.
     §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     d = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
         F.sum(dec("o_totalprice")).alias("rev")

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -46,7 +44,6 @@ def q_basket_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     count share the clustering) then a ≤(7×|brands|)-cell grid
     aggregation. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     per = (
@@ -106,7 +103,6 @@ def q_supplier_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps hub customers (the same oversized-basket rule as association
     mining). Sizes broadcast; top-25 via TakeOrdered. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     sc = (
@@ -195,7 +191,6 @@ def q_concentration_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the approx-quantile swap applies per partition at 100 TB); the final
     rollup shares the quarter clustering. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     cq = orders.groupBy(
         F.date_trunc("quarter", "o_orderdate").alias("q"), "o_custkey"
@@ -267,7 +262,6 @@ def q_burstiness_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: lag and the moment rollup share the user clustering (one
     exchange); the summary reduces |users| rows to one. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     g = ev.select(

@@ -12,9 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount
 from .registry import load, register, spread
 from .similarity import K, N_QUERIES, _SQL_BUCKET, _SQL_COSINE
 from .similarity import q_ann_lsh_hyperplane, q_knn_bruteforce
@@ -75,7 +72,6 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     production-shaped; recall estimates only need the sample. All overlap
     metrics are integer counts; one double division. §2.B [NS].
     """
-    tune_session(spark)
     truth = q_knn_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     approx = q_ann_lsh_hyperplane(spark, sf_dir).select("query_id", "neighbor_id")
     n_queries = truth.select("query_id").distinct().count()
@@ -139,7 +135,6 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     |labels|×dims×2 grid; batch assignment is a map-side expression (in
     production: a date or ingest-id column). §2.B [NS].
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     u = emb.select(
         "label",

@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register, spread
 
@@ -40,7 +38,6 @@ def q_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs — array_sort before joining makes the result total-ordered and
     therefore stable at any parallelism (the only safe listagg at scale).
     """
-    tune_session(spark)
     nation = load(spark, sf_dir, "nation")
     supplier = load(spark, sf_dir, "supplier")
     joined = nation.join(
@@ -78,7 +75,6 @@ def q_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     All JVM-side lambda expressions inside codegen: no UDF, no shuffle — a
     pure narrow map whatever the table size.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     e = F.col("embedding").cast("array<double>")
     clip = F.transform(
@@ -119,7 +115,6 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic. At scale this is one shuffle (user_id) and the map stays
     bounded by the event-type cardinality.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
     entries = counts.groupBy("user_id").agg(
@@ -166,7 +161,6 @@ def q_date_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(months), and the per-month counts are partial-aggregated before their
     tiny shuffle.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # single scan (r6): the spine bounds derived from a second orders
     # scan; date_trunc is monotone so trunc(min(d)) == min(trunc(d)) —
@@ -206,7 +200,6 @@ def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only values extracted back out are compared — JSON text itself is
     formatting-dependent across engines and never hashable.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     js = F.to_json(F.struct(F.col("o_totalprice").alias("p"), F.col("o_orderstatus").alias("s")))
     parsed = F.from_json(

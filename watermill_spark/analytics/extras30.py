@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -68,7 +66,6 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: at 100 TB the month grid is still ~#months rows; the only heavy
     operation is the map-side-combined groupBy. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     m = o.groupBy(F.date_trunc("month", "o_orderdate").alias("mth")).agg(
         bcount("x"), F.sum(dec("o_totalprice")).alias("y")
@@ -163,7 +160,6 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: contingency grid is |priority|×|status| (15 cells) after one
     map-side-combined groupBy. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the chi2 pass and the dims aggregate both
     # re-derived the counts (2 orders scans in the plan); the
@@ -261,7 +257,6 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single map-side-combined pass over the fact table; everything
     after is per-group constant work. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     x = F.col("l_extendedprice")
     x2 = x * x
@@ -366,7 +361,6 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (the classical midrank-on-histogram trick), which this plan
     already is. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     vt = ev.groupBy(F.col("value").alias("v"), "event_type").agg(
         bcount("n_vt")
@@ -462,7 +456,6 @@ def q_doc_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language result grid is |langs| rows. Token explosion is the only
     data-expanding step and is linear in corpus size. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     tok = docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
     tc = tok.groupBy("lang", "tok").agg(bcount("n"))
@@ -531,7 +524,6 @@ def q_doc_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse map-side. The marginal via a window over (lang, a) partitions
     shuffles only the distinct-bigram grid, not the corpus. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     t = docs.select("lang", toks.alias("toks"))

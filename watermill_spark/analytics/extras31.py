@@ -19,8 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .dedup import lsh_candidate_pairs, minhash_signatures
 from .det import bcount, dec
 from .registry import load, register, spread
@@ -129,7 +127,6 @@ def q_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-table + semi-join sweep (edges shuffled on src once per round);
     fixed round count bounds lineage (checkpoint beyond ~5). §2.B [NS].
     """
-    tune_session(spark)
     se = _trade_graph(spark, sf_dir).cache()
     alive = se.select("n").distinct()
     for _ in range(4):
@@ -192,7 +189,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-aggregated edge list; the same plan over a billion-edge graph
     shuffles edges by n once per round with map-side min combine. §2.B [NS].
     """
-    tune_session(spark)
     se = _trade_graph(spark, sf_dir).cache()
     labels = se.select("n").distinct().withColumn("lbl", F.col("n"))
     for _ in range(3):
@@ -295,7 +291,6 @@ def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitters this diagnostic is run on a sample at extreme SF — it tunes
     banding, it is not a pipeline stage. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     sigs = minhash_signatures(docs).cache()
     toksets = docs.select(
@@ -398,7 +393,6 @@ def q_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one aggregation pass; the regression grid is O(|distinct
     discounts|) forever. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     lvl = li.groupBy(dec("l_discount", "decimal(8,6)").alias("x_dec")).agg(
         bcount("n_rows"),
@@ -478,7 +472,6 @@ def q_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how a 100 TB deployment should place a sequential algorithm.
     §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -82,7 +80,6 @@ def q_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined groupBy to the bucket grid; everything
     after is constant-size. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     grp = F.when(F.weekday("ts") + 1 >= 6, F.lit("weekend")).otherwise(
         F.lit("weekday")
@@ -171,7 +168,6 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Laplace-smoothed proportions, bounded-grid log2 sum rounded past ulp
     wobble. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & F.col("event_type").isin("click", "purchase")
     )
@@ -267,7 +263,6 @@ def q_stl_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid (post-aggregate); the one ordered window is over that grid, never
     raw rows. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -351,7 +346,6 @@ def q_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost class as percentile_disc; at 100 TB swap in approx_percentile with
     the same output shape. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & F.col("event_type").isin("click", "purchase")
     )
@@ -421,7 +415,6 @@ def q_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is already hash-distributed by user_id), final small groupBy.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     fp = ev.filter(F.col("event_type") == "purchase").groupBy("user_id").agg(
         F.min("ts").alias("first_purchase_ts")

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .extras31 import _SQL_TRADE_GRAPH, _trade_graph
 from .registry import load, register, spread
@@ -70,7 +68,6 @@ def q_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial sums — no quadratic pair blowup, O(n·dims·|labels|)
     work evenly partitioned. §2.B [NS].
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     u = emb.select(
         "vec_id",
@@ -131,7 +128,6 @@ def q_char_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable; per-language top-5 is a WindowGroupLimit (k rows
     kept per partition before the final shuffle). §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     tri = docs.select(
         "lang",
@@ -199,7 +195,6 @@ def q_sharpe_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the ordered window runs on ~2.5k aggregated rows, never raw
     data. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -260,7 +255,6 @@ def q_var_historical(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ranking happens on the post-aggregate daily grid; at 100 TB of
     raw data the grid is still #days rows. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
@@ -339,7 +333,6 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound; on a big graph the heavy hitters are handled by degree-capping
     or AQE skew split. §2.B [NS].
     """
-    tune_session(spark)
     se = _trade_graph(spark, sf_dir).cache()
     deg = se.groupBy("n").agg(bcount("d"))
     a = se.select(F.col("n").alias("u"), F.col("m").alias("mid"))

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -99,7 +97,6 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d²=4096 per vector — at 100 TB you'd block by dimension ranges);
     iterations run on the d×d grid, broadcast everywhere. §2.B [NS].
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     u = emb.select(
         "vec_id",
@@ -225,7 +222,6 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything after the week aggregation operates on ≤52 rows.
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     wk = (
         o.filter(F.year("o_orderdate").isin(1996, 1997))
@@ -326,7 +322,6 @@ def q_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined user aggregation; the contingency collapse
     is a single count row. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("event_type") == "click")
     per_user = ev.groupBy("user_id").agg(
         F.max(F.when(F.weekday("ts") + 1 < 6, 1).otherwise(0)).alias("wd"),
@@ -404,7 +399,6 @@ def q_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single scan with partial aggregation; everything else is
     constant work. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     q, p, d = F.col("l_quantity"), F.col("l_extendedprice"), F.col("l_discount")
     d30 = "decimal(30,6)"
@@ -477,7 +471,6 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two map-side-combined groupBys (hash → size → histogram); the
     1-row corpus count broadcast is O(1). §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     cl = docs.groupBy(F.md5("text").alias("h")).agg(bcount("sz"))
     tot = docs.agg(F.count(F.lit(1)).cast("double").alias("total"))

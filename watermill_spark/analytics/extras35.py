@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -108,7 +106,6 @@ def q_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: filter build is one distinct over |members|·k rows; the probe is
     a broadcast join of the (≤m)-row bit set. §2.B [NS].
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     seeds = spark.range(_BLOOM_K).select(F.col("id").cast("int").alias("s"))
     members = cust.filter(F.col("c_nationkey") < 5).select(
@@ -231,7 +228,6 @@ def q_hll_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-groupBy — the whole point of HLL is that this never grows. §2.B
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hx = F.md5(F.col("user_id").cast("string"))
     rest = F.substring(hx, 3, 30)
@@ -334,7 +330,6 @@ def q_ab_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     join at 100 TB — the hash IS the table); one user-keyed join +
     groupBy. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm_hash = _hexval(
         F.substring(F.md5(F.concat(F.lit("ab1:"), F.col("user_id").cast("string"))), 1, 1)
@@ -401,7 +396,6 @@ def q_time_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side expression + one user groupBy; top-20 is
     TakeOrderedAndProject (per-partition local top-k). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     anchor = ev.agg(F.max("ts").cast("date").alias("d0"))
     w = ev.crossJoin(F.broadcast(anchor)).select(

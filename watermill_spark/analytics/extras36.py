@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
 from .registry import load, register, spread
 
 _HEX = "0123456789abcdef"
@@ -56,7 +53,6 @@ def q_feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct → map-side hash → two groupBys, all combinable; the
     histogram is ≤max_load rows. §2.B [NS].
     """
-    tune_session(spark)
     part = load(spark, sf_dir, "part")
     h = F.md5(F.col("p_name"))
     bucket = (
@@ -101,7 +97,6 @@ def q_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined count + a 1-row broadcast. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     # checkpointed once (r6): the total and the final select both
     # re-derived the counts (2 documents scans in the plan); the
@@ -175,7 +170,6 @@ def q_stl_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to q_stl_lite — ordered windows only ever see the
     ~2.5k-row daily grid; top-10 is TakeOrderedAndProject. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the RMS scale and the anomaly ranking both
     # re-derived the rollup (2 lineitem scans in the plan); the
@@ -286,7 +280,6 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-customer reduce, then all windows run on the ≤|distinct
     lifetime| grid (date-range bound, SF-invariant). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     life = orders.groupBy("o_custkey").agg(
         F.datediff(F.max("o_orderdate"), F.min("o_orderdate"))

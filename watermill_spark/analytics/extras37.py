@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -80,7 +78,6 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     work; 2^k coalitions caps k at a handful of channels, which is the
     known Shapley limit (sampling approximations beyond). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("c"),
@@ -204,7 +201,6 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the (user, week) dedup is the only data-sized shuffle; every
     subsequent join clusters on user_id with no re-exchange. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     uw = ev.select(
         "user_id", F.date_trunc("week", "ts").alias("wk")
@@ -338,7 +334,6 @@ def q_fixed_effects_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact scan + broadcast of the two small mean tables (brands,
     months) + 1-row grand mean; two aggregation passes total. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     base = li.join(part, li.l_partkey == part.p_partkey).select(
@@ -444,7 +439,6 @@ def q_rca_trade_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact aggregation to the |nations|×|types| grid; marginals
     and the world total derive from that grid, not a rescan. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     part = load(spark, sf_dir, "part")

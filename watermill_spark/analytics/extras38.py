@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -63,7 +61,6 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to q_sharpe_ratio — ordered windows only on the
     #days grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y"),
@@ -150,7 +147,6 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ntile is replaced by quantile cut-points from approx_percentile
     with the same 10-row output. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the decile rank and the totals both
     # re-derived the rollup (2 orders scans in the plan); the
@@ -211,7 +207,6 @@ def q_fuzzy_name_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     block (all names alike) is handled by AQE skew split — same shape as
     the MinHash LSH bucket join. §2.B [NS].
     """
-    tune_session(spark)
     part = load(spark, sf_dir, "part")
     names = part.select("p_name").distinct()
     a = names.select(F.col("p_name").alias("name_a"))
@@ -279,7 +274,6 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact scan with a broadcast supplier join, map-side-combined
     to a 2×2 grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     base = li.join(supp, li.l_suppkey == supp.s_suppkey).select(

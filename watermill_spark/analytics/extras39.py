@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -52,7 +50,6 @@ def q_json_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy per key plus a distinct-count (swap in
     approx_count_distinct at 100 TB, same output shape). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("props").isNotNull())
     # single props pass (r6): n_rows re-scanned the heavy props column
     # just to count non-null rows. posexplode_outer emits exactly ONE
@@ -139,7 +136,6 @@ def q_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (user, week) groupBy then a 1-row moment collapse. §2.B
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     wk = ev.groupBy("user_id", F.date_trunc("week", "ts").alias("w")).agg(
         bcount("c")
@@ -206,7 +202,6 @@ def q_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined user aggregation → 1 row. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arms = ev.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
@@ -276,7 +271,6 @@ def q_first_vs_repeat_aov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one customer-partitioned window + one year groupBy. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     from pyspark.sql import Window as W
 

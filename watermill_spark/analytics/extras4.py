@@ -10,8 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dsum, sql_dsum
 from .registry import load, register, spread
 
@@ -41,7 +39,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: unpivot is a narrow 1→k row expansion after the aggregation —
     the shuffle happens once on the group-by, never on the melted rows.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         dsum("l_quantity", "qty"),
@@ -77,7 +74,6 @@ def q_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot tokens is absorbed by the partial agg); top-k per lang is a k=10
     window on the already-tiny count table.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
     counts = toks.groupBy("lang", "tok").agg(bcount("cnt"))
@@ -116,7 +112,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE's skew-join split is the automatic alternative when it can see the
     skew.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     dim = (
         ev.select("event_type").distinct()

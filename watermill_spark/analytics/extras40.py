@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -74,7 +72,6 @@ def q_jackknife_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over that grid, not J passes over the data — the whole point of
     the grouped jackknife. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     g = (
@@ -194,7 +191,6 @@ def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact pass to |brands| moment rows; everything else is
     grid-sized. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     y = F.col("l_extendedprice")
@@ -304,7 +300,6 @@ def q_beta_binomial_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined groupBy to |priorities| rows. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     cell = o.groupBy(F.col("o_orderpriority").alias("prio")).agg(
         bcount("n"),
@@ -383,7 +378,6 @@ def q_throttle_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     the #hours grid. The same identity sizes real watermark/throttle
     configs without a stateful streaming job. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the spine bounds and the arrival join both
     # re-derived the rollup (2 events scans in the plan); the

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -89,7 +87,6 @@ def q_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking window runs over |parts|; at 100 TB the cumulative share
     uses the same pre-aggregated grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # single scan (r6): the ABC revenue rollup, the weekly XYZ grid and
     # the grand total each re-scanned lineitem; ONE scan now builds the
@@ -189,7 +186,6 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-partitioned window with two leads (single sort), one
     map-side-combined path count, TakeOrderedAndProject top-10. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -273,7 +269,6 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the lagged self-joins run on the ~2.5k-row post-aggregate daily
     grid (broadcast), once per lag — never on raw data. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

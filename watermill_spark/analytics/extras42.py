@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 from .text import _SQL_STOPLIST, q_doc_langid
@@ -61,7 +59,6 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: inherits q_doc_langid's single tokenize pass; the collapse to a
     2×2 grid is map-side combined. §2.B [NS].
     """
-    tune_session(spark)
     pred = q_doc_langid(spark, sf_dir).select(
         (F.col("lang_meta") == "en").alias("is_en"), "pred_en"
     )
@@ -132,7 +129,6 @@ def q_price_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact aggregation to the |parts|×2 grid; the year self-join
     clusters on partkey. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     yr = (
         li.filter(F.year("l_shipdate").isin(1995, 1996))
@@ -231,7 +227,6 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined pass to |strata| rows. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     y = F.col("o_totalprice")
     g = o.groupBy(F.col("o_orderpriority").alias("stratum")).agg(
@@ -317,7 +312,6 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two distinct-sets over single weeks + one co-partitioned
     intersection join. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     b = ev.agg(F.min(F.date_trunc("week", "ts")).alias("w0"))
     evw = ev.crossJoin(F.broadcast(b)).select(

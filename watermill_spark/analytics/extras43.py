@@ -12,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -80,7 +78,6 @@ def q_bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AQE promotes them at small SFs; sort-merge is correct at corpus
     scale). §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
@@ -164,7 +161,6 @@ def q_inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the posting lists themselves shard by term range — this query IS
     the per-term directory. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     post = toks.groupBy("term", "doc_id").agg(bcount("tf"))
@@ -221,7 +217,6 @@ def q_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same two-level token groupBy as the index stats; the VMR is
     grid algebra. §2.B [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     # single scan (r6): the tf grid and the doc count each re-scanned
@@ -310,7 +305,6 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: daily-grid windows only. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

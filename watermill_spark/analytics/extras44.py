@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -85,7 +83,6 @@ def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact pass to |distinct feature values| rows — the reason
     histogram-based tree learners (LightGBM et al.) scale. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     lab = li.select(
         F.col("l_discount").alias("x"),
@@ -174,7 +171,6 @@ def q_cold_start_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one co-partitioned basket join + three distincts. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     # single scan (r6): the co-purchase self-join exploded every k-part
@@ -270,7 +266,6 @@ def q_eta_squared_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: daily aggregation then a 7-row moment grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")

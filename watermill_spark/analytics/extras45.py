@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -116,7 +114,6 @@ def q_logistic_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast histogram; this is why histogram-GLMs train in seconds at
     100 TB. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     grid = (
         li.groupBy(F.col("l_discount").alias("x"))
@@ -230,7 +227,6 @@ def q_design_effect_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one customer groupBy + one co-partitioned join back for
     within-cluster deviations; grids are |customers| and 1-row. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     base = o.select(F.col("o_custkey").alias("cl"), F.col("o_totalprice").alias("y"))
     # r6: t/g/ssb/ssw each re-scanned the fact (6 orders scans in the

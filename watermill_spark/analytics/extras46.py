@@ -12,11 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register, spread
-from .similarity import _dot, cosine
+from .similarity import _dot
 
 _HEX = "0123456789abcdef"
 
@@ -69,7 +67,6 @@ def q_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplying neighbors (q_ann_recall_eval measures what that pruning
     costs). §2.B [NS].
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     a = emb.select(
         F.col("vec_id").alias("qid"),
@@ -145,7 +142,6 @@ def q_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one distinct + map-side expression. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm_hash = (
         F.instr(

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -54,7 +52,6 @@ def q_window_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; for a skewed real deployment the cut would be two-pass: per-bucket
     counts, then filter). §2.B window functions [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(F.col("o_totalprice").desc())
     return (
@@ -129,7 +126,6 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(n²) lives on post-aggregation data whose size is calendar-bounded,
     with the heavy lifting in the map-side-combined daily rollup. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = (
         o.filter(F.year("o_orderdate") == 1995)
@@ -227,7 +223,6 @@ def q_cvar_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows is a single-partition window by construction (size fixed by the
     calendar, not the corpus — same stance as q_mann_kendall). §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")
@@ -323,7 +318,6 @@ def q_kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition exactly like a production KMV; the estimate line is one
     row. §2.B sketches [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # single scan (r6): the bottom-k rank and the exact count each
     # re-scanned and re-deduped events; ONE deduped user grid

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -147,7 +145,6 @@ def q_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     one calendar-bounded window partition (365 rows regardless of corpus
     size). §2.B [NS].
     """
-    tune_session(spark)
     g = _spark_gammas(_spark_centered_daily(spark, sf_dir))
     r1 = F.col("g1") / F.col("g0")
     r2 = F.col("g2") / F.col("g0")
@@ -202,7 +199,6 @@ def q_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical shape to q_pacf_durbin_levinson — the only O(n)
     stages are calendar-bounded. §2.B [NS].
     """
-    tune_session(spark)
     cdf = _spark_centered_daily(spark, sf_dir)
     g = _spark_gammas(cdf)
     maxt = cdf.agg(F.max("t").alias("tmax"))
@@ -287,7 +283,6 @@ def q_dft_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy stage is one map-side-combined pass over calendar-bounded daily
     rows. §2.B [NS].
     """
-    tune_session(spark)
     cdf = _spark_centered_daily(spark, sf_dir)
     per = spark.range(len(_PERIODS)).select(
         F.element_at(
@@ -386,7 +381,6 @@ def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the groupBy key, shared with the moment aggregation); the fold runs on
     k=5 group rows on the driver side of the plan. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     cents = o.select(
         F.col("o_orderpriority").alias("g"),

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -126,7 +124,6 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-side-combined daily rollup, broadcast 1-row fit, one lag
     window over calendar-bounded rows. §2.B [NS].
     """
-    tune_session(spark)
     res = _spark_ols_residuals(spark, sf_dir)
     lagd = res.select("e", F.lag("e").over(Window.orderBy("t")).alias("e1"))
     num = (
@@ -193,7 +190,6 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression is a second map-side-combined moment pass, no extra shuffle
     beyond the daily rollup. §2.B [NS].
     """
-    tune_session(spark)
     res = _spark_ols_residuals(spark, sf_dir)
     sq = res.select("t", (F.col("e") * F.col("e")).alias("e2"))
     m2 = sq.agg(
@@ -263,7 +259,6 @@ def q_chi2_hash_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct + groupBy collapse map-side; 16 rows cross the shuffle.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     buckets = ev.select("user_id").distinct().select(
         (
@@ -340,7 +335,6 @@ def q_omega_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: daily rollup map-side combines; one lag window over
     calendar-bounded rows; final agg is 1 row. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")

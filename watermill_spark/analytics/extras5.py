@@ -18,9 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dsum
+from .det import bcount
 from .registry import load, register, spread
 
 
@@ -52,7 +50,6 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct daily aggregate bit-for-bit — which is precisely what the oracle
     (same two-level plan) hash-checks.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type").agg(
         bcount("n"),
@@ -97,7 +94,6 @@ def q_window_distinct_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pre-dedup collapses the fact table to |days × users| before
     any window state builds up; never window over raw events.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     du = ev.select(
         "event_type",
@@ -147,7 +143,6 @@ def q_events_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     as concurrent; event_id completes the total order so the running sum is
     engine-independent.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events").select("event_type", "ts", "event_id")
     # single scan (r6): the union's two branches each re-scanned events;
     # an inline 2-element explode emits the identical (+1 at ts, -1 at
@@ -204,7 +199,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB table before anything expensive. Pure 64-bit integer arithmetic —
     no float, no UDF, fully codegen'd.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     in_sample = (F.col("o_orderkey") * F.lit(2654435761)) % F.lit(4294967296) < F.lit(429496730)
     return orders.groupBy("o_orderpriority").agg(
@@ -269,7 +263,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     output bounded regardless. The corpus count rides inside the same plan
     as a 1-row broadcast instead of a separate count() job.
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang", F.explode(F.regexp_extract_all("text", F.lit("[a-z]+"), 0)).alias("term")
@@ -330,7 +323,6 @@ def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     except for the final per-doc count. Shingling is sequence+transform
     (codegen'd), not a Python UDF.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.regexp_extract_all("text", F.lit("[a-z]+"), 0).alias("t")
@@ -388,7 +380,6 @@ def q_events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike streaming stddev. Scale: hourly is the only pass over raw events;
     stats (one row per type) broadcasts back onto hourly.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the stats and the z-score join both
     # re-derived the counts (2 events scans in the plan); the

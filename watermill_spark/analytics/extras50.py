@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 from .extras9 import _PR_EDGE_SQL
@@ -73,7 +71,6 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-node graphs all-pairs is replaced by hub sampling; the
     per-round plan shape is unchanged. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -174,7 +171,6 @@ def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: daily rollup map-side combines; ranking partitions by week (52
     blocks × 7 rows); everything after is a 7-row column-sum. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = (
         o.filter(F.year("o_orderdate") == 1995)
@@ -283,7 +279,6 @@ def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined groupBy(custkey) collapses the fact table
     into per-customer bits; the second agg is 1 row. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     yy = F.year("o_orderdate")
 

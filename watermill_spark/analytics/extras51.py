@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -117,7 +115,6 @@ def q_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (size, block) — thousands of small independent partitions, and the
     whole series is calendar-bounded (one year of days). §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = (
         o.filter(F.year("o_orderdate") == 1995)
@@ -258,7 +255,6 @@ def q_pettitt_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking + the running sum are single-partition windows over ~84 rows.
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_trunc("month", F.col("o_orderdate")).alias("m")
@@ -372,7 +368,6 @@ def q_sprt_ab_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is O(1) per event with the crossing scan pruned by the
     boundary filter. §2.B [NS] + streaming surface.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     ordered = ev.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("x"),

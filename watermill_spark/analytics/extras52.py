@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -70,7 +68,6 @@ def q_candidate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-counts only the survivors — the exact pass here is the oracle
     semantics. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
 
@@ -177,7 +174,6 @@ def q_functional_dependencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass with grouping sets — the per-FD plans here keep each oracle-
     checkable. §2.B [NS].
     """
-    tune_session(spark)
 
     def fd(df: DataFrame, name: str, det: str, dep: str) -> DataFrame:
         inner = df.groupBy(det).agg(F.count_distinct(dep).alias("nd"))
@@ -287,7 +283,6 @@ def q_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide; only the distortion *measurement* is pairwise and it runs
     on a fixed sample. §2.B similarity surface [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     dims = spark.range(1, _JL_D + 1).select(F.col("id").cast("int").alias("i"))
     outs = spark.range(1, _JL_K + 1).select(F.col("id").cast("int").alias("j"))

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -83,7 +81,6 @@ def q_markov_steps_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the per-user lead() is one shuffle on user_id; the iteration
     runs on a ≤|states|² matrix — broadcast-sized forever. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
@@ -193,7 +190,6 @@ def q_uplift_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     both shuffle on user_id and collapse map-side; segments are a
     handful of rows. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     firsts = (
         ev.select(
@@ -287,7 +283,6 @@ def q_price_endings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: 100-bucket histogram, fully map-side combined. §2.B [NS].
     """
-    tune_session(spark)
     p = load(spark, sf_dir, "part")
     cents = p.select(
         (F.round(F.col("p_retailprice") * 100, 0).cast("bigint") % 100).alias(

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register, spread
 
@@ -62,7 +60,6 @@ def q_doc_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode is the narrow CPU stage `spread` fans out. §2.B text surface
     [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     tok = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("t")
@@ -159,7 +156,6 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     petabyte scale this becomes a prefix-sum over partition subtotals).
     §2.B text surface [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     # checkpointed once (r6): the first-seen map and the per-doc counts
     # each re-scanned documents and re-ran the tokenize explode (2 passes
@@ -275,7 +271,6 @@ def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator for the LSH-bucket path and keeps this scoring tail
     unchanged. §2.B similarity surface [NS].
     """
-    tune_session(spark)
     from .similarity import _dot
 
     emb = spread(load(spark, sf_dir, "embeddings")).select(

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -79,7 +77,6 @@ def q_littles_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     integrand never materializes per-second rows. §2.B streaming surface
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     spans = ev.groupBy("user_id").agg(
         F.unix_micros(F.min("ts")).cast("bigint").alias("t0"),
@@ -184,7 +181,6 @@ def q_bounce_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two windows and the rollup all partition by user_id (one
     shuffle, reused); entry-type grid is 5 rows. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -267,7 +263,6 @@ def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined customer rollup then a 1-row moment agg.
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(dec("o_totalprice")).cast("double").alias("v")

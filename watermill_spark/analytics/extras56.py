@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register, spread
 
@@ -63,7 +61,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one groupBy(QI) with map-side combine; the audit summary is one
     row. §2.B [NS] privacy surface.
     """
-    tune_session(spark)
     c = load(spark, sf_dir, "customer")
     grp = c.groupBy("c_nationkey", "c_mktsegment").agg(
         bcount("class_size"),
@@ -151,7 +148,6 @@ def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage-codegen pass over the scan, which is why the patterns
     live in one query instead of four. §2.B text/privacy surface [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     # r6: one aggregation per pattern plus the per-source total meant 5
     # full corpus scans, each re-running its regex over every document.
@@ -244,7 +240,6 @@ def q_kfold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything downstream operates on the ≤ folds×labels grid. §2.B
     ML-ops surface [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     fold = (
         F.instr(

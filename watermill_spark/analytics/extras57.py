@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -94,7 +92,6 @@ def q_two_way_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one groupBy(cell) pass with map-side combine; the fold runs on
     the ≤ |priorities|×|years| grid. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     base = o.filter(F.year("o_orderdate").between(1995, 1997)).select(
         F.col("o_orderpriority").alias("a"),
@@ -203,7 +200,6 @@ def q_cohen_kappa_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map over documents into a 4-cell map-side-combined
     aggregate. §2.B text surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     pred = docs.select(
@@ -312,7 +308,6 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     production — state is (count, sum, running max)). §2.B streaming
     surface [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")

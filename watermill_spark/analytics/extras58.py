@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 from .extras9 import _PR_EDGE_SQL
@@ -78,7 +76,6 @@ def q_interval_week_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by the calendar, not the corpus); clipping is a narrow map
     and the rollup shuffles once on week. §2.B interval surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     spans = (
         ev.groupBy("user_id")
@@ -172,7 +169,6 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the initial rollup touches the fact table (map-side combined).
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     grid = (
         o.filter(F.year("o_orderdate").between(1995, 1997))
@@ -291,7 +287,6 @@ def q_ipf_matrix_balancing(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined scalings + margin aggregations; for county-level OD matrices
     the same rounds run as shuffle joins on the margin keys. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")

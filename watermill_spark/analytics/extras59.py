@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -77,7 +75,6 @@ def q_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two nested calendar rollups, both map-side combined; the fit
     is a 1-row expression. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.col("o_orderdate").cast("date").alias("d"),
@@ -169,7 +166,6 @@ def q_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: 1-row fit broadcast to the calendar-bounded daily grid; the
     top-10 is TakeOrdered. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = (
         o.filter(F.year("o_orderdate") == 1995)
@@ -296,7 +292,6 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — same counts, this shape keeps the oracle 1:1). §2.B
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (

@@ -12,9 +12,7 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec, dsum
+from .det import bcount, dec
 from .registry import load, register
 
 
@@ -37,7 +35,6 @@ def q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     |nation| × scan. The 100-TB lesson: express the correlation, let the
     optimizer unnest it.
     """
-    tune_session(spark)
     tag = _uuid.uuid4().hex[:8]
     load(spark, sf_dir, "nation").createOrReplaceTempView(f"nation_{tag}")
     load(spark, sf_dir, "customer").createOrReplaceTempView(f"customer_{tag}")
@@ -69,7 +66,6 @@ def q_multiset_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: Spark plans both as a single hash aggregation per side on the key
     with count comparison — no sort, no pairwise matching.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # r6: intersectAll + exceptAll each scanned both filtered branches —
     # 4 lineitem scans and two set-op shuffles. Multiset semantics over a
@@ -114,7 +110,6 @@ def q_multiset_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bool_bit_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean and bitwise aggregates (every/any, bit_and/or/xor) — exact,
     order-independent, fully codegen'd with partial aggregation."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.bool_and(F.col("l_quantity") < 50).alias("all_small"),
@@ -144,7 +139,6 @@ def q_nth_value_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nth_value / first_value / last_value with explicit frames (the
     UNBOUNDED FOLLOWING last_value pitfall done right). Total order
     (o_orderdate, o_orderkey) keeps frames engine-identical."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -183,7 +177,6 @@ def q_width_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram via width_bucket — the scan-once, shuffle-11-rows
     histogram (vs ntile, which must sort the world). Integer bucket bounds
     make the double arithmetic engine-identical."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy(
         F.width_bucket("o_totalprice", F.lit(0), F.lit(500000), F.lit(10))
@@ -219,7 +212,6 @@ def q_events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: lag/lead over (user_id, ts) is one shuffle-sort; no self-join on
     the event stream. event_id tiebreak keeps adjacency engine-identical.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = ev.select(
@@ -254,7 +246,6 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact side streams through a map-side filter; no shuffle besides the
     final small group-by. Exact-decimal mean per det.py rules.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     mean = cust.agg(
         (F.sum(dec("c_acctbal")).cast("double") / F.count(F.lit(1)).cast("double")).alias("m")

@@ -12,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 from .extras9 import _PR_EDGE_SQL
@@ -58,7 +56,6 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the census runs on the collapsed ≤|nations|² edge list; the
     reverse-edge join is key-local after one co-partition. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -147,7 +144,6 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lead() window on user_id + a ≤|states|² rollup; the
     entropy algebra runs on the 5×5 grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     from pyspark.sql import Window
 
@@ -272,7 +268,6 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ≤|brands| vector, broadcast every round with lineage truncated
     per round (localCheckpoint, see SCALE.md). §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     lines = li.join(part, li.l_partkey == part.p_partkey).select(

@@ -11,13 +11,11 @@ warehouse rollup should run before trusting a pooled trend.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register
 
 
@@ -69,7 +67,6 @@ def q_negative_binomial_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side user rollup → 1-row moments. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(
         F.count_if(F.col("event_type") == "purchase").cast("bigint").alias("k")
@@ -159,7 +156,6 @@ def q_simpsons_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-group rollup + 1-row pooled agg); slope algebra runs on the
     ≤|brands| grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     base = li.join(part, li.l_partkey == part.p_partkey).select(
@@ -281,7 +277,6 @@ def q_l_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale — the one genuinely order-dependent stage L-moments need);
     everything else is map-side sums. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # r7 (guide §2.5): the range-partitioned distributed rank the
     # docstring promised — distrib.two_level_order replaces the

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -74,7 +72,6 @@ def q_rbo_rank_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth spine is a 10-row broadcast; prefix overlap is a bounded
     non-equi count. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     base = li.join(part, li.l_partkey == part.p_partkey)
@@ -179,7 +176,6 @@ def q_stratified_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup → 6-cell grid; everything downstream is on
     the grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (
@@ -324,7 +320,6 @@ def q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise stage is on the 10×10 centroid grid only. §2.B similarity
     surface [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     flat = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "xv")

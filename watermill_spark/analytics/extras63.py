@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -68,7 +66,6 @@ def q_exactly_once_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark shape with state bounded by the
     redelivery window. §2.A delivery semantics.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # r6: the union-of-two-branches build plus the three counting passes
     # re-scanned events 5 times. The same delivery multiset comes from ONE
@@ -179,7 +176,6 @@ def q_out_of_order_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     value domain, not the stream. §2.A delivery semantics / streaming
     surface, guide §2.5.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
     base = (
@@ -301,7 +297,6 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     the union is free (no shuffle); the audit is one map-side-combined
     rollup. §2.B sources/evolution surface.
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     v1 = o.filter(F.year("o_orderdate") < 1995).select(
         "o_orderkey", "o_totalprice", F.lit("v1").alias("schema_version")

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -87,7 +85,6 @@ def q_histogram_quantile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the exact side needs the global sort the histogram avoids — the
     comparison IS the point). §2.B sketches [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     cents = o.select(
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("v")
@@ -231,7 +228,6 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dims×labels×2)-cell joint table, all map-side combined. §2.B ML-ops
     surface [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     dims = spark.range(1, _MI_DIMS + 1).select(F.col("id").cast("int").alias("i"))
     flat = (
@@ -326,7 +322,6 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup, one 5-bin grid; the NTILE sort is the only
     ordered stage. §2.B ML-ops surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     users = ev.groupBy("user_id").agg(
         bcount("n_events"),

@@ -15,10 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register
 
 
@@ -81,7 +79,6 @@ def q_weibull_median_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup + one global sort for ranks; the fit is 1-row
     algebra. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     life = (
         ev.groupBy("user_id")
@@ -212,7 +209,6 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one tokenize pass; the z grid is |sources|×20 and pairwise Δ
     runs on it alone. §2.B text surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split("text", " ")).alias("t")
@@ -349,7 +345,6 @@ def q_bullwhip_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two map-side-combined calendar rollups + 1-row algebra. §2.B
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     line_m = (

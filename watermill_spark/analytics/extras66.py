@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -66,7 +64,6 @@ def q_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: calendar-bounded daily grid after one map-side-combined join
     rollup. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     daily = (
@@ -163,7 +160,6 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword guard over the diagnostic doc sample. §2.B dedup surface
     [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     tok = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("t")
@@ -283,7 +279,6 @@ def q_gaussian_kde(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map over the fact table with map-side combine into 15 cells —
     KDE as a groupBy, not a pairwise op. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # single scan (r6): the bandwidth stats and the kernel sums each
     # re-scanned orders; both now derive from ONE per-distinct-value

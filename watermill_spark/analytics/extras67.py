@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register, spread
 
@@ -69,7 +67,6 @@ def q_tail_dependence_copula(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: calendar-bounded daily grid; two rank windows and one 4-cell
     aggregate. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("decimal(18,6)").alias("rev"),
@@ -161,7 +158,6 @@ def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined — the evaluation never materializes a single candidate
     pair. §2.B dedup surface [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     fp = docs.select(
         "doc_id",
@@ -280,7 +276,6 @@ def q_record_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one calendar-bounded running-max window; both aggregates are
     1-row. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("decimal(18,6)").alias("rev")

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -69,7 +67,6 @@ def q_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined part rollup; the summary runs on the
     parts grid. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     unit = li.filter(F.col("l_quantity") > 0).select(
         "l_partkey",
@@ -173,7 +170,6 @@ def q_taylors_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one three-table rollup (broadcast part dim) → |brands|×|days|
     grid → |brands| moment rows → 1-row fit. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     p = load(spark, sf_dir, "part")
@@ -293,7 +289,6 @@ def q_survivorship_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup with the 1-row anchor broadcast; summary is
     1 row. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     anchor = ev.agg(F.max("ts").alias("tmax"))
     users = (

@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -81,7 +79,6 @@ def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup with the 1-row bounds broadcast; CUPED algebra
     is a 1-row expression. §2.B experimentation surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg(
         F.floor(
@@ -188,7 +185,6 @@ def q_sax_symbolization(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: calendar-bounded; one rollup + one segment groupBy. §2.B
     [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = (
         o.filter(F.year("o_orderdate") == 1995)
@@ -303,7 +299,6 @@ def q_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the histogram contraction documented as the 100 TB shape. §2.B
     experimentation surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (

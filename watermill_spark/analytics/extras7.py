@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dsum
 from .registry import load, register, spread
 
@@ -44,7 +42,6 @@ def q_denylist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     by swapping the regex. Spark's regexp_replace is global by default ==
     DuckDB's 'g' flag.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     scrubbed = F.regexp_replace("text", _DENY, "<REDACTED>")
     return docs.select(
@@ -88,7 +85,6 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     max reuses the same doc_id partitioning — skew-free because no gram
     crosses documents.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = docs.select("doc_id", F.split("text", " ").alias("t")).filter(F.size("t") >= 3)
     grams = toks.select(
@@ -141,7 +137,6 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000-executor run produces bit-identical centroids to a single-threaded
     one. posexplode is 0-based → +1 to match SQL's generate_subscripts.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     u = emb.select(
         "label", F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "x")
@@ -187,7 +182,6 @@ def q_events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the oracle's lag window uses event_id, but equal-ts events always
     land in the same session either way.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -252,7 +246,6 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .text import EN_STOPWORDS
 
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     q_ok = F.length("text").between(100, 2000) & (

@@ -14,10 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register
 
 _KM_K = 5
@@ -103,7 +101,6 @@ def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     (production iterates to movement < ε with the same plan per round).
     §2.B clustering surface [NS], guide §2.4.
     """
-    tune_session(spark)
     # no checkpoint: the columnar scan re-reads at ~1/20 the cost of
     # materializing 64-wide double arrays (measured 0.22 s vs 4.7 s at
     # sf1), and each round's consumer is a pure map over it
@@ -237,7 +234,6 @@ def q_knee_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup, one global sort, one argmax window. §2.B
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     users = ev.groupBy("user_id").agg(bcount("n_events"))
     # r7 (guide §2.5): rank + the three global scalars ran as FOUR
@@ -347,7 +343,6 @@ def q_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: 1-row covariance broadcast to the calendar-bounded daily grid;
     top-10 is TakeOrdered. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the covariance moments and the scoring
     # pass both re-derived the rollup (2 orders scans in the plan); the

@@ -11,13 +11,11 @@ information-theoretic justification behind dedup-by-perplexity filters.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import two_level_order
 from .registry import load, register
 
 _HEX = "0123456789abcdef"
@@ -83,7 +81,6 @@ def q_ks_hash_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct → hash → one global sort (rank) → 1-row max. §2.B
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hashed = ev.select("user_id").distinct().select(
         _spark_hexval8(
@@ -178,7 +175,6 @@ def q_kl_coding_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-partitioned with map-side combine into |sources| rows. §2.B
     text surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split("text", " ")).alias("t")
@@ -274,7 +270,6 @@ def q_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one groupBy pass; pairs run on the 5-row grid. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     cents = o.select(
         F.col("o_orderpriority").alias("g"),

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 from .extras9 import _PR_EDGE_SQL
@@ -98,7 +96,6 @@ def q_gravity_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the obs table is the ≤|nations|² flow grid with broadcast
     margins; one moment pass → 1-row solve. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -210,7 +207,6 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: tokenize → token counts → 4-cell frequency-of-frequencies —
     all map-side combined. §2.B text surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(F.split("text", " ")).alias("t")).filter(
         F.col("t") != ""
@@ -287,7 +283,6 @@ def q_renyi_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: tokenize → token counts → 1-row spectrum, all map-side
     combined. §2.B text surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(F.split("text", " ")).alias("t")).filter(
         F.col("t") != ""

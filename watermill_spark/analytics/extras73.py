@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 from .extras48 import _SQL_DAILY_1995, _SQL_GAMMAS, _spark_centered_daily, _spark_gammas
@@ -84,7 +82,6 @@ def q_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two running windows + one argmax over the calendar-bounded
     grid — O(n), not the O(n²) naive segment scan. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("decimal(18,6)").alias("rev")
@@ -205,7 +202,6 @@ def q_optimal_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one moment pass + one sort for quartiles; output is 1 row.
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     v = o.select(
         F.col("o_totalprice").cast("double").alias("x"),
@@ -307,7 +303,6 @@ def q_effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical calendar-bounded shape to the PACF queries. §2.B
     [NS].
     """
-    tune_session(spark)
     cdf = _spark_centered_daily(spark, sf_dir)
     g = _spark_gammas(cdf)
     nd = cdf.agg(bcount("n_days"))

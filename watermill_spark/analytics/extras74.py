@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -78,7 +76,6 @@ def q_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key-local, 64²/2 cells out); everything after runs on the 2080-cell
     upper triangle. §2.B similarity surface [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     flat = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "xv")
@@ -203,7 +200,6 @@ def q_auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup + one global rank; the identity avoids any
     pairwise or threshold-sweep stage. §2.B ML-ops surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     firsts = (
         ev.select(
@@ -316,7 +312,6 @@ def q_geometric_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sessionize windows on user_id; lengths collapse map-side to a
     1-row moment set. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))

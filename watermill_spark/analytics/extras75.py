@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 from .extras9 import _PR_EDGE_SQL
@@ -79,7 +77,6 @@ def q_forecast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lag window over the calendar-bounded grid, 1-row metrics.
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")
@@ -186,7 +183,6 @@ def q_interarrival_exponential_ks(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: one ordered lag pass + one sort; 1-row result. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     gaps = ev.select(
         (
@@ -298,7 +294,6 @@ def q_trade_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the labeled edge list is ≤|nations|² with a broadcast
     community map; per-community masses collapse map-side. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")

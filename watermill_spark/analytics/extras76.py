@@ -14,9 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register
 from .extras48 import _SQL_DAILY_1995, _SQL_GAMMAS, _spark_centered_daily, _spark_gammas
 
@@ -70,7 +68,6 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the adjustment is a self-join on c+1 over that tiny grid. §2.B text
     surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(F.split("text", " ")).alias("t")).filter(
         F.col("t") != ""
@@ -179,7 +176,6 @@ def q_bass_diffusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: first-order rollup per customer → calendar-bounded monthly
     series → 1-row solve. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     firsts = o.groupBy("o_custkey").agg(
         F.min(F.date_trunc("month", "o_orderdate")).alias("m0")
@@ -269,7 +265,6 @@ def q_mean_reversion_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same calendar-bounded shape as the ACF family. §2.B [NS].
     """
-    tune_session(spark)
     cdf = _spark_centered_daily(spark, sf_dir)
     g = _spark_gammas(cdf)
     nd = cdf.agg(bcount("n_days"))

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -116,7 +114,6 @@ def q_bonferroni_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass with conditional aggregation). §2.B experimentation surface
     [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (
@@ -273,7 +270,6 @@ def q_topk_policy_regret(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two rollups over the split fact table + rank windows on the
     parts grid; no pairwise stage. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     split = li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -365,7 +361,6 @@ def q_vocab_overlap_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the inverted-index shape, never source×source×vocab). §2.B text
     surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     # checkpoint the distinct (source, token) set once (r6): sizes and
     # both sides of the pair join re-tokenized the corpus per reference

@@ -14,10 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
 from .registry import load, register
 
 _EPS_S = 300  # seconds
@@ -86,7 +83,6 @@ def q_dbscan_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, O(n)); the correlated-count form here keeps the oracle 1:1.
     §2.B clustering surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     pts = ev.select(
         F.floor(F.unix_micros("ts") / 1000000).cast("bigint").alias("t"),
@@ -202,7 +198,6 @@ def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup + one rank; the k spine is a 5-row broadcast
     over the ranked grid. §2.B ML-ops surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     firsts = (
         ev.select(
@@ -321,7 +316,6 @@ def q_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side moment pass → 1-row closed form. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         (F.sum(dec("o_totalprice")).cast("double") / F.lit(1e6)).alias("x"),

@@ -11,10 +11,8 @@ conflates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from watermill_spark.session import tune_session
 
 from .det import bcount, dec
 from .registry import load, register
@@ -83,7 +81,6 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     is truncated per round with localCheckpoint (see SCALE.md). §2.B
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -203,7 +200,6 @@ def q_month_end_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side daily rollup → 1-row ratio. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.col("o_orderdate").cast("date").alias("d"),
@@ -288,7 +284,6 @@ def q_lotka_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two map-side rollups to a ≤20-point grid → 1-row fit. §2.B
     [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(bcount("k"))
     fof = per_cust.groupBy("k").agg(bcount("n_k"))

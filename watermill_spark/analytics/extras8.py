@@ -10,8 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dsum
 from .registry import load, register
 
@@ -48,7 +46,6 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     within type: bounded state, one shuffle. Day totals are exact decimal
     sums, so the carried value is engine-identical.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
@@ -95,7 +92,6 @@ def q_equi_depth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     this runs as a per-partition partial sort + merge, or is replaced by the
     t-digest approximation — the declared surface stays identical.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("li_deciles_v")
     return spark.sql("""
@@ -137,7 +133,6 @@ def q_referential_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem⟕orders anti-joins on the co-partitioned orderkey (one shuffle,
     reused by AQE). Counting is a partial-agg collapse.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -187,7 +182,6 @@ def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is safe precisely because the aggregation collapsed the data
     first; growth is a single IEEE division on identical operands.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     yearly = orders.groupBy(F.year("o_orderdate").cast("bigint").alias("yr")).agg(
         dsum("o_totalprice", "revenue"), bcount("n_orders")
@@ -228,7 +222,6 @@ def q_market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the p1 < p2 predicate halves the pair space. Bucketing parts (mod 1000)
     bounds the output cardinality.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): both self-join sides re-scanned and
     # re-deduped lineitem (2 scans in the plan); the deduped
@@ -302,7 +295,6 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines. Scale: same spine/LOCF plan as q_resample_ffill plus one
     mirrored backward window; both windows share the (event_type, day) sort.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec, telescoped_lambda
 from .registry import load, register
 
@@ -88,7 +86,6 @@ def q_coupon_collector(spark: SparkSession, sf_dir: str) -> DataFrame:
     — two map-side-combined groupBys after one orderkey-clustered join.
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
@@ -213,7 +210,6 @@ def q_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     values), not on users — one rollup, one ordered window over a tiny
     grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (
@@ -334,7 +330,6 @@ def q_mg1_queue_wait(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one ordered-lag pass + one moment pass → 1 row. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # λ without the global lag window: det.telescoped_lambda (r6 pass
     # 13a; hoisted r7). r7 also merges the arrival and service moments

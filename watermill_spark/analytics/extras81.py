@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register
 
@@ -83,7 +81,6 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross of two ≤|support|-row histograms (the production form at any
     n); one ordered cumsum finds the median. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (
@@ -220,7 +217,6 @@ def q_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: user rollup → support histogram (≤ distinct scores) → one
     ordered window + argmax. §2.B ML-ops surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     firsts = (
         ev.select(
@@ -340,7 +336,6 @@ def q_split_half_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup with conditional counting → 1-row moments.
     §2.B experimentation surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     halves = ev.groupBy("user_id").agg(
         F.count_if(F.dayofmonth("ts") % 2 == 1).cast("bigint").alias("x"),

@@ -11,10 +11,8 @@ statistically honest alternative to just averaging subgroup effects.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from watermill_spark.session import tune_session
 
 from .det import bcount, dec
 from .registry import load, register
@@ -92,7 +90,6 @@ def q_smallworld_sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the census runs entirely on the collapsed ≤|nations|² edge
     list; APSP is the q_harmonic_centrality loop. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -232,7 +229,6 @@ def q_trending_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one tokenize pass with a broadcast 1-row split point; the
     scoring runs on the token vocabulary. §2.B text surface [NS].
     """
-    tune_session(spark)
     docs = load(spark, sf_dir, "documents")
     bounds = docs.agg(
         (F.max("doc_id").cast("bigint") / 2).cast("bigint").alias("mid")
@@ -361,7 +357,6 @@ def q_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one conditional-aggregation pass → 5 study rows → 1-row pool.
     §2.B experimentation surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (

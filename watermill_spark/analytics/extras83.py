@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -69,7 +67,6 @@ def q_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-filter on the matched column — same plan as plain as-of. §2.B
     joins surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id",
@@ -182,7 +179,6 @@ def q_two_part_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup → 2 arm rows → 1-row decomposition. §2.B
     experimentation surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     arm = F.when(
         (
@@ -313,7 +309,6 @@ def q_shift_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast margins; the decomposition is cell-local algebra. §2.B
     [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     supp = load(spark, sf_dir, "supplier")

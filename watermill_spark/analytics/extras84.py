@@ -15,11 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
-from .similarity import _dot, cosine
+from .similarity import _dot
 
 # C(n,k) binomial tail is awkward cross-engine; use the normal
 # approximation with continuity correction, shared literal z-cut.
@@ -82,7 +80,6 @@ def q_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: weekly rollup map-side combines; the test is one row. §2.B
     [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     dow = F.when(
         F.dayofweek("o_orderdate") == 1, 7
@@ -178,7 +175,6 @@ def q_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram is estimated from a hash sample with this exact plan. §2.B
     similarity surface [NS].
     """
-    tune_session(spark)
     emb = load(spark, sf_dir, "embeddings")
     s = emb.filter(F.col("vec_id") < _SIM_SAMPLE).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -258,7 +254,6 @@ def q_hour_type_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one 24×|types| map-side rollup. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     grid = ev.groupBy(
         F.hour("ts").cast("bigint").alias("hr"), "event_type"

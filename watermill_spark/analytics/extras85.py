@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -87,7 +85,6 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup with conditional counting → 1-row algebra.
     §2.B experimentation surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     d = F.dayofmonth("ts")
     items = ev.groupBy("user_id").agg(
@@ -179,7 +176,6 @@ def q_dhondt_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: |brands|×100 quotients ranked in one window; everything is
     grid-sized. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     votes = (
@@ -285,7 +281,6 @@ def q_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: calendar-bounded daily grid, two ordered windows, 1-row
     verdict. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the VaR cutoff and the exceedance flags
     # both re-derived the rollup (2 orders scans in the plan); the

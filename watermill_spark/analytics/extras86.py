@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec, telescoped_lambda
 from .registry import load, register
 from .extras9 import _PR_EDGE_SQL
@@ -90,7 +88,6 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything runs on the collapsed undirected edge list with a
     broadcast 8-node club. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -192,7 +189,6 @@ def q_erlang_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     are identical bigint/double arithmetic. Two moment passes → 1-row
     closed-form chain. §2.B [NS], guide §2.5.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
 
     # λ via det.telescoped_lambda (r6 pass 13a; hoisted r7). r7 also
@@ -280,7 +276,6 @@ def q_lmdi_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one two-year rollup → 1-row algebra. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     yearly = (

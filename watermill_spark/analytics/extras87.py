@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -68,7 +66,6 @@ def q_runs_up_down(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two ordered windows over the calendar-bounded grid. §2.B
     [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("decimal(18,6)").alias("rev")
@@ -154,7 +151,6 @@ def q_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over the (window, bucket) key — map-side combined.
     §2.B streaming surface [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     pts = ev.select(
         F.floor(F.unix_micros("ts") / 1000000).cast("bigint").alias("t")
@@ -246,7 +242,6 @@ def q_forecast_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lag window, one train-period sort, one 1-row coverage
     count. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the train quantiles and the test coverage
     # both re-derived the rollup (2 orders scans in the plan); the

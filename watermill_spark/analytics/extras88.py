@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -118,7 +116,6 @@ def q_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one rollup to |brands| rows; every later stage is grid-sized
     with 1-row norm/weight broadcasts. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     crit = (
@@ -270,7 +267,6 @@ def q_arch_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two lag windows over the calendar-bounded grid → 1 row.
     §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")
@@ -350,7 +346,6 @@ def q_laplace_succession(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one daily rollup → 1 row. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.max(F.when(F.col("event_type") == "error", 1).otherwise(0))

@@ -14,10 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import grid_rank_of, two_level_order
 from .registry import load, register, spread
 
 
@@ -63,7 +61,6 @@ def q_birthday_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two distinct-counts over one scan. §2.B dedup surface [NS].
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     fp = docs.select(
         F.substring(F.md5("text"), 1, 8).alias("h32"), F.md5("text").alias("hf")
@@ -159,7 +156,6 @@ def q_cohort_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user rollup + one global rank; no pairwise stage (the
     rank-sum identity again). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     spans = ev.groupBy("user_id").agg(
         F.min("ts").alias("t0"),
@@ -266,7 +262,6 @@ def q_peak_over_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one daily rollup + one sort for the threshold + one excess
     moment pass. §2.B [NS].
     """
-    tune_session(spark)
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")

@@ -10,10 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dsum
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import ntile_of, two_level_order
 from .registry import load, register, spread
 
 
@@ -44,7 +42,6 @@ def q_events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the matrix is tiny no matter the input size. The probability is one
     IEEE division of exact integer counts.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -85,7 +82,6 @@ def q_doc_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     global ranking window only sees |vocabulary| rows, and LIMIT 50 plans a
     TakeOrdered, not a full sort. Tiebreak on term keeps ranks total-ordered.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     counted = (
         docs.select(F.explode(F.regexp_extract_all("text", F.lit("[a-z]+"), 0)).alias("term"))
@@ -140,7 +136,6 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every ntile orders with a unique tiebreak (custkey) so bucket boundaries
     are engine-identical.
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     rfm = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
@@ -200,7 +195,6 @@ def q_events_type_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     back. |A∪B| is computed as n1+n2−n∩ (exact integers), so no union
     materialization.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     tu = ev.select("event_type", "user_id").distinct()
     # checkpointed once (r6): the per-type sizes and both intersection
@@ -298,7 +292,6 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle over |edges|; a 100-TB edge list changes nothing structurally
     (checkpoint every ~5 iterations to cut lineage).
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -382,7 +375,6 @@ def q_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     over unbounded rows, where we'd restructure to avoid logs entirely —
     see q_tfidf_top_terms).
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     # checkpointed once (r6): the totals and the entropy join both
     # re-derived the counts (2 events scans in the plan); the user×type
@@ -431,7 +423,6 @@ def q_events_late_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered count — no joins; the same audit runs incrementally in the
     streaming twin via max-aggregation per micro-batch.
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("event_type")
@@ -485,7 +476,6 @@ def q_supplier_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |suppliers| (already aggregated) rows; at 100 TB that window uses
     `repartitionByRange` internally, same surface.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_suppkey").agg(
         F.sum(

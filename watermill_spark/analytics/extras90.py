@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -85,7 +83,6 @@ def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy/total aggregate is cross-joined back to the ≤6 pattern rows
     (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     d = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
         F.sum(dec("o_totalprice")).alias("rev")
@@ -205,7 +202,6 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 1-row totals aggregate cross-joined back onto the bin grid
     (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     ret = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
     qcol = F.col("l_quantity").cast("bigint").alias("q")
@@ -349,7 +345,6 @@ def q_variogram_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies of grid rows, not fact rows; the 1-row variance aggregate is
     cross-joined to the 9 lag rows (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the lag fan-out and the sill variance both
     # re-derived the rollup (2 orders scans in the plan); the

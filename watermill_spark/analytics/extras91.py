@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -96,7 +94,6 @@ def q_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     same whitelisted-BNLJ stance as q_theil_sen_trend; the 1-row
     tolerance row rides the same broadcast. §2.B [NS].
     """
-    tune_session(spark)
     d = _daily(spark, sf_dir)
     w = Window.orderBy("day")
     g = d.select(
@@ -238,7 +235,6 @@ def q_cochrane_orcutt(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid, each 1-row coefficient set broadcast back (whitelisted BNLJ).
     §2.B [NS].
     """
-    tune_session(spark)
     d = _daily(spark, sf_dir)
     w = Window.orderBy("day")
     g = d.select("y", F.row_number().over(w).cast("bigint").alias("t"))
@@ -360,7 +356,6 @@ def q_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     total-energy broadcast onto the 5 level rows (whitelisted BNLJ).
     §2.B [NS].
     """
-    tune_session(spark)
     d = _daily(spark, sf_dir)
     w = Window.orderBy("day")
     g = d.select(

@@ -19,10 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
 from .extras48 import _SQL_DAILY_1995, _spark_centered_daily
 from .registry import load, register
 
@@ -105,7 +102,6 @@ def q_caliper_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows are running frames with O(1) state. No pairwise expansion
     (cf. q_knn_bruteforce, which deliberately is). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     spend = orders.groupBy("o_custkey").agg(F.sum(dec("o_totalprice")).alias("sy"))
@@ -299,7 +295,6 @@ def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row full-mean/boot aggregates cross-join (whitelisted BNLJ).
     §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     reps = spark.range(_R).select(F.col("id").cast("int").alias("r"))
     u = _u24(
@@ -402,7 +397,6 @@ def q_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy aggregates cross-join back onto the 16 spectral rows
     (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     cdf = _spark_centered_daily(spark, sf_dir)
     freq = spark.range(1, _K + 1).select(F.col("id").cast("int").alias("k"))
     ang = F.lit(_TWO_PI) * F.col("k") * F.col("t") / F.lit(365.0)

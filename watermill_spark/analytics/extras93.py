@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -114,7 +112,6 @@ def q_colley_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤|nations|-row rating vector broadcast per sweep — iteration depth
     fixed at 3, no fact re-scan. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -255,7 +252,6 @@ def q_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression. Scale: fact → |days| grid via one map-side-combined
     aggregation; the rest is a 1-row computation. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     d = li.groupBy(F.col("l_shipdate").alias("day")).agg(
         F.sum(dec("l_quantity")).alias("qty"),
@@ -341,7 +337,6 @@ def q_kernel_regression_nw(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one map-side-combined aggregation, no shuffle growth with fact
     size (whitelisted BNLJ for the broadcast spine). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     spend = orders.groupBy("o_custkey").agg(F.sum(dec("o_totalprice")).alias("sy"))

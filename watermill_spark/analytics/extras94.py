@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -134,7 +132,6 @@ def q_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the entire test is O(scan); direction rows are two projections of
     the same 1-row moment table. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): both causality directions re-derived the
     # rollup through the shared 1-row moment table (2 lineitem scans in
@@ -283,7 +280,6 @@ def q_zero_inflated_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed count aggregation (map-side combined) and a
     1-row moment fold — O(scan). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(
         F.count_if(F.col("event_type") == "purchase").cast("bigint").alias("k")
@@ -378,7 +374,6 @@ def q_process_capability(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregation keyed by the 5 priority classes.
     §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     t = li.join(orders, li.l_orderkey == orders.o_orderkey).select(

@@ -13,13 +13,11 @@ wins minus losses, the Condorcet-consistent voting rule.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .distrib import ntile_of, two_level_order
 from .registry import load, register
 
 
@@ -88,7 +86,6 @@ def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one sort for deciling (range-partitioned at 100 TB), a tiny
     10-row propensity broadcast back, one aggregation. §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     spend = orders.groupBy("o_custkey").agg(F.sum(dec("o_totalprice")).alias("sy"))
@@ -212,7 +209,6 @@ def q_moran_geary(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row mean/denominator aggregates broadcast back (whitelisted
     BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
@@ -330,7 +326,6 @@ def q_copeland_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     same whitelisted pre-AQE SMJ stance as q_brand_cannibalization);
     outcomes aggregate to |brands|² then |brands| rows. §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     daily = (

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -120,7 +118,6 @@ def q_che_lru_hit_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitelisted BNLJ) — iteration count fixed, no fact re-scan.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     freq = ev.groupBy("user_id").agg(bcount("cnt"))
     span = ev.agg(
@@ -251,7 +248,6 @@ def q_delta_method_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed aggregation (map-side combined) then a 1-row
     moment fold — O(scan). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.sum(
@@ -373,7 +369,6 @@ def q_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     state; the 1-row limit aggregate cross-joins the grid (whitelisted
     BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the EWMA window pass and the sigma moments
     # both re-derived the rollup (2 orders scans in the plan); the

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -84,7 +82,6 @@ def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast — whitelisted BNLJ) + one ≤|nations| rollup; all
     aggregations map-side combine. §2.B [NS].
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation")
     pos = (
@@ -208,7 +205,6 @@ def q_eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (brand, day) shuffle → one |brands| rollup; part side
     broadcasts; span is a 1-row broadcast (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     daily = (
@@ -342,7 +338,6 @@ def q_erlang_c_wait(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one moment pass over the fact, then all queueing math on a
     1-row relation exploded to 4 grid rows (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     m = ev.agg(
         (

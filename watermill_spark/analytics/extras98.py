@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount, dec
 from .registry import load, register
 
@@ -107,7 +105,6 @@ def q_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking and the reverse-cummin run in single-partition windows over
     that grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     g = ev.select(
         "event_type",
@@ -239,7 +236,6 @@ def q_gtest_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals derive from the cell grid, never a fact re-scan; the final
     math is a constant-size broadcast star (whitelisted BNLJ). §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     obs = ev.groupBy(
         F.col("event_type").alias("r"),
@@ -361,7 +357,6 @@ def q_mcc_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row mean broadcast (whitelisted BNLJ) — both map-side combine.
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     mu = ev.agg(
         (F.sum(dec("value")).cast("double") / F.count(F.lit(1))).alias("m")

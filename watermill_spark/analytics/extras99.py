@@ -16,10 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .det import bcount
+from .distrib import two_level_order
 from .extras71 import _spark_hexval8, _sql_hexval8
 from .registry import load, register
 
@@ -107,7 +105,6 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (whitelisted BNLJ) → a ≤|span-days| grid; the KM windows
     are single-partition only over that bounded grid. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     anchor = ev.agg(F.unix_micros(F.max("ts")).alias("aus"))
     users = (
@@ -269,7 +266,6 @@ def q_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast non-equi join of that tiny grid (whitelisted BNLJ).
     §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     um = ev.select(
         "user_id", F.date_trunc("month", "ts").alias("mon")
@@ -381,7 +377,6 @@ def q_ad_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the same statistic runs on a fixed-size uniform sample — AD's
     power is n-independent past ~10⁵) → 1-row reduce. §2.B [NS].
     """
-    tune_session(spark)
     ev = load(spark, sf_dir, "events")
     hashed = ev.select("user_id").distinct().select(
         _spark_hexval8(

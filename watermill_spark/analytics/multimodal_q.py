@@ -30,7 +30,6 @@ from watermill_spark.operators.multimodal import (
     frame_sample,
     resize_plan,
 )
-from watermill_spark.session import tune_session
 
 from .registry import load, register, spread
 
@@ -82,7 +81,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the deterministic stub codec in SQL, so a hash match proves the
     Python batch path (not just the plan) is correct.
     """
-    tune_session(spark)
     media = _media_from_documents(spark, sf_dir)
     assert media.schema == MEDIA_SCHEMA or [f.name for f in media.schema] == [
         f.name for f in MEDIA_SCHEMA
@@ -108,7 +106,6 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the (cheap) feature pass, so frame extraction workers downstream
     receive (media_id, frame_idx) units without Python in the loop.
     """
-    tune_session(spark)
     media = _media_from_documents(spark, sf_dir)
     return frame_sample(media, every_n=4)
 
@@ -143,7 +140,6 @@ def q_multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one mapInPandas pass over non-audio media; the plan math is a
     narrow map. §2.B [NS] multimodal surface.
     """
-    tune_session(spark)
     media = _media_from_documents(spark, sf_dir)
     return resize_plan(media, max_side=224)
 
@@ -177,6 +173,5 @@ def q_multimodal_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow decode pass; each (media_id, chunk) row is an independent
     work unit for the downstream kernel. §2.B [NS] multimodal surface.
     """
-    tune_session(spark)
     media = _media_from_documents(spark, sf_dir)
     return audio_chunks(media, win=128, hop=64)

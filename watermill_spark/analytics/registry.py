@@ -10,12 +10,15 @@ the cross-engine determinism rules in :mod:`watermill_spark.analytics.det`.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from watermill_spark.session import tune_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -45,13 +48,27 @@ REGISTRY: dict[str, Query] = {}
 
 
 def register(name: str, oracle: str | None, bench: bool = False):
-    """Decorator registering a (spark, sf_dir) -> DataFrame query."""
+    """Decorator registering a (spark, sf_dir) -> DataFrame query.
+
+    The registered and returned function is a wrapper that applies
+    :func:`~watermill_spark.session.tune_session` before the query body runs,
+    so every call — through ``REGISTRY``, ``all_queries()`` or a direct
+    module-level call — plans under UTC and our join thresholds whatever
+    session the caller hands in. Query bodies must not rely on any other
+    session state.
+    """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, bench=bench)
-        return fn
+
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tune_session(spark)
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = Query(name=name, fn=tuned, oracle=oracle, bench=bench)
+        return tuned
 
     return deco
 

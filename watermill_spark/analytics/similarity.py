@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .registry import load, register, spread
 
 K = 5
@@ -75,7 +73,6 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     same expressions, same dot/(q_n*c_n) operand order, evaluated once per
     row instead of once per pair.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").cast("array<double>").alias("c_emb")
@@ -116,7 +113,6 @@ def q_knn_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set before exact scoring — the candidate scan reads
     ~1/n_cells of the corpus per query.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -218,7 +214,6 @@ def q_ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale, multiple bands (repeat with different plane seeds, union)
     trade recall vs. cost exactly like MinHash LSH banding.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -269,7 +264,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescoring filter. Kept brute-force here because the oracle must be
     recall-perfect, and LSH pruning is probabilistic.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     a = emb.select(
         F.col("vec_id").alias("a_id"), F.col("embedding").cast("array<double>").alias("a_emb")
@@ -300,7 +294,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector norms + dimension audit (sanity surface for the ANN path)."""
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     e = F.col("embedding").cast("array<double>")
     return emb.select(
@@ -581,7 +574,6 @@ def q_dedup_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the candidates instead of carrying 64 doubles through the
     band shuffle.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     # checkpointed once (r6): the nb probe, the banding map, and both
     # verify-join sides each re-scanned embeddings (6 scans in the plan);
@@ -711,7 +703,6 @@ def q_dedup_embedding_lsh_multiprobe_pairs(spark: SparkSession, sf_dir: str) -> 
     probes buy is measured, not asserted: see
     q_embedding_lsh_recall_calibration.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     # checkpointed once (r6): same single-corpus-read restructure as the
     # base query above — one (vec_id, emb, norm) materialization feeds
@@ -842,7 +833,6 @@ def q_embedding_lsh_recall_calibration(spark: SparkSession, sf_dir: str) -> Data
     taus explode a 3-element literal array. At any SF this query runs in
     one pass over the corpus.
     """
-    tune_session(spark)
     emb = spread(load(spark, sf_dir, "embeddings"))
     # checkpointed once (r6): the (n, nb) probe and both mixer-join sides
     # each re-scanned embeddings (3 scans in the plan); the vector table

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import bcount
 from .registry import load, register, spread
 
@@ -44,7 +42,6 @@ def q_doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The regex `[a-z]+|[0-9]+` is deliberately RE2-compatible so Java regex
     (Spark) and RE2 (DuckDB) tokenize identically.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
@@ -76,7 +73,6 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ratios are double divisions of exact integers — engine-independent.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     n_words = F.size(toks).cast("bigint")
@@ -115,7 +111,6 @@ def q_doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible heuristic that exercises the same plumbing: tokenize →
     per-token membership → per-doc ratio → threshold.)
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     stoplist = ",".join(f"'{w}'" for w in EN_STOPWORDS)
     hits = F.expr(f"size(filter(split(text, ' '), x -> x IN ({stoplist})))")
@@ -148,7 +143,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash so distribution is uniform (no skew); partial agg collapses
     singletons map-side.
     """
-    tune_session(spark)
     docs = spread(load(spark, sf_dir, "documents"))
     fp = F.md5(F.lower(F.regexp_replace("text", r"\s+", " ")))
     return (

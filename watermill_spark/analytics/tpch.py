@@ -25,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
 from .det import DEC, bcount, davg, dec, dsum, sql_davg, sql_dsum
 from .registry import load, register, spread
 
@@ -82,7 +80,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter parallelizes it when the scan is a single row group; on a real
     multi-split table spread is a no-op and the plan is scan→agg.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         spread(li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp")))
@@ -131,7 +128,6 @@ def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     enters 5x smaller. Top-k via global sort of the tiny aggregated
     result (LIMIT pushes a TakeOrdered, no full sort).
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
@@ -188,7 +184,6 @@ def q05_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is correct there). The s_nationkey = n_nationkey constraint
     rides on the supplier join condition instead of a post-join filter.
     """
-    tune_session(spark)
     region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = load(spark, sf_dir, "nation")
     cust = load(spark, sf_dir, "customer")
@@ -237,7 +232,6 @@ def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     and only 3 columns are read (`ReadSchema`). Single-stage, no shuffle
     beyond the 1-row final agg.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -280,7 +274,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: lineitem filtered on returnflag at the scan; single
     orders⨝lineitem shuffle; customer/nation broadcast; TakeOrdered top-k.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     orders = load(spark, sf_dir, "orders").filter(
@@ -319,7 +312,6 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: part is broadcast (never shuffles lineitem); CASE-sum is a single
     pass with partial aggregation.
     """
-    tune_session(spark)
     part = load(spark, sf_dir, "part")
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -357,7 +349,6 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is a broadcast of the (filtered, deduped-by-Spark) build side or a
     shuffled semi; either way no row multiplication.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     big = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return cust.join(big, cust.c_custkey == big.o_custkey, "left_semi").select(
@@ -375,7 +366,6 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers with no orders at all."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select(
@@ -402,7 +392,6 @@ def q_outer_join_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
     custkey *before* joining) which is what we do; the join input is already
     minimal, and AQE broadcasts the aggregated side when small.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     per_cust = (
         load(spark, sf_dir, "orders")
@@ -439,7 +428,6 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: Spark expands rollup to a union of grouping sets before the
     shuffle; with partial aggregation the cost stays ~1 pass over data.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
@@ -465,7 +453,6 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE aggregation over order status x priority."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
@@ -495,7 +482,6 @@ def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the partition key; Spark 3.5+ inserts a
     WindowGroupLimit so each partition keeps only k rows pre-shuffle.
     """
-    tune_session(spark)
     from watermill_spark.operators import topk_per_group
 
     orders = load(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
@@ -522,7 +508,6 @@ def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running cumulative sum per customer (rows frame)."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -550,7 +535,6 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag(): inter-order gap in days per customer (NULL for first order)."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev = F.lag("o_orderdate").over(w)
@@ -580,7 +564,6 @@ def q_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass distributed ranking). Kept here because the declared surface
     includes global ranking on a dimension-sized table.
     """
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     w = Window.orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return cust.select(
@@ -608,7 +591,6 @@ def q_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set operators: EXCEPT / INTERSECT / UNION ALL in one result."""
-    tune_session(spark)
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k")).distinct()
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k")).distinct()
     cust_only = c.exceptAll(s).withColumn("tag", F.lit("cust_only"))
@@ -632,7 +614,6 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count distinct + min/max per group (exact; the approx variant
     `approx_count_distinct` is exercised in tests, not against the oracle,
     since HLL sketches are engine-specific)."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     return cust.groupBy("c_mktsegment").agg(
         bcount("n_customers"),
@@ -658,7 +639,6 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar string functions: upper/substring/length/replace/concat/regexp."""
-    tune_session(spark)
     part = load(spark, sf_dir, "part")
     return part.filter(F.col("p_name").like("%a%")).select(
         "p_partkey",
@@ -685,7 +665,6 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """date_trunc / year / month extraction + monthly aggregation."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     return (
         orders.groupBy(
@@ -713,7 +692,6 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_case_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE-WHEN bucketing + min/max (order-independent, no decimal needed)."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 50000, "S")

@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import bcount, dec, dsum, sql_dsum
-from .distrib import grid_rank_of, ntile_of, two_level_order
+from .det import bcount, dec
 from .registry import load, register
 
 
@@ -44,7 +41,6 @@ def q04_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS with a correlated inequality — via the SQL
     API. Catalyst rewrites the EXISTS to a left-semi join on orderkey with
     the inequality as join condition (one shuffle)."""
-    tune_session(spark)
     _views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(
         """
@@ -83,7 +79,6 @@ def q04_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q07_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral trade volume. All dims broadcast; the
     nation-pair disjunction is applied post-broadcast-join (tiny)."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -134,7 +129,6 @@ def q07_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q12_dategap_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional counts over a date-gap bucketing."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -169,7 +163,6 @@ def q13_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: two-level aggregation (orders-per-customer
     distribution). The inner agg shrinks orders to one row per customer
     before anything joins."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     per_cust = (
@@ -200,7 +193,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: scalar subquery (global max) against an aggregate.
     Window-max over an empty partition computes the scalar in the same pass
     — no second scan of lineitem."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -245,7 +237,6 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated average rewritten aggregate-then-join —
     the per-part average is computed once (one shuffle on partkey) and
     joined back, instead of a per-row correlated probe."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     pavg = li.groupBy(F.col("l_partkey").alias("p_key")).agg(
         (F.sum(dec("l_quantity")).cast("double") / F.count("l_quantity").cast("double")).alias(
@@ -280,7 +271,6 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: IN-subquery with HAVING — left-semi join against the
     aggregated key set (never materializes the IN list on the driver)."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -329,7 +319,6 @@ def q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs predicate across a join. Catalyst
     extracts the common join key so the disjunction never forces a
     cartesian; part stays broadcast."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     cond = (
@@ -371,7 +360,6 @@ def q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q22_wealthy_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar subquery (global average) + anti join — via
     the SQL API; Catalyst plans the scalar as a broadcast one-row join."""
-    tune_session(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
@@ -403,7 +391,6 @@ def q22_wealthy_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_argmin_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Argmin-per-group (TPC-H Q2's min-cost-supplier shape on available
     tables): cheapest supplier observed per part."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_partkey").orderBy("l_extendedprice", "l_suppkey")
     return (
@@ -433,7 +420,6 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (verified bit-identical to DuckDB's
     quantile_cont). The approx_percentile variant is benchmarked in tests —
     sketches are engine-specific so only the exact form is oracle-checked."""
-    tune_session(spark)
     cust = load(spark, sf_dir, "customer")
     return cust.groupBy("c_mktsegment").agg(
         F.expr("percentile(c_acctbal, 0.5)").alias("p50"),
@@ -461,7 +447,6 @@ def q_stddev_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per engine and per aggregation order; the two-moment formula over exact
     decimal sums is deterministic everywhere, and still one data pass with
     partial aggregation."""
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     sx = F.sum(dec("l_quantity")).cast("double")
     sx2 = F.sum((F.col("l_quantity") * F.col("l_quantity")).cast("decimal(18,6)")).cast("double")
@@ -488,7 +473,6 @@ def q_rolling_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame: trailing 7-day order count/spend per customer (value
     range, not row count — multiple orders at one timestamp all join the
     frame)."""
-    tune_session(spark)
     orders = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")

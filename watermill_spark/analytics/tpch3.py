@@ -26,9 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from watermill_spark.session import tune_session
-
-from .det import DEC, bcount, dec, dsum
+from .det import DEC, bcount, dec
 from .registry import load, register
 
 
@@ -77,7 +75,6 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window min runs on the already-aggregated (part, supp) table — tiny
     compared to lineitem.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     sup = load(spark, sf_dir, "supplier")
     nat = load(spark, sf_dir, "nation")
@@ -142,7 +139,6 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all five dim joins broadcast; the only shuffle is the final
     2-row-per-year aggregate. The orders date filter is pushed to the scan.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").between("1995-01-01", "1996-12-31")
@@ -214,7 +210,6 @@ def q09_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle (fact-fact on orderkey); the p_name LIKE filter prunes ~90% of
     parts before the join, and column pruning keeps the scan at 5 columns.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(F.col("p_name").like("%green%"))
     sup = load(spark, sf_dir, "supplier")
@@ -270,7 +265,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped (≤ #parts) table. Both engines derive the threshold from the
     same exact decimal total, so the comparison is bit-identical.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     sup = load(spark, sf_dir, "supplier")
     nat = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
@@ -323,7 +317,6 @@ def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands to a two-phase aggregate (dedup shuffle then count) — fine
     because the dedup key (brand,type,size,suppkey) is low-cardinality.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#13")
@@ -369,7 +362,6 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped (supp, part) table is small, and the semi-join against 100
     suppliers broadcasts.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
     sup = load(spark, sf_dir, "supplier")
@@ -425,7 +417,6 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing AQE coalesces the three shuffles onto the same key. The late
     filter runs before both correlations to shrink l1 early.
     """
-    tune_session(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     sup = load(spark, sf_dir, "supplier")

@@ -16,7 +16,7 @@ import os
 import threading
 import time
 import uuid as _uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

@@ -16,7 +16,6 @@ per key, evicted on release.
 
 from __future__ import annotations
 
-import datetime as dt
 from collections.abc import Iterator
 
 import pandas as pd
