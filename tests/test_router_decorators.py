@@ -183,6 +183,37 @@ def test_run_handlers_starts_late_registrations(spark, tmp_path):
     r.close()
 
 
+def test_run_stream_file_cap_keeps_subscriber_decorators(spark, tmp_path):
+    """max_files_per_trigger reaches the transport through the subscriber
+    decorators: every message is transformed, one file per micro-batch."""
+    from watermill_spark.sources import ParquetPubSub
+
+    ps = ParquetPubSub(spark, str(tmp_path / "topics"))
+    tin, tout = _topic("in"), _topic("out")
+    for i in range(3):  # three files
+        ps.publish(tin, _msgs(spark, 2, file=str(i)).coalesce(1))
+    sizes = []
+
+    def counting_handler(df):
+        sizes.append(df.count())
+        return df
+
+    r = Router()
+    r.add_subscriber_decorators(
+        message_transform_subscriber_decorator(
+            lambda df: with_metadata(df, seen="yes")
+        )
+    )
+    r.add_handler("h", tin, ps, tout, ps, counting_handler)
+    r.run_stream(str(tmp_path / "ckpt"), available_now=True, max_files_per_trigger=1)
+    r.await_termination()
+    r.close()
+    rows = ps.subscribe(tout).collect()
+    assert len(rows) == 6
+    assert all(dict(x["metadata"])["seen"] == "yes" for x in rows)
+    assert sorted(sizes) == [2, 2, 2]
+
+
 def test_introspection_accessors(ps):
     r = Router()
     r.add_handler("h", "a", ps, "b", ps, passthrough_handler)

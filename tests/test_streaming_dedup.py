@@ -20,8 +20,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from watermill_spark.message import new_message
+from watermill_spark.sources import ForwardingPubSubDecorator
 from watermill_spark.sources.parquet import ParquetPubSub
-from watermill_spark.streaming.dedup import DUP_OF, StreamingNearDupFilter
+from watermill_spark.streaming.dedup import (
+    DUP_OF,
+    RegistryLease,
+    StreamingEmbeddingDedupFilter,
+    StreamingNearDupFilter,
+)
 
 SF = "/root/testdata/sf0.001"
 N_HASHES, BAND_SIZE = 8, 2
@@ -437,28 +443,91 @@ def test_attach_is_single_writer_then_hands_off(spark, workdir):
     assert [(r.uuid, r.metadata[DUP_OF]) for r in dup] == [("b2", "1")]
 
 
-def test_writer_namespace_batch_dirs(spark, workdir):
+# per filter: (class, doc schema, one doc's payload, registry reader)
+FILTERS = {
+    "text": (
+        StreamingNearDupFilter,
+        "doc_id LONG, text STRING",
+        "alpha beta gamma delta",
+        lambda f, **kw: f.registry(**kw),
+    ),
+    "embedding": (
+        StreamingEmbeddingDedupFilter,
+        "doc_id LONG, embedding ARRAY<DOUBLE>",
+        [1.0, 9.0, 9.0, 9.0, 9.0, 1.0, 1.0, 0.05],
+        lambda f, **kw: f.registry_bands(**kw),
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(FILTERS))
+def test_writer_namespace_batch_dirs(spark, workdir, kind):
     """Attached writers namespace their registry batch subdirs by
     checkpoint identity: replay exclusion finds exactly this writer's own
     previous write, and a different writer's batch 0 can never collide."""
+    cls, ddl, doc, registry = FILTERS[kind]
     reg = os.path.join(workdir, "reg")
-    f = StreamingNearDupFilter(spark, reg)
+    f = cls(spark, reg)
     f.writer_ns = "aaaa1111"
-    f.process_batch(
-        spark.createDataFrame([(1, "alpha beta gamma delta")],
-                              "doc_id LONG, text STRING"), 0
-    )
+    f.process_batch(spark.createDataFrame([(1, doc)], ddl), 0)
     assert os.path.isdir(os.path.join(reg, "batch=aaaa1111-0"))
     # replay exclusion hides only the namespaced own batch
-    assert f.registry(exclude_batch=0).count() == 0
-    assert f.registry().count() > 0
+    assert registry(f, exclude_batch=0).count() == 0
+    assert registry(f).count() > 0
     # a second writer's batch 0 lands in its own namespace, reading the
     # first writer's rows as prefix state (identical doc => rejected)
-    g = StreamingNearDupFilter(spark, reg)
+    g = cls(spark, reg)
     g.writer_ns = "bbbb2222"
-    _, rej, _ = g.process_batch(
-        spark.createDataFrame([(2, "alpha beta gamma delta")],
-                              "doc_id LONG, text STRING"), 0
-    )
+    _, rej, _ = g.process_batch(spark.createDataFrame([(2, doc)], ddl), 0)
     assert {(r.doc_id, r.dup_of) for r in rej.collect()} == {(2, 1)}
     assert os.path.isdir(os.path.join(reg, "batch=aaaa1111-0"))  # untouched
+
+
+class _NoStreamTransport:
+    """Transport stub whose streaming subscribe fails at attach time."""
+
+    def subscribe_stream(self, topic, **options):
+        raise NotImplementedError("no streaming source")
+
+
+@pytest.mark.parametrize("kind", sorted(FILTERS))
+def test_attach_releases_lease_when_startup_fails(spark, workdir, kind):
+    """An attach whose query never starts must not keep the registry
+    lease: a held lease would refuse every other writer for lease_ttl."""
+    reg = os.path.join(workdir, "reg")
+    f = FILTERS[kind][0](spark, reg)
+    with pytest.raises(NotImplementedError):
+        f.attach(_NoStreamTransport(), "in", "ok", "dup",
+                 os.path.join(workdir, "cp"))
+    assert not os.path.exists(os.path.join(reg, RegistryLease.FILE))
+    RegistryLease(reg).acquire().release()  # the next writer gets it at once
+
+
+def test_attach_caps_files_per_trigger_through_decorator(spark, workdir):
+    """A decorated transport forwards max_files_per_trigger: three topic
+    files still make three micro-batches, with the oracle's decisions."""
+    from watermill_spark.message import messages_df
+
+    docs = _corpus(spark, limit=60)
+    want_adm, want_rej = _greedy_oracle(docs)
+    ps = ParquetPubSub(spark, os.path.join(workdir, "topics"))
+    for i in range(3):
+        ps.publish("docs_in", messages_df(spark, [
+            new_message(text, metadata={"doc_id": str(doc_id)}, uuid=f"m{doc_id}")
+            for doc_id, text in docs[i * 20 : (i + 1) * 20]
+        ]).coalesce(1))
+    f = StreamingNearDupFilter(spark, os.path.join(workdir, "reg"))
+    q = f.attach(ForwardingPubSubDecorator(ps), "docs_in", "docs_ok",
+                 "docs_dup", os.path.join(workdir, "cp"),
+                 max_files_per_trigger=1)
+    assert q.awaitTermination(300)
+    f.release_lease()
+    commits = os.listdir(os.path.join(workdir, "cp", "commits-neardup"))
+    assert len([c for c in commits if not c.endswith(".tmp")]) >= 3
+    got_adm = {int(r.uuid[1:]) for r in ps.subscribe("docs_ok").collect()}
+    got_rej = {
+        int(r.uuid[1:]): int(r.metadata[DUP_OF])
+        for r in ps.subscribe("docs_dup").collect()
+    }
+    assert got_adm == want_adm
+    assert got_rej == want_rej

@@ -244,6 +244,35 @@ def test_registry_compaction_preserves_decisions(spark, workdir, corpus):
     assert rejected == rej_o
 
 
+def test_half_written_batch_is_invisible(spark, workdir, corpus):
+    """A batch whose vecs part committed but whose bands part did not (a
+    crash between the two writes) is invisible to both registry reads and
+    to compaction, which neither merges nor removes it."""
+    rows = corpus[0]
+    filt = StreamingEmbeddingDedupFilter(spark, os.path.join(workdir, "reg"))
+    for i in range(3):
+        filt.process_batch(spark.createDataFrame(
+            rows[i * 20 : (i + 1) * 20], "doc_id LONG, embedding ARRAY<DOUBLE>"
+        ), i)
+
+    def bands(**kw):
+        return {tuple(r) for r in filt.registry_bands(**kw).collect()}
+
+    def vecs(**kw):
+        return {(r.owner, tuple(r.emb)) for r in filt.registry_vecs(**kw).collect()}
+
+    want_bands, want_vecs = bands(exclude_batch=1), vecs(exclude_batch=1)
+    assert want_bands != bands() and want_vecs != vecs()  # batch 1 registered
+    half = os.path.join(filt.registry_dir, "batch=1")
+    os.remove(os.path.join(half, "bands", "_SUCCESS"))
+    assert bands() == want_bands
+    assert vecs() == want_vecs
+    assert filt.compact_registry(target_files=2) == {"before": 2, "after": 1}
+    assert os.path.exists(os.path.join(half, "vecs", "_SUCCESS"))  # untouched
+    assert bands() == want_bands
+    assert vecs() == want_vecs
+
+
 def test_null_embedding_always_admitted(spark, workdir):
     filt = StreamingEmbeddingDedupFilter(spark, os.path.join(workdir, "reg"))
     batch = spark.createDataFrame(

@@ -81,5 +81,5 @@ class DelayPublisher(PubSub):
     def subscribe(self, topic: str) -> DataFrame:
         return self.inner.subscribe(topic)
 
-    def subscribe_stream(self, topic: str) -> DataFrame:
-        return self.inner.subscribe_stream(topic)
+    def subscribe_stream(self, topic: str, **options) -> DataFrame:
+        return self.inner.subscribe_stream(topic, **options)

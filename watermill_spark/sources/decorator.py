@@ -42,8 +42,8 @@ class ForwardingPubSubDecorator(PubSub):
     def subscribe(self, topic: str) -> DataFrame:
         return self.inner.subscribe(topic)
 
-    def subscribe_stream(self, topic: str) -> DataFrame:
-        return self.inner.subscribe_stream(topic)
+    def subscribe_stream(self, topic: str, **options) -> DataFrame:
+        return self.inner.subscribe_stream(topic, **options)
 
     def subscribe_initialize(self, topic: str) -> None:
         self.inner.subscribe_initialize(topic)
@@ -77,8 +77,8 @@ class _TransformSubscriber(ForwardingPubSubDecorator):
     def subscribe(self, topic: str) -> DataFrame:
         return self._transform(self.inner.subscribe(topic))
 
-    def subscribe_stream(self, topic: str) -> DataFrame:
-        return self._transform(self.inner.subscribe_stream(topic))
+    def subscribe_stream(self, topic: str, **options) -> DataFrame:
+        return self._transform(self.inner.subscribe_stream(topic, **options))
 
 
 class RetryPublisher(ForwardingPubSubDecorator):

@@ -81,6 +81,8 @@ from watermill_spark.analytics.dedup import (
 )
 from watermill_spark.streaming.exactly_once import IdempotentBatchSink
 
+_LOG = logging.getLogger(__name__)
+
 REGISTRY_SCHEMA = StructType(
     [
         StructField("band_idx", IntegerType(), nullable=False),
@@ -259,37 +261,32 @@ class RegistryLease:
         self.held = False
 
 
-class StreamingNearDupFilter:
-    """MinHash-LSH near-duplicate filter with a persistent bucket registry.
+class _RegistryFilter:
+    """Registry store and transport wiring shared by both near-dup filters.
 
-    ``process_batch(docs)`` takes a (doc_id: long, text: string) DataFrame
-    and returns ``(admitted, rejected, replayed)``:
-
-    - admitted: (doc_id) — first-seen docs, now registered;
-    - rejected: (doc_id, dup_of) — near-dups of an earlier admitted doc;
-    - replayed: (doc_id) — docs already admitted earlier (at-least-once
-      redelivery), admitted again idempotently, not re-registered.
-
-    Token semantics match the batch family (`analytics/dedup.py::_tokens`):
-    the empty string IS a token, so empty-text docs are identical docs and
-    dedupe against each other; only NULL-text docs produce no bands and are
-    always admitted.
+    One subdir per micro-batch (``batch=<id>``) or compaction generation
+    (``compacted-<k>``), holding one parquet part per ``PARTS`` entry
+    ``(subpath, schema, compaction dedup key)`` in write order (``""`` =
+    the subdir itself). A subdir is COMMITTED only when every part has
+    ``_SUCCESS``, so a crash between part writes leaves it invisible.
+    Subclasses add ``COMMIT_SUBDIR`` (the sink's commit dir under the
+    attach checkpoint), ``_decode`` (payload → process_batch's doc frame)
+    and their own candidate generation and fixpoint.
     """
+
+    PARTS: tuple[tuple[str, StructType | str, list[str]], ...]
+    COMMIT_SUBDIR: str
 
     def __init__(
         self,
         spark: SparkSession,
         registry_dir: str,
-        n_hashes: int = N_HASHES,
-        band_size: int = BAND_SIZE,
-        max_rounds: int = 64,
-        residue_cap: int = RESIDUE_CAP,
-        driver_finish_rows: int = DRIVER_FINISH_ROWS,
+        max_rounds: int,
+        residue_cap: int,
+        driver_finish_rows: int,
     ):
         self.spark = spark
         self.registry_dir = registry_dir
-        self.n_hashes = n_hashes
-        self.band_size = band_size
         self.max_rounds = max_rounds
         self.residue_cap = residue_cap
         self.driver_finish_rows = driver_finish_rows
@@ -300,6 +297,8 @@ class StreamingNearDupFilter:
         #: residue rows the exact driver-side finisher handled in the most
         #: recent process_batch (0 = the distributed rounds drained it).
         self.last_finish_rows = 0
+        self.writer_ns: str | None = None  # set by attach (_batch_dirname)
+        self._lease: RegistryLease | None = None
         os.makedirs(registry_dir, exist_ok=True)
 
     # -- registry ---------------------------------------------------------
@@ -316,12 +315,14 @@ class StreamingNearDupFilter:
         crash-restarted stream (same checkpoint, same batch_id) still
         excludes exactly its own previous write. Direct `process_batch`
         callers (batch mode) keep the plain ``batch=<id>`` names."""
-        ns = getattr(self, "writer_ns", None)
+        ns = self.writer_ns
         return f"batch={ns}-{batch_id}" if ns else f"batch={batch_id}"
 
-    def registry(self, exclude_batch: int | None = None) -> DataFrame:
-        """Registered (band_idx, band_key, owner) rows from COMMITTED batch
-        subdirs (``_SUCCESS`` present), optionally excluding one batch.
+    def _part_path(self, dirname: str, sub: str) -> str:
+        return os.path.normpath(os.path.join(self.registry_dir, dirname, sub))
+
+    def _committed(self, exclude_batch: int | None = None) -> list[str]:
+        """Names of the COMMITTED subdirs, optionally minus one batch's.
 
         ``exclude_batch`` is the crash-replay linchpin: a batch that died
         between its registry append and its commit marker is replayed with
@@ -329,77 +330,217 @@ class StreamingNearDupFilter:
         state — reading its own (possibly partial) previous write would
         classify its own admissions as replays, overwrite the subdir with
         an empty set, and erase them from the registry (found in review;
-        pinned by test_crash_replay_same_batch_id).
-        """
-        paths = [
-            os.path.join(self.registry_dir, d)
-            for d in self._committed_names(exclude_batch)
-        ]
-        if not paths:
-            return self.spark.createDataFrame([], REGISTRY_SCHEMA)
-        return self.spark.read.schema(REGISTRY_SCHEMA).parquet(*paths)
-
-    def _committed_names(self, exclude_batch: int | None = None) -> list[str]:
+        pinned by test_crash_replay_same_batch_id)."""
         skip = None if exclude_batch is None else self._batch_dirname(exclude_batch)
         return [
             d
             for d in sorted(os.listdir(self.registry_dir))
             if (d.startswith("batch=") or d.startswith("compacted-"))
             and d != skip
-            and os.path.exists(os.path.join(self.registry_dir, d, "_SUCCESS"))
+            and all(
+                os.path.exists(os.path.join(self._part_path(d, sub), "_SUCCESS"))
+                for sub, _, _ in self.PARTS
+            )
         ]
+
+    def _read(self, part: str, exclude_batch: int | None = None) -> DataFrame:
+        """One part's rows from the committed subdirs (see `_committed`)."""
+        schema = next(s for sub, s, _ in self.PARTS if sub == part)
+        dirs = self._committed(exclude_batch)
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[self._part_path(d, part) for d in dirs]
+        )
+
+    def _write(self, batch_id: int, parts: dict[str, DataFrame]) -> None:
+        """Write one batch's parts in ``PARTS`` order (the last commits
+        it). Overwrite is idempotent under replay BECAUSE the re-derivation
+        never read this subdir: same prefix state in, same rows out."""
+        d = self._batch_dirname(batch_id)
+        for sub, _, _ in self.PARTS:
+            parts[sub].write.mode("overwrite").parquet(self._part_path(d, sub))
 
     def compact_registry(self, target_files: int = 32) -> dict:
-        """Merge the accumulated per-batch registry subdirs into one
-        consolidated generation (small-files control: one subdir per
-        micro-batch means a 10k-batch stream pays a 10k-dir listing per
-        batch; at 100 TB the registry is a Delta/Iceberg table and this is
-        OPTIMIZE).
-
-        Call between batches (single-writer, like topic compact). Crash-
-        safe ordering: the consolidated dir is committed FIRST, then the
-        merged batch dirs are removed — a crash in between leaves rows
-        present twice, which is harmless (duplicate (bucket, owner) rows
-        change no join verdict and no MIN(owner)); the next compaction
-        collapses them. Consolidated dirs are named ``compacted-<k>`` so
-        process_batch's own-batch exclusion (``batch=<id>``) never matches
-        them.
-        """
+        """Merge the committed subdirs into one ``compacted-<k>``
+        generation (small-files control; OPTIMIZE on a Delta/Iceberg
+        registry). Call between batches (single-writer, like topic
+        compact). Crash-safe: the new generation is committed FIRST, then
+        the merged dirs are removed; a crash in between leaves duplicate
+        rows, which change no candidate set, verdict or MIN(owner), and the
+        next compaction collapses them. The ``compacted-`` prefix never
+        matches process_batch's own-batch exclusion."""
         import shutil
 
-        olds = [
-            d
-            for d in sorted(os.listdir(self.registry_dir))
-            if (d.startswith("batch=") or d.startswith("compacted-"))
-            and os.path.exists(os.path.join(self.registry_dir, d, "_SUCCESS"))
-        ]
+        olds = self._committed()
         if len(olds) <= 1:
             return {"before": len(olds), "after": len(olds)}
         gen = 1 + max(
             (int(d.split("-")[1]) for d in olds if d.startswith("compacted-")),
             default=-1,
         )
-        out = os.path.join(self.registry_dir, f"compacted-{gen}")
-        (
-            self.spark.read.schema(REGISTRY_SCHEMA)
-            .parquet(*[os.path.join(self.registry_dir, d) for d in olds])
-            .dropDuplicates(["band_idx", "band_key"])
-            .repartition(target_files)
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+        out = f"compacted-{gen}"
+        for sub, schema, key in self.PARTS:
+            (
+                self.spark.read.schema(schema)
+                .parquet(*[self._part_path(d, sub) for d in olds])
+                .dropDuplicates(key)
+                .repartition(target_files)
+                .write.mode("overwrite")
+                .parquet(self._part_path(out, sub))
+            )
         for d in olds:  # only after the consolidated generation committed
             shutil.rmtree(os.path.join(self.registry_dir, d), ignore_errors=True)
         return {"before": len(olds), "after": 1}
 
-    def _append_registry(self, rows: DataFrame, batch_id: int) -> None:
-        # Overwrite of a batch-keyed subdir is idempotent under replay
-        # BECAUSE the re-derivation never read this subdir (see registry):
-        # same prefix state in, same rows out.
-        out = os.path.join(self.registry_dir, self._batch_dirname(batch_id))
-        rows.select("band_idx", "band_key", "owner").write.mode(
-            "overwrite"
-        ).parquet(out)
+    # -- transport wiring --------------------------------------------------
+
+    def attach(
+        self,
+        pubsub,
+        in_topic: str,
+        out_topic: str,
+        dup_topic: str,
+        checkpoint_dir: str,
+        trigger_available_now: bool = True,
+        max_files_per_trigger: int | None = None,
+        lease_ttl: float = 300.0,
+    ):
+        """Wire the filter between transport topics: messages on `in_topic`
+        (payload as ``_decode`` reads it, metadata["doc_id"] = long) are
+        admitted to `out_topic` or rejected to `dup_topic` with a
+        ``DUP_OF`` metadata stamp; identity-less messages (missing or
+        non-numeric doc_id) pass through to `out_topic` un-registered —
+        the gate never silently drops. Returns the StreamingQuery.
+
+        Acquires the registry's single-writer lease (see
+        :class:`RegistryLease`): a second attach on the same registry dir
+        raises :class:`RegistryLockedError` until this writer calls
+        :meth:`release_lease` or stops heartbeating for ``lease_ttl``
+        seconds. A start-up failure releases the lease before re-raising.
+        """
+        import hashlib
+
+        # single-writer contract, enforced: the second attach on this registry
+        # dir fails with RegistryLockedError; each batch re-verifies ownership
+        # (fencing against post-TTL takeover) and heartbeats
+        lease = RegistryLease(self.registry_dir, ttl=lease_ttl).acquire()
+        self._lease = lease
+        # namespace this writer's registry batch subdirs by its checkpoint
+        # identity: stable across crash-restarts (replay exclusion still finds
+        # its own previous write), distinct across writers (a successor with a
+        # fresh checkpoint can never overwrite or hide a predecessor's batches)
+        self.writer_ns = hashlib.md5(
+            os.path.abspath(checkpoint_dir).encode()
+        ).hexdigest()[:8]
+
+        def work(batch_df: DataFrame, batch_id: int) -> None:
+            lease.verify_and_heartbeat()
+            msgs = batch_df.localCheckpoint()
+            # try_cast: a non-numeric doc_id is identity-less, not a batch
+            # error (ANSI cast would throw and poison-loop the stream)
+            keyed = msgs.withColumn(
+                "doc_id", F.col("metadata")["doc_id"].try_cast("long")
+            )
+            unkeyed = keyed.filter(F.col("doc_id").isNull()).drop("doc_id")
+            keyed = keyed.filter(F.col("doc_id").isNotNull())
+            admitted, rejected, replayed = self.process_batch(
+                self._decode(keyed), batch_id
+            )
+            ok = (
+                keyed.join(admitted.unionByName(replayed), "doc_id", "inner")
+                .drop("doc_id")
+                .unionByName(unkeyed)
+            )
+            dup = (
+                keyed.join(rejected, "doc_id", "inner")
+                .withColumn(
+                    "metadata",
+                    F.map_concat(
+                        F.coalesce("metadata", F.create_map()),
+                        F.create_map(F.lit(DUP_OF), F.col("dup_of").cast("string")),
+                    ),
+                )
+                .drop("doc_id", "dup_of")
+            )
+            pubsub.publish(out_topic, ok)
+            pubsub.publish(dup_topic, dup)
+
+        try:
+            commit_dir = os.path.join(checkpoint_dir, self.COMMIT_SUBDIR)
+            sink = IdempotentBatchSink(commit_dir, work)
+            opts = {}
+            if max_files_per_trigger:
+                opts["max_files_per_trigger"] = max_files_per_trigger
+            writer = (
+                pubsub.subscribe_stream(in_topic, **opts)
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
+            )
+            if trigger_available_now:
+                writer = writer.trigger(availableNow=True)
+            return writer.start()
+        except BaseException:
+            # the query never started, so nothing else would release it
+            lease.release()
+            raise
+
+    def release_lease(self) -> None:
+        """Release the attach-time registry lease (graceful handoff after
+        the StreamingQuery terminates)."""
+        if self._lease is not None:
+            self._lease.release()
+
+
+class StreamingNearDupFilter(_RegistryFilter):
+    """MinHash-LSH near-duplicate filter with a persistent bucket registry.
+
+    ``process_batch(docs)`` takes a (doc_id: long, text: string) DataFrame
+    and returns ``(admitted, rejected, replayed)``:
+
+    - admitted: (doc_id) — first-seen docs, now registered;
+    - rejected: (doc_id, dup_of) — near-dups of an earlier admitted doc;
+    - replayed: (doc_id) — docs already admitted earlier (at-least-once
+      redelivery), admitted again idempotently, not re-registered.
+
+    Token semantics match the batch family (`analytics/dedup.py::_tokens`):
+    the empty string IS a token, so empty-text docs are identical docs and
+    dedupe against each other; only NULL-text docs produce no bands and are
+    always admitted.
+    """
+
+    PARTS = (("", REGISTRY_SCHEMA, ["band_idx", "band_key"]),)
+    COMMIT_SUBDIR = "commits-neardup"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        registry_dir: str,
+        n_hashes: int = N_HASHES,
+        band_size: int = BAND_SIZE,
+        max_rounds: int = 64,
+        residue_cap: int = RESIDUE_CAP,
+        driver_finish_rows: int = DRIVER_FINISH_ROWS,
+    ):
+        super().__init__(
+            spark, registry_dir, max_rounds, residue_cap, driver_finish_rows
+        )
+        self.n_hashes = n_hashes
+        self.band_size = band_size
+
+    def registry(self, exclude_batch: int | None = None) -> DataFrame:
+        """Committed (band_idx, band_key, owner) rows (see `_committed`)."""
+        return self._read("", exclude_batch)
+
+    @staticmethod
+    def _decode(keyed: DataFrame) -> DataFrame:
+        """Message payload = utf-8 document text."""
+        return keyed.select(
+            "doc_id",
+            F.decode(F.coalesce(F.col("payload"), F.lit(b"")), "utf-8").alias(
+                "text"
+            ),
+        )
 
     # -- core -------------------------------------------------------------
 
@@ -424,12 +565,12 @@ class StreamingNearDupFilter:
 
         # Stage 1: hits against the persistent registry reject immediately.
         # The current batch's own subdir is excluded so a crash-replay
-        # re-derives from pure prefix state (see registry()).
+        # re-derives from pure prefix state (see _committed).
         # First-batch fast path: with no committed registry there is
         # nothing to hit — skip the join/anti-join jobs entirely (~2 s of
         # a production-size batch).
         reg = self.registry(exclude_batch=batch_id)
-        reg_live = bool(self._committed_names(exclude_batch=batch_id))
+        reg_live = bool(self._committed(exclude_batch=batch_id))
         if reg_live:
             hits = (
                 banded.join(reg, ["band_idx", "band_key"], "inner")
@@ -549,11 +690,7 @@ class StreamingNearDupFilter:
         self.last_finish_rows = finish_rows
 
         spark = self.spark
-        admitted_banded_ids = (
-            _union(spark, admitted_parts, "doc_id LONG")
-            if admitted_parts
-            else spark.createDataFrame([], "doc_id LONG")
-        )
+        admitted_banded_ids = _union(spark, admitted_parts, "doc_id LONG")
         # Tokenless docs never appear in `banded`: no bands, no conflicts.
         # Derived from the CHECKPOINTED banded relation — the previous
         # sigs-based anti-join silently recomputed the minhash map for the
@@ -566,7 +703,7 @@ class StreamingNearDupFilter:
         new_rows = banded.join(admitted_banded_ids, "doc_id", "inner").select(
             "band_idx", "band_key", F.col("doc_id").alias("owner")
         )
-        self._append_registry(new_rows, batch_id)
+        self._write(batch_id, {"": new_rows})
 
         # Canonical attribution: dup_of = MIN admitted owner over all of
         # the rejected doc's buckets (prefix registry ∪ this batch's
@@ -594,140 +731,6 @@ class StreamingNearDupFilter:
         ).localCheckpoint()
         return admitted, rejected, replayed
 
-    # -- transport wiring --------------------------------------------------
-
-    def attach(
-        self,
-        pubsub,
-        in_topic: str,
-        out_topic: str,
-        dup_topic: str,
-        checkpoint_dir: str,
-        trigger_available_now: bool = True,
-        max_files_per_trigger: int | None = None,
-        lease_ttl: float = 300.0,
-    ):
-        """Wire the filter between transport topics: messages on `in_topic`
-        (payload = utf-8 document text, metadata["doc_id"] = long) are
-        admitted to `out_topic` or rejected to `dup_topic` with a
-        ``DUP_OF`` metadata stamp; identity-less messages (missing or
-        non-numeric doc_id) pass through to `out_topic` un-registered —
-        the gate never silently drops. Returns the StreamingQuery.
-
-        Acquires the registry's single-writer lease (see
-        :class:`RegistryLease`): a second attach on the same registry dir
-        raises :class:`RegistryLockedError` until this writer calls
-        :meth:`release_lease` or stops heartbeating for ``lease_ttl``
-        seconds.
-        """
-
-        def decode(keyed: DataFrame) -> DataFrame:
-            return keyed.select(
-                "doc_id",
-                F.decode(F.coalesce(F.col("payload"), F.lit(b"")), "utf-8").alias(
-                    "text"
-                ),
-            )
-
-        return _attach_filter(
-            self, pubsub, in_topic, out_topic, dup_topic, checkpoint_dir,
-            decode, "commits-neardup", trigger_available_now,
-            max_files_per_trigger, lease_ttl,
-        )
-
-    def release_lease(self) -> None:
-        """Release the attach-time registry lease (graceful handoff after
-        the StreamingQuery terminates)."""
-        lease = getattr(self, "_lease", None)
-        if lease is not None:
-            lease.release()
-
-
-def _attach_filter(
-    filt,
-    pubsub,
-    in_topic: str,
-    out_topic: str,
-    dup_topic: str,
-    checkpoint_dir: str,
-    decode,
-    commit_subdir: str,
-    trigger_available_now: bool,
-    max_files_per_trigger: int | None,
-    lease_ttl: float = 300.0,
-):
-    """Shared transport wiring for both dedup filters: batch → doc frame
-    via ``decode(keyed)``, process, split admitted/rejected back onto the
-    message stream. Messages whose metadata doc_id is missing/non-numeric
-    have no identity to dedup or attribute by — they pass through to
-    `out_topic` unchanged and unregistered (the no-loss contract: silently
-    dropping them on the inner joins was a reviewed bug)."""
-    commit_dir = os.path.join(checkpoint_dir, commit_subdir)
-    # single-writer contract, enforced: the second attach on this registry
-    # dir fails with RegistryLockedError; each batch re-verifies ownership
-    # (fencing against post-TTL takeover) and heartbeats
-    lease = RegistryLease(filt.registry_dir, ttl=lease_ttl).acquire()
-    filt._lease = lease
-    # namespace this writer's registry batch subdirs by its checkpoint
-    # identity: stable across crash-restarts (replay exclusion still finds
-    # its own previous write), distinct across writers (a successor with a
-    # fresh checkpoint can never overwrite or hide a predecessor's batches)
-    import hashlib
-
-    filt.writer_ns = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
-
-    def work(batch_df: DataFrame, batch_id: int) -> None:
-        lease.verify_and_heartbeat()
-        msgs = batch_df.localCheckpoint()
-        # try_cast: a non-numeric doc_id is identity-less, not a batch
-        # error (ANSI cast would throw and poison-loop the stream)
-        keyed = msgs.withColumn(
-            "doc_id", F.col("metadata")["doc_id"].try_cast("long")
-        )
-        unkeyed = keyed.filter(F.col("doc_id").isNull()).drop("doc_id")
-        keyed = keyed.filter(F.col("doc_id").isNotNull())
-        admitted, rejected, replayed = filt.process_batch(
-            decode(keyed), batch_id
-        )
-        ok = (
-            keyed.join(admitted.unionByName(replayed), "doc_id", "inner")
-            .drop("doc_id")
-            .unionByName(unkeyed)
-        )
-        dup = (
-            keyed.join(rejected, "doc_id", "inner")
-            .withColumn(
-                "metadata",
-                F.map_concat(
-                    F.coalesce("metadata", F.create_map()),
-                    F.create_map(F.lit(DUP_OF), F.col("dup_of").cast("string")),
-                ),
-            )
-            .drop("doc_id", "dup_of")
-        )
-        pubsub.publish(out_topic, ok)
-        pubsub.publish(dup_topic, dup)
-
-    sink = IdempotentBatchSink(commit_dir, work)
-    if max_files_per_trigger:
-        try:
-            stream = pubsub.subscribe_stream(
-                in_topic, max_files_per_trigger=max_files_per_trigger
-            )
-        except TypeError:  # transport without per-trigger batching
-            stream = pubsub.subscribe_stream(in_topic)
-    else:
-        stream = pubsub.subscribe_stream(in_topic)
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
 
 def _spread_batch(df: DataFrame) -> DataFrame:
     """Fan a micro-batch out to the session's parallelism before the heavy
@@ -748,9 +751,6 @@ def _union(spark: SparkSession, parts: list[DataFrame], ddl: str) -> DataFrame:
     for p in parts:
         out = out.unionByName(p)
     return out
-
-
-_LOG = logging.getLogger(__name__)
 
 
 def _ids_df(spark: SparkSession, ids: list[int]) -> DataFrame:
@@ -868,7 +868,7 @@ EMB_REGISTRY_BANDS = StructType(
 EMB_REGISTRY_VECS = "owner LONG, emb ARRAY<DOUBLE>"
 
 
-class StreamingEmbeddingDedupFilter:
+class StreamingEmbeddingDedupFilter(_RegistryFilter):
     """SemDeDup-at-ingest: streaming embedding near-duplicate filter.
 
     The embedding-modality twin of `StreamingNearDupFilter` — together they
@@ -899,9 +899,8 @@ class StreamingEmbeddingDedupFilter:
     Unlike the text registry a bucket here CAN hold several owners (a
     collision whose cosine fails tau leaves both docs admitted sharing the
     band), so compaction dedups on the full (band_idx, band_key, owner)
-    row. Vecs are written before bands; a batch counts committed only when
-    both parts have _SUCCESS, and crash-replay re-derives from prefix
-    state by excluding its own batch_id exactly as the text filter does.
+    row. Vecs are written before bands, so a batch is committed once its
+    bands part is (see `_RegistryFilter`).
 
     Scale notes (100 TB): the registry grows with the UNIQUE corpus —
     bands at 16 narrow rows/doc, vecs at one 64-double row/doc. A
@@ -911,6 +910,12 @@ class StreamingEmbeddingDedupFilter:
     bandless (directionless — no semantic identity): always admitted,
     never registered.
     """
+
+    PARTS = (
+        ("vecs", EMB_REGISTRY_VECS, ["owner"]),
+        ("bands", EMB_REGISTRY_BANDS, ["band_idx", "band_key", "owner"]),
+    )
+    COMMIT_SUBDIR = "commits-embdedup"
 
     def __init__(
         self,
@@ -930,90 +935,30 @@ class StreamingEmbeddingDedupFilter:
             N_TABLES,
         )
 
-        self.spark = spark
-        self.registry_dir = registry_dir
+        super().__init__(
+            spark, registry_dir, max_rounds, residue_cap, driver_finish_rows
+        )
         self.tau = EMB_DEDUP_TAU if tau is None else tau
         self.n_tables = N_TABLES if n_tables is None else n_tables
         self.n_bits = N_BAND_BITS if n_bits is None else n_bits
-        self.max_rounds = max_rounds
-        self.residue_cap = residue_cap
         self.n_probes = n_probes
-        self.driver_finish_rows = driver_finish_rows
-        self.last_rounds = 0
-        self.last_finish_rows = 0
-        os.makedirs(registry_dir, exist_ok=True)
-
-    # -- registry ---------------------------------------------------------
-
-    _batch_dirname = StreamingNearDupFilter._batch_dirname
-
-    def _committed_dirs(self, exclude_batch: int | None = None) -> list[str]:
-        skip = None if exclude_batch is None else self._batch_dirname(exclude_batch)
-        out = []
-        for d in sorted(os.listdir(self.registry_dir)):
-            full = os.path.join(self.registry_dir, d)
-            if (
-                (d.startswith("batch=") or d.startswith("compacted-"))
-                and d != skip
-                and os.path.exists(os.path.join(full, "bands", "_SUCCESS"))
-                and os.path.exists(os.path.join(full, "vecs", "_SUCCESS"))
-            ):
-                out.append(full)
-        return out
 
     def registry_bands(self, exclude_batch: int | None = None) -> DataFrame:
-        dirs = self._committed_dirs(exclude_batch)
-        if not dirs:
-            return self.spark.createDataFrame([], EMB_REGISTRY_BANDS)
-        return self.spark.read.schema(EMB_REGISTRY_BANDS).parquet(
-            *[os.path.join(d, "bands") for d in dirs]
-        )
+        return self._read("bands", exclude_batch)
 
     def registry_vecs(self, exclude_batch: int | None = None) -> DataFrame:
-        dirs = self._committed_dirs(exclude_batch)
-        if not dirs:
-            return self.spark.createDataFrame([], EMB_REGISTRY_VECS)
-        return self.spark.read.schema(EMB_REGISTRY_VECS).parquet(
-            *[os.path.join(d, "vecs") for d in dirs]
-        )
+        return self._read("vecs", exclude_batch)
 
-    def compact_registry(self, target_files: int = 32) -> dict:
-        """OPTIMIZE analog, same crash-safe ordering as the text filter:
-        write the consolidated generation (vecs first, bands last — the
-        commit order process_batch relies on), then remove the merged
-        dirs; a crash in between leaves duplicate rows, which change no
-        candidate set, no cosine verdict and no MIN(owner)."""
-        import shutil
-
-        olds = [os.path.basename(d) for d in self._committed_dirs()]
-        if len(olds) <= 1:
-            return {"before": len(olds), "after": len(olds)}
-        gen = 1 + max(
-            (int(d.split("-")[1]) for d in olds if d.startswith("compacted-")),
-            default=-1,
+    @staticmethod
+    def _decode(keyed: DataFrame) -> DataFrame:
+        """Message payload = utf-8 JSON array of doubles."""
+        return keyed.select(
+            "doc_id",
+            F.from_json(
+                F.decode(F.coalesce(F.col("payload"), F.lit(b"")), "utf-8"),
+                "array<double>",
+            ).alias("embedding"),
         )
-        out = os.path.join(self.registry_dir, f"compacted-{gen}")
-        vec_paths = [os.path.join(self.registry_dir, d, "vecs") for d in olds]
-        band_paths = [os.path.join(self.registry_dir, d, "bands") for d in olds]
-        (
-            self.spark.read.schema(EMB_REGISTRY_VECS)
-            .parquet(*vec_paths)
-            .dropDuplicates(["owner"])
-            .repartition(target_files)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, "vecs"))
-        )
-        (
-            self.spark.read.schema(EMB_REGISTRY_BANDS)
-            .parquet(*band_paths)
-            .dropDuplicates(["band_idx", "band_key", "owner"])
-            .repartition(target_files)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, "bands"))
-        )
-        for d in olds:
-            shutil.rmtree(os.path.join(self.registry_dir, d), ignore_errors=True)
-        return {"before": len(olds), "after": 1}
 
     # -- core -------------------------------------------------------------
 
@@ -1025,9 +970,9 @@ class StreamingEmbeddingDedupFilter:
         owner that verifies at tau — the same owner the sequential pass
         blames. Null-id rows are dropped (see the text twin's docstring);
         ``attach`` routes identity-less messages as pass-through."""
-        from watermill_spark.analytics.similarity import _dot, hyperplane_bands
-
         from watermill_spark.analytics.similarity import (
+            _dot,
+            hyperplane_bands,
             hyperplane_bands_multiprobe,
         )
 
@@ -1092,7 +1037,7 @@ class StreamingEmbeddingDedupFilter:
         # Stage 1: candidates against the prefix registry, cosine-verified.
         # First-batch fast path mirrors the text twin: no committed
         # registry, nothing to hit, skip the candidate/verify jobs.
-        reg_live = bool(self._committed_dirs(exclude_batch=batch_id))
+        reg_live = bool(self._committed(exclude_batch=batch_id))
         reg_b = self.registry_bands(exclude_batch=batch_id)
         reg_v = self.registry_vecs(exclude_batch=batch_id).select(
             "owner", F.col("emb").alias("owner_emb")
@@ -1249,10 +1194,8 @@ class StreamingEmbeddingDedupFilter:
         self.last_finish_rows = finish_rows
 
         spark = self.spark
-        admitted_banded_ids = (
-            _union(spark, [p.select("doc_id") for p in admitted_parts], "doc_id LONG")
-            if admitted_parts
-            else spark.createDataFrame([], "doc_id LONG")
+        admitted_banded_ids = _union(
+            spark, [p.select("doc_id") for p in admitted_parts], "doc_id LONG"
         )
         bandless = docs.select("doc_id").join(
             banded.select("doc_id").distinct(), "doc_id", "left_anti"
@@ -1269,11 +1212,9 @@ class StreamingEmbeddingDedupFilter:
         new_vecs = docs.join(admitted_banded_ids, "doc_id", "inner").select(
             F.col("doc_id").alias("owner"), "emb"
         )
-        out = os.path.join(self.registry_dir, self._batch_dirname(batch_id))
-        # vecs first: the committed-batch predicate requires BOTH parts, so
-        # a crash between the writes leaves the batch invisible
-        new_vecs.write.mode("overwrite").parquet(os.path.join(out, "vecs"))
-        new_bands.write.mode("overwrite").parquet(os.path.join(out, "bands"))
+        # vecs first (PARTS order): the committed-batch predicate requires
+        # BOTH parts, so a crash between the writes leaves the batch invisible
+        self._write(batch_id, {"vecs": new_vecs, "bands": new_bands})
 
         # Canonical attribution split (same reasoning as the text twin):
         # stage-1/distributed-round rejects re-verify against the full
@@ -1306,47 +1247,3 @@ class StreamingEmbeddingDedupFilter:
             _pairs_df(spark, finish_rej_pairs)
         ).localCheckpoint()
         return admitted, rejected, replayed
-
-    # -- transport wiring --------------------------------------------------
-
-    def attach(
-        self,
-        pubsub,
-        in_topic: str,
-        out_topic: str,
-        dup_topic: str,
-        checkpoint_dir: str,
-        trigger_available_now: bool = True,
-        max_files_per_trigger: int | None = None,
-        lease_ttl: float = 300.0,
-    ):
-        """Messages on `in_topic` (payload = utf-8 JSON array of doubles,
-        metadata["doc_id"] = long) are admitted to `out_topic` or rejected
-        to `dup_topic` with a ``DUP_OF`` metadata stamp; identity-less
-        messages pass through to `out_topic` un-registered. Same
-        exactly-once pairing as the text filter: IdempotentBatchSink per
-        batch, at-least-once topic publishes absorbed by a uuid-idempotent
-        consumer. Acquires the registry's single-writer lease exactly like
-        the text twin (see :class:`RegistryLease`)."""
-
-        def decode(keyed: DataFrame) -> DataFrame:
-            return keyed.select(
-                "doc_id",
-                F.from_json(
-                    F.decode(F.coalesce(F.col("payload"), F.lit(b"")), "utf-8"),
-                    "array<double>",
-                ).alias("embedding"),
-            )
-
-        return _attach_filter(
-            self, pubsub, in_topic, out_topic, dup_topic, checkpoint_dir,
-            decode, "commits-embdedup", trigger_available_now,
-            max_files_per_trigger, lease_ttl,
-        )
-
-    def release_lease(self) -> None:
-        """Release the attach-time registry lease (graceful handoff after
-        the StreamingQuery terminates)."""
-        lease = getattr(self, "_lease", None)
-        if lease is not None:
-            lease.release()

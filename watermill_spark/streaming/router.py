@@ -380,16 +380,10 @@ class Router:
             if h.stopped or h.query is not None:
                 continue
             sub, _ = self._endpoints(h)
-            stream = sub.subscribe_stream(h.sub_topic)
+            opts = {}
             if max_files_per_trigger is not None:
-                # file sources accept maxFilesPerTrigger as a read option;
-                # re-create with the option applied (raw subscriber — see
-                # run_stream docstring caveat)
-                stream = (
-                    h.subscriber.spark.readStream.schema(stream.schema)
-                    .option("maxFilesPerTrigger", str(max_files_per_trigger))
-                    .parquet(h.subscriber._dir(h.sub_topic))  # type: ignore[attr-defined]
-                )
+                opts["max_files_per_trigger"] = max_files_per_trigger
+            stream = sub.subscribe_stream(h.sub_topic, **opts)
             writer = stream.writeStream.foreachBatch(
                 lambda bdf, _bid, h=h: self._process_batch(h, bdf)
             ).option("checkpointLocation", f"{checkpoint_root}/{h.name}")
@@ -416,9 +410,8 @@ class Router:
         checkpoint_root/<handler> is the consumer-group identity
         (SURVEY.md §1.4: one group == one (query, checkpointDir) pair).
         `max_files_per_trigger` is the Throttle knob at the source
-        (`middleware/throttle.go` ≙ source rate limiting). Caveat: that
-        option re-creates the file source from the RAW subscriber, so
-        subscriber decorators don't apply on that specific path.
+        (`middleware/throttle.go` ≙ source rate limiting), passed to the
+        subscriber's ``subscribe_stream`` only when set.
         """
         still_active = [
             h.name
