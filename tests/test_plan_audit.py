@@ -9,9 +9,15 @@ a *second*, fact-scaled nested loop to an already-whitelisted query):
 - ``BY_DESIGN``: name -> flag set, each entry carrying the WHY — the
   human-auditable rationale for every excused join shape.
 - ``MAX_COUNTS``: name -> exact per-flag occurrence *maxima* measured from
-  the current plans (tools_gen_plan_counts.py). The audit fails if a plan
-  exceeds its pinned count, so only the documented bounded joins are
-  excused; a new occurrence of the same flag in the same query still fails.
+  the current plans. The audit fails if a plan exceeds its pinned count, so
+  only the documented bounded joins are excused; a new occurrence of the
+  same flag in the same query still fails.
+
+The detectors live in ``watermill_spark/analytics/profile.py``; regenerate
+the pins after an intentional plan change with
+``python -m watermill_spark.analytics.profile plans SF_DIR OUT_DIR`` over the
+audited scale (``SF`` below); ``OUT_DIR/plans.json`` holds the flag
+counts, hinted-broadcast flags and single-partition flags of every query.
 
 (Heavier structural assertions for individual queries live in
 test_scale_plans.py; this is the safety net across all of them.)
@@ -19,10 +25,15 @@ test_scale_plans.py; this is the safety net across all of them.)
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
+from watermill_spark.analytics.profile import (
+    broadcast_fact_flags,
+    flag_counts,
+    formatted_plan,
+    hint_plan,
+    single_partition_flags,
+)
 from watermill_spark.analytics.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -701,8 +712,8 @@ BY_DESIGN["q_random_walk_hitting"] = {"BNLJ", "SMJ"}  # cached edge
 BY_DESIGN["q_quintile_migration"] = {"BNLJ"}
 
 # name -> exact per-flag occurrence maxima measured from the current plans
-# at sf0.001 (regenerate with tools_gen_plan_counts.py after intentional
-# plan changes). Unlisted flags default to CARTESIAN 0 / BNLJ 0 / SMJ 1.
+# at sf0.001 (regenerate with `profile plans` after intentional plan
+# changes; see the module docstring). Unlisted flags default to CARTESIAN 0 / BNLJ 0 / SMJ 1.
 MAX_COUNTS = {
     "q11_important_parts": {"BNLJ": 1},
     "q15_top_supplier": {"BNLJ": 1},
@@ -980,195 +991,13 @@ MAX_COUNTS = {
 
 _DEFAULT_MAX = {"CARTESIAN": 0, "BNLJ": 0, "SMJ": 1}
 
-# --------------------------------------------------------------------------
-# Broadcast-side cardinality class (r4 verdict item 4)
-#
-# A broadcast is safe at 100 TB only when its build side is cardinality-
-# bounded: a dim table, a 1-row aggregate, a top-k, or a literal grid. A
-# broadcast whose build side derives from a FACT-CLASS table with no
-# bounding reduction (e.g. a per-key aggregate over lineitem: |keys| grows
-# with the corpus) is an OOM-class risk AQE only partially absorbs (it can
-# demote the join, losing the plan the query was designed around) — every
-# such shape must be whitelisted below with the rationale written down.
-# --------------------------------------------------------------------------
-
-# The audit targets EXPLICIT F.broadcast() hints: the plan is rebuilt with
-# spark.sql.autoBroadcastJoinThreshold=-1, under which the optimizer's own
-# size-based broadcasts (correct at the audited SF, re-decided by AQE with
-# real stats at scale) disappear and only hint-pinned BroadcastExchanges
-# remain — those are hand-made scale decisions that must be bounded.
-
-# tables whose row count scales with the corpus (everything but the fixed
-# region/nation dims)
-_FACT_TABLES = {
-    "lineitem",
-    "orders",
-    "events",
-    "documents",
-    "embeddings",
-    "customer",
-    "supplier",
-    "part",
-    "partsupp",
-}
-
-_TREE_LINE = re.compile(r"^([ :+\-*]*)(\S.*?) \((\d+)\)\s*$")
-_SCAN_TABLE = re.compile(r"/([a-z_0-9]+)\.parquet")
-_KEYS_N = re.compile(r"^Keys \[(\d+)\]|^Keys: \[\]", re.M)
-_BOUNDING_NAMES = (
-    "GlobalLimit",
-    "LocalLimit",
-    "CollectLimit",
-    "TakeOrderedAndProject",
-    "WindowGroupLimit",
-)
-
-
-# aggregate keys that look like per-entity identifiers: an aggregate keyed
-# by one of these over a fact table has data-scaled output cardinality
-# (|customers|, |parts|, |docs| ... rows), NOT a bounded grid.
-# nationkey/regionkey are excluded: they end in 'key' but name the two
-# fixed-size dims (25/5 values) — a per-nation rollup is a bounded grid.
-_ENTITY_KEY = re.compile(
-    r"(?<!nation)(?<!region)(?:key|id|uuid|qid|nid)\d*$", re.IGNORECASE
-)
-
-# aggregate keys that name a VOCABULARY class: token/term/shingle/n-gram/
-# band aggregates over a fact corpus are data-scaled too — |vocabulary|
-# over [a-z]+ tokens follows Heaps' law plus junk strings (easily 1e8+
-# distinct terms at 100 TB), and shingle/band key domains grow even faster.
-# Treating them as a bounded grid was the r5 audit's one hole (verdict
-# item 2): q_tfidf_top_terms' per-term df broadcast slipped through.
-_TOKEN_KEY = re.compile(
-    r"(?:^|_)(?:term|token|tok|word|shingle|[a-z]*gram|band_key|sig|"
-    r"minhash|hash)s?\d*$",
-    re.IGNORECASE,
-)
-
-
-def _data_scaled_key(k: str) -> bool:
-    return bool(_ENTITY_KEY.search(k) or _TOKEN_KEY.search(k))
-
-
-def _broadcast_fact_flags(plan: str) -> list[str]:
-    """Flags for BroadcastExchange subtrees whose build side derives from a
-    fact-class table without a bounding reduction.
-
-    Cardinality classes, decided from the subtree (nearest-first):
-    - BOUNDED: any Limit/TakeOrdered/WindowGroupLimit (top-k); an aggregate
-      with zero grouping keys (1-row); or an aggregate whose topmost
-      grouping keys are all non-entity columns (grid/type/date class —
-      event_type, day, bucket, ... have corpus-independent domains).
-    - FLAGGED: no reduction at all (raw/filtered fact rows — |fact| rows),
-      or the topmost aggregate is keyed by an entity id (custkey, user_id,
-      doc_id, ... — output grows with the corpus).
-
-    Works on the formatted-explain text: tree lines (`name (id)`) give the
-    subtree structure per tree section (main plan + each subquery); detail
-    blocks (`(id) name`) give scan locations and aggregate keys.
-    Known limitation: localCheckpoint/cache boundaries print as Scan
-    ExistingRDD, hiding fact provenance (those queries pin their shapes in
-    test_scale_plans.py); and the bounding check is subtree-granular, not
-    path-granular.
-    """
-    # detail blocks: id -> (name, body)
-    details: dict[int, tuple[str, str]] = {}
-    cur_id, cur_name, body = None, None, []
-    for line in plan.splitlines():
-        m = re.match(r"^\((\d+)\) (\S.*?)(?: \[codegen id : \d+\])?$", line)
-        if m:
-            if cur_id is not None:
-                details[cur_id] = (cur_name, "\n".join(body))
-            cur_id, cur_name, body = int(m.group(1)), m.group(2), []
-        elif cur_id is not None:
-            body.append(line)
-    if cur_id is not None:
-        details[cur_id] = (cur_name, "\n".join(body))
-
-    def agg_keys(node_id: int) -> list[str] | None:
-        """Grouping-key base names of an aggregate detail block, [] for a
-        global (1-row) aggregate, None if unparseable."""
-        det = details.get(node_id)
-        if det is None:
-            return None
-        if re.search(r"Keys \[0\]|^Keys: \[\]", det[1], re.M):
-            return []
-        km = re.search(r"Keys \[\d+\]: \[(.*?)\]", det[1], re.S)
-        if not km:
-            return None
-        keys = []
-        for part in km.group(1).split(","):
-            # strip '#<exprid>' suffixes and any cast/alias decoration:
-            # take the last identifier before the '#'
-            m = re.search(r"([A-Za-z_][A-Za-z_0-9]*)#\d+", part)
-            keys.append(m.group(1) if m else part.strip())
-        return keys
-
-    def is_bounding(node_id: int, name: str) -> bool:
-        if any(name.startswith(b) for b in _BOUNDING_NAMES):
-            return True
-        if "Aggregate" in name:
-            keys = agg_keys(node_id)
-            if keys is not None and not keys:
-                return True  # 1-row global aggregate
-            if keys and all(not _data_scaled_key(k) for k in keys):
-                return True  # grid/type/date-keyed: corpus-independent
-        if name.startswith("Filter"):
-            det = details.get(node_id)
-            # the similarity family's query-set idiom: vec_id < N_QUERIES
-            # (a literal bound on a dense unique id = fixed row count,
-            # however large the corpus)
-            if det and re.search(
-                r"Condition.*vec_id#\d+L? (?:<|<=|=) \d+", det[1]
-            ):
-                return True
-        return False
-
-    def scan_tables(node_id: int, name: str) -> set[str]:
-        if not name.startswith("Scan parquet"):
-            return set()
-        det = details.get(node_id)
-        if det is None:
-            return set()
-        return set(_SCAN_TABLE.findall(det[1]))
-
-    # group consecutive tree-shaped lines into trees (main plan + subqueries)
-    flags: list[str] = []
-    tree: list[tuple[int, str, int]] = []  # (depth, name, id)
-
-    def audit_tree(t: list[tuple[int, str, int]]) -> None:
-        for i, (depth, name, nid) in enumerate(t):
-            if not name.startswith("BroadcastExchange"):
-                continue
-            sub = []
-            for j in range(i + 1, len(t)):
-                if t[j][0] <= depth:
-                    break
-                sub.append(t[j])
-            facts: set[str] = set()
-            bounded = False
-            for d2, n2, id2 in sub:
-                facts |= scan_tables(id2, n2) & _FACT_TABLES
-                if is_bounding(id2, n2):
-                    bounded = True
-            if facts and not bounded:
-                flags.append(
-                    f"BroadcastExchange({nid}) over fact tables "
-                    f"{sorted(facts)} with no bounding reduction"
-                )
-
-    for line in plan.splitlines():
-        m = _TREE_LINE.match(line)
-        if m:
-            tree.append((len(m.group(1)), m.group(2).lstrip("* "), int(m.group(3))))
-        else:
-            if tree:
-                audit_tree(tree)
-            tree = []
-    if tree:
-        audit_tree(tree)
-    return flags
-
+# Broadcast-side cardinality class (r4 verdict item 4): a broadcast is safe
+# at 100 TB only when its build side is cardinality-bounded (a dim table, a
+# 1-row aggregate, a top-k, or a literal grid). The audit re-plans each query
+# with auto-broadcast off (profile.hint_plan), so the surviving
+# BroadcastExchanges are explicit F.broadcast() hints — hand-made scale
+# decisions — and profile.broadcast_fact_flags flags those whose build side
+# derives from a fact-class table with no bounding reduction.
 
 # Whitelisted unbounded-fact-broadcast shapes: name -> why the hint is
 # intentional. NOTE an explicit F.broadcast hint is NOT demoted by AQE —
@@ -1210,19 +1039,6 @@ BCAST_BY_DESIGN: dict[str, str] = {
     "q_effect_sizes": "exact U pair expansion; rank-sum twin: q_mannwhitney_u",
 }
 
-_FLAG_PAT = {
-    # detail-section operator headers: exactly one "(<id>) <Op>" line per
-    # physical operator instance (the tree section puts the id *after* the
-    # name, so it never double-counts)
-    "CARTESIAN": re.compile(r"\(\d+\) CartesianProduct"),
-    "BNLJ": re.compile(r"\(\d+\) BroadcastNestedLoopJoin"),
-    "SMJ": re.compile(r"\(\d+\) SortMergeJoin"),
-}
-
-
-def _flag_counts(plan: str) -> dict[str, int]:
-    return {f: len(p.findall(plan)) for f, p in _FLAG_PAT.items()}
-
 
 def test_whitelists_are_consistent():
     """Every pinned count above the defaults must carry a documented WHY in
@@ -1251,6 +1067,17 @@ def test_whitelists_are_consistent():
         assert name in REGISTRY, f"{name}: stale BY_DESIGN entry"
 
 
+# Whitelisted single-task global windows/sorts: an ``Exchange
+# SinglePartition`` over a fact-class stream with no bounding reduction
+# (profile.single_partition_flags) moves every row into ONE task — the
+# definitive straggler at 100 TB. name -> why the shape is intentional.
+SINGLE_PARTITION_BY_DESIGN: dict[str, str] = {
+    # its docstring: a demo-only global ranking over the customer dimension;
+    # at scale the two-pass distributed ranking (distrib.py) replaces it
+    "q_rank_ntile": "demo-only global ranking over the customer dimension",
+}
+
+
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_plan_has_no_unexplained_red_flags(spark, name):
     q = REGISTRY[name]
@@ -1262,33 +1089,29 @@ def test_plan_has_no_unexplained_red_flags(spark, name):
     # measurement regardless of suite order (r4: q_kcore_trade flaked 4 vs 2
     # only inside the full -x run).
     spark.catalog.clearCache()
-    plan = q.fn(spark, SF)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    df = q.fn(spark, SF)
+    plan = formatted_plan(df)
     allowed = MAX_COUNTS.get(name, {})
     over = {
         f: (c, max(allowed.get(f, 0), _DEFAULT_MAX[f]))
-        for f, c in _flag_counts(plan).items()
+        for f, c in flag_counts(plan).items()
         if c > max(allowed.get(f, 0), _DEFAULT_MAX[f])
     }
     assert not over, (
         f"{name}: red-flag operators exceed their pinned maxima "
         f"{{flag: (observed, allowed)}} = {over}"
     )
-    # second plan build with auto-broadcast off: surviving
-    # BroadcastExchanges are explicit F.broadcast() hints only
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.catalog.clearCache()
-        hint_plan = q.fn(spark, SF)._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
+    sflags = single_partition_flags(plan)
+    if sflags and name not in SINGLE_PARTITION_BY_DESIGN:
+        raise AssertionError(
+            f"{name}: a global window/sort moves a fact-class stream with no "
+            f"bounding reduction into one task and has no "
+            f"SINGLE_PARTITION_BY_DESIGN rationale: {sflags}"
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    bflags = _broadcast_fact_flags(hint_plan)
+    # the SAME DataFrame re-planned with auto-broadcast off: surviving
+    # BroadcastExchanges are explicit F.broadcast() hints only (re-planning
+    # instead of rebuilding skips a second run of the eager checkpoints)
+    bflags = broadcast_fact_flags(hint_plan(spark, df))
     if bflags and name not in BCAST_BY_DESIGN:
         raise AssertionError(
             f"{name}: explicitly-hinted broadcast build side derives from "
@@ -1300,3 +1123,8 @@ def test_plan_has_no_unexplained_red_flags(spark, name):
 def test_bcast_whitelist_is_consistent():
     for name in BCAST_BY_DESIGN:
         assert name in REGISTRY, f"{name}: stale BCAST_BY_DESIGN entry"
+
+
+def test_single_partition_whitelist_is_consistent():
+    for name in SINGLE_PARTITION_BY_DESIGN:
+        assert name in REGISTRY, f"{name}: stale SINGLE_PARTITION_BY_DESIGN entry"

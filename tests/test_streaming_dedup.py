@@ -483,6 +483,28 @@ def test_writer_namespace_batch_dirs(spark, workdir, kind):
     assert os.path.isdir(os.path.join(reg, "batch=aaaa1111-0"))  # untouched
 
 
+@pytest.mark.parametrize("kind", sorted(FILTERS))
+def test_process_batch_lists_registry_once(spark, workdir, kind, monkeypatch):
+    """One micro-batch lists the registry directory once, however many
+    registry parts it reads: the directory grows by one subdir per batch,
+    and every listing stats each subdir's _SUCCESS files."""
+    cls, ddl, doc, _ = FILTERS[kind]
+    reg = os.path.join(workdir, "reg")
+    f = cls(spark, reg)
+    f.process_batch(spark.createDataFrame([(1, doc)], ddl), 0)
+    listed = []
+    real_listdir = os.listdir
+
+    def counting_listdir(path="."):
+        if os.path.normpath(os.fspath(path)) == os.path.normpath(reg):
+            listed.append(path)
+        return real_listdir(path)
+
+    monkeypatch.setattr(os, "listdir", counting_listdir)
+    f.process_batch(spark.createDataFrame([(2, doc)], ddl), 1)
+    assert len(listed) == 1
+
+
 class _NoStreamTransport:
     """Transport stub whose streaming subscribe fails at attach time."""
 

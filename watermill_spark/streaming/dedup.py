@@ -343,10 +343,10 @@ class _RegistryFilter:
             )
         ]
 
-    def _read(self, part: str, exclude_batch: int | None = None) -> DataFrame:
-        """One part's rows from the committed subdirs (see `_committed`)."""
+    def _read(self, part: str, dirs: list[str]) -> DataFrame:
+        """One part's rows from the given committed subdirs (a `_committed`
+        listing, taken once per micro-batch and shared by its parts)."""
         schema = next(s for sub, s, _ in self.PARTS if sub == part)
-        dirs = self._committed(exclude_batch)
         if not dirs:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(
@@ -530,7 +530,7 @@ class StreamingNearDupFilter(_RegistryFilter):
 
     def registry(self, exclude_batch: int | None = None) -> DataFrame:
         """Committed (band_idx, band_key, owner) rows (see `_committed`)."""
-        return self._read("", exclude_batch)
+        return self._read("", self._committed(exclude_batch))
 
     @staticmethod
     def _decode(keyed: DataFrame) -> DataFrame:
@@ -569,8 +569,9 @@ class StreamingNearDupFilter(_RegistryFilter):
         # First-batch fast path: with no committed registry there is
         # nothing to hit — skip the join/anti-join jobs entirely (~2 s of
         # a production-size batch).
-        reg = self.registry(exclude_batch=batch_id)
-        reg_live = bool(self._committed(exclude_batch=batch_id))
+        dirs = self._committed(exclude_batch=batch_id)
+        reg = self._read("", dirs)
+        reg_live = bool(dirs)
         if reg_live:
             hits = (
                 banded.join(reg, ["band_idx", "band_key"], "inner")
@@ -944,10 +945,10 @@ class StreamingEmbeddingDedupFilter(_RegistryFilter):
         self.n_probes = n_probes
 
     def registry_bands(self, exclude_batch: int | None = None) -> DataFrame:
-        return self._read("bands", exclude_batch)
+        return self._read("bands", self._committed(exclude_batch))
 
     def registry_vecs(self, exclude_batch: int | None = None) -> DataFrame:
-        return self._read("vecs", exclude_batch)
+        return self._read("vecs", self._committed(exclude_batch))
 
     @staticmethod
     def _decode(keyed: DataFrame) -> DataFrame:
@@ -1037,9 +1038,10 @@ class StreamingEmbeddingDedupFilter(_RegistryFilter):
         # Stage 1: candidates against the prefix registry, cosine-verified.
         # First-batch fast path mirrors the text twin: no committed
         # registry, nothing to hit, skip the candidate/verify jobs.
-        reg_live = bool(self._committed(exclude_batch=batch_id))
-        reg_b = self.registry_bands(exclude_batch=batch_id)
-        reg_v = self.registry_vecs(exclude_batch=batch_id).select(
+        dirs = self._committed(exclude_batch=batch_id)
+        reg_live = bool(dirs)
+        reg_b = self._read("bands", dirs)
+        reg_v = self._read("vecs", dirs).select(
             "owner", F.col("emb").alias("owner_emb")
         ).withColumn("o_n", F.sqrt(_dot("owner_emb", "owner_emb")))
         if reg_live:
