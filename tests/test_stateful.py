@@ -96,3 +96,41 @@ def test_running_counter_accumulates_across_batches(ps, spark, tmp_path):
     # 3 batches x 4 msgs, k alternates 0/1 -> 6 per key
     assert per_key_max == {"0": 6, "1": 6}
     assert sum(r["batch_count"] for r in rows) == 12
+
+
+def test_running_counter_kernel_ships_by_value(tmp_path):
+    """The counter kernel must unpickle and run where `watermill_spark` is not
+    importable: an isolated interpreter (`-I`: no PYTHONPATH, no cwd on
+    sys.path) started from a temp dir."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from watermill_spark.streaming.stateful import _make_counter_fn
+
+    kernel = tmp_path / "kernel.pkl"
+    kernel.write_bytes(cloudpickle.dumps(_make_counter_fn()))
+    code = (
+        "import pickle, sys\n"
+        "import pandas as pd\n"
+        "fn = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "class State:\n"
+        "    exists, get = True, (5,)\n"
+        "    def update(self, v):\n"
+        "        self.value = v\n"
+        "st = State()\n"
+        "(out,) = fn(('k',), iter([pd.DataFrame({'_k': ['k'] * 3})]), st)\n"
+        "print(out.to_dict('records'), st.value)\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-I", "-c", code, str(kernel)],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == (
+        "[{'key': 'k', 'batch_count': 3, 'running_count': 8}] (8,)"
+    )

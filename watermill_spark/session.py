@@ -11,6 +11,12 @@ every setting is chosen to also hold on a large multi-executor cluster:
 - Arrow enabled for every pandas-UDF boundary.
 - Session timezone pinned to UTC so timestamp semantics are engine-independent
   (matches the DuckDB oracle's naive-timestamp reading of the same parquet).
+- Python workers fork from the ``watermill_spark.pyworker`` daemon prelude,
+  which stops CPython < 3.12 from re-reading ``pyspark.zip`` and the
+  spark-core jar on the ``importlib.invalidate_caches()`` PySpark runs before
+  every task (about 0.2 s per Python task). Sessions are always ``local[...]``,
+  so the package root goes on the workers' ``PYTHONPATH`` for the daemon to
+  import from any cwd; kernels still ship by value and never need it.
 """
 
 from __future__ import annotations
@@ -27,6 +33,9 @@ AQE_BCAST_THRESHOLD = os.environ.get("SPARK_GRAFT_AQE_BCAST", "64m")
 SHJ_LOCAL_MAP_THRESHOLD = os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
 PREFER_SMJ = os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false")
 
+# The directory that holds the watermill_spark package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "watermill-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -42,6 +51,9 @@ def get_spark(app_name: str = "watermill-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "watermill_spark.pyworker")
+        # Spark appends this after pyspark.zip on the workers' PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()
 

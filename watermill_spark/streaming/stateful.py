@@ -173,17 +173,27 @@ _COUNTER_OUT_SCHEMA = StructType(
 _COUNTER_STATE_SCHEMA = StructType([StructField("count", LongType())])
 
 
-def _counter_fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-    """Per-key running counter (the reference's real-time counter /
-    exactly-once delivery counter shape, consume→update-state per message,
-    here per Arrow batch)."""
-    n = 0
-    for pdf in pdf_iter:
-        n += len(pdf)
-    (prev,) = state.get if state.exists else (0,)
-    total = prev + n
-    state.update((total,))
-    yield pd.DataFrame({"key": [key[0]], "batch_count": [n], "running_count": [total]})
+def _make_counter_fn():
+    """Build the running-counter kernel as a self-contained closure (shipped
+    BY VALUE by cloudpickle, like `_make_release_fn`)."""
+
+    def counter_fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
+        """Per-key running counter (the reference's real-time counter /
+        exactly-once delivery counter shape, consume→update-state per
+        message, here per Arrow batch)."""
+        import pandas as _pd
+
+        n = 0
+        for pdf in pdf_iter:
+            n += len(pdf)
+        (prev,) = state.get if state.exists else (0,)
+        total = prev + n
+        state.update((total,))
+        yield _pd.DataFrame(
+            {"key": [key[0]], "batch_count": [n], "running_count": [total]}
+        )
+
+    return counter_fn
 
 
 def running_counter(stream: DataFrame, key_col: str) -> DataFrame:
@@ -200,7 +210,7 @@ def running_counter(stream: DataFrame, key_col: str) -> DataFrame:
     """
     keyed = stream.select(F.coalesce(F.col(key_col), F.lit("")).alias("_k"))
     return keyed.groupBy("_k").applyInPandasWithState(
-        _counter_fn,
+        _make_counter_fn(),
         outputStructType=_COUNTER_OUT_SCHEMA,
         stateStructType=_COUNTER_STATE_SCHEMA,
         outputMode="append",
