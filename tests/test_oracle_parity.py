@@ -17,9 +17,20 @@ from .oracle_harness import compare, duck_connect
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
 
 
+# DuckDB's default limit is 80% of RAM, and the Spark JVM shares the host:
+# at sf0.01 the recursive oracles grew past 10 GB and the run was OOM-killed.
+# With a cap, an oracle past it fails alone (or spills) instead. The limit
+# counts reservations, not resident bytes: q_bradley_terry fails under 3 GB
+# at sf0.001 while using about 0.5 GB. Capped here rather than in
+# duck_connect, which other callers share.
+DUCK_MEMORY_LIMIT = "4GB"
+
+
 @pytest.fixture(scope="module")
-def duck():
+def duck(tmp_path_factory):
     con = duck_connect(SF_DIR)
+    con.execute(f"SET memory_limit = '{DUCK_MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory = '{tmp_path_factory.mktemp('duck_spill')}'")
     yield con
     con.close()
 

@@ -1,12 +1,17 @@
 """Static hygiene of the library source: no unused module-level imports,
-no imports from the test suite, no round-numbered copies of root tools.
+no imports from the test suite, no round-numbered copies of root tools,
+one materialization idiom.
 
 Unused imports hide which helpers a module really depends on, and they
 accumulate when code is moved between modules. Library code or a root
 script that imports from ``tests`` makes the test suite part of the
 program. A ``tools_*_r<NN>.py`` script is a per-round copy of a tool that
-belongs in one maintained module (``analytics/profile.py``). The checks
-are plain AST and glob passes (no Spark session, well under a second).
+belongs in one maintained module (``analytics/profile.py``). A
+``.cache()`` or ``.persist()`` that nothing unpersists stays in the
+session's CacheManager after its query is dropped, and changes how later
+plans in the same session print; an eager ``localCheckpoint`` is released
+by the ContextCleaner instead. The checks are plain AST and glob passes
+(no Spark session, well under a second).
 
 Exempt: package ``__init__.py`` files (their imports are re-exports or
 registration side effects), ``from __future__`` imports, and any import
@@ -92,3 +97,48 @@ def test_no_round_numbered_root_tools():
         p.name for p in REPO.glob("tools_*.py") if re.fullmatch(r"tools_\w+_r\d+\.py", p.name)
     )
     assert not copies, "round-numbered tool copies: " + ", ".join(copies)
+
+
+# The two uses that release what they hold: the router unpersists each
+# batch in ``finally``, and the serving-mode table cache is meant to pin
+# base tables for the session's lifetime.
+PERSIST_ALLOWED = {
+    "streaming/router.py::Router._process_batch",
+    "analytics/registry.py::load",
+}
+
+
+def persist_calls(path: Path) -> list[tuple[str, int]]:
+    """``(where::qualified.function, line)`` of each ``.cache()``,
+    ``.persist(...)`` or ``.checkpoint(...)`` call in a module."""
+    found = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                visit(child, scope + [child.name])
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("cache", "persist", "checkpoint")
+            ):
+                where = f"{path.relative_to(PKG).as_posix()}::{'.'.join(scope)}"
+                found.append((where, child.lineno))
+            visit(child, scope)
+
+    visit(ast.parse(path.read_text()), [])
+    return found
+
+
+def test_materialization_is_eager_local_checkpoint():
+    offenders = [
+        f"{where} (line {line})"
+        for path in sorted(PKG.rglob("*.py"))
+        for where, line in persist_calls(path)
+        if where not in PERSIST_ALLOWED
+    ]
+    assert not offenders, (
+        "use .localCheckpoint(eager=True) instead of cache/persist/checkpoint:\n"
+        + "\n".join(offenders)
+    )

@@ -293,7 +293,7 @@ def q_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(bcount("w"))
-    ).cache()
+    ).localCheckpoint(eager=True)
     n_nodes = edges.select("dst").distinct().count()
     v = edges.select("dst").distinct().select(
         F.col("dst").alias("nk"), (F.lit(1.0) / F.lit(float(n_nodes))).alias("v")

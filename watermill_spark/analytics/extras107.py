@@ -182,7 +182,7 @@ def q_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("v"),
         )
-    ).localCheckpoint(eager=True)
+    )
 
     def lfat(expr):
         return F.get(F.col("lfmap"), expr.cast("int"))  # 0-based: index i

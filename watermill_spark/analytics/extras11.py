@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import bcount
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 # Sum of 0.5^0 .. 0.5^7 == 2 - 2^-7, exactly representable in binary.
@@ -70,14 +71,9 @@ def q_events_ewma8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("rn") >= 8).drop("rn")
 
 
-_TRI_EDGE_SQL = """
-      SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
-                      greatest(c.c_nationkey, s.s_nationkey) AS b
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      WHERE c.c_nationkey <> s.s_nationkey
+_TRI_EDGE_SQL = f"""
+      SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      FROM ({NATION_TRADE_EDGES_SQL})
 """
 
 
@@ -113,19 +109,9 @@ def q_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan shape, skew-proofed. Here the nation graph is tiny, so every
     join after the edge aggregation broadcasts. §2.B [NS] surface.
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     und = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
+        nation_trade_edges(spark, sf_dir)
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
         # checkpointed once (r6): e1/e2/e3 and the member explode each
         # re-derived the 4-table fact join (9 lineitem scans in the plan);

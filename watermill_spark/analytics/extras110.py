@@ -383,7 +383,6 @@ def q_lad_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gi",
             (F.col("b_ols") * (0.5 + F.col("gi").cast("double") / 40.0)).alias("b"),
         )
-        .localCheckpoint(eager=True)
     )
     # r6 pass 13: the value-domain grid materializes once (it feeds the
     # median ranking AND, new, the loss pass); n = Σc is the same exact

@@ -257,7 +257,7 @@ def q_brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("p_brand")).alias("brands"))
-        .cache()
+        .localCheckpoint(eager=True)
     )
     n = sets.agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
     ca = sets.select(F.explode("brands").alias("p_brand")).groupBy("p_brand").agg(

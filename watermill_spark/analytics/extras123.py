@@ -113,7 +113,6 @@ def q_model_selection_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("v"),
         )
-        .localCheckpoint(eager=True)
     )
     fit = y.agg(
         bcount("n"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec, dsum
 from .distrib import two_level_order
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register, spread
 
 _WEEK_US = 7 * 86_400_000_000  # 7 days in microseconds
@@ -234,15 +235,10 @@ def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_degree_distribution",
-    oracle="""
+    oracle=f"""
     WITH und AS (
-      SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
-                      greatest(c.c_nationkey, s.s_nationkey) AS b
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      WHERE c.c_nationkey <> s.s_nationkey
+      SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      FROM ({NATION_TRADE_EDGES_SQL})
     ),
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
@@ -261,19 +257,9 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: degree is one groupBy over the edge endpoints; the histogram is a
     second tiny aggregate. §2.B [NS] surface.
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     und = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
+        nation_trade_edges(spark, sf_dir)
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
     )
     # checkpointed once (r6): the endpoint union references the edge set

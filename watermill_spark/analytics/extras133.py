@@ -173,12 +173,9 @@ def q_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows partition by k. §2.B [NS].
     """
     li = load(spark, sf_dir, "lineitem")
-    # checkpointed once (r6): the OLS seed and the 21-slope residual
-    # sweep both re-derived the rollup (2 lineitem scans in the plan);
-    # the calendar-bounded day grid materializes once
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    )
     grid = daily.select(
         "d",
         "y",

@@ -105,10 +105,6 @@ def q_ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("y"),
     )
-    # checkpointed once (r6): both lag-join sides re-derived the rollup
-    # (2 events scans in the plan); the calendar-bounded day grid
-    # materializes once
-    daily = daily.localCheckpoint(eager=True)
     from pyspark.sql import Window
 
     idx = daily.select(
@@ -313,10 +309,7 @@ def q_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = ev.groupBy(
         F.date_trunc("week", "ts").cast("date").alias("wk"),
         F.floor(F.log("value") / F.log(F.lit(2.0))).cast("bigint").alias("bkt"),
-    ).agg(bcount("cnt")).localCheckpoint(eager=True)
-    # ^ checkpointed once (r6): both week-pair join sides re-derived the
-    # counts (2 events scans in the plan); the calendar-bounded
-    # week×bucket grid materializes once
+    ).agg(bcount("cnt"))
     from pyspark.sql import Window
 
     shares = bucketed.select(

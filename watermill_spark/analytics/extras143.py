@@ -265,10 +265,6 @@ def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("y")
     )
-    # checkpointed once (r6): both pair sides and the group counts each
-    # re-derived the fact rollup (3 lineitem scans in the plan); the
-    # calendar-bounded day grid materializes once
-    daily = daily.localCheckpoint(eager=True)
     lab = daily.select(
         "y",
         F.when(((F.dayofweek("d") + 5) % 7) + 1 >= 6, 1).otherwise(0).alias("we"),

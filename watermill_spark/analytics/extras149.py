@@ -167,10 +167,6 @@ def q_ancova(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy("d")).cast("double").alias("x"),
         F.when(((F.dayofweek("d") + 5) % 7) + 1 >= 6, 1).otherwise(0).alias("g"),
     )
-    # checkpointed once (r6): the group moments, the pooled slopes, and
-    # the adjusted means each re-derived the fact rollup (4 lineitem
-    # scans in the plan); the calendar-bounded day grid materializes once
-    pts = pts.localCheckpoint(eager=True)
     grp = pts.groupBy("g").agg(
         bcount("n"),
         F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),

@@ -336,12 +336,9 @@ def q_ses_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     family [NS].
     """
     li = load(spark, sf_dir, "lineitem")
-    # checkpointed once (r6): the forecast side and the lag side both
-    # re-derived the rollup (2 lineitem scans in the plan); the
-    # calendar-bounded day grid materializes once
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    )
     idx = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("rn")
     )

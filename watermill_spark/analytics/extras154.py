@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount
 from .extras35 import _hexval, _sql_hexval
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 _M = 256  # HLL registers
@@ -311,7 +311,7 @@ def q_weighted_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_two_hop_reachability",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     e AS (SELECT src, dst FROM edges),
     nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
     hop2 AS (
@@ -350,21 +350,8 @@ def q_two_hop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop-2 is one edge-keyed self-join on that bounded graph. §2.B
     join/graph family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     e = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("_w"))
-        .select("src", "dst")
+        nation_trade_edges(spark, sf_dir).select("src", "dst")
         # checkpointed once (r6): nodes (×2), both hop-2 sides, reach and
         # the edge count each re-derived the 4-table fact join (6 lineitem
         # scans in the plan); the ≤|nations|² edge list materializes once

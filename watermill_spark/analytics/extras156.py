@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import bcount, dec
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 _HIT_ROUNDS = 12
@@ -40,7 +40,7 @@ _HIT_STEP_SQL = f"""
 @register(
     "q_random_walk_hitting",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     nodes AS (SELECT src AS node FROM edges
               UNION SELECT dst FROM edges),
     outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow
@@ -79,21 +79,7 @@ def q_random_walk_hitting(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized forever; per round one small join + groupBy with
     lineage kept flat by the bounded state. §2.B graph family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(bcount("w"))
-    ).cache()
+    edges = nation_trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select("dst"))
@@ -103,7 +89,7 @@ def q_random_walk_hitting(spark: SparkSession, sf_dir: str) -> DataFrame:
     probs = (
         edges.join(outw, "src")
         .select("src", "dst", (F.col("w").cast("double") / F.col("ow")).alias("pr"))
-    ).cache()
+    ).localCheckpoint(eager=True)
     h = nodes.select(
         "node",
         F.when(F.col("node") == _TARGET, 1.0).otherwise(0.0).alias("h"),

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import bcount
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -203,7 +203,7 @@ def q_ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_burt_constraint",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     sym AS (
       SELECT a, b, CAST(SUM(w) AS BIGINT) AS s
       FROM (SELECT src AS a, dst AS b, w FROM edges
@@ -257,21 +257,7 @@ def q_burt_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the P·P self-join is bounded-graph quadratic. §2.B graph family
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(bcount("w"))
-    )
+    edges = nation_trade_edges(spark, sf_dir)
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"), "w")
         .unionAll(
@@ -281,11 +267,11 @@ def q_burt_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("a", "b")
         .agg(F.sum("w").cast("bigint").alias("s"))
-    ).cache()
+    ).localCheckpoint(eager=True)
     tot = sym.groupBy("a").agg(F.sum("s").cast("bigint").alias("ts"))
     p = sym.join(tot, "a").select(
         "a", "b", (F.col("s").cast("double") / F.col("ts")).alias("pij")
-    ).cache()
+    ).localCheckpoint(eager=True)
     p2 = p.select(
         F.col("a").alias("mid"), F.col("b").alias("b2"), F.col("pij").alias("p2")
     )

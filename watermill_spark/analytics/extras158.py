@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import bcount
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -172,7 +172,7 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("r") == "none")
             | ((F.col("src") != F.col("r")) & (F.col("dst") != F.col("r")))
         )
-    ).cache()
+    ).localCheckpoint(eager=True)
     direct = kp.groupBy("r", "src").agg(
         F.sum(
             F.when(
@@ -181,10 +181,10 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("pd")
-    ).cache()
+    ).localCheckpoint(eager=True)
     qp = kp.filter(F.col("dst") != "purchase").select(
         F.col("r").alias("qr"), F.col("src").alias("qsrc"), "dst", "pr"
-    ).cache()
+    ).localCheckpoint(eager=True)
     c = direct.select("r", F.col("src").alias("state"), F.lit(0.0).alias("cv"))
     for _ in range(_RM_ROUNDS):
         c = (
@@ -274,7 +274,7 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_eccentricity_diameter",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     sym AS (
       SELECT a, b FROM (
         SELECT src AS a, dst AS b FROM edges
@@ -311,27 +311,12 @@ def q_eccentricity_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance table; each round is one equi-join + min-groupBy on it.
     §2.B graph family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("_w"))
-        .select("src", "dst")
-    )
+    edges = nation_trade_edges(spark, sf_dir).select("src", "dst")
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
-    ).cache()
+    ).localCheckpoint(eager=True)
     d = sym.select("a", "b", F.lit(1).cast("bigint").alias("dist"))
     hop = sym.select(F.col("a").alias("mid"), F.col("b").alias("nb"))
     for _ in range(_ECC_ROUNDS):

@@ -178,7 +178,7 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             # per-side norms precomputed before the cell join (r6)
             F.round(_dot("q_emb", "emb") / (F.col("q_n") * F.col("nrm")), 6).alias("sim"),
         )
-    ).cache()
+    ).localCheckpoint(eager=True)
     wk = Window.partitionBy("n_probe", "query_id").orderBy(
         F.col("sim").desc(), "neighbor_id"
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import bcount, dec
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 _D15 = "decimal(38,15)"
@@ -45,7 +45,7 @@ _HUB_ROUNDS = 3
 @register(
     "q_percolation_threshold",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     sym AS (
       SELECT a, b, CAST(SUM(w) AS BIGINT) AS s
       FROM (SELECT src AS a, dst AS b, w FROM edges
@@ -98,21 +98,7 @@ def q_percolation_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     round is a keyed equi-join + min-groupBy on it (lineage truncated
     per round). §2.B graph family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(bcount("w"))
-    )
+    edges = nation_trade_edges(spark, sf_dir)
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"), "w")
         .unionAll(

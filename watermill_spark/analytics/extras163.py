@@ -305,10 +305,7 @@ def q_var_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("yv"),
-    ).localCheckpoint(eager=True)
-    # ^ checkpointed once (r6): both stacked-equation branches re-derived
-    # the rollup (2 events scans in the plan); the calendar-bounded day
-    # grid materializes once
+    )
     w = Window.orderBy("d")
     base = daily.select(
         "xv",

@@ -81,10 +81,7 @@ def q_null_rate_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("value").isNull(), 1).otherwise(0))
         .cast("bigint")
         .alias("n_null"),
-    ).localCheckpoint(eager=True)
-    # ^ checkpointed once (r6): the trend moments and the final select
-    # both re-derived the rollup (2 events scans in the plan); the
-    # calendar-bounded month grid materializes once
+    )
     from pyspark.sql import Window
 
     idx = monthly.select(

@@ -90,12 +90,9 @@ def q_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     [NS].
     """
     li = load(spark, sf_dir, "lineitem")
-    # checkpointed once (r6): the VaR rank and the tail aggregate both
-    # re-derived the rollup (2 lineitem scans in the plan); the
-    # calendar-bounded day grid materializes once
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    )
     moves = daily.select(
         "d", (F.col("y") - F.lag("y").over(Window.orderBy("d"))).alias("dy")
     ).filter(F.col("dy").isNotNull())
@@ -211,12 +208,9 @@ def q_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     [NS].
     """
     li = load(spark, sf_dir, "lineitem")
-    # checkpointed once (r6): the normal-equation moments and the
-    # residual pass both re-derived the rollup (2 lineitem scans in the
-    # plan); the calendar-bounded day grid materializes once
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    )
     idx = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t")
     )

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import bcount, dec
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 
@@ -385,7 +385,7 @@ _BFS_STEP_SQL = """
 @register(
     "q_bfs_nation_hops",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     d0 AS (SELECT CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist),
     d1 AS ({_BFS_STEP_SQL.format(prev="d0")}),
     d2 AS ({_BFS_STEP_SQL.format(prev="d1")}),
@@ -401,25 +401,13 @@ def q_bfs_nation_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative result hash-matches a chained-CTE oracle exactly.
 
     Uses the same trade edge list as q_pagerank_nations
-    (`_PR_EDGE_SQL`); the reached-set table stays ≤|nodes| rows, so every
+    (`NATION_TRADE_EDGES_SQL`); the reached-set table stays ≤|nodes| rows, so every
     relaxation joins edges to a BROADCAST frontier — one shuffle per round
     for the min-agg, none for the join. At 100 TB (billion-node graphs)
     the same loop holds with the frontier kept hash-partitioned instead of
     broadcast, plus lineage checkpoints every ~5 rounds. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-        .select("src", "dst")
-    ).cache()
+    edges = nation_trade_edges(spark, sf_dir).select("src", "dst").localCheckpoint(eager=True)
     dist = spark.range(1).select(
         F.lit(0).cast("bigint").alias("node"), F.lit(0).cast("bigint").alias("dist")
     )

@@ -326,10 +326,7 @@ def q_spectral_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("y"),
-    ).localCheckpoint(eager=True)
-    # ^ checkpointed once (r6): the means and the band projection both
-    # re-derived the rollup (2 events scans in the plan); the
-    # calendar-bounded day grid materializes once
+    )
     idx = daily.select(
         "x",
         "y",

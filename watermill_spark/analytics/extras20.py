@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import bcount, dec
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 _D30 = "decimal(30,6)"
@@ -501,14 +502,9 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EDGE_SQL = """
-      SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
-                      greatest(c.c_nationkey, s.s_nationkey) AS b
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      WHERE c.c_nationkey <> s.s_nationkey
+_EDGE_SQL = f"""
+      SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      FROM ({NATION_TRADE_EDGES_SQL})
 """
 
 
@@ -558,19 +554,9 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized table — the fact table is touched exactly once. §2.B
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     und = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
+        nation_trade_edges(spark, sf_dir)
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
         # checkpointed once (r6): sym (×2), the wedge self-join sides and
         # the closure probe each re-derived the 4-table fact join (7

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .det import dec
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
 
@@ -185,16 +186,10 @@ def q_quintile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_degree_assortativity",
-    oracle="""
+    oracle=f"""
     WITH wpair AS (
-      SELECT least(c.c_nationkey, s.s_nationkey) AS a,
-             greatest(c.c_nationkey, s.s_nationkey) AS b,
-             COUNT(*) AS w
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      WHERE c.c_nationkey <> s.s_nationkey
+      SELECT least(src, dst) AS a, greatest(src, dst) AS b, SUM(w) AS w
+      FROM ({NATION_TRADE_EDGES_SQL})
       GROUP BY 1, 2
     ),
     und AS (
@@ -244,20 +239,10 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set, the top-100 is a local TakeOrdered and both degree joins
     broadcast; moments reduce to one row. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     und = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
+        nation_trade_edges(spark, sf_dir)
+        .groupBy(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .agg(F.sum("w").alias("w"))
         .orderBy(F.col("w").desc(), "a", "b")
         .limit(100)
         .select("a", "b")

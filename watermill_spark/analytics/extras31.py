@@ -21,26 +21,18 @@ from pyspark.sql import functions as F
 
 from .dedup import lsh_candidate_pairs, minhash_signatures
 from .det import bcount, dec
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register, spread
 
 # Undirected nation trade graph, thresholded to above-average edge weight.
 # The w * n_edges > total_w comparison is the all-integer form of
 # w > avg(w): no doubles anywhere in graph construction, so membership is
 # trivially identical across engines.
-_SQL_TRADE_GRAPH = """
-    WITH de AS (
-      SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-             CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      WHERE c.c_nationkey <> s.s_nationkey
-      GROUP BY 1, 2
-    ),
+_SQL_TRADE_GRAPH = f"""
+    WITH de AS ({NATION_TRADE_EDGES_SQL}),
     ue AS (
       SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
-             CAST(SUM(cnt) AS BIGINT) AS w
+             CAST(SUM(w) AS BIGINT) AS w
       FROM de GROUP BY 1, 2
     ),
     tot AS (
@@ -59,21 +51,9 @@ _SQL_TRADE_GRAPH = """
 
 def _trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric (n, m) edge list of the thresholded nation trade graph."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    de = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("cnt"))
-    )
-    ue = de.groupBy(
+    ue = nation_trade_edges(spark, sf_dir).groupBy(
         F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).agg(F.sum("cnt").cast("bigint").alias("w"))
+    ).agg(F.sum("w").cast("bigint").alias("w"))
     tot = ue.agg(
         F.sum("w").cast("bigint").alias("total_w"), bcount("n_edges")
     )
@@ -127,7 +107,7 @@ def q_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-table + semi-join sweep (edges shuffled on src once per round);
     fixed round count bounds lineage (checkpoint beyond ~5). §2.B [NS].
     """
-    se = _trade_graph(spark, sf_dir).cache()
+    se = _trade_graph(spark, sf_dir).localCheckpoint(eager=True)
     alive = se.select("n").distinct()
     for _ in range(4):
         alive = (
@@ -189,7 +169,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-aggregated edge list; the same plan over a billion-edge graph
     shuffles edges by n once per round with map-side min combine. §2.B [NS].
     """
-    se = _trade_graph(spark, sf_dir).cache()
+    se = _trade_graph(spark, sf_dir).localCheckpoint(eager=True)
     labels = se.select("n").distinct().withColumn("lbl", F.col("n"))
     for _ in range(3):
         labels = (
@@ -292,7 +272,7 @@ def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding, it is not a pipeline stage. §2.B [NS].
     """
     docs = spread(load(spark, sf_dir, "documents"))
-    sigs = minhash_signatures(docs).cache()
+    sigs = minhash_signatures(docs).localCheckpoint(eager=True)
     toksets = docs.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("ts")
     )

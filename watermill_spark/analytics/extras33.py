@@ -333,7 +333,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound; on a big graph the heavy hitters are handled by degree-capping
     or AQE skew split. §2.B [NS].
     """
-    se = _trade_graph(spark, sf_dir).cache()
+    se = _trade_graph(spark, sf_dir).localCheckpoint(eager=True)
     deg = se.groupBy("n").agg(bcount("d"))
     a = se.select(F.col("n").alias("u"), F.col("m").alias("mid"))
     b = se.select(F.col("n").alias("v"), F.col("m").alias("mid"))

@@ -130,7 +130,7 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n") - 1)
             ).alias("c"),
         )
-        .cache()
+        .localCheckpoint(eager=True)
     )
     v = mean_.select("dim", F.lit(1.0).alias("v"))
     nrm_df = None

@@ -171,12 +171,9 @@ def q_stl_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2.5k-row daily grid; top-10 is TakeOrderedAndProject. §2.B [NS].
     """
     li = load(spark, sf_dir, "lineitem")
-    # checkpointed once (r6): the RMS scale and the anomaly ranking both
-    # re-derived the rollup (2 lineitem scans in the plan); the
-    # calendar-bounded day grid materializes once
     daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
         F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    )
     w_ord = Window.orderBy("d")
     ord_df = daily.select(
         "d",

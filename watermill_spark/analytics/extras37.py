@@ -449,7 +449,7 @@ def q_rca_trade_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("nation"), F.col("p_type").alias("ptype")
         )
         .agg(F.sum(dec("l_extendedprice")).alias("x"))
-    ).cache()
+    ).localCheckpoint(eager=True)
     nat = flows.groupBy("nation").agg(F.sum("x").alias("xn"))
     typ = flows.groupBy("ptype").agg(F.sum("x").alias("xt"))
     w = flows.agg(F.sum("x").alias("xw"))

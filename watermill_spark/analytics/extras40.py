@@ -205,7 +205,7 @@ def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((y * y).cast("decimal(30,6)")).cast("double").alias("s2_g"),
             F.sum(dec("l_extendedprice")).cast("double").alias("s_g"),
         )
-    ).cache()
+    ).localCheckpoint(eager=True)
     pooled = g.agg(
         F.sum("n_g").cast("bigint").alias("n"),
         bcount("k"),

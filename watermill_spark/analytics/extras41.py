@@ -287,7 +287,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dev = ret.crossJoin(F.broadcast(m)).select(
         "rn", (F.col("r") - F.col("rbar")).alias("e"), "n"
-    ).cache()
+    ).localCheckpoint(eager=True)
     den = dev.agg(
         F.sum((F.col("e") * F.col("e")).cast("decimal(24,12)"))
         .cast("double")

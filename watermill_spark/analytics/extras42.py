@@ -234,10 +234,6 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dec("o_totalprice")).cast("double").alias("s1"),
         F.sum((y * y).cast("decimal(30,6)")).cast("double").alias("s2"),
     )
-    # checkpointed once (r6): the weight total, the base allocation, and
-    # the leftover count each re-derived the stratum moments from the
-    # fact (4 orders scans in the plan); the ≤5-row grid materializes once
-    g = g.localCheckpoint(eager=True)
     wgt = g.select(
         "stratum",
         "n_h",

@@ -123,7 +123,7 @@ def q_logistic_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("pos_i"),
         )
-        .cache()
+        .localCheckpoint(eager=True)
     )
     b0, b1 = 0.0, 0.0
     it = None

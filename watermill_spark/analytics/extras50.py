@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 _APSP_STEP_SQL = """
       SELECT s, node, CAST(MIN(dist) AS BIGINT) AS dist FROM (
@@ -32,7 +32,7 @@ _APSP_STEP_SQL = """
 @register(
     "q_harmonic_centrality",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     nodes AS (
       SELECT src AS node FROM edges UNION SELECT dst FROM edges
     ),
@@ -71,19 +71,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-node graphs all-pairs is replaced by hub sampling; the
     per-round plan shape is unchanged. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-        .select("src", "dst")
-    ).cache()
+    edges = nation_trade_edges(spark, sf_dir).select("src", "dst").localCheckpoint(eager=True)
     nodes = edges.select(F.col("src").alias("node")).union(
         edges.select("dst")
     ).distinct()

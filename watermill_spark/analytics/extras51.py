@@ -124,10 +124,6 @@ def q_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = daily.select(
         "rev", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t")
     )
-    # checkpointed once (r6): the block moments and the deviation pass
-    # each re-derived the indexed series from the fact (4 orders scans in
-    # the plan); the ≤365-row 1995 day grid materializes once
-    idx = idx.localCheckpoint(eager=True)
     sizes = spark.range(len(_SIZES)).select(
         F.element_at(
             F.array(*[F.lit(z) for z in _SIZES]), (F.col("id") + 1).cast("int")

@@ -99,7 +99,7 @@ def q_markov_steps_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         trans.join(tot, "src")
         .filter(F.col("dst") != "purchase")
         .select("src", "dst", (F.col("c").cast("double") / F.col("n")).alias("pr"))
-    ).cache()
+    ).localCheckpoint(eager=True)
     t = tot.select(F.col("src").alias("state"), F.lit(0.0).alias("t"))
     for _ in range(_MK_ROUNDS):
         t = (

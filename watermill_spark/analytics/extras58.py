@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 
 @register(
@@ -235,7 +235,7 @@ _IPF_COL_SQL = """
 @register(
     "q_ipf_matrix_balancing",
     oracle=f"""
-    WITH edges AS MATERIALIZED ({_PR_EDGE_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     tot AS (SELECT CAST(SUM(w) AS DOUBLE) AS tw FROM edges),
     m0 AS MATERIALIZED (
       SELECT src, dst, CAST(w AS DOUBLE) / tot.tw AS w FROM edges, tot
@@ -287,18 +287,7 @@ def q_ipf_matrix_balancing(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined scalings + margin aggregations; for county-level OD matrices
     the same rounds run as shuffle joins on the margin keys. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-    )
+    edges = nation_trade_edges(spark, sf_dir)
     tot = edges.agg(F.sum("w").cast("double").alias("tw"))
     m = edges.crossJoin(F.broadcast(tot)).select(
         "src", "dst", (F.col("w").cast("double") / F.col("tw")).alias("w")

@@ -14,13 +14,13 @@ from pyspark.sql import functions as F
 
 from .det import bcount
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 
 @register(
     "q_graph_reciprocity",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     e AS (SELECT src, dst FROM edges),
     nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM nodes),
@@ -56,19 +56,7 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the census runs on the collapsed ≤|nations|² edge list; the
     reverse-edge join is key-local after one co-partition. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    e = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-        .select("src", "dst")
-    ).cache()
+    e = nation_trade_edges(spark, sf_dir).select("src", "dst").localCheckpoint(eager=True)
     nodes = e.select(F.col("src").alias("n")).union(e.select("dst")).distinct()
     nn = nodes.agg(bcount("n_nodes"))
     m = e.agg(bcount("n_edges"))
@@ -290,7 +278,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("a.b").alias("i"), F.col("c.b").alias("j"))
         .agg(bcount("wij"))
-    ).cache()
+    ).localCheckpoint(eager=True)
     rev = duels.select(
         F.col("i").alias("j"), F.col("j").alias("i"), F.col("wij").alias("wji")
     )

@@ -214,7 +214,6 @@ def q_out_of_order_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = (
         lateness.groupBy("late_s")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     wv = Window.orderBy("late_s").rowsBetween(Window.unboundedPreceding, 0)
     ranked = grid.select(

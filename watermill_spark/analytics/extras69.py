@@ -190,10 +190,6 @@ def q_sax_symbolization(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter(F.year("o_orderdate") == 1995)
         .groupBy(F.col("o_orderdate").cast("date").alias("d"))
         .agg(F.sum(dec("o_totalprice")).cast("double").alias("rev"))
-        # checkpointed once (r6): the z-moments and the PAA segments both
-        # re-derived the rollup (2 orders scans in the plan); the
-        # calendar-bounded 1995 day grid materializes once
-        .localCheckpoint(eager=True)
     )
     from pyspark.sql import Window
 

@@ -16,13 +16,13 @@ from pyspark.sql import functions as F
 
 from .det import bcount
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 
 @register(
     "q_gravity_model",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     exp_m AS (
       SELECT src, CAST(SUM(w) AS BIGINT) AS out_w FROM edges GROUP BY src
     ),
@@ -96,18 +96,7 @@ def q_gravity_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the obs table is the ≤|nations|² flow grid with broadcast
     margins; one moment pass → 1-row solve. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(cust, o.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-    ).cache()
+    edges = nation_trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     exp_m = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("out_w"))
     imp_m = edges.groupBy("dst").agg(F.sum("w").cast("bigint").alias("in_w"))
     obs = (

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 
 @register(
@@ -236,7 +236,7 @@ def q_interarrival_exponential_ks(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "q_trade_modularity",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     comm AS (
       SELECT n_nationkey AS node, CAST(n_regionkey AS BIGINT) AS c
       FROM nation
@@ -294,19 +294,8 @@ def q_trade_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the labeled edge list is ≤|nations|² with a broadcast
     community map; per-community masses collapse map-side. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(cust, o.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-    )
+    edges = nation_trade_edges(spark, sf_dir)
     comm = nation.select(
         F.col("n_nationkey").alias("node"), F.col("n_regionkey").cast("bigint").alias("c")
     )
@@ -320,7 +309,7 @@ def q_trade_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dst",
         )
         .select("w", "c_src", "c_dst")
-    ).cache()
+    ).localCheckpoint(eager=True)
     m = labeled.agg(F.sum("w").cast("bigint").alias("m"))
     same = F.col("c_src") == F.col("c_dst")
     u = labeled.select(

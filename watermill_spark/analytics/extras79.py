@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 _HITS_ROUNDS = 3
 
@@ -44,7 +44,7 @@ _HITS_NORM_SQL = """
 @register(
     "q_hits_hubs_authorities",
     oracle=f"""
-    WITH edges AS MATERIALIZED ({_PR_EDGE_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
     h0 AS (SELECT node, 1.0 AS s FROM nodes),
     {",".join(
@@ -81,18 +81,7 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     is truncated per round with localCheckpoint (see SCALE.md). §2.B
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(cust, o.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-    ).localCheckpoint(eager=True)
+    edges = nation_trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     nodes = edges.select(F.col("src").alias("node")).union(
         edges.select("dst")
     ).distinct().localCheckpoint(eager=True)

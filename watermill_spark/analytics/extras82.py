@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .extras50 import _APSP_STEP_SQL
 
 _HEX = "0123456789abcdef"
@@ -25,7 +25,7 @@ _HEX = "0123456789abcdef"
 @register(
     "q_smallworld_sigma",
     oracle=f"""
-    WITH edges AS MATERIALIZED ({_PR_EDGE_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     und AS (
       SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
       FROM edges GROUP BY 1, 2
@@ -90,19 +90,7 @@ def q_smallworld_sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the census runs entirely on the collapsed ≤|nations|² edge
     list; APSP is the q_harmonic_centrality loop. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(cust, o.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-        .select("src", "dst")
-    ).localCheckpoint(eager=True)
+    edges = nation_trade_edges(spark, sf_dir).select("src", "dst").localCheckpoint(eager=True)
     und = (
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec, telescoped_lambda
 from .registry import load, register
-from .extras9 import _PR_EDGE_SQL
+from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 _RICH_K = 8  # top-k degree nodes form the club
 _ERLANG_C = 12  # channels
@@ -33,7 +33,7 @@ def _erlang_b_sql(a: str, c: int) -> str:
 @register(
     "q_rich_club",
     oracle=f"""
-    WITH edges AS MATERIALIZED ({_PR_EDGE_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     und AS (
       SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
       FROM edges GROUP BY 1, 2
@@ -88,24 +88,12 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything runs on the collapsed undirected edge list with a
     broadcast 8-node club. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
     from pyspark.sql import Window
 
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(cust, o.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-        .select("src", "dst")
-    )
+    edges = nation_trade_edges(spark, sf_dir).select("src", "dst")
     und = edges.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct().cache()
+    ).distinct().localCheckpoint(eager=True)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))

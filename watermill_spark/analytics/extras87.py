@@ -243,12 +243,9 @@ def q_forecast_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. §2.B [NS].
     """
     o = load(spark, sf_dir, "orders")
-    # checkpointed once (r6): the train quantiles and the test coverage
-    # both re-derived the rollup (2 orders scans in the plan); the
-    # calendar-bounded day grid materializes once
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    ).localCheckpoint(eager=True)
+    )
     resid = daily.select(
         "d",
         (F.col("rev") - F.lag("rev").over(Window.orderBy("d"))).alias("e"),

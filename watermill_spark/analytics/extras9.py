@@ -232,7 +232,7 @@ def q_events_type_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_EDGE_SQL = """
+NATION_TRADE_EDGES_SQL = """
       SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
              CAST(COUNT(*) AS BIGINT) AS w
       FROM lineitem l
@@ -242,6 +242,26 @@ _PR_EDGE_SQL = """
       WHERE c.c_nationkey <> s.s_nationkey
       GROUP BY 1, 2
 """
+
+
+def nation_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed nation trade graph, ``NATION_TRADE_EDGES_SQL``'s twin:
+    one row per (customer nation ``src``, supplier nation ``dst``) pair with
+    ``src != dst``, weighted by the order lines between them (``w``,
+    BIGINT). The fact join collapses to at most |nations|² rows."""
+    li = load(spark, sf_dir, "lineitem")
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    supp = load(spark, sf_dir, "supplier")
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
+        .agg(bcount("w"))
+    )
+
 
 _PR_STEP_SQL = """
       SELECT n.node,
@@ -260,7 +280,7 @@ _PR_STEP_SQL = """
 @register(
     "q_pagerank_nations",
     oracle=f"""
-    WITH edges AS ({_PR_EDGE_SQL}),
+    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
     nodes AS (
       SELECT src AS node FROM edges UNION SELECT dst FROM edges
     ),
@@ -292,23 +312,12 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle over |edges|; a 100-TB edge list changes nothing structurally
     (checkpoint every ~5 iterations to cut lineage).
     """
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(bcount("w"))
-    ).cache()
+    edges = nation_trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select("dst"))
         .distinct()
-        .cache()
+        .localCheckpoint(eager=True)
     )
     n_nodes = float(nodes.count())
     outdeg = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("out_w"))

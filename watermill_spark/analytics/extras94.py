@@ -133,13 +133,10 @@ def q_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same 1-row moment table. §2.B [NS].
     """
     li = load(spark, sf_dir, "lineitem")
-    # checkpointed once (r6): both causality directions re-derived the
-    # rollup through the shared 1-row moment table (2 lineitem scans in
-    # the plan); the calendar-bounded day grid materializes once
     d = li.groupBy(F.col("l_shipdate").alias("day")).agg(
         (F.sum(dec("l_quantity")).cast("double") / F.lit(1e3)).alias("x"),
         (F.sum(dec("l_extendedprice")).cast("double") / F.lit(1e6)).alias("y"),
-    ).localCheckpoint(eager=True)
+    )
     w = Window.orderBy("day")
     g = d.select(
         "y",

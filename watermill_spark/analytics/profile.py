@@ -215,14 +215,11 @@ def single_partition_flags(plan: str) -> list[str]:
 
 def hint_plan(spark, df: DataFrame) -> str:
     """``df`` re-planned with auto-broadcast off, so the only surviving
-    BroadcastExchanges are explicit ``F.broadcast()`` hints. The cache is
-    cleared first: a ``.cache()`` registered while building ``df`` would
-    otherwise substitute a child planned under the default threshold."""
+    BroadcastExchanges are explicit ``F.broadcast()`` hints."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "-1")
-        spark.catalog.clearCache()
         return formatted_plan(df.select("*"))
     finally:
         spark.conf.set(key, prev)
@@ -331,13 +328,12 @@ def run(spark, sf_dir: str, budget: float = 120.0, runs: int = 1,
 
 def plans(spark, sf_dir: str, out_dir: str, names: list[str] | None = None) -> dict:
     """Write ``<name>.txt`` (the default formatted plan) per query and
-    ``plans.json``; return the JSON's content. Each query is built once, in
-    a fresh cache state; the hint-only plan re-plans the same DataFrame."""
+    ``plans.json``; return the JSON's content. Each query is built once;
+    the hint-only plan re-plans the same DataFrame."""
     os.makedirs(out_dir, exist_ok=True)
     out = {k: {} for k in ("flag_counts", "multi_scans", "broadcast_fact_flags",
                            "single_partition_flags", "errors")}
     for name in sorted(names or REGISTRY):
-        spark.catalog.clearCache()
         try:
             df = REGISTRY[name].fn(spark, sf_dir)
             plan = formatted_plan(df)

@@ -26,13 +26,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-# Join-strategy knobs, runtime-settable (tune_session applies them to driver
-# sessions too). Parameterized via env so cluster deployments can retune;
-# local defaults are chosen to ALSO hold at 100 TB — see tune_session.
-AQE_BCAST_THRESHOLD = os.environ.get("SPARK_GRAFT_AQE_BCAST", "64m")
-SHJ_LOCAL_MAP_THRESHOLD = os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
-PREFER_SMJ = os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false")
-
 # The directory that holds the watermill_spark package.
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -95,17 +88,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # + the AQE local-map threshold let the planner/AQE pick shuffled-hash
     # joins when the per-partition build side fits (≤64 MB/partition —
     # modest executor memory at any scale; partition sizing at 100 TB is
-    # governed by AQE advisory sizes, keeping the bound valid). All three
-    # env-overridable (SPARK_GRAFT_AQE_BCAST / _SHJ_THRESHOLD / _PREFER_SMJ).
-    if AQE_BCAST_THRESHOLD:
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", AQE_BCAST_THRESHOLD
-        )
-    if SHJ_LOCAL_MAP_THRESHOLD:
-        spark.conf.set(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            SHJ_LOCAL_MAP_THRESHOLD,
-        )
-    if PREFER_SMJ:
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", PREFER_SMJ)
+    # governed by AQE advisory sizes, keeping the bound valid).
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
+    spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     return spark

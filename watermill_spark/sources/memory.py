@@ -31,11 +31,9 @@ class MemoryPubSub(PubSub):
         self.persistent = persistent
         self._topics: dict[str, list] = {}
         self._lock = threading.Lock()  # Publish must be thread-safe (pubsub.go:16-18)
-        self._closed = False
 
     def publish(self, topic: str, df: DataFrame) -> None:
-        if self._closed:
-            raise RuntimeError("pubsub closed")
+        self._check_open()
         rows = ensure_message_df(df).collect()
         with self._lock:
             self._topics.setdefault(topic, []).extend(rows)
@@ -54,6 +52,3 @@ class MemoryPubSub(PubSub):
     def topic_count(self, topic: str) -> int:
         with self._lock:
             return len(self._topics.get(topic, []))
-
-    def close(self) -> None:
-        self._closed = True
