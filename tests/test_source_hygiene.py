@@ -1,6 +1,7 @@
 """Static hygiene of the library source: no unused module-level imports,
 no imports from the test suite, no round-numbered copies of root tools,
-one materialization idiom.
+one materialization idiom, one definition per shared analytics constant
+or helper.
 
 Unused imports hide which helpers a module really depends on, and they
 accumulate when code is moved between modules. Library code or a root
@@ -10,7 +11,10 @@ belongs in one maintained module (``analytics/profile.py``). A
 ``.cache()`` or ``.persist()`` that nothing unpersists stays in the
 session's CacheManager after its query is dropped, and changes how later
 plans in the same session print; an eager ``localCheckpoint`` is released
-by the ContextCleaner instead. The checks are plain AST and glob passes
+by the ContextCleaner instead. A string constant or helper function
+retyped in two analytics modules drifts apart the first time one copy is
+edited; shared ones live in ``det.py`` or ``relations.py`` (or in the
+first module that defined them) and are imported. The checks are plain AST and glob passes
 (no Spark session, well under a second).
 
 Exempt: package ``__init__.py`` files (their imports are re-exports or
@@ -141,4 +145,44 @@ def test_materialization_is_eager_local_checkpoint():
     assert not offenders, (
         "use .localCheckpoint(eager=True) instead of cache/persist/checkpoint:\n"
         + "\n".join(offenders)
+    )
+
+
+ANALYTICS = PKG / "analytics"
+
+
+def _without_docstring(fn: ast.FunctionDef) -> ast.FunctionDef:
+    body = fn.body
+    if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+        body = body[1:]
+    return ast.FunctionDef(fn.name, fn.args, body, fn.decorator_list, fn.returns)
+
+
+def shared_definitions() -> dict[tuple[str, str], list[str]]:
+    """Module-level string constants (same name, same value) and top-level
+    functions (same AST, docstrings aside) defined in more than one
+    analytics module, keyed by (name, definition)."""
+    seen: dict[tuple[str, str], list[str]] = {}
+    for path in sorted(ANALYTICS.glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if (
+                isinstance(node, ast.Assign)
+                and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+                and isinstance(node.value, ast.Constant)
+                and isinstance(node.value.value, str)
+            ):
+                key = (node.targets[0].id, node.value.value)
+            elif isinstance(node, ast.FunctionDef):
+                key = (node.name, ast.dump(_without_docstring(node)))
+            else:
+                continue
+            seen.setdefault(key, []).append(path.name)
+    return {k: v for k, v in seen.items() if len(v) > 1}
+
+
+def test_no_duplicate_definitions_in_analytics():
+    dups = shared_definitions()
+    assert not dups, "defined in more than one analytics module:\n" + "\n".join(
+        f"{name}: {', '.join(mods)}" for (name, _), mods in sorted(dups.items())
     )

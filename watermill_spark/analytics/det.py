@@ -37,6 +37,15 @@ DEC = "decimal(18,6)"
 RATE = "decimal(8,6)"
 # Wider money type for pre-scaled multiplication chains.
 MONEY = "decimal(14,4)"
+# Exact accumulator for sums of already-aggregated doubles (moments, running
+# sums over a day grid).
+D15 = "decimal(38,15)"
+# Exact accumulator for sums of products of two such doubles (the second
+# moments of a fit).
+C10 = "decimal(38,10)"
+# Hex digits in value order: instr(HEX, digit) - 1 is the digit's value on
+# both engines, which is how md5 prefixes become integer hash buckets.
+HEX = "0123456789abcdef"
 
 
 def dec(col: str | Column, typ: str = DEC) -> Column:
@@ -75,6 +84,25 @@ def bcount(alias: str, col: str | Column | None = None) -> Column:
     return c.cast("bigint").alias(alias)
 
 
+def ols_moments(x: str = "x", y: str = "y", sq: str = C10) -> list[Column]:
+    """Moments n, sx, sy, sxx, sxy of a least-squares fit of y on x, summed
+    exactly: first moments through D15, products through ``sq``."""
+    cx, cy = F.col(x), F.col(y)
+    return [
+        bcount("n"),
+        F.sum(cx.cast(D15)).cast("double").alias("sx"),
+        F.sum(cy.cast(D15)).cast("double").alias("sy"),
+        F.sum((cx * cx).cast(sq)).cast("double").alias("sxx"),
+        F.sum((cx * cy).cast(sq)).cast("double").alias("sxy"),
+    ]
+
+
+def ols_slope() -> Column:
+    """Least-squares slope over the ``ols_moments`` columns."""
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    return (n * F.col("sxy") - sx * sy) / (n * F.col("sxx") - sx * sx)
+
+
 # SQL-side fragments (DuckDB) mirroring the helpers above.
 def sql_dsum(expr: str, alias: str, typ: str = "DECIMAL(18,6)") -> str:
     return f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE) AS {alias}"
@@ -85,3 +113,45 @@ def sql_davg(expr: str, alias: str, typ: str = "DECIMAL(18,6)") -> str:
         f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE)"
         f" / CAST(COUNT({expr}) AS DOUBLE) AS {alias}"
     )
+
+
+def sql_ols_moments(x: str = "x", y: str = "y", sq: str = C10) -> str:
+    """Select-list twin of ``ols_moments`` (x and y are column names)."""
+    return (
+        "CAST(COUNT(*) AS BIGINT) AS n,\n"
+        f"             CAST(SUM(CAST({x} AS DECIMAL(38,15))) AS DOUBLE) AS sx,\n"
+        f"             CAST(SUM(CAST({y} AS DECIMAL(38,15))) AS DOUBLE) AS sy,\n"
+        f"             CAST(SUM(CAST({x} * {x} AS {sq})) AS DOUBLE) AS sxx,\n"
+        f"             CAST(SUM(CAST({x} * {y} AS {sq})) AS DOUBLE) AS sxy"
+    )
+
+
+# Twin of ``ols_slope``, textually identical to the expression it replaces.
+OLS_SLOPE_SQL = "(n * sxy - sx * sy) / (n * sxx - sx * sx)"
+
+
+def hexval(col: Column) -> Column:
+    """Value 0..15 of a one-character hex digit column."""
+    return F.instr(F.lit(HEX), col) - 1
+
+
+def sql_hexval(expr: str) -> str:
+    return f"(instr('{HEX}', {expr}) - 1)"
+
+
+def hexval8(col: Column) -> Column:
+    """First 8 hex characters of an md5 string column as a BIGINT."""
+    total = F.lit(0).cast("bigint")
+    for i in range(8):
+        digit = hexval(F.substring(col, i + 1, 1)).cast("bigint")
+        total = total + digit * F.lit(16 ** (7 - i))
+    return total
+
+
+def sql_hexval8(expr: str) -> str:
+    """DuckDB twin of ``hexval8``."""
+    terms = " + ".join(
+        f"CAST({sql_hexval(f'substr({expr}, {i + 1}, 1)')} AS BIGINT) * {16 ** (7 - i)}"
+        for i in range(8)
+    )
+    return f"({terms})"

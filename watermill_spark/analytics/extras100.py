@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _GRID_N = 201
 _NEWTON_STEPS = 4
 
@@ -156,7 +155,7 @@ def q_bayes_ab_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = lw.join(F.broadcast(mx), "arm").select(
         "arm", "gi", "p", F.exp(F.col("logw") - F.col("m")).alias("w")
     )
-    z = w.groupBy("arm").agg(F.sum(F.col("w").cast(_D15)).cast("double").alias("z"))
+    z = w.groupBy("arm").agg(F.sum(F.col("w").cast(D15)).cast("double").alias("z"))
     nw = w.join(F.broadcast(z), "arm").select(
         "arm", "gi", "p", (F.col("w") / F.col("z")).alias("w")
     )
@@ -168,34 +167,34 @@ def q_bayes_ab_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gi",
         (
             F.coalesce(
-                F.sum(F.col("w").cast(_D15)).over(
+                F.sum(F.col("w").cast(D15)).over(
                     Window.orderBy("p").rowsBetween(Window.unboundedPreceding, -1)
                 ),
-                F.lit(0).cast(_D15),
+                F.lit(0).cast(D15),
             ).cast("double")
             + 0.5 * F.col("w")
         ).alias("ca"),
     )
     prob = (
         wb.join(F.broadcast(cum_a), "gi")
-        .agg(F.sum((F.col("w") * F.col("ca")).cast(_D15)).cast("double").alias("p_b_gt_a"))
+        .agg(F.sum((F.col("w") * F.col("ca")).cast(D15)).cast("double").alias("p_b_gt_a"))
     )
     a_g = wa.select(F.col("p").alias("pa"), F.col("w").alias("wa_"))
     b_g = wb.select(F.col("p").alias("pb"), F.col("w").alias("wb_"))
     loss = a_g.crossJoin(b_g).agg(
         F.sum(
-            (F.col("wa_") * F.col("wb_") * F.greatest(F.col("pa") - F.col("pb"), F.lit(0.0))).cast(_D15)
+            (F.col("wa_") * F.col("wb_") * F.greatest(F.col("pa") - F.col("pb"), F.lit(0.0))).cast(D15)
         )
         .cast("double")
         .alias("el_b"),
         F.sum(
-            (F.col("wa_") * F.col("wb_") * F.greatest(F.col("pb") - F.col("pa"), F.lit(0.0))).cast(_D15)
+            (F.col("wa_") * F.col("wb_") * F.greatest(F.col("pb") - F.col("pa"), F.lit(0.0))).cast(D15)
         )
         .cast("double")
         .alias("el_a"),
     )
     post = nw.groupBy("arm").agg(
-        F.sum((F.col("p") * F.col("w")).cast(_D15)).cast("double").alias("pmean")
+        F.sum((F.col("p") * F.col("w")).cast(D15)).cast("double").alias("pmean")
     )
     counts = arms.groupBy().pivot("arm", ["A", "B"]).agg(
         F.max("s").alias("s"), F.max("f").alias("f")
@@ -333,13 +332,13 @@ def q_poisson_glm_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_NEWTON_STEPS):
         mu = F.exp(F.col("b0") + F.col("b1") * F.col("x"))
         acc = per_user.crossJoin(F.broadcast(beta)).agg(
-            F.sum(mu.cast(_D15)).cast("double").alias("w0"),
-            F.sum((mu * F.col("x")).cast(_D15)).cast("double").alias("w1"),
-            F.sum((mu * F.col("x") * F.col("x")).cast(_D15))
+            F.sum(mu.cast(D15)).cast("double").alias("w0"),
+            F.sum((mu * F.col("x")).cast(D15)).cast("double").alias("w1"),
+            F.sum((mu * F.col("x") * F.col("x")).cast(D15))
             .cast("double")
             .alias("w2"),
-            F.sum((F.col("y") - mu).cast(_D15)).cast("double").alias("g0"),
-            F.sum(((F.col("y") - mu) * F.col("x")).cast(_D15))
+            F.sum((F.col("y") - mu).cast(D15)).cast("double").alias("g0"),
+            F.sum(((F.col("y") - mu) * F.col("x")).cast(D15))
             .cast("double")
             .alias("g1"),
             F.max("b0").alias("b0"),
@@ -371,8 +370,8 @@ def q_poisson_glm_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
             bcount("n_users"),
             F.max("b0").alias("b0"),
             F.max("b1").alias("b1"),
-            (F.lit(2.0) * F.sum(ydev.cast(_D15)).cast("double")).alias("dev"),
-            (F.lit(2.0) * F.sum(ynull.cast(_D15)).cast("double")).alias("dev0"),
+            (F.lit(2.0) * F.sum(ydev.cast(D15)).cast("double")).alias("dev"),
+            (F.lit(2.0) * F.sum(ynull.cast(D15)).cast("double")).alias("dev0"),
         )
     )
     return fit.select(
@@ -466,15 +465,15 @@ def q_james_stein(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / F.col("ng")
     pool = g.agg(
         bcount("k"),
-        (F.sum(mean_g.cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(mean_g.cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "grand"
         ),
-        (F.sum(se2_g.cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(se2_g.cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "sigma2"
         ),
     )
     ss = g.crossJoin(F.broadcast(pool)).agg(
-        F.sum(((mean_g - F.col("grand")) * (mean_g - F.col("grand"))).cast(_D15))
+        F.sum(((mean_g - F.col("grand")) * (mean_g - F.col("grand"))).cast(D15))
         .cast("double")
         .alias("s2"),
         F.max("k").alias("k"),

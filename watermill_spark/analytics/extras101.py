@@ -19,10 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -304,9 +302,9 @@ def q_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dev = F.col("s") / F.col("nc") - F.col("gs") / F.col("n")
     parts = ld.join(F.broadcast(gd), "dim").agg(
-        F.sum((F.col("nc") * dev * dev).cast(_D15)).cast("double").alias("bss"),
+        F.sum((F.col("nc") * dev * dev).cast(D15)).cast("double").alias("bss"),
         F.sum(
-            (F.col("ss") - F.col("s") * F.col("s") / F.col("nc")).cast(_D15)
+            (F.col("ss") - F.col("s") * F.col("s") / F.col("nc")).cast(D15)
         )
         .cast("double")
         .alias("wss"),

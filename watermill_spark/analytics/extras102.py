@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -131,7 +129,7 @@ def q_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dev = F.col("rsum") - F.col("m").cast("double") * (F.col("n") + 1) / 2.0
     s = full_b.crossJoin(F.broadcast(dims)).agg(
-        F.sum((dev * dev).cast(_D15)).cast("double").alias("s"),
+        F.sum((dev * dev).cast(D15)).cast("double").alias("s"),
         F.max("m").alias("m"),
         F.max("n").alias("n"),
     )
@@ -253,14 +251,14 @@ def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pbar = pi.agg(
         bcount("n"),
-        (F.sum(F.col("p_i").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("p_i").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "pb"
         ),
     )
     pj = nij.groupBy("cat").agg(F.sum("c").cast("bigint").alias("tot"))
     share = F.col("tot").cast("double") / (F.lit(3.0) * F.col("n"))
     pe = pj.crossJoin(F.broadcast(pbar.select("n"))).agg(
-        F.sum((share * share).cast(_D15)).cast("double").alias("pe")
+        F.sum((share * share).cast(D15)).cast("double").alias("pe")
     )
     return pbar.crossJoin(F.broadcast(pe)).select(
         F.col("n").alias("n_subjects"),

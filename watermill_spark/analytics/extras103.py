@@ -21,10 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import dec
+from .det import D15, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 # Σ 0.5^0..0.5^7 = 2 - 2^-7 — exactly representable
 _EWMA_DEN = 1.9921875
 _HALF = [1.0, 0.5, 0.25, 0.125, 0.0625, 0.03125, 0.015625, 0.0078125]
@@ -199,14 +198,14 @@ def q_sortino_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = dd.agg(
         F.count("ret").cast("bigint").alias("n"),
-        (F.sum(dec("ret", _D15)).cast("double") / F.count("ret")).alias("mean_ret"),
+        (F.sum(dec("ret", D15)).cast("double") / F.count("ret")).alias("mean_ret"),
         (
             F.sum(
                 dec(
                     F.when(F.col("ret") < 0, F.col("ret") * F.col("ret")).otherwise(
                         0.0
                     ),
-                    _D15,
+                    D15,
                 )
             ).cast("double")
             / F.count("ret")

@@ -17,10 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, OLS_SLOPE_SQL, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _RDD_CUT = 0.0
 _RDD_H = 500.0  # bandwidth on each side of the cutoff
 _TC_BUCKETS = 10
@@ -49,8 +48,8 @@ _TC_BUCKETS = 10
     ),
     fits AS (
       SELECT side, n,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
-             (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
+             {OLS_SLOPE_SQL} AS slope,
+             (sy - {OLS_SLOPE_SQL} * sx) / n
                AS intercept
       FROM sides
     )
@@ -97,10 +96,10 @@ def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("x") >= _RDD_CUT, 1).otherwise(0).alias("side")
     ).agg(
         bcount("n"),
-        F.sum(xc.cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((xc * F.col("y")).cast(_D15)).cast("double").alias("sxy"),
-        F.sum((xc * xc).cast(_D15)).cast("double").alias("sxx"),
+        F.sum(xc.cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("sy"),
+        F.sum((xc * F.col("y")).cast(D15)).cast("double").alias("sxy"),
+        F.sum((xc * xc).cast(D15)).cast("double").alias("sxx"),
     )
     n = F.col("n").cast("double")
     slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -248,7 +247,7 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         dense.withColumn("cum", F.sum(F.col("cp") - F.col("gp")).over(wcum))
         .groupBy("c_nationkey", "c_mktsegment")
         .agg(
-            F.sum((F.abs("cum") / F.lit(float(_TC_BUCKETS - 1))).cast(_D15))
+            F.sum((F.abs("cum") / F.lit(float(_TC_BUCKETS - 1))).cast(D15))
             .cast("double")
             .alias("t")
         )
@@ -333,7 +332,7 @@ def q_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             bcount("support"),
             F.round(
-                F.sum((F.col("ra") - F.col("rb")).cast(_D15)).cast("double")
+                F.sum((F.col("ra") - F.col("rb")).cast(D15)).cast("double")
                 / F.count(F.lit(1)),
                 6,
             ).alias("deviation"),

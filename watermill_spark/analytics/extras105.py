@@ -18,11 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register, spread
 from .similarity import _SQL_BUCKET, lsh_bucket
 
-_D15 = "decimal(38,15)"
 _SEM_THRESH = 0.5
 _MIX_BUDGET = 1_000_000  # token budget to allocate across sources
 _MIX_TAU = 0.5  # temperature: p_s ∝ tokens^τ
@@ -193,7 +192,7 @@ def q_data_mixture_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall = Window.partitionBy()
     tot_raw = F.sum(F.col("tokens").cast("double")).over(wall)
     tot_sqrt = (
-        F.sum(F.sqrt(F.col("tokens").cast("double")).cast(_D15))
+        F.sum(F.sqrt(F.col("tokens").cast("double")).cast(D15))
         .over(wall)
         .cast("double")
     )

@@ -22,10 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _US_PER_DAY = 86400000000
 _CENSOR_GAP_DAYS = 14
 _COX_STEPS = 4
@@ -159,12 +158,12 @@ def q_cox_ph_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
             users.crossJoin(F.broadcast(bdf))
             .groupBy("t")
             .agg(
-                F.sum(ex.cast(_D15)).alias("e0"),
-                F.sum((F.col("x") * ex).cast(_D15)).alias("e1"),
-                F.sum((F.col("x") * F.col("x") * ex).cast(_D15)).alias("e2"),
+                F.sum(ex.cast(D15)).alias("e0"),
+                F.sum((F.col("x") * ex).cast(D15)).alias("e1"),
+                F.sum((F.col("x") * F.col("x") * ex).cast(D15)).alias("e2"),
                 F.sum("died").cast("bigint").alias("d"),
                 F.sum(
-                    F.when(F.col("died") == 1, F.col("x")).otherwise(0.0).cast(_D15)
+                    F.when(F.col("died") == 1, F.col("x")).otherwise(0.0).cast(D15)
                 )
                 .cast("double")
                 .alias("dx"),
@@ -180,10 +179,10 @@ def q_cox_ph_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         r01 = F.col("s1") / F.col("s0")
         return s.filter(F.col("d") > 0).agg(
-            F.sum((F.col("dx") - F.col("d") * r01).cast(_D15))
+            F.sum((F.col("dx") - F.col("d") * r01).cast(D15))
             .cast("double")
             .alias("u"),
-            F.sum((F.col("d") * (F.col("s2") / F.col("s0") - r01 * r01)).cast(_D15))
+            F.sum((F.col("d") * (F.col("s2") / F.col("s0") - r01 * r01)).cast(D15))
             .cast("double")
             .alias("i"),
         )
@@ -303,13 +302,13 @@ def q_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges.join(F.broadcast(v), F.col("nk") == F.col("src"))
             .groupBy("dst")
             .agg(
-                F.sum((F.col("w") * F.col("v")).cast(_D15))
+                F.sum((F.col("w") * F.col("v")).cast(D15))
                 .cast("double")
                 .alias("raw")
             )
         )
         tot = raw.agg(
-            F.sum(F.col("raw").cast(_D15)).cast("double").alias("tot")
+            F.sum(F.col("raw").cast(D15)).cast("double").alias("tot")
         )
         # ≤|nations| rows of state: checkpoint per round, else the plan
         # tree doubles every iteration (raw is referenced twice) and the
@@ -442,13 +441,13 @@ def q_dfa_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes once
     daily = daily.localCheckpoint(eager=True)
     m = daily.agg(
-        (F.sum(dec("rev", _D15)).cast("double") / F.count(F.lit(1))).alias("mu"),
+        (F.sum(dec("rev", D15)).cast("double") / F.count(F.lit(1))).alias("mu"),
         bcount("nd"),
     )
     wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     prof = daily.crossJoin(F.broadcast(m)).select(
         F.row_number().over(Window.orderBy("d")).alias("rn"),
-        F.sum((F.col("rev") - F.col("mu")).cast(_D15))
+        F.sum((F.col("rev") - F.col("mu")).cast(D15))
         .over(wcum)
         .cast("double")
         .alias("y"),
@@ -472,11 +471,11 @@ def q_dfa_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fit = boxed.groupBy("n", "box").agg(
         bcount("k"),
-        F.sum(F.col("xi").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("xi") * F.col("y")).cast(_D15)).cast("double").alias("sxy"),
-        F.sum((F.col("xi") * F.col("xi")).cast(_D15)).cast("double").alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(_D15)).cast("double").alias("syy"),
+        F.sum(F.col("xi").cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("sy"),
+        F.sum((F.col("xi") * F.col("y")).cast(D15)).cast("double").alias("sxy"),
+        F.sum((F.col("xi") * F.col("xi")).cast(D15)).cast("double").alias("sxx"),
+        F.sum((F.col("y") * F.col("y")).cast(D15)).cast("double").alias("syy"),
     )
     k = F.col("k").cast("double")
     slope = (k * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -488,7 +487,7 @@ def q_dfa_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         - slope * slope * (F.col("sxx") - F.col("sx") * F.col("sx") / k)
     )
     resid = fit.groupBy("n").agg(
-        F.sum(ssres.cast(_D15)).cast("double").alias("ss"),
+        F.sum(ssres.cast(D15)).cast("double").alias("ss"),
         F.sum("k").cast("bigint").alias("ntot"),
         bcount("nboxes"),
     )
@@ -502,14 +501,14 @@ def q_dfa_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha = fvals.agg(
         (
             (
-                cnt * F.sum((lnn * F.log("f")).cast(_D15)).cast("double")
-                - F.sum(lnn.cast(_D15)).cast("double")
-                * F.sum(F.log("f").cast(_D15)).cast("double")
+                cnt * F.sum((lnn * F.log("f")).cast(D15)).cast("double")
+                - F.sum(lnn.cast(D15)).cast("double")
+                * F.sum(F.log("f").cast(D15)).cast("double")
             )
             / (
-                cnt * F.sum((lnn * lnn).cast(_D15)).cast("double")
-                - F.sum(lnn.cast(_D15)).cast("double")
-                * F.sum(lnn.cast(_D15)).cast("double")
+                cnt * F.sum((lnn * lnn).cast(D15)).cast("double")
+                - F.sum(lnn.cast(D15)).cast("double")
+                * F.sum(lnn.cast(D15)).cast("double")
             )
         ).alias("a")
     )

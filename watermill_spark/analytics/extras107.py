@@ -19,10 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 # Acklam's inverse-normal-CDF rational approximation (public domain
 # algorithm; |relative error| < 1.15e-9). Fixed double coefficients —
@@ -176,7 +174,7 @@ def q_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("i") > 0, F.log(F.col("i").cast("double"))
-                ).otherwise(0.0).cast(_D15)
+                ).otherwise(0.0).cast(D15)
             )
             .over(wcum)
             .cast("double")
@@ -224,7 +222,7 @@ def q_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("c1").alias("col1_total"),
             F.max("n").alias("n"),
             F.round(F.max("p_obs"), 10).alias("pmf_at_obs"),
-            F.round(F.sum(F.col("p").cast(_D15)).cast("double"), 10).alias(
+            F.round(F.sum(F.col("p").cast(D15)).cast("double"), 10).alias(
                 "p_two_sided"
             ),
         )
@@ -304,11 +302,11 @@ def q_shapiro_francia(spark: SparkSession, sf_dir: str) -> DataFrame:
     mom = scored.agg(
         F.max("n").alias("n"),
         F.count(F.lit(1)).cast("double").alias("k"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("m").cast(_D15)).cast("double").alias("sm"),
-        F.sum((F.col("x") * F.col("m")).cast(_D15)).cast("double").alias("sxm"),
-        F.sum((F.col("x") * F.col("x")).cast(_D15)).cast("double").alias("sxx"),
-        F.sum((F.col("m") * F.col("m")).cast(_D15)).cast("double").alias("smm"),
+        F.sum(F.col("x").cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("m").cast(D15)).cast("double").alias("sm"),
+        F.sum((F.col("x") * F.col("m")).cast(D15)).cast("double").alias("sxm"),
+        F.sum((F.col("x") * F.col("x")).cast(D15)).cast("double").alias("sxx"),
+        F.sum((F.col("m") * F.col("m")).cast(D15)).cast("double").alias("smm"),
     )
     num = F.col("k") * F.col("sxm") - F.col("sx") * F.col("sm")
     den = (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")) * (
@@ -382,7 +380,7 @@ def q_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy("d")).alias("i"),
         "d",
         "y",
-        F.sum(F.col("y").cast(_D15)).over(wcum).alias("pre"),
+        F.sum(F.col("y").cast(D15)).over(wcum).alias("pre"),
     ).localCheckpoint(eager=True)
     jside = idx.select(
         F.col("i").alias("j"), F.col("pre").alias("jpre")
@@ -390,7 +388,7 @@ def q_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.select(F.col("i").alias("jm"), F.col("pre").alias("prevpre")),
         F.col("jm") == F.col("j") - 1,
         "left",
-    ).select("j", F.coalesce(F.col("prevpre"), F.lit(0).cast(_D15)).alias("p0"))
+    ).select("j", F.coalesce(F.col("prevpre"), F.lit(0).cast(D15)).alias("p0"))
     innermin = (
         jside.join(
             idx.select(F.col("i").alias("k"), F.col("pre").alias("kpre")),

@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _HAMPEL_HALF = 3  # window = day ± 3
 _HAMPEL_K = 3.0
 _MAD_CONSISTENT = 1.4826  # normal-consistency constant
@@ -184,10 +183,10 @@ def q_boxcox_lambda_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mom1 = tr.groupBy("lam").agg(
         bcount("n"),
-        (F.sum(F.col("t").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("t").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "mu"
         ),
-        F.sum(F.col("lnv").cast(_D15)).cast("double").alias("slnv"),
+        F.sum(F.col("lnv").cast(D15)).cast("double").alias("slnv"),
     )
     # checkpointed once (r6): mom2's mean join and the final LL join each
     # re-derived the first fact pass (6 orders scans in the plan); the
@@ -198,7 +197,7 @@ def q_boxcox_lambda_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         tr.join(F.broadcast(mom1.select("lam", "mu")), "lam")
         .groupBy("lam")
         .agg(
-            F.sum(((F.col("t") - F.col("mu")) * (F.col("t") - F.col("mu"))).cast(_D15))
+            F.sum(((F.col("t") - F.col("mu")) * (F.col("t") - F.col("mu"))).cast(D15))
             .cast("double")
             .alias("ssd")
         )

@@ -16,10 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register, spread
 
-_D15 = "decimal(38,15)"
 _TR_ROUNDS = 10
 _TR_DAMP = 0.85
 _TR_TOPK = 15
@@ -153,7 +152,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + _TR_DAMP
                     * F.coalesce(
                         F.sum(
-                            (F.col("v") * F.col("w") / F.col("wsum")).cast(_D15)
+                            (F.col("v") * F.col("w") / F.col("wsum")).cast(D15)
                         ).cast("double"),
                         F.lit(0.0),
                     )
@@ -295,7 +294,7 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(uni.select(F.col("tok").alias("w1"), "c1"), "w1", "left")
         .select(lp.alias("lp"))
     )
-    ce = F.sum((-F.col("lp")).cast(_D15)).cast("double") / F.count(F.lit(1))
+    ce = F.sum((-F.col("lp")).cast(D15)).cast("double") / F.count(F.lit(1))
     return scored.agg(
         bcount("n_test_bigrams"),
         F.lit(vsize).cast("bigint").alias("vocab_size"),

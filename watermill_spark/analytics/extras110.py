@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _CONF_ALPHA = 0.1  # target 90% coverage
 _TE_LAG = 1
 _LAD_SLOPES = 41  # grid: slope_ols * (0.5 + i/40), i = 0..40
@@ -107,10 +106,10 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = daily.filter(F.col("rn") % 2 == 1)
     fit = train.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        F.sum(F.col("rn").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("rev").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("rn") * F.col("rev")).cast(_D15)).cast("double").alias("sxy"),
-        F.sum((F.col("rn").cast("double") * F.col("rn")).cast(_D15))
+        F.sum(F.col("rn").cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("rev").cast(D15)).cast("double").alias("sy"),
+        F.sum((F.col("rn") * F.col("rev")).cast(D15)).cast("double").alias("sxy"),
+        F.sum((F.col("rn").cast("double") * F.col("rn")).cast(D15))
         .cast("double")
         .alias("sxx"),
     )
@@ -283,7 +282,7 @@ def q_transfer_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return margins.agg(
         F.max("n").alias("n_hours"),
-        F.round(F.sum(term.cast(_D15)).cast("double"), 8).alias(
+        F.round(F.sum(term.cast(D15)).cast("double"), 8).alias(
             "te_clicks_to_purchases"
         ),
     )
@@ -364,14 +363,14 @@ def q_lad_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ols = pts.agg(
         (
             (
-                F.count(F.lit(1)) * F.sum((F.col("x") * F.col("y")).cast(_D15)).cast("double")
-                - F.sum(F.col("x").cast(_D15)).cast("double")
-                * F.sum(F.col("y").cast(_D15)).cast("double")
+                F.count(F.lit(1)) * F.sum((F.col("x") * F.col("y")).cast(D15)).cast("double")
+                - F.sum(F.col("x").cast(D15)).cast("double")
+                * F.sum(F.col("y").cast(D15)).cast("double")
             )
             / (
-                F.count(F.lit(1)) * F.sum((F.col("x") * F.col("x")).cast(_D15)).cast("double")
-                - F.sum(F.col("x").cast(_D15)).cast("double")
-                * F.sum(F.col("x").cast(_D15)).cast("double")
+                F.count(F.lit(1)) * F.sum((F.col("x") * F.col("x")).cast(D15)).cast("double")
+                - F.sum(F.col("x").cast(D15)).cast("double")
+                * F.sum(F.col("x").cast(D15)).cast("double")
             )
         ).alias("b_ols")
     )

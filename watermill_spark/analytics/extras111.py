@@ -17,11 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .distrib import two_level_order
 from .registry import load, register, spread
 
-_D15 = "decimal(38,15)"
 _CHUNK = 64  # window size (tokens)
 _STRIDE = 32  # window stride
 _SEQ_LEN = 512  # training context length
@@ -301,11 +300,11 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_sub").cast("double") / F.count(F.lit(1)), 6
             ).alias("fertility"),
             F.round(
-                F.sum(F.col("wlen").cast(_D15)).cast("double") / F.sum("n_sub"),
+                F.sum(F.col("wlen").cast(D15)).cast("double") / F.sum("n_sub"),
                 6,
             ).alias("chars_per_subword"),
             F.round(
-                F.sum(F.col("wlen").cast(_D15)).cast("double")
+                F.sum(F.col("wlen").cast(D15)).cast("double")
                 / F.count(F.lit(1)),
                 6,
             ).alias("mean_word_len"),

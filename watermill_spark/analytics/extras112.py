@@ -17,11 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register, spread
 from .similarity import _SQL_BUCKET, _SQL_COSINE, N_QUERIES, _dot, lsh_bucket
 
-_D15 = "decimal(38,15)"
 _NDCG_K = 10
 _RBP_P = 0.5  # persistence — a power of two so p^d multiplies are exact
 _RBP_TOP = 10
@@ -129,10 +128,10 @@ def q_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pos") <= _NDCG_K)
     )
     dcg = lsh.groupBy("query_id").agg(
-        F.sum((F.col("sim") / log2pos).cast(_D15)).cast("double").alias("dcg")
+        F.sum((F.col("sim") / log2pos).cast(D15)).cast("double").alias("dcg")
     )
     idcg = ideal.groupBy("query_id").agg(
-        F.sum((F.col("sim") / log2pos).cast(_D15)).cast("double").alias("idcg")
+        F.sum((F.col("sim") / log2pos).cast(D15)).cast("double").alias("idcg")
     )
     return (
         idcg.join(dcg, "query_id", "left")
@@ -236,8 +235,8 @@ def q_weighted_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    wo = F.sum((F.col("w") * F.col("o")).cast(_D15)).cast("double")
-    we = F.sum((F.col("w") * F.col("e")).cast(_D15)).cast("double")
+    wo = F.sum((F.col("w") * F.col("o")).cast(D15)).cast("double")
+    we = F.sum((F.col("w") * F.col("e")).cast(D15)).cast("double")
     return grid.agg(
         F.max("n").alias("n_users"),
         F.round(wo, 6).alias("weighted_disagreement"),
@@ -346,7 +345,7 @@ def q_rank_biased_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("hits_in_top"),
             F.round(
                 (1.0 - _RBP_P)
-                * F.sum(weight.cast(_D15)).cast("double"),
+                * F.sum(weight.cast(D15)).cast("double"),
                 6,
             ).alias("rbp"),
         )

@@ -17,11 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .extras107 import phi_inv_col, phi_inv_sql
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _LEAD_DAYS = 7
 _SERVICE = 0.95
 _THETA_H = 7  # forecast horizon (days)
@@ -100,8 +99,8 @@ def q_safety_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     mom = (
         bd.groupBy("brand")
         .agg(
-            F.sum(F.col("q").cast(_D15)).cast("double").alias("sq"),
-            F.sum((F.col("q") * F.col("q")).cast(_D15)).cast("double").alias("sqq"),
+            F.sum(F.col("q").cast(D15)).cast("double").alias("sq"),
+            F.sum((F.col("q") * F.col("q")).cast(D15)).cast("double").alias("sqq"),
         )
         .crossJoin(F.broadcast(span))
     )
@@ -291,17 +290,17 @@ def q_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (
                 F.count(F.lit(1))
-                * F.sum((F.col("rn") * F.col("rev")).cast(_D15)).cast("double")
-                - F.sum(F.col("rn").cast(_D15)).cast("double")
-                * F.sum(F.col("rev").cast(_D15)).cast("double")
+                * F.sum((F.col("rn") * F.col("rev")).cast(D15)).cast("double")
+                - F.sum(F.col("rn").cast(D15)).cast("double")
+                * F.sum(F.col("rev").cast(D15)).cast("double")
             )
             / (
                 F.count(F.lit(1))
-                * F.sum((F.col("rn").cast("double") * F.col("rn")).cast(_D15)).cast(
+                * F.sum((F.col("rn").cast("double") * F.col("rn")).cast(D15)).cast(
                     "double"
                 )
-                - F.sum(F.col("rn").cast(_D15)).cast("double")
-                * F.sum(F.col("rn").cast(_D15)).cast("double")
+                - F.sum(F.col("rn").cast(D15)).cast("double")
+                * F.sum(F.col("rn").cast(D15)).cast("double")
             )
         ).alias("slope"),
         F.max("rn").cast("bigint").alias("n_days"),

@@ -18,11 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .distrib import two_level_order
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _TOST_MARGIN = 25.0  # equivalence margin on mean user value
 _EV_P0 = 0.20  # null purchase share
 _EV_P1 = 0.25  # alternative the e-process bets on
@@ -108,7 +107,7 @@ def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grid materializes once
     arms = per_user.groupBy("is_b").agg(
         bcount("n"),
-        (F.sum(F.col("mv").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("mv").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "mu"
         ),
     )
@@ -116,7 +115,7 @@ def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_user.join(F.broadcast(arms), "is_b")
         .groupBy("is_b", "n", "mu")
         .agg(
-            F.sum(((F.col("mv") - F.col("mu")) * (F.col("mv") - F.col("mu"))).cast(_D15))
+            F.sum(((F.col("mv") - F.col("mu")) * (F.col("mv") - F.col("mu"))).cast(D15))
             .cast("double")
             .alias("ssd")
         )
@@ -300,7 +299,7 @@ def q_evalue_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.select("ts", "event_id", llr.alias("llr")),
         ["ts", "event_id"],
         rank_col="n",
-        sums=[{"col": "llr", "acc": _D15, "running": "log_ed"}],
+        sums=[{"col": "llr", "acc": D15, "running": "log_ed"}],
         total_count="nmax",
         project=["llr"],
     ).select("n", F.col("log_ed").cast("double").alias("log_e"), "nmax")

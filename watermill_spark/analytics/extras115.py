@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _US_PER_HOUR = 3600000000
 
 
@@ -122,13 +121,13 @@ def q_adstock_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rn") >= 8)
     mom = ad.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        F.sum(F.col("adstock").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("rev").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("adstock") * F.col("rev")).cast(_D15)).cast("double").alias("sxy"),
-        F.sum((F.col("adstock") * F.col("adstock")).cast(_D15))
+        F.sum(F.col("adstock").cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("rev").cast(D15)).cast("double").alias("sy"),
+        F.sum((F.col("adstock") * F.col("rev")).cast(D15)).cast("double").alias("sxy"),
+        F.sum((F.col("adstock") * F.col("adstock")).cast(D15))
         .cast("double")
         .alias("sxx"),
-        F.sum((F.col("rev") * F.col("rev")).cast(_D15)).cast("double").alias("syy"),
+        F.sum((F.col("rev") * F.col("rev")).cast(D15)).cast("double").alias("syy"),
     )
     num = F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")
     denx = F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -367,17 +366,17 @@ def q_competing_risks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d2",
         "n_risk",
         F.exp(
-            F.coalesce(F.sum(lnterm.cast(_D15)).over(wexcl), F.lit(0).cast(_D15))
+            F.coalesce(F.sum(lnterm.cast(D15)).over(wexcl), F.lit(0).cast(D15))
             .cast("double")
         ).alias("s_prev"),
     )
     cif = surv.select(
         "t",
-        F.sum((F.col("s_prev") * F.col("d1") / F.col("n_risk")).cast(_D15))
+        F.sum((F.col("s_prev") * F.col("d1") / F.col("n_risk")).cast(D15))
         .over(wincl)
         .cast("double")
         .alias("cif1"),
-        F.sum((F.col("s_prev") * F.col("d2") / F.col("n_risk")).cast(_D15))
+        F.sum((F.col("s_prev") * F.col("d2") / F.col("n_risk")).cast(D15))
         .over(wincl)
         .cast("double")
         .alias("cif2"),

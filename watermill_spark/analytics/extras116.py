@@ -17,11 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .distrib import grid_rank_of
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _GAPS_MIN = (15, 30, 60)
 
 
@@ -259,9 +258,9 @@ def q_cuzick_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sums = avgr.agg(
         bcount("n"),
-        F.sum((F.col("grp") * F.col("ar")).cast(_D15)).cast("double").alias("l"),
+        F.sum((F.col("grp") * F.col("ar")).cast(D15)).cast("double").alias("l"),
         F.sum("grp").cast("bigint").alias("sl"),
-        F.sum((F.col("grp").cast("double") * F.col("grp")).cast(_D15))
+        F.sum((F.col("grp").cast("double") * F.col("grp")).cast(D15))
         .cast("double")
         .alias("sll"),
     )

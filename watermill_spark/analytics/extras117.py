@@ -17,10 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -104,14 +102,14 @@ def q_iv_wald_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = per_user.localCheckpoint(eager=True)
     arms = per_user.groupBy("z").agg(
         bcount("n"),
-        (F.sum(F.col("x").cast(_D15)).cast("double") / F.count(F.lit(1))).alias("mx"),
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias("my"),
+        (F.sum(F.col("x").cast(D15)).cast("double") / F.count(F.lit(1))).alias("mx"),
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias("my"),
     )
     devs = (
         per_user.join(F.broadcast(arms), "z")
         .groupBy("z", "n")
         .agg(
-            F.sum(((F.col("x") - F.col("mx")) * (F.col("x") - F.col("mx"))).cast(_D15))
+            F.sum(((F.col("x") - F.col("mx")) * (F.col("x") - F.col("mx"))).cast(D15))
             .cast("double")
             .alias("ssx")
         )
@@ -225,10 +223,10 @@ def q_oaxaca_blinder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mom = per_user.groupBy("grp_a").agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(_D15)).cast("double").alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(_D15)).cast("double").alias("sxx"),
+        F.sum(F.col("x").cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("sy"),
+        F.sum((F.col("x") * F.col("y")).cast(D15)).cast("double").alias("sxy"),
+        F.sum((F.col("x") * F.col("x")).cast(D15)).cast("double").alias("sxx"),
     )
     beta = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -357,7 +355,7 @@ def q_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sums = ranked.agg(
-        F.sum((F.col("j") * F.col("r")).cast(_D15)).cast("double").alias("l"),
+        F.sum((F.col("j") * F.col("r")).cast(D15)).cast("double").alias("l"),
     ).crossJoin(F.broadcast(full_b.agg(bcount("n"))))
     k = float(n_years)
     e_l = F.col("n").cast("double") * k * (k + 1) * (k + 1) / 4.0

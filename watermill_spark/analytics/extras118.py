@@ -19,11 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register, spread
 from .similarity import _plane_sign
 
-_D15 = "decimal(38,15)"
 _TRUNC_KS = (4, 8, 16)
 _PQ_SUBSPACES = 2  # split dims into halves
 _PQ_BITS = 3  # 8 cells per subspace
@@ -83,7 +82,7 @@ def q_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select((F.col("p") + 1).alias("dim"), "v")
     mom = dims.groupBy("dim").agg(
         bcount("n"),
-        (F.sum(F.col("v").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("v").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "mu"
         ),
     )
@@ -94,7 +93,7 @@ def q_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.sum(
                     ((F.col("v") - F.col("mu")) * (F.col("v") - F.col("mu"))).cast(
-                        _D15
+                        D15
                     )
                 ).cast("double")
                 / F.col("n")
@@ -198,7 +197,7 @@ def q_matryoshka_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             bcount("n_pairs"),
             F.round(
-                F.sum(F.abs(F.col("cfull") - F.col("ctrunc")).cast(_D15)).cast(
+                F.sum(F.abs(F.col("cfull") - F.col("ctrunc")).cast(D15)).cast(
                     "double"
                 )
                 / F.count(F.lit(1)),
@@ -357,7 +356,7 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(ccol, "dim")
             .agg(
                 (
-                    F.sum(F.col("v").cast(_D15)).cast("double")
+                    F.sum(F.col("v").cast(D15)).cast("double")
                     / F.count(F.lit(1))
                 ).alias("mu")
             )
@@ -370,7 +369,7 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(cdf), [ccol, "dim"])
             .groupBy("vec_id")
             .agg(
-                F.sum(((F.col("v") - F.col("mu")) * (F.col("v") - F.col("mu"))).cast(_D15))
+                F.sum(((F.col("v") - F.col("mu")) * (F.col("v") - F.col("mu"))).cast(D15))
                 .cast("double")
                 .alias("se")
             )
@@ -406,12 +405,12 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.agg(
             bcount("n_vectors"),
             (
-                F.sum((F.col("se0") + F.col("se1")).cast(_D15)).cast("double")
+                F.sum((F.col("se0") + F.col("se1")).cast(D15)).cast("double")
                 / F.count(F.lit(1))
             ).alias("mse"),
             (
-                F.sum((F.col("se0") + F.col("se1")).cast(_D15)).cast("double")
-                / F.sum(F.col("sq").cast(_D15)).cast("double")
+                F.sum((F.col("se0") + F.col("se1")).cast(D15)).cast("double")
+                / F.sum(F.col("sq").cast(D15)).cast("double")
             ).alias("rel"),
         )
         .crossJoin(F.broadcast(ncells))

@@ -17,10 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _SLO = 0.75  # target non-error share (the corpus is ~20% 'error' events)
 _BURN_FAST_H = 1
 _BURN_SLOW_H = 6
@@ -211,13 +210,13 @@ def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         bcount("k"),
         F.sum("n").cast("bigint").alias("n_tot"),
         (
-            F.sum(((F.col("n") - 1) * F.col("s2")).cast(_D15)).cast("double")
+            F.sum(((F.col("n") - 1) * F.col("s2")).cast(D15)).cast("double")
             / (F.sum("n") - F.count(F.lit(1)))
         ).alias("sp2"),
-        F.sum(((F.col("n") - 1) * F.log("s2")).cast(_D15))
+        F.sum(((F.col("n") - 1) * F.log("s2")).cast(D15))
         .cast("double")
         .alias("sum_ln"),
-        F.sum((F.lit(1.0) / (F.col("n") - 1)).cast(_D15))
+        F.sum((F.lit(1.0) / (F.col("n") - 1)).cast(D15))
         .cast("double")
         .alias("sum_inv"),
     )
@@ -324,6 +323,6 @@ def q_moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) + (F.col("below") - F.col("eb")) * (F.col("below") - F.col("eb")) / F.col("eb")
     return chi.agg(
         bcount("n_groups"),
-        F.round(F.sum(term.cast(_D15)).cast("double"), 6).alias("chi2"),
+        F.round(F.sum(term.cast(D15)).cast("double"), 6).alias("chi2"),
         (F.count(F.lit(1)) - 1).cast("bigint").alias("df"),
     )

@@ -22,7 +22,6 @@ from .det import bcount
 from .distrib import two_level_order
 from .registry import load, register, spread
 
-_D15 = "decimal(38,15)"
 _N_SHARDS = 4
 _LOOKS = 4
 # O'Brien–Fleming two-sided 0.05 boundaries for 4 equally-spaced looks

@@ -19,10 +19,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register, spread
+from .relations import PREFIX_PAIRS_SQL, prefix_blocks, prefix_pairs
 
-_D15 = "decimal(38,15)"
 # Abramowitz & Stegun 7.1.26 erf approximation constants (|err| < 1.5e-7)
 _AS_P = 0.3275911
 _AS_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
@@ -58,16 +58,7 @@ def phi_cdf_col(x: Column) -> Column:
 @register(
     "q_rouge1_pairs",
     oracle=f"""
-    WITH pre AS MATERIALIZED (
-      SELECT doc_id, string_split(text, ' ') AS ts,
-             md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS ph
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 8
-    ),
-    cand AS MATERIALIZED (
-      SELECT a.doc_id AS da, b.doc_id AS db, a.ts AS ta, b.ts AS tb
-      FROM pre a JOIN pre b ON b.ph = a.ph AND a.doc_id < b.doc_id
-    ),
+    WITH {PREFIX_PAIRS_SQL},
     toks AS (
       SELECT da, db, 'a' AS side, unnest(ta) AS tok FROM cand
       UNION ALL
@@ -111,27 +102,12 @@ def q_rouge1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks); scoring explodes only candidate pairs' tokens — never the
     corpus cross product. §2.B [NS] / LLM-pipeline surface.
     """
-    docs = spread(load(spark, sf_dir, "documents"))
-    ts = F.split("text", " ")
-    pre = docs.filter(F.size(ts) >= 8).select(
-        "doc_id",
-        ts.alias("ts"),
-        F.md5(F.array_join(F.slice(ts, 1, 8), " ")).alias("ph"),
-    )
     # checkpointed once (r6): both blocking-join sides re-scanned and
     # re-tokenized documents, and the a/b explode union re-derived the
     # join (4 document scans in the plan); the tokenized doc table and
     # the blocking-pruned candidate pairs each materialize once
-    pre = pre.localCheckpoint(eager=True)
-    a = pre.select(
-        F.col("doc_id").alias("da"), F.col("ts").alias("ta"), F.col("ph").alias("pha")
-    )
-    b = pre.select(
-        F.col("doc_id").alias("db"), F.col("ts").alias("tb"), F.col("ph").alias("phb")
-    )
-    cand = a.join(
-        b, (F.col("phb") == F.col("pha")) & (F.col("da") < F.col("db"))
-    ).select("da", "db", "ta", "tb").localCheckpoint(eager=True)
+    pre = prefix_blocks(spark, sf_dir).localCheckpoint(eager=True)
+    cand = prefix_pairs(pre).localCheckpoint(eager=True)
     toks = cand.select(
         "da", "db", F.lit("a").alias("side"), F.explode("ta").alias("tok")
     ).unionByName(
@@ -243,7 +219,7 @@ def q_embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label", (F.col("p") + 1).alias("dim"))
         .agg(
             (
-                F.sum(F.col("v").cast(_D15)).cast("double") / F.count(F.lit(1))
+                F.sum(F.col("v").cast(D15)).cast("double") / F.count(F.lit(1))
             ).alias("mu")
         )
     )
@@ -261,7 +237,7 @@ def q_embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             bcount("n"),
             (
-                F.sum(F.col("wc").cast(_D15)).cast("double") / F.count(F.lit(1))
+                F.sum(F.col("wc").cast(D15)).cast("double") / F.count(F.lit(1))
             ).alias("wc"),
         )
     )
@@ -277,7 +253,7 @@ def q_embedding_class_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label")
         .agg(
             (
-                F.sum(F.col("bc").cast(_D15)).cast("double") / F.count(F.lit(1))
+                F.sum(F.col("bc").cast(D15)).cast("double") / F.count(F.lit(1))
             ).alias("between_cos")
         )
     )
@@ -360,7 +336,7 @@ def q_doc_length_lognormal_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = x.localCheckpoint(eager=True)
     fit = x.agg(
         bcount("n"),
-        (F.sum(F.col("lx").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("lx").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "mu"
         ),
     )
@@ -371,7 +347,7 @@ def q_doc_length_lognormal_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(
                 F.sum(
                     ((F.col("lx") - F.col("mu")) * (F.col("lx") - F.col("mu"))).cast(
-                        _D15
+                        D15
                     )
                 ).cast("double")
                 / F.col("n")

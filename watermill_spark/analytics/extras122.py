@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _ME_THRESH = (100.0, 150.0, 200.0, 250.0, 300.0)
 _WF_FOLDS = 10  # last 10 days are the walk-forward test points
 
@@ -149,8 +148,8 @@ def q_gehan_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.greatest(F.col("n_risk") - 1, F.lit(1))
     )
     terms = km.filter(F.col("d") > 0)
-    u = F.sum(u_term.cast(_D15)).cast("double")
-    v = F.sum(v_term.cast(_D15)).cast("double")
+    u = F.sum(u_term.cast(D15)).cast("double")
+    v = F.sum(v_term.cast(D15)).cast("double")
     return terms.agg(
         bcount("n_event_times"),
         F.round(u, 4).alias("gehan_u"),
@@ -207,7 +206,7 @@ def q_mean_excess_function(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("v") > F.col("u"), F.col("v") - F.col("u"))
                 .otherwise(0.0)
-                .cast(_D15)
+                .cast(D15)
             )
             .cast("double")
             .alias("sum_excess"),
@@ -313,11 +312,11 @@ def q_walkforward_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 0.125 * F.lag("rev", 3).over(w)
     ) / 1.875
     k = F.col("rn").cast("double")
-    sxy = F.sum((F.col("rn") * F.col("rev")).cast(_D15)).over(wc).cast("double")
-    sx = F.sum(F.col("rn").cast(_D15)).over(wc).cast("double")
-    sy = F.sum(F.col("rev").cast(_D15)).over(wc).cast("double")
+    sxy = F.sum((F.col("rn") * F.col("rev")).cast(D15)).over(wc).cast("double")
+    sx = F.sum(F.col("rn").cast(D15)).over(wc).cast("double")
+    sy = F.sum(F.col("rev").cast(D15)).over(wc).cast("double")
     sxx = (
-        F.sum((F.col("rn").cast("double") * F.col("rn")).cast(_D15))
+        F.sum((F.col("rn").cast("double") * F.col("rn")).cast(D15))
         .over(wc)
         .cast("double")
     )
@@ -343,10 +342,10 @@ def q_walkforward_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("ses_level") + 0.5 * F.col("slope")).alias("fc_theta"),
         )
     )
-    mae_n = F.sum(F.abs(F.col("actual") - F.col("fc_naive")).cast(_D15)).cast(
+    mae_n = F.sum(F.abs(F.col("actual") - F.col("fc_naive")).cast(D15)).cast(
         "double"
     ) / F.count(F.lit(1))
-    mae_t = F.sum(F.abs(F.col("actual") - F.col("fc_theta")).cast(_D15)).cast(
+    mae_t = F.sum(F.abs(F.col("actual") - F.col("fc_theta")).cast(D15)).cast(
         "double"
     ) / F.count(F.lit(1))
     return tests.agg(
@@ -359,7 +358,7 @@ def q_walkforward_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (
                         (F.col("actual") - F.col("fc_naive"))
                         * (F.col("actual") - F.col("fc_naive"))
-                    ).cast(_D15)
+                    ).cast(D15)
                 ).cast("double")
                 / F.count(F.lit(1))
             ),
@@ -371,17 +370,17 @@ def q_walkforward_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (
                         (F.col("actual") - F.col("fc_theta"))
                         * (F.col("actual") - F.col("fc_theta"))
-                    ).cast(_D15)
+                    ).cast(D15)
                 ).cast("double")
                 / F.count(F.lit(1))
             ),
             6,
         ).alias("rmse_theta"),
         F.round(
-            F.sum(F.abs(F.col("actual") - F.col("fc_theta")).cast(_D15)).cast(
+            F.sum(F.abs(F.col("actual") - F.col("fc_theta")).cast(D15)).cast(
                 "double"
             )
-            / F.sum(F.abs(F.col("actual") - F.col("fc_naive")).cast(_D15)).cast(
+            / F.sum(F.abs(F.col("actual") - F.col("fc_naive")).cast(D15)).cast(
                 "double"
             ),
             6,

@@ -17,10 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _BF_P0 = 0.20  # point-null purchase share
 
 
@@ -107,7 +106,7 @@ def q_model_selection_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("i") > 0, F.log(F.col("i").cast("double")))
                 .otherwise(0.0)
-                .cast(_D15)
+                .cast(D15)
             )
             .over(wcum)
             .cast("double")
@@ -126,7 +125,7 @@ def q_model_selection_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 (
                     F.col("k") * F.log("lam") - F.col("lam") - F.col("v")
-                ).cast(_D15)
+                ).cast(D15)
             )
             .cast("double")
             .alias("ll_pois"),
@@ -134,7 +133,7 @@ def q_model_selection_aic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (
                     F.col("k") * F.log(F.col("lam") / (1.0 + F.col("lam")))
                     - F.log(1.0 + F.col("lam"))
-                ).cast(_D15)
+                ).cast(D15)
             )
             .cast("double")
             .alias("ll_geom"),
@@ -228,7 +227,7 @@ def q_bayes_factor_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("i") > 0, F.log(F.col("i").cast("double")))
                 .otherwise(0.0)
-                .cast(_D15)
+                .cast(D15)
             )
             .over(wcum)
             .cast("double")
@@ -356,6 +355,6 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return groups.agg(
         bcount("n_bins"),
         F.sum("n").cast("bigint").alias("n_scored"),
-        F.round(F.sum(term.cast(_D15)).cast("double"), 6).alias("hl_chi2"),
+        F.round(F.sum(term.cast(D15)).cast("double"), 6).alias("hl_chi2"),
         (F.count(F.lit(1)) - 2).cast("bigint").alias("df"),
     )

@@ -22,8 +22,6 @@ from pyspark.sql import functions as F
 from .det import bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
-
 
 @register(
     "q_p_chart",

@@ -23,10 +23,10 @@ from .dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
 )
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register, spread
+from .relations import PREFIX_PAIRS_SQL, prefix_blocks, prefix_pairs
 
-_D15 = "decimal(38,15)"
 _SPLIT = (("train", 0, 8), ("val", 8, 9), ("test", 9, 10))  # md5 decile cuts
 
 
@@ -135,19 +135,19 @@ def q_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     cnt = F.count(F.lit(1))
     return scored.agg(
         bcount("n_pairs"),
-        F.round(F.sum(F.col("j_est").cast(_D15)).cast("double") / cnt, 6).alias(
+        F.round(F.sum(F.col("j_est").cast(D15)).cast("double") / cnt, 6).alias(
             "mean_j_est"
         ),
-        F.round(F.sum(F.col("j_true").cast(_D15)).cast("double") / cnt, 6).alias(
+        F.round(F.sum(F.col("j_true").cast(D15)).cast("double") / cnt, 6).alias(
             "mean_j_true"
         ),
         F.round(
-            F.sum((F.col("j_est") - F.col("j_true")).cast(_D15)).cast("double")
+            F.sum((F.col("j_est") - F.col("j_true")).cast(D15)).cast("double")
             / cnt,
             6,
         ).alias("mean_bias"),
         F.round(
-            F.sum(F.abs(F.col("j_est") - F.col("j_true")).cast(_D15)).cast(
+            F.sum(F.abs(F.col("j_est") - F.col("j_true")).cast(D15)).cast(
                 "double"
             )
             / cnt,
@@ -253,17 +253,8 @@ def q_data_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_shingle_size_sweep",
-    oracle="""
-    WITH pre AS MATERIALIZED (
-      SELECT doc_id, string_split(text, ' ') AS ts,
-             md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS ph
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 8
-    ),
-    cand AS MATERIALIZED (
-      SELECT a.doc_id AS da, b.doc_id AS db, a.ts AS ta, b.ts AS tb
-      FROM pre a JOIN pre b ON b.ph = a.ph AND a.doc_id < b.doc_id
-    ),
+    oracle=f"""
+    WITH {PREFIX_PAIRS_SQL},
     ks AS (SELECT unnest(ARRAY[1, 2, 3]) AS k),
     sh AS (
       SELECT c.da, c.db, k.k,
@@ -305,26 +296,11 @@ def q_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join); shingling is a narrow per-row transform ×3. §2.B [NS] /
     LLM-pipeline surface.
     """
-    docs = spread(load(spark, sf_dir, "documents"))
-    ts = F.split("text", " ")
     # checkpointed once (r6): both candidate-join sides re-scanned
     # documents and re-ran split+md5 (2 passes in the plan); the
     # tokenized projection materializes once (posting-list class: state
     # linear in the corpus)
-    pre = docs.filter(F.size(ts) >= 8).select(
-        "doc_id",
-        ts.alias("ts"),
-        F.md5(F.array_join(F.slice(ts, 1, 8), " ")).alias("ph"),
-    ).localCheckpoint(eager=True)
-    a = pre.select(
-        F.col("doc_id").alias("da"), F.col("ts").alias("ta"), F.col("ph").alias("pha")
-    )
-    b = pre.select(
-        F.col("doc_id").alias("db"), F.col("ts").alias("tb"), F.col("ph").alias("phb")
-    )
-    cand = a.join(
-        b, (F.col("phb") == F.col("pha")) & (F.col("da") < F.col("db"))
-    ).select("da", "db", "ta", "tb")
+    cand = prefix_pairs(prefix_blocks(spark, sf_dir).localCheckpoint(eager=True))
     ks = spark.range(1).select(
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("k")
     )
@@ -350,7 +326,7 @@ def q_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             bcount("n_pairs"),
             F.round(
-                F.sum(jac.cast(_D15)).cast("double") / F.count(F.lit(1)), 6
+                F.sum(jac.cast(D15)).cast("double") / F.count(F.lit(1)), 6
             ).alias("mean_jaccard"),
             F.round(F.min(jac), 6).alias("min_jaccard"),
         )

@@ -17,11 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .distrib import two_level_order
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 def _ols_rss_sql(src: str) -> str:
@@ -326,7 +324,7 @@ def q_buishand_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily.localCheckpoint(eager=True)
     mom = daily.agg(
         bcount("n"),
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "mu"
         ),
     )
@@ -336,14 +334,14 @@ def q_buishand_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         "n",
         "mu",
-        F.sum((F.col("y") - F.col("mu")).cast(_D15))
+        F.sum((F.col("y") - F.col("mu")).cast(D15))
         .over(wcum)
         .cast("double")
         .alias("sk"),
     )
     sd = devs.groupBy("n", "mu").agg(
         F.sqrt(
-            F.sum(((F.col("y") - F.col("mu")) * (F.col("y") - F.col("mu"))).cast(_D15))
+            F.sum(((F.col("y") - F.col("mu")) * (F.col("y") - F.col("mu"))).cast(D15))
             .cast("double")
             / F.col("n")
         ).alias("s")

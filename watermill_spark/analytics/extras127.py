@@ -18,12 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .distrib import two_level_order
 from .extras121 import phi_cdf_col, phi_cdf_sql
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 # Shared daily-revenue z-score scaffold (exact two-pass moments): daily y,
 # mu = exact-sum/n, s = sqrt(exact Σ(y−mu)²/(n−1)), ranks by (y, d).
@@ -66,7 +64,7 @@ def _daily_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     mom = daily.agg(
         bcount("n"),
         (
-            F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))
+            F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))
         ).alias("mu"),
     )
     sd = (
@@ -76,7 +74,7 @@ def _daily_z(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(
                 F.sum(
                     ((F.col("y") - F.col("mu")) * (F.col("y") - F.col("mu"))).cast(
-                        _D15
+                        D15
                     )
                 ).cast("double")
                 / (F.col("n") - 1)
@@ -130,7 +128,7 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     zs = _daily_z(spark, sf_dir)
     u = phi_cdf_col(F.col("z"))
     e = (2.0 * F.col("i") - 1.0) / (2.0 * F.col("n"))
-    w2 = 1.0 / (12.0 * F.col("n")) + F.sum(((u - e) * (u - e)).cast(_D15)).cast(
+    w2 = 1.0 / (12.0 * F.col("n")) + F.sum(((u - e) * (u - e)).cast(D15)).cast(
         "double"
     )
     adj = w2 * (1.0 + 0.5 / F.col("n"))
@@ -214,10 +212,10 @@ def q_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (2.0 * F.col("i") - 1.0) / (2.0 * F.col("n"))
     agg = r.groupBy("n").agg(
         (
-            F.sum(((F.col("u") - e) * (F.col("u") - e)).cast(_D15)).cast("double")
+            F.sum(((F.col("u") - e) * (F.col("u") - e)).cast(D15)).cast("double")
             + 1.0 / (12.0 * F.col("n"))
         ).alias("w2"),
-        (F.sum(F.col("u").cast(_D15)).cast("double") / F.col("n")).alias("ubar"),
+        (F.sum(F.col("u").cast(D15)).cast("double") / F.col("n")).alias("ubar"),
     )
     u2 = F.col("w2") - F.col("n") * (F.col("ubar") - 0.5) * (F.col("ubar") - 0.5)
     return agg.select(
@@ -278,7 +276,7 @@ def q_anderson_darling_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
     term = (
         (2.0 * F.col("i") - 1.0) * F.log(p)
         + (2.0 * (F.col("n") - F.col("i")) + 1.0) * F.log(1.0 - p)
-    ).cast(_D15)
+    ).cast(D15)
     a2 = -F.col("n").cast("double") - F.sum(term).cast("double") / F.col("n")
     corr = 1.0 + 0.75 / F.col("n") + 2.25 / (F.col("n") * F.col("n"))
     return (

@@ -22,10 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import C10, bcount, dec
 from .registry import load, register
-
-_D10 = "decimal(38,10)"
 
 
 @register(
@@ -147,12 +145,12 @@ def q_dagostino_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily.crossJoin(F.broadcast(mom))
         .groupBy("n")
         .agg(
-            (F.sum((dev * dev).cast(_D10)).cast("double") / F.col("n")).alias("m2"),
-            (F.sum((dev * dev * dev).cast(_D10)).cast("double") / F.col("n")).alias(
+            (F.sum((dev * dev).cast(C10)).cast("double") / F.col("n")).alias("m2"),
+            (F.sum((dev * dev * dev).cast(C10)).cast("double") / F.col("n")).alias(
                 "m3"
             ),
             (
-                F.sum((dev * dev * dev * dev).cast(_D10)).cast("double")
+                F.sum((dev * dev * dev * dev).cast(C10)).cast("double")
                 / F.col("n")
             ).alias("m4"),
         )

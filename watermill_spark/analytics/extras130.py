@@ -22,11 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount, sql_hexval
 from .registry import load, register, spread
-
-_D15 = "decimal(38,15)"
-_HEX = "0123456789abcdef"
 
 
 @register(
@@ -39,8 +36,8 @@ _HEX = "0123456789abcdef"
     ),
     bucketed AS MATERIALIZED (
       SELECT doc_id, lang,
-             (instr('{_HEX}', substr(md5(tok), 1, 1)) - 1) * 16
-             + (instr('{_HEX}', substr(md5(tok), 2, 1)) - 1) AS b
+             {sql_hexval("substr(md5(tok), 1, 1)")} * 16
+             + {sql_hexval("substr(md5(tok), 2, 1)")} AS b
       FROM toks
     ),
     target AS (
@@ -130,7 +127,7 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             bcount("n_tokens"),
-            F.sum(F.col("lr").cast(_D15)).cast("double").alias("w"),
+            F.sum(F.col("lr").cast(D15)).cast("double").alias("w"),
         )
     )
     return (
@@ -211,7 +208,7 @@ def q_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang")
         .agg(
             bcount("n_tokens"),
-            (F.sum(lp.cast(_D15)).cast("double") / F.count(F.lit(1))).alias("ce"),
+            (F.sum(lp.cast(D15)).cast("double") / F.count(F.lit(1))).alias("ce"),
         )
     )
     bucketed = scored.select(
@@ -232,7 +229,7 @@ def q_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             bcount("n_docs"),
             F.round(
-                F.sum(F.col("ce").cast(_D15)).cast("double") / F.count(F.lit(1)), 6
+                F.sum(F.col("ce").cast(D15)).cast("double") / F.count(F.lit(1)), 6
             ).alias("mean_cross_entropy"),
         )
         .orderBy("lang", "bucket")
@@ -315,11 +312,11 @@ def q_code_detection_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_code_like"),
             F.round(
-                F.sum(F.col("score").cast(_D15)).cast("double") / F.count(F.lit(1)),
+                F.sum(F.col("score").cast(D15)).cast("double") / F.count(F.lit(1)),
                 6,
             ).alias("mean_score"),
             F.round(
-                F.sum(F.col("sym_ratio").cast(_D15)).cast("double")
+                F.sum(F.col("sym_ratio").cast(D15)).cast("double")
                 / F.count(F.lit(1)),
                 6,
             ).alias("mean_sym_ratio"),

@@ -24,18 +24,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import dec
-from .extras47 import _spark_hexval8, _sql_hexval8
+from .det import dec, hexval8, sql_hexval8
 from .registry import load, register, spread
+from .similarity import _SQL_COSINE
 
 _NQ = 10  # vec_id < 10 are the query vectors (similarity.py convention)
 _KC = 25  # binary-stage candidate pool per query (5x over-fetch)
 _K = 5
-
-_SQL_COSINE = (
-    "list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),"
-    " CAST(c.embedding AS DOUBLE[]))"
-)
 
 
 @register(
@@ -194,7 +189,7 @@ _SK = 8  # bottom-k size — small enough that every SF's user sets fill it
 def _sql_kmv(pred: str) -> str:
     """DuckDB: k-th smallest user md5 under predicate, as BIGINT."""
     return f"""
-      SELECT {_sql_hexval8("h")} AS kth FROM (
+      SELECT {sql_hexval8("h")} AS kth FROM (
         SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rn FROM (
           SELECT md5('kmv:' || CAST(user_id AS VARCHAR)) AS h
           FROM (SELECT DISTINCT user_id FROM events WHERE {pred})))
@@ -271,7 +266,7 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             flags.filter(cond)
             .select("h", F.row_number().over(Window.orderBy("h")).alias("rn"))
             .filter(F.col("rn") == _SK)
-            .select(_spark_hexval8(F.col("h")).alias("kth"))
+            .select(hexval8(F.col("h")).alias("kth"))
         )
 
     ka = kth(F.col("is_a")).select(F.col("kth").alias("kth_a"))

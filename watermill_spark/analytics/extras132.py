@@ -18,25 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
-from .registry import load, register, spread
-
-_D15 = "decimal(38,15)"
+from .det import D15, bcount, dec
+from .registry import load, register
+from .relations import PREFIX_PAIRS_SQL, prefix_blocks, prefix_pairs
 
 
 @register(
     "q_bleu_pairs",
-    oracle="""
-    WITH pre AS MATERIALIZED (
-      SELECT doc_id, string_split(text, ' ') AS ts,
-             md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS ph
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 8
-    ),
-    cand AS MATERIALIZED (
-      SELECT a.doc_id AS da, b.doc_id AS db, a.ts AS ta, b.ts AS tb
-      FROM pre a JOIN pre b ON b.ph = a.ph AND a.doc_id < b.doc_id
-    ),
+    oracle=f"""
+    WITH {PREFIX_PAIRS_SQL},
     uni AS (
       SELECT da, db, side, tok,
              CAST(COUNT(*) AS BIGINT) AS c
@@ -117,22 +107,8 @@ def q_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q_prefix_dup_groups key); only candidate pairs' n-grams explode —
     never the corpus cross product. LLM-pipeline surface.
     """
-    docs = spread(load(spark, sf_dir, "documents"))
-    ts = F.split("text", " ")
-    pre = docs.filter(F.size(ts) >= 8).select(
-        "doc_id",
-        ts.alias("ts"),
-        F.md5(F.array_join(F.slice(ts, 1, 8), " ")).alias("ph"),
-    )
-    a = pre.select(
-        F.col("doc_id").alias("da"), F.col("ts").alias("ta"), F.col("ph").alias("pha")
-    )
-    b = pre.select(
-        F.col("doc_id").alias("db"), F.col("ts").alias("tb"), F.col("ph").alias("phb")
-    )
     cand = (
-        a.join(b, (F.col("phb") == F.col("pha")) & (F.col("da") < F.col("db")))
-        .select("da", "db", "ta", "tb")
+        prefix_pairs(prefix_blocks(spark, sf_dir))
         # checkpointed once (r6): clipped() reads cand twice per n-gram
         # order (a-side + b-side), re-tokenizing the corpus 8x before
         .localCheckpoint(eager=True)
@@ -308,7 +284,7 @@ def q_generalized_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
         m = grid.agg(
             bcount("n"),
             (
-                F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))
+                F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))
             ).alias("mu"),
         )
         s = (
@@ -318,7 +294,7 @@ def q_generalized_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sqrt(
                     F.sum(
                         ((F.col("y") - F.col("mu")) * (F.col("y") - F.col("mu"))).cast(
-                            _D15
+                            D15
                         )
                     ).cast("double")
                     / (F.col("n") - 1)
@@ -448,7 +424,7 @@ def q_l_diversity_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
             "sv",
             "c",
-            (-p * F.log(p)).cast(_D15).alias("term"),
+            (-p * F.log(p)).cast(D15).alias("term"),
         )
         .groupBy("c_nationkey", "c_mktsegment")
         .agg(

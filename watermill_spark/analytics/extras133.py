@@ -19,11 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
-from .extras47 import _spark_hexval8, _sql_hexval8
+from .det import D15, bcount, dec, hexval8, sql_hexval8
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _WS_K = 20
 
 
@@ -32,7 +30,7 @@ _WS_K = 20
     oracle=f"""
     WITH keyed AS (
       SELECT o_orderkey, o_totalprice,
-             ln(({_sql_hexval8("md5('ws:' || CAST(o_orderkey AS VARCHAR))")}
+             ln(({sql_hexval8("md5('ws:' || CAST(o_orderkey AS VARCHAR))")}
                  + 1.0) / 4294967297.0)
              / CAST(o_totalprice AS DOUBLE) AS k
       FROM orders
@@ -70,7 +68,7 @@ def q_weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load(spark, sf_dir, "orders")
     u = (
-        _spark_hexval8(
+        hexval8(
             F.md5(F.concat(F.lit("ws:"), F.col("o_orderkey").cast("string")))
         )
         + 1.0
@@ -190,7 +188,7 @@ def q_quantile_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "double"
                 )
                 - F.sum("x").cast("double")
-                * F.sum(F.col("y").cast(_D15)).cast("double")
+                * F.sum(F.col("y").cast(D15)).cast("double")
             )
             / (
                 F.max("n").cast("double") * F.sum(F.col("x") * F.col("x")).cast("double")
@@ -356,7 +354,7 @@ def q_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     harm = p.withColumn(
         "cm",
-        F.sum((1.0 / F.col("rk")).cast(_D15)).over(wall).cast("double"),
+        F.sum((1.0 / F.col("rk")).cast(D15)).over(wall).cast("double"),
     )
     thresh = F.lit(_BY_ALPHA) * F.col("rk") / (F.col("mm") * F.col("cm"))
     wrev = Window.orderBy(F.desc("rk")).rowsBetween(

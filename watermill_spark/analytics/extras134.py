@@ -19,10 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register, spread
 
-_D15 = "decimal(38,15)"
 _NPERM = 200
 
 
@@ -115,7 +114,7 @@ def q_permutation_test_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily.localCheckpoint(eager=True)
     szs = daily.agg(bcount("n"), F.sum("we").cast("bigint").alias("n_we"))
     dsum = lambda cond: F.sum(  # noqa: E731
-        F.when(cond, F.col("y").cast(_D15))
+        F.when(cond, F.col("y").cast(D15))
     ).cast("double")
     obs = daily.agg(
         (

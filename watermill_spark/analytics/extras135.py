@@ -20,10 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -252,7 +250,7 @@ def q_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             bcount("n"),
             F.max(F.when(F.col("ym") == F.col("mn"), F.col("y"))).alias("y_first"),
             F.max(F.when(F.col("ym") == F.col("mx"), F.col("y"))).alias("y_last"),
-            F.sum(F.col("y").cast(_D15)).cast("double").alias("tot"),
+            F.sum(F.col("y").cast(D15)).cast("double").alias("tot"),
         )
     )
     natf = nat.select(
@@ -266,7 +264,7 @@ def q_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wr = Window.partitionBy("region")
     regm = base.groupBy("region", "ym").agg(
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("y")
+        F.sum(F.col("y").cast(D15)).cast("double").alias("y")
     )
     reg = (
         regm.select(
@@ -425,8 +423,8 @@ def q_causal_impact_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre_rows = idx.filter(F.col("rn") <= F.col("n") / 2)
     pre = pre_rows.agg(
         bcount("np"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
+        F.sum(F.col("x").cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("sy"),
         F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
         .cast("double")
         .alias("sxx"),

@@ -27,20 +27,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 # Shared daily-revenue grid + 1-row exact moments (n, mu, sd), both
 # engines computing sd from decimal-exact sums with the identical
 # double-op expression (sxx - sx*sx/n)/(n-1).
-_DAILY_SQL = """
-    daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+_DAILY_SQL = f"""
+    daily AS ({DAILY_REVENUE_SQL}),
     mom AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sx,
@@ -56,20 +51,17 @@ _DAILY_SQL = """
 
 
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): both consumers (cusum_mean_shift, ewma
     # chart) feed the day grid into _moments AND re-reference it
     # for the z/residual pass — 2 fact scans each; the calendar-bounded
     # day grid materializes once
-    return li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    return daily_revenue(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _moments(daily: DataFrame) -> DataFrame:
     mom = daily.agg(
         bcount("n"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sx"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("sx"),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("sxx"),
@@ -237,8 +229,8 @@ def q_cusum_mean_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     c = z.select(
         "d",
-        F.sum((F.col("z") - 0.5).cast(_D15)).over(w).cast("double").alias("cp"),
-        F.sum((-F.col("z") - 0.5).cast(_D15)).over(w).cast("double").alias("cn"),
+        F.sum((F.col("z") - 0.5).cast(D15)).over(w).cast("double").alias("cp"),
+        F.sum((-F.col("z") - 0.5).cast(D15)).over(w).cast("double").alias("cn"),
     )
     s = c.select(
         "d",

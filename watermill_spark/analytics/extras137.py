@@ -16,11 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .distrib import two_level_order
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -253,7 +251,7 @@ def q_abc_xyz_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.sum(dec("l_quantity")).cast("double").alias("q"))
     xyz = monthly.groupBy("l_partkey").agg(
         bcount("n"),
-        F.sum(F.col("q").cast(_D15)).cast("double").alias("s"),
+        F.sum(F.col("q").cast(D15)).cast("double").alias("s"),
         F.sum((F.col("q") * F.col("q")).cast("decimal(38,10)"))
         .cast("double")
         .alias("sxx"),

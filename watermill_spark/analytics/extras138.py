@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, OLS_SLOPE_SQL, bcount, ols_moments, ols_slope, sql_ols_moments
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -142,7 +140,7 @@ def q_edit_distance_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_zipf_slope",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT lower(tok) AS tok
       FROM documents,
@@ -164,19 +162,15 @@ def q_edit_distance_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ranked WHERE r <= 200
     ),
     mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,15))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,15))) AS DOUBLE) AS sxy
+      SELECT {sql_ols_moments(sq=D15)}
       FROM top
     )
     SELECT n AS n_ranks,
-           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
+           round({OLS_SLOPE_SQL}, 6)
              AS zipf_slope,
-           round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n,
+           round((sy - {OLS_SLOPE_SQL} * sx) / n,
                  6) AS intercept,
-           round(exp((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
+           round(exp((sy - {OLS_SLOPE_SQL} * sx)
                      / n), 2) AS implied_top_freq
     FROM mom
     """,
@@ -220,15 +214,9 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("f").cast("double")).alias("y"),
     )
     mom = top.agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(_D15)).cast("double").alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(_D15)).cast("double").alias("sxy"),
+        *ols_moments(sq=D15),
     )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    slope = ols_slope()
     intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n")
     return mom.select(
         F.col("n").alias("n_ranks"),

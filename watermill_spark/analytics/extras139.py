@@ -19,35 +19,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, ols_moments, sql_ols_moments
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
-
-# Daily click/purchase value grid shared by the CCF query.
-_XY_SQL = """
-    daily AS (
-      SELECT CAST(ts AS DATE) AS d,
-             CAST(SUM(CASE WHEN event_type = 'click'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS x,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS y
-      FROM events WHERE value IS NOT NULL
-      GROUP BY 1
-    ),
-    idx AS (
-      SELECT x, y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
-      FROM daily
-    )
-"""
+from .relations import (
+    DAILY_CLICK_PURCHASE_SQL,
+    DAILY_REVENUE_SQL,
+    daily_click_purchase,
+    daily_revenue,
+)
 
 
 @register(
     "q_ccf_lead_lag",
     oracle=f"""
-    WITH {_XY_SQL},
+    WITH daily AS ({DAILY_CLICK_PURCHASE_SQL}),
+    idx AS (
+      SELECT x, y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
+      FROM daily
+    ),
     lags AS (SELECT CAST(l AS BIGINT) AS lag
              FROM generate_series(-7, 7) AS t(l)),
     pairs AS (
@@ -58,12 +47,8 @@ _XY_SQL = """
     ),
     mom AS (
       SELECT lag,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy
+             {sql_ols_moments()},
+             CAST(SUM(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
       FROM pairs GROUP BY 1
     )
     SELECT lag, n,
@@ -88,23 +73,7 @@ def q_ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-grid self-equi-join — never the fact table. §2.B window
     family [NS].
     """
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.sum(
-            F.when(F.col("event_type") == "click", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("x"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("y"),
-    )
+    daily = daily_click_purchase(spark, sf_dir)
     from pyspark.sql import Window
 
     idx = daily.select(
@@ -121,18 +90,10 @@ def q_ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lag", "x", F.col("y2").alias("y"))
     )
     mom = pairs.groupBy("lag").agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxx"),
+        *ols_moments(),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("syy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxy"),
     )
     return mom.select(
         "lag",
@@ -150,13 +111,8 @@ def q_ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dow_effect_ols",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-               AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     dows AS (
       SELECT CAST(isodow(d) AS BIGINT) AS dow, d, y FROM daily
     ),
@@ -201,16 +157,13 @@ def q_dow_effect_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row Monday-reference broadcasts onto the 7 rows are whitelisted
     1-row aggregates. §2.B aggregation family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     dows = daily.select(
         (((F.dayofweek("d") + 5) % 7) + 1).cast("bigint").alias("dow"), "y"
     )
     grp = dows.groupBy("dow").agg(
         bcount("n_days"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("s"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("s"),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("sxx"),
@@ -332,7 +285,7 @@ def q_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("wk")
         .agg(
-            F.sum(F.sqrt(F.col("p") * F.col("q")).cast(_D15))
+            F.sum(F.sqrt(F.col("p") * F.col("q")).cast(D15))
             .cast("double")
             .alias("bc"),
             bcount("n_shared"),

@@ -20,10 +20,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import (
+    D15,
+    OLS_SLOPE_SQL,
+    bcount,
+    dec,
+    ols_moments,
+    ols_slope,
+    sql_ols_moments,
+)
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -131,7 +137,7 @@ def q_erlang_c_staffing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_price_elasticity_ols",
-    oracle="""
+    oracle=f"""
     WITH per_part AS (
       SELECT l_partkey,
              CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
@@ -145,18 +151,14 @@ def q_erlang_c_staffing(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT ln(price) AS x, ln(qty) AS y FROM per_part WHERE price > 0
     ),
     mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,15))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(y * y AS DECIMAL(38,15))) AS DOUBLE) AS syy,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,15))) AS DOUBLE) AS sxy
+      SELECT {sql_ols_moments(sq=D15)},
+             CAST(SUM(CAST(y * y AS DECIMAL(38,15))) AS DOUBLE) AS syy
       FROM pts
     )
     SELECT n AS n_parts,
-           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
+           round({OLS_SLOPE_SQL}, 6)
              AS elasticity,
-           round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n,
+           round((sy - {OLS_SLOPE_SQL} * sx) / n,
                  6) AS intercept,
            round(pow(n * sxy - sx * sy, 2)
                  / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
@@ -193,16 +195,10 @@ def q_price_elasticity_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log("price").alias("x"), F.log("qty").alias("y")
     )
     mom = pts.agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(_D15)).cast("double").alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(_D15)).cast("double").alias("syy"),
-        F.sum((F.col("x") * F.col("y")).cast(_D15)).cast("double").alias("sxy"),
+        *ols_moments(sq=D15),
+        F.sum((F.col("y") * F.col("y")).cast(D15)).cast("double").alias("syy"),
     )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    slope = ols_slope()
     return mom.select(
         F.col("n").alias("n_parts"),
         F.round(slope, 6).alias("elasticity"),

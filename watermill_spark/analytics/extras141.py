@@ -17,17 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
-from .registry import load, register
+from .det import D15, bcount
+from .registry import register
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
-_D15 = "decimal(38,15)"
-
-_DAILY_SQL = """
-    daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+_DAILY_SQL = f"""
+    daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT d, y,
              CAST(ROW_NUMBER() OVER (ORDER BY d) AS DOUBLE) AS x
@@ -37,10 +32,7 @@ _DAILY_SQL = """
 
 
 def _idx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     return daily.select(
         "d",
         "y",
@@ -112,8 +104,8 @@ def q_theil_u_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("yhat") - F.col("y")) / F.col("yl")).alias("fe"),
         ((F.col("y") - F.col("yl")) / F.col("yl")).alias("ne"),
     )
-    sfe = F.sum((F.col("fe") * F.col("fe")).cast(_D15)).cast("double")
-    sne = F.sum((F.col("ne") * F.col("ne")).cast(_D15)).cast("double")
+    sfe = F.sum((F.col("fe") * F.col("fe")).cast(D15)).cast("double")
+    sne = F.sum((F.col("ne") * F.col("ne")).cast(D15)).cast("double")
     return terms.agg(
         bcount("n_forecasts"),
         F.round(F.sqrt(sfe) / F.sqrt(sne), 6).alias("theil_u2"),
@@ -182,7 +174,7 @@ def q_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             bcount("cnt"),
-            F.sum(F.col("y").cast(_D15)).cast("double").alias("s"),
+            F.sum(F.col("y").cast(D15)).cast("double").alias("s"),
         )
         .filter(F.col("cnt") == F.col("tau"))
         .select("tau", "blk", (F.col("s") / F.col("cnt")).alias("m"))
@@ -262,10 +254,7 @@ def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitelisted like the Hampel/DFA family; never the fact table
     squared. §2.B statistics family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     # checkpointed once (r6): both pair sides and the group counts each
     # re-derived the fact rollup (3 lineitem scans in the plan); the
     # calendar-bounded day grid materializes once

@@ -21,17 +21,12 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount
 from .registry import load, register
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
-_D15 = "decimal(38,15)"
-
-_DAILY_SQL = """
-    daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+_DAILY_SQL = f"""
+    daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS DOUBLE) AS t
       FROM daily
@@ -45,10 +40,7 @@ _DAILY_SQL = """
 
 
 def _idx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     return daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("double").alias("t")
     )
@@ -118,7 +110,7 @@ def q_periodogram_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation (2 lineitem scans in the plan)
     idx = _idx(spark, sf_dir).localCheckpoint(eager=True)
     mu = idx.agg(
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "m"
         ),
         bcount("n"),
@@ -218,7 +210,7 @@ def q_recurrence_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-derived the fact aggregation (12 lineitem scans in the plan)
     idx = _idx(spark, sf_dir).localCheckpoint(eager=True)
     mu = idx.agg(
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "m"
         ),
         bcount("n"),
@@ -348,8 +340,8 @@ def q_beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mom = rates.agg(
         bcount("np"),
-        F.sum(F.col("r").cast(_D15)).cast("double").alias("sr"),
-        F.sum((F.col("r") * F.col("r")).cast(_D15)).cast("double").alias("srr"),
+        F.sum(F.col("r").cast(D15)).cast("double").alias("sr"),
+        F.sum((F.col("r") * F.col("r")).cast(D15)).cast("double").alias("srr"),
     )
     ab = mom.select(
         (F.col("sr") / F.col("np")).alias("m"),

@@ -21,10 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 
 @register(
@@ -97,10 +96,8 @@ def q_boilerplate_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
                     FROM (VALUES (0), (1), (2), (3)) AS v(j)),
     hashed AS (
       SELECT d.j,
-             (instr('{_HEX}', substr(md5('cms' || d.j || ':' || e.event_type),
-                                     1, 1)) - 1) * 16
-             + (instr('{_HEX}', substr(md5('cms' || d.j || ':' || e.event_type),
-                                       2, 1)) - 1) AS bucket
+             {sql_hexval("substr(md5('cms' || d.j || ':' || e.event_type), 1, 1)")} * 16
+             + {sql_hexval("substr(md5('cms' || d.j || ':' || e.event_type), 2, 1)")} AS bucket
       FROM events e, depths d
     ),
     counters AS (
@@ -110,10 +107,8 @@ def q_boilerplate_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys AS (SELECT DISTINCT event_type FROM events),
     key_buckets AS (
       SELECT k.event_type, d.j,
-             (instr('{_HEX}', substr(md5('cms' || d.j || ':' || k.event_type),
-                                     1, 1)) - 1) * 16
-             + (instr('{_HEX}', substr(md5('cms' || d.j || ':' || k.event_type),
-                                       2, 1)) - 1) AS bucket
+             {sql_hexval("substr(md5('cms' || d.j || ':' || k.event_type), 1, 1)")} * 16
+             + {sql_hexval("substr(md5('cms' || d.j || ':' || k.event_type), 2, 1)")} AS bucket
       FROM keys k, depths d
     ),
     est AS (
@@ -157,13 +152,10 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     depths = spark.range(0, 4).select(F.col("id").cast("bigint").alias("j"))
 
     def bucket() -> F.Column:
-        c1 = F.expr(
-            f"instr('{_HEX}', substr(md5(concat('cms', j, ':', event_type)), 1, 1))"
-        )
-        c2 = F.expr(
-            f"instr('{_HEX}', substr(md5(concat('cms', j, ':', event_type)), 2, 1))"
-        )
-        return ((c1 - 1) * 16 + (c2 - 1)).alias("bucket")
+        h = "md5(concat('cms', j, ':', event_type))"
+        c1 = hexval(F.expr(f"substr({h}, 1, 1)"))
+        c2 = hexval(F.expr(f"substr({h}, 2, 1)"))
+        return (c1 * 16 + c2).alias("bucket")
 
     # single scan (r6): the counter build, the key list and the exact
     # counts each re-scanned events; ONE scan now builds the per-type
@@ -204,12 +196,8 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_cliffs_delta",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     lab AS (
       SELECT y, CASE WHEN isodow(d) >= 6 THEN 1 ELSE 0 END AS we FROM daily
     ),
@@ -259,12 +247,7 @@ def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead (δ = 2U/(nm) − 1), no pair expansion. §2.B statistics
     family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     lab = daily.select(
         "y",
         F.when(((F.dayofweek("d") + 5) % 7) + 1 >= 6, 1).otherwise(0).alias("we"),

@@ -20,20 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount
 from .extras107 import phi_inv_col, phi_inv_sql
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 # Seasonal-naive one-week-ahead forecast over the daily revenue grid:
 # yhat_t = y_{t-7}, the standard zero-parameter baseline.
-_FC_SQL = """
-    daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+_FC_SQL = f"""
+    daily AS ({DAILY_REVENUE_SQL}),
     fc AS (
       SELECT d, y,
              LAG(y, 7) OVER (ORDER BY d) AS yhat
@@ -49,13 +44,10 @@ _FC_SQL = """
 
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): consumers rank and aggregate the scored
     # series separately (2 lineitem scans per consumer plan); the
     # calendar-bounded day grid materializes once
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    daily = daily_revenue(spark, sf_dir).localCheckpoint(eager=True)
     fc = daily.select(
         "d", "y", F.lag("y", 7).over(Window.orderBy("d")).alias("yhat")
     )
@@ -129,16 +121,16 @@ def q_median_absolute_pct_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rn") == F.floor((F.col("n") + 1) / 2.0))
         | (F.col("rn") == F.floor((F.col("n") + 2) / 2.0))
     ).agg(
-        (F.sum(F.col("ape").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("ape").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "v"
         )
     )
     pm = scored.agg(
         bcount("n_forecasts"),
-        (F.sum(F.col("ape").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("ape").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "mape"
         ),
-        (F.sum(F.col("sape").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("sape").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "smape"
         ),
         (

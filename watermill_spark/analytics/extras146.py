@@ -22,11 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 from .text import _SQL_STOPLIST, EN_STOPWORDS
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -194,7 +192,7 @@ def q_icc_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
         meas.groupBy("l_partkey")
         .agg(
             bcount("k"),
-            F.sum(F.col("y").cast(_D15)).cast("double").alias("s"),
+            F.sum(F.col("y").cast(D15)).cast("double").alias("s"),
             F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
             .cast("double")
             .alias("ss"),
@@ -312,7 +310,7 @@ def q_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     mom = pairs.agg(
         bcount("n"),
-        F.sum(F.col("diff").cast(_D15)).cast("double").alias("sd_"),
+        F.sum(F.col("diff").cast(D15)).cast("double").alias("sd_"),
         F.sum((F.col("diff") * F.col("diff")).cast("decimal(38,10)"))
         .cast("double")
         .alias("sdd"),

@@ -19,10 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -225,7 +223,7 @@ def q_intermittency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         pm.groupBy("l_partkey")
         .agg(
             bcount("k"),
-            F.sum(F.col("q").cast(_D15)).cast("double").alias("s"),
+            F.sum(F.col("q").cast(D15)).cast("double").alias("s"),
             F.sum((F.col("q") * F.col("q")).cast("decimal(38,10)"))
             .cast("double")
             .alias("ss"),
@@ -253,11 +251,11 @@ def q_intermittency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             bcount("n_parts"),
             F.round(
-                F.sum(F.col("adi").cast(_D15)).cast("double") / F.count(F.lit(1)),
+                F.sum(F.col("adi").cast(D15)).cast("double") / F.count(F.lit(1)),
                 4,
             ).alias("avg_adi"),
             F.round(
-                F.sum(F.col("cv2").cast(_D15)).cast("double") / F.count(F.lit(1)),
+                F.sum(F.col("cv2").cast(D15)).cast("double") / F.count(F.lit(1)),
                 4,
             ).alias("avg_cv2"),
         )

@@ -20,41 +20,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import OLS_SLOPE_SQL, bcount, dec, ols_moments, ols_slope, sql_ols_moments
 from .distrib import two_level_order
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 
 @register(
     "q_mincer_zarnowitz",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     fc AS (
       SELECT y, LAG(y, 7) OVER (ORDER BY d) AS f
       FROM daily
     ),
     pts AS (SELECT y, f FROM fc WHERE f IS NOT NULL),
     mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(f AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(f * f AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
+      SELECT {sql_ols_moments(x='f')},
              CAST(SUM(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy,
-             CAST(SUM(CAST(f * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
              CAST(SUM(CAST((y - f) * (y - f) AS DECIMAL(38,10)))
                   AS DOUBLE) AS ssr_r
       FROM pts
     ),
     fit AS (
       SELECT n, ssr_r,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b,
-             (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n AS a,
+             {OLS_SLOPE_SQL} AS b,
+             (sy - {OLS_SLOPE_SQL} * sx) / n AS a,
              (syy - sy * sy / n)
              - pow(n * sxy - sx * sy, 2) / (n * (n * sxx - sx * sx))
                AS ssr_u
@@ -86,26 +77,15 @@ def q_mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup to the day grid, one lag window, one 1-row
     aggregate — no joins. §2.B regression/forecast family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     fc = daily.select(
         "y", F.lag("y", 7).over(Window.orderBy("d")).alias("f")
     ).filter(F.col("f").isNotNull())
     mom = fc.agg(
-        bcount("n"),
-        F.sum(F.col("f").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("f") * F.col("f")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxx"),
+        *ols_moments(x="f"),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("syy"),
-        F.sum((F.col("f") * F.col("y")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxy"),
         F.sum(
             ((F.col("y") - F.col("f")) * (F.col("y") - F.col("f"))).cast(
                 "decimal(38,10)"
@@ -114,9 +94,7 @@ def q_mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("ssr_r"),
     )
-    b = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    b = ols_slope()
     fit = mom.select(
         "n",
         "ssr_r",

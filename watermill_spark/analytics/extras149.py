@@ -20,10 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, ols_moments, sql_ols_moments
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 
 @register(
@@ -98,12 +97,8 @@ def q_source_cap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ancova",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     pts AS (
       SELECT y,
              CAST(ROW_NUMBER() OVER (ORDER BY d) AS DOUBLE) AS x,
@@ -112,11 +107,7 @@ def q_source_cap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     grp AS (
       SELECT g,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy
+             {sql_ols_moments()}
       FROM pts GROUP BY 1
     ),
     pooled AS (
@@ -158,25 +149,14 @@ def q_ancova(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row pooled slope broadcast trivially (whitelisted). §2.B
     regression family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     pts = daily.select(
         "y",
         F.row_number().over(Window.orderBy("d")).cast("double").alias("x"),
         F.when(((F.dayofweek("d") + 5) % 7) + 1 >= 6, 1).otherwise(0).alias("g"),
     )
     grp = pts.groupBy("g").agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxy"),
+        *ols_moments(),
     )
     pooled = grp.agg(
         F.sum(

@@ -19,10 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 # SES truncated-weight table: w(alpha, k) = alpha*(1-alpha)^k for
 # k = 0..29, computed once in Python and injected as identical double
@@ -154,7 +153,7 @@ def q_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     surv = F.exp(
         F.coalesce(
-            F.sum(F.log(1.0 - F.col("qa")).cast(_D15))
+            F.sum(F.log(1.0 - F.col("qa")).cast(D15))
             .over(wprev)
             .cast("double"),
             F.lit(0.0),
@@ -285,11 +284,7 @@ def q_customer_lifetime_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ses_grid_search",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
       FROM daily
@@ -335,10 +330,7 @@ def q_ses_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     270×days expansion, one groupBy per (alpha, t). §2.B forecast
     family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     idx = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("rn")
     )

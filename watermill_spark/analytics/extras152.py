@@ -20,10 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 
 @register(
@@ -164,8 +163,8 @@ def q_placebo_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cut")
         .agg(
             bcount("np"),
-            F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-            F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
+            F.sum(F.col("x").cast(D15)).cast("double").alias("sx"),
+            F.sum(F.col("y").cast(D15)).cast("double").alias("sy"),
             F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
             .cast("double")
             .alias("sxx"),
@@ -333,12 +332,8 @@ def q_difference_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_event_study_car",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     ev AS (
       SELECT d AS ed FROM daily ORDER BY y DESC, d LIMIT 1
     ),
@@ -395,10 +390,7 @@ def q_event_study_car(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 1-row broadcasts (whitelisted); the ±5 window is 11 rows. §2.B
     window/causal family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     # checkpointed once (r6): the event-day probe, the estimation-window
     # moments, and the event-window slice each re-derived the fact rollup
     # (4 lineitem scans in the plan); the calendar-bounded day grid
@@ -412,7 +404,7 @@ def q_event_study_car(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("d") <= F.date_sub(F.col("ed"), 10))
         .agg(
             bcount("n"),
-            F.sum(F.col("y").cast(_D15)).cast("double").alias("s"),
+            F.sum(F.col("y").cast(D15)).cast("double").alias("s"),
             F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
             .cast("double")
             .alias("ss"),

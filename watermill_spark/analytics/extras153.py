@@ -21,10 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 
 @register(
@@ -205,12 +204,8 @@ def q_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_westgard_rules",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     mom AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS s,
@@ -279,16 +274,13 @@ def q_westgard_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     share the same ordered bounded-grid pass; the unpivot is 5×days.
     §2.B window/quality-control family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
     # checkpointed once (r6): the day grid feeds the moments and the z
     # map (and through it five windowed rules) — each reference
     # re-derived the fact aggregation (10 lineitem scans in the plan)
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    ).localCheckpoint(eager=True)
+    daily = daily_revenue(spark, sf_dir).localCheckpoint(eager=True)
     mom = daily.agg(
         bcount("n"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("s"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("s"),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("ss"),

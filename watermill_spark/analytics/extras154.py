@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
-from .extras35 import _hexval, _sql_hexval
+from .det import bcount, hexval, sql_hexval
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
@@ -34,7 +33,7 @@ _ALPHA_M2 = f"(0.7213 / (1 + 1.079 / {_M}.0)) * {_M}.0 * {_M}.0"
 _SQL_RHO = (
     "LEAST(length(regexp_extract(substr(hx, 3, 30), '^0*')) * 4 + 4 - "
     "length(bin("
-    + _sql_hexval(
+    + sql_hexval(
         "substr(hx, 3 + length(regexp_extract(substr(hx, 3, 30), '^0*')), 1)"
     )
     + ")) + 1, 40)"
@@ -54,8 +53,8 @@ _SQL_RHO = (
     ),
     reg AS (
       SELECT mth, wk,
-             {_sql_hexval("substr(hx, 1, 1)")} * 16
-               + {_sql_hexval("substr(hx, 2, 1)")} AS bucket,
+             {sql_hexval("substr(hx, 1, 1)")} * 16
+               + {sql_hexval("substr(hx, 2, 1)")} AS bucket,
              {_SQL_RHO} AS rho
       FROM h
     ),
@@ -131,7 +130,7 @@ def q_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 4
         - F.length(
             F.bin(
-                _hexval(
+                hexval(
                     F.expr(
                         "substr(substr(md5(CAST(user_id AS STRING)), 3, 30),"
                         " length(regexp_extract(substr(md5(CAST(user_id AS"
@@ -148,7 +147,7 @@ def q_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("date")
         .alias("mth"),
         F.date_trunc("week", "ts").cast("date").alias("wk"),
-        (_hexval(F.substring(hx, 1, 1)) * 16 + _hexval(F.substring(hx, 2, 1))).alias(
+        (hexval(F.substring(hx, 1, 1)) * 16 + hexval(F.substring(hx, 2, 1))).alias(
             "bucket"
         ),
         rho.alias("rho"),
@@ -311,7 +310,7 @@ def q_weighted_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_two_hop_reachability",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     e AS (SELECT src, dst FROM edges),
     nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
     hop2 AS (

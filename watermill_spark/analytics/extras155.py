@@ -19,31 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
-from .registry import load, register
-
-_D15 = "decimal(38,15)"
-
-_DAILY_SQL = """
-    daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    )
-"""
-
-
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+from .det import bcount
+from .registry import register
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 
 @register(
     "q_quantile_skew_kurtosis",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     ranked AS (
       SELECT y,
              CAST(ROW_NUMBER() OVER (ORDER BY y, d) AS BIGINT) AS rn,
@@ -89,7 +73,7 @@ def q_quantile_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup + one rank window on the bounded day grid;
     the octile pivot reads 7 rows. §2.B window/statistics family [NS].
     """
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(spark, sf_dir)
     ranked = daily.select(
         "y",
         F.row_number().over(Window.orderBy("y", "d")).cast("bigint").alias("rn"),
@@ -138,7 +122,7 @@ def q_quantile_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ulcer_index",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     dd AS (
       SELECT d, y,
              (y - MAX(y) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING))
@@ -169,7 +153,7 @@ def q_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one prefix-max window over the bounded day grid + one
     aggregate. §2.B window family [NS].
     """
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(spark, sf_dir)
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     dd = daily.select(
         (
@@ -200,7 +184,7 @@ def q_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_kelly_criterion",
     oracle=f"""
-    WITH {_DAILY_SQL},
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     chg AS (
       SELECT y - LAG(y) OVER (ORDER BY d) AS dy
       FROM daily
@@ -247,7 +231,7 @@ def q_kelly_criterion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lag window + one 1-row aggregate on the bounded day
     grid. §2.B window family [NS].
     """
-    daily = _daily(spark, sf_dir)
+    daily = daily_revenue(spark, sf_dir)
     chg = daily.select(
         (F.col("y") - F.lag("y").over(Window.orderBy("d"))).alias("dy")
     )

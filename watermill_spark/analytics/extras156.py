@@ -40,7 +40,7 @@ _HIT_STEP_SQL = f"""
 @register(
     "q_random_walk_hitting",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     nodes AS (SELECT src AS node FROM edges
               UNION SELECT dst FROM edges),
     outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow

@@ -20,11 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 # Tokenized corpus with per-doc positions, shared by the KN query.
 _TOK_SQL = """
@@ -185,7 +183,7 @@ def q_ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.pow(
                     2.0,
                     -F.sum(
-                        (F.log("p") / F.log(F.lit(2.0))).cast(_D15)
+                        (F.log("p") / F.log(F.lit(2.0))).cast(D15)
                     ).cast("double")
                     / F.count(F.lit(1)),
                 ),
@@ -203,7 +201,7 @@ def q_ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_burt_constraint",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     sym AS (
       SELECT a, b, CAST(SUM(w) AS BIGINT) AS s
       FROM (SELECT src AS a, dst AS b, w FROM edges
@@ -296,7 +294,7 @@ def q_burt_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     cons = cterm.groupBy("node").agg(
-        F.sum(F.col("term").cast(_D15)).cast("double").alias("c")
+        F.sum(F.col("term").cast(D15)).cast("double").alias("c")
     )
     deg = sym.groupBy("a").agg(bcount("degree"))
     return (

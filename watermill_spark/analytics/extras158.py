@@ -21,11 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
+from .relations import FIRST_EVENT_TYPES_SQL, first_event_types
 
-_D15 = "decimal(38,15)"
 _RM_ROUNDS = 12
 
 _RM_STEP_SQL = """
@@ -89,14 +89,8 @@ _ECC_STEP_SQL = """
     qp AS (SELECT r, src, dst, pr FROM kp WHERE dst <> 'purchase'),
     c0 AS (SELECT r, src AS state, CAST(0.0 AS DOUBLE) AS cv FROM direct),
     {",".join(f"c{k + 1} AS MATERIALIZED ({_RM_STEP_SQL.format(prev=f'c{k}')})" for k in range(_RM_ROUNDS))},
-    firsts AS (
-      SELECT user_id, event_type AS state
-      FROM (SELECT user_id, event_type,
-                   ROW_NUMBER() OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS rn
-            FROM events)
-      WHERE rn = 1
-    ),
+    firsts AS (SELECT user_id, first_type AS state
+               FROM ({FIRST_EVENT_TYPES_SQL})),
     starts AS (
       SELECT state, CAST(COUNT(*) AS DOUBLE)
              / (SELECT COUNT(*) FROM firsts) AS share
@@ -219,15 +213,8 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("r", F.col("src").alias("state"), "cv")
         )
     firsts = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.row_number()
-            .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("state"))
+        first_event_types(spark, sf_dir)
+        .select("user_id", F.col("first_type").alias("state"))
         # checkpointed once (r6): the total count and the per-state rollup
         # each re-ran the first-event window over the fact table; the
         # |users|-row firsts table materializes once (same class as the
@@ -274,7 +261,7 @@ def q_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_eccentricity_diameter",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     sym AS (
       SELECT a, b FROM (
         SELECT src AS a, dst AS b FROM edges
@@ -431,7 +418,7 @@ def q_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = comp.localCheckpoint(eager=True)
     norms = comp.groupBy("vec_id").agg(
         F.sqrt(
-            F.sum((F.col("v") * F.col("v")).cast(_D15)).cast("double")
+            F.sum((F.col("v") * F.col("v")).cast(D15)).cast("double")
         ).alias("nrm")
     )
     b = comp.select(
@@ -443,7 +430,7 @@ def q_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("vec_id").alias("ida"), "idb")
         .agg(
-            F.sum((F.col("v") * F.col("vb")).cast(_D15))
+            F.sum((F.col("v") * F.col("vb")).cast(D15))
             .cast("double")
             .alias("dot")
         )
@@ -459,10 +446,10 @@ def q_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cos.agg(
         bcount("n_pairs"),
         F.round(
-            F.sum(F.col("c").cast(_D15)).cast("double") / F.count(F.lit(1)), 6
+            F.sum(F.col("c").cast(D15)).cast("double") / F.count(F.lit(1)), 6
         ).alias("mean_cosine"),
         F.round(
-            F.sum(F.abs("c").cast(_D15)).cast("double") / F.count(F.lit(1)), 6
+            F.sum(F.abs("c").cast(D15)).cast("double") / F.count(F.lit(1)), 6
         ).alias("mean_abs_cosine"),
         F.round(
             F.sum(F.when(F.col("c") > 0, 1).otherwise(0)).cast("double")

@@ -19,11 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register
 from .similarity import N_QUERIES
 
-_D15 = "decimal(38,15)"
 _STRIDE = 200  # centroid stride (q_knn_ivf convention)
 _K = 5
 
@@ -445,7 +444,7 @@ def q_embedding_outlier_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the per-vector distances each materialize once
     comp = comp.localCheckpoint(eager=True)
     centroid = comp.groupBy("k").agg(
-        (F.sum(F.col("v").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("v").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "c"
         )
     )
@@ -456,7 +455,7 @@ def q_embedding_outlier_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(
                 F.sum(
                     ((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).cast(
-                        _D15
+                        D15
                     )
                 ).cast("double")
             ).alias("dist")
@@ -465,7 +464,7 @@ def q_embedding_outlier_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     dists = dists.localCheckpoint(eager=True)
     mom = dists.agg(
         bcount("n"),
-        F.sum(F.col("dist").cast(_D15)).cast("double").alias("s"),
+        F.sum(F.col("dist").cast(D15)).cast("double").alias("s"),
         F.sum((F.col("dist") * F.col("dist")).cast("decimal(38,10)"))
         .cast("double")
         .alias("ss"),

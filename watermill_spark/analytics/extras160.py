@@ -21,11 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
-_D15 = "decimal(38,15)"
 _PERC_ROUNDS = 6
 _FRACS = [0.01, 0.05, 0.1, 0.25, 0.5]
 
@@ -45,7 +45,7 @@ _HUB_ROUNDS = 3
 @register(
     "q_percolation_threshold",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     sym AS (
       SELECT a, b, CAST(SUM(w) AS BIGINT) AS s
       FROM (SELECT src AS a, dst AS b, w FROM edges
@@ -193,11 +193,7 @@ _HUB_FIT_SQL = """
 @register(
     "q_huber_regression_irls",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     pts AS (
       SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS DOUBLE) AS x
       FROM daily
@@ -257,17 +253,14 @@ def q_huber_regression_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + a broadcast of the 1-row fit back onto the grid
     (whitelisted). §2.B regression family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     pts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("double").alias("x")
     ).localCheckpoint(eager=True)
 
     def fit(wdf: DataFrame) -> DataFrame:
         m = wdf.agg(
-            F.sum(F.col("w").cast(_D15)).cast("double").alias("sw"),
+            F.sum(F.col("w").cast(D15)).cast("double").alias("sw"),
             F.sum((F.col("w") * F.col("x")).cast("decimal(38,10)"))
             .cast("double")
             .alias("swx"),

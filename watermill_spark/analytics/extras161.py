@@ -20,12 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, ols_moments, sql_ols_moments
 from .extras107 import phi_inv_col, phi_inv_sql
 from .registry import load, register, spread
+from .relations import (
+    DAILY_CLICK_PURCHASE_SQL,
+    DAILY_REVENUE_SQL,
+    daily_click_purchase,
+    daily_revenue,
+)
 from .similarity import _SQL_BUCKET, _dot, lsh_bucket
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -330,24 +334,11 @@ def q_hard_negative_mining_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_fisher_z_corr_ci",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d,
-             CAST(SUM(CASE WHEN event_type = 'click'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS x,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS y
-      FROM events WHERE value IS NOT NULL GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_CLICK_PURCHASE_SQL}),
     mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy
+      SELECT {sql_ols_moments()},
+             CAST(SUM(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
       FROM daily
     ),
     r AS (
@@ -390,36 +381,12 @@ def q_fisher_z_corr_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact rollup to the day grid + one 1-row moment
     aggregate — no joins. §2.B statistics family [NS].
     """
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.sum(
-            F.when(F.col("event_type") == "click", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("x"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("y"),
-    )
+    daily = daily_click_purchase(spark, sf_dir)
     mom = daily.agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxx"),
+        *ols_moments(),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("syy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxy"),
     )
     r = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / F.sqrt(
         (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
@@ -449,11 +416,7 @@ def q_fisher_z_corr_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_fligner_killeen",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     lab AS (
       SELECT d, y, CASE WHEN isodow(d) >= 6 THEN 1 ELSE 0 END AS g
       FROM daily
@@ -527,10 +490,7 @@ def q_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded grid (group median, pooled scores); 2-group pivot ends it.
     §2.B statistics family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     lab = daily.select(
         "d",
         "y",
@@ -559,7 +519,7 @@ def q_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("g")
         .agg(
             (
-                F.sum(F.col("y").cast(_D15)).cast("double")
+                F.sum(F.col("y").cast(D15)).cast("double")
                 / F.count(F.lit(1))
             ).alias("med")
         )
@@ -581,14 +541,14 @@ def q_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mom = scored.agg(
         bcount("n"),
-        F.sum(F.col("sc").cast(_D15)).cast("double").alias("s"),
+        F.sum(F.col("sc").cast(D15)).cast("double").alias("s"),
         F.sum((F.col("sc") * F.col("sc")).cast("decimal(38,10)"))
         .cast("double")
         .alias("ss"),
     )
     grp = scored.groupBy("g").agg(
         bcount("ng"),
-        F.sum(F.col("sc").cast(_D15)).cast("double").alias("sg"),
+        F.sum(F.col("sc").cast(D15)).cast("double").alias("sg"),
     )
     devsq = (F.col("sg") / F.col("ng") - F.col("s") / F.col("n")) * (
         F.col("sg") / F.col("ng") - F.col("s") / F.col("n")

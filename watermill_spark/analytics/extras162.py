@@ -20,18 +20,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
-from .registry import load, register
+from .det import D15, OLS_SLOPE_SQL, bcount, ols_moments, ols_slope, sql_ols_moments
+from .registry import register
+from .relations import (
+    DAILY_CLICK_PURCHASE_SQL,
+    DAILY_REVENUE_SQL,
+    daily_click_purchase,
+    daily_revenue,
+)
 
-_D15 = "decimal(38,15)"
 _KPSS_L = 12
 
-_DAILY_SQL = """
-    daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+_DAILY_SQL = f"""
+    daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
       FROM daily
@@ -40,10 +41,7 @@ _DAILY_SQL = """
 
 
 def _idx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     # checkpointed once (r6): every consumer (kpss's partial sums vs the
     # level fit, extremal_index's threshold → exceedance → gap chain)
     # re-referenced the indexed series 4-5 times, re-deriving the fact
@@ -126,7 +124,7 @@ def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     idx = _idx(spark, sf_dir)
     mu = idx.agg(
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "m"
         ),
         bcount("n"),
@@ -170,7 +168,7 @@ def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lrv = gaml.agg(
         F.sum(
-            ((1.0 - F.col("lag") / (_KPSS_L + 1.0)) * F.col("gl")).cast(_D15)
+            ((1.0 - F.col("lag") / (_KPSS_L + 1.0)) * F.col("gl")).cast(D15)
         )
         .cast("double")
         .alias("wsum")
@@ -194,29 +192,16 @@ def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_engle_granger_coint",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d,
-             CAST(SUM(CASE WHEN event_type = 'click'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS x,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS y
-      FROM events WHERE value IS NOT NULL GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_CLICK_PURCHASE_SQL}),
     mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy
+      SELECT {sql_ols_moments()}
       FROM daily
     ),
     fit AS (
       SELECT n,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b,
-             (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n AS a
+             {OLS_SLOPE_SQL} AS b,
+             (sy - {OLS_SLOPE_SQL} * sx) / n AS a
       FROM mom
     ),
     resid AS (
@@ -269,41 +254,15 @@ def q_engle_granger_coint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitelisted), one lag window, two 1-row aggregates. §2.B
     regression family [NS].
     """
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.sum(
-            F.when(F.col("event_type") == "click", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("x"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("y"),
-    )
+    daily = daily_click_purchase(spark, sf_dir)
     # checkpointed once (r6): the level fit, residual pass, and both
     # Dickey-Fuller aggregates each re-derived the fact rollup (6 events
     # scans in the plan); the calendar-bounded day grid materializes once
     daily = daily.localCheckpoint(eager=True)
     mom = daily.agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxy"),
+        *ols_moments(),
     )
-    b = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    b = ols_slope()
     fit = mom.select(
         "n", b.alias("b"), ((F.col("sy") - b * F.col("sx")) / F.col("n")).alias("a")
     )

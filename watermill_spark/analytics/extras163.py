@@ -22,10 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_CLICK_PURCHASE_SQL, daily_click_purchase
 
 # 3x3 Cramer determinants for y ~ [1, u, v], as f-string templates over
 # moment column names (identical expression text on both engines).
@@ -63,9 +62,9 @@ def _mom3(df: DataFrame) -> DataFrame:
     u, v, y = F.col("u"), F.col("v"), F.col("y")
     return df.agg(
         bcount("n"),
-        c(u, _D15).alias("su"),
-        c(v, _D15).alias("sv"),
-        c(y, _D15).alias("sy"),
+        c(u, D15).alias("su"),
+        c(v, D15).alias("sv"),
+        c(y, D15).alias("sy"),
         c(u * u).alias("suu"),
         c(v * v).alias("svv"),
         c(u * v).alias("suv"),
@@ -227,20 +226,11 @@ def q_adf_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_var_lag1",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d,
-             CAST(SUM(CASE WHEN event_type = 'click'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS xv,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS yv
-      FROM events WHERE value IS NOT NULL GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_CLICK_PURCHASE_SQL}),
     lagged AS (
-      SELECT xv, yv,
-             LAG(xv) OVER (ORDER BY d) AS xl,
-             LAG(yv) OVER (ORDER BY d) AS yl
+      SELECT x AS xv, y AS yv,
+             LAG(x) OVER (ORDER BY d) AS xl,
+             LAG(y) OVER (ORDER BY d) AS yl
       FROM daily
     ),
     base AS (SELECT xv, yv, xl AS u, yl AS v FROM lagged
@@ -289,29 +279,13 @@ def q_var_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded grid; one grouped moment aggregate ends it — no iterative
     fitting, no joins. §2.B regression family [NS].
     """
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.sum(
-            F.when(F.col("event_type") == "click", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("xv"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("yv"),
-    )
+    daily = daily_click_purchase(spark, sf_dir)
     w = Window.orderBy("d")
     base = daily.select(
-        "xv",
-        "yv",
-        F.lag("xv").over(w).alias("u"),
-        F.lag("yv").over(w).alias("v"),
+        F.col("x").alias("xv"),
+        F.col("y").alias("yv"),
+        F.lag("x").over(w).alias("u"),
+        F.lag("y").over(w).alias("v"),
     ).filter(F.col("u").isNotNull())
     eqs = base.select(
         F.lit("x").alias("eq"), F.col("xv").alias("y"), "u", "v"
@@ -322,9 +296,9 @@ def q_var_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     u, v, y = F.col("u"), F.col("v"), F.col("y")
     m = eqs.groupBy("eq").agg(
         bcount("n"),
-        c(u, _D15).alias("su"),
-        c(v, _D15).alias("sv"),
-        c(y, _D15).alias("sy"),
+        c(u, D15).alias("su"),
+        c(v, D15).alias("sv"),
+        c(y, D15).alias("sy"),
         c(u * u).alias("suu"),
         c(v * v).alias("svv"),
         c(u * v).alias("suv"),

@@ -21,10 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -270,7 +268,7 @@ def q_recommendation_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             bcount("n_recommendations"),
             F.round(
-                F.sum(novelty.cast(_D15)).cast("double") / F.count(F.lit(1)),
+                F.sum(novelty.cast(D15)).cast("double") / F.count(F.lit(1)),
                 6,
             ).alias("mean_novelty_bits"),
             F.countDistinct("cons").cast("bigint").alias("n_items_surfaced"),

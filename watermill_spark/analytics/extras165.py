@@ -19,10 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
-_D15 = "decimal(38,15)"
 _ACF_L = 20
 
 
@@ -253,11 +253,7 @@ def q_price_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_acf_significance",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
       FROM daily
@@ -308,15 +304,12 @@ def q_acf_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: facts collapse to the day grid; the 20-row lag dimension
     broadcast-joins the bounded grid once. §2.B window family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     idx = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("rn")
     )
     mu = idx.agg(
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "m"
         ),
         bcount("n"),

@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, bcount
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -92,12 +90,12 @@ def q_null_rate_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mom = idx.agg(
         bcount("m"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("rate").cast(_D15)).cast("double").alias("sy"),
+        F.sum(F.col("x").cast(D15)).cast("double").alias("sx"),
+        F.sum(F.col("rate").cast(D15)).cast("double").alias("sy"),
         F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
         .cast("double")
         .alias("sxx"),
-        F.sum((F.col("x") * F.col("rate")).cast(_D15))
+        F.sum((F.col("x") * F.col("rate")).cast(D15))
         .cast("double")
         .alias("sxy"),
     )
@@ -272,7 +270,7 @@ def q_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("term"),
         )
         .groupBy("d2")
-        .agg(F.sum(F.col("term").cast(_D15)).cast("double").alias("p"))
+        .agg(F.sum(F.col("term").cast(D15)).cast("double").alias("p"))
     )
     return (
         cnts.join(F.broadcast(expect), "d2")

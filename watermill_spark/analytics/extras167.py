@@ -19,11 +19,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import (
+    C10,
+    D15,
+    OLS_SLOPE_SQL,
+    bcount,
+    dec,
+    ols_moments,
+    ols_slope,
+    sql_ols_moments,
+)
 from .extras121 import phi_cdf_col, phi_cdf_sql
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 # Per-nation weekend/weekday daily-order-value moments — shared by the
 # q-value and Egger queries (the "many small studies" family).
@@ -80,7 +87,7 @@ def _nation_eff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grp = daily.groupBy("nation", "we").agg(
         bcount("n"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("s"),
+        F.sum(F.col("y").cast(D15)).cast("double").alias("s"),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("ss"),
@@ -217,18 +224,14 @@ def q_storey_qvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT diff / se AS y, 1.0 / se AS x FROM eff
     ),
     mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,15))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,15))) AS DOUBLE) AS sxy,
+      SELECT {sql_ols_moments(sq=D15)},
              CAST(SUM(CAST(y * y AS DECIMAL(38,15))) AS DOUBLE) AS syy
       FROM pts
     ),
     fit AS (
       SELECT n,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b,
-             (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
+             {OLS_SLOPE_SQL} AS b,
+             (sy - {OLS_SLOPE_SQL} * sx) / n
                AS a,
              ((syy - sy * sy / n)
               - pow(n * sxy - sx * sy, 2) / (n * (n * sxx - sx * sx)))
@@ -270,16 +273,10 @@ def q_eggers_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (1.0 / F.col("se")).alias("x"),
     )
     mom = pts.agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(_D15)).cast("double").alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(_D15)).cast("double").alias("sxy"),
-        F.sum((F.col("y") * F.col("y")).cast(_D15)).cast("double").alias("syy"),
+        *ols_moments(sq=D15),
+        F.sum((F.col("y") * F.col("y")).cast(D15)).cast("double").alias("syy"),
     )
-    b = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    b = ols_slope()
     a = (F.col("sy") - b * F.col("sx")) / F.col("n")
     s2 = (
         (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n"))
@@ -415,22 +412,16 @@ def q_mediation_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("y"),
     ).localCheckpoint(eager=True)
-    c10 = "decimal(38,10)"
     ma = daily.agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("mv").cast(_D15)).cast("double").alias("sm"),
-        F.sum((F.col("x") * F.col("x")).cast(c10)).cast("double").alias("sxx"),
-        F.sum((F.col("x") * F.col("mv")).cast(c10)).cast("double").alias("sxm"),
-        F.sum((F.col("mv") * F.col("mv")).cast(c10)).cast("double").alias("smm"),
-        F.sum((F.col("x") * F.col("y")).cast(c10)).cast("double").alias("sxy"),
-        F.sum((F.col("mv") * F.col("y")).cast(c10)).cast("double").alias("smy"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("y") * F.col("y")).cast(c10)).cast("double").alias("syy"),
+        *ols_moments(),
+        F.sum(F.col("mv").cast(D15)).cast("double").alias("sm"),
+        F.sum((F.col("x") * F.col("mv")).cast(C10)).cast("double").alias("sxm"),
+        F.sum((F.col("mv") * F.col("mv")).cast(C10)).cast("double").alias("smm"),
+        F.sum((F.col("mv") * F.col("y")).cast(C10)).cast("double").alias("smy"),
     )
     n, sx, sm = F.col("n"), F.col("sx"), F.col("sm")
     sxx, sxm, smm = F.col("sxx"), F.col("sxm"), F.col("smm")
-    sxy, smy, sy, syy = F.col("sxy"), F.col("smy"), F.col("sy"), F.col("syy")
+    sxy, smy, sy = F.col("sxy"), F.col("smy"), F.col("sy")
     patha = ma.select(
         "n",
         (sxx - sx * sx / n).alias("cxx"),
@@ -487,7 +478,7 @@ def q_mediation_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n", "b_coef", "c_direct", "inv33")
         .agg(
             (
-                F.sum(F.pow(resid, 2).cast(c10)).cast("double")
+                F.sum(F.pow(resid, 2).cast(C10)).cast("double")
                 / (F.col("n") - 3.0)
             ).alias("s2b")
         )

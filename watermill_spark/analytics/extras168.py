@@ -17,37 +17,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import (
+    D15,
+    OLS_SLOPE_SQL,
+    bcount,
+    dec,
+    ols_moments,
+    ols_slope,
+    sql_ols_moments,
+)
 from .distrib import two_level_order
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 
 @register(
     "q_cusum_ols_residuals",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     pts AS (
       SELECT d, y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS DOUBLE) AS x
       FROM daily
     ),
     mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(38,15))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(38,15))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy
+      SELECT {sql_ols_moments()}
       FROM pts
     ),
     fit AS (
       SELECT n,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b,
-             (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n AS a
+             {OLS_SLOPE_SQL} AS b,
+             (sy - {OLS_SLOPE_SQL} * sx) / n AS a
       FROM mom
     ),
     resid AS (
@@ -92,10 +91,7 @@ def q_cusum_ols_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitelisted) + one prefix window. §2.B window/regression family
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     pts = daily.select(
         "d",
         "y",
@@ -107,19 +103,9 @@ def q_cusum_ols_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes once
     pts = pts.localCheckpoint(eager=True)
     mom = pts.agg(
-        bcount("n"),
-        F.sum(F.col("x").cast(_D15)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(_D15)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,10)"))
-        .cast("double")
-        .alias("sxy"),
+        *ols_moments(),
     )
-    b = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    b = ols_slope()
     fit = mom.select(
         "n", b.alias("b"), ((F.col("sy") - b * F.col("sx")) / F.col("n")).alias("a")
     )
@@ -307,7 +293,7 @@ def q_hoover_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("y").cast("decimal(38,10)")).cast("double").alias("sy"),
     )
     dev = F.sum(
-        F.abs(F.col("y") / F.col("sy") - 1.0 / F.col("n")).cast(_D15)
+        F.abs(F.col("y") / F.col("sy") - 1.0 / F.col("n")).cast(D15)
     ).cast("double")
     return (
         spend.crossJoin(F.broadcast(tot))

@@ -22,10 +22,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
-from .registry import load, register
-
-_D15 = "decimal(38,15)"
+from .det import D15, bcount
+from .registry import register
+from .relations import DAILY_REVENUE_SQL, daily_revenue
 
 # Injected weekly harmonic constants: sin/cos(2π k/7) for k = 0..6 (the
 # q_periodogram_peak twiddle recipe — no libm trig on data).
@@ -38,12 +37,8 @@ _HARM_SQL = ", ".join(f"({k}, {s!r}, {c!r})" for k, s, c in _HARM)
 
 @register(
     "q_expected_shortfall",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     chg AS (
       SELECT d, y - LAG(y) OVER (ORDER BY d) AS dy FROM daily
     ),
@@ -89,10 +84,7 @@ def q_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (whitelisted) for the tail pass. §2.B window/risk family
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     moves = daily.select(
         "d", (F.col("y") - F.lag("y").over(Window.orderBy("d"))).alias("dy")
     ).filter(F.col("dy").isNotNull())
@@ -124,11 +116,7 @@ def q_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_harmonic_regression",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t
       FROM daily
@@ -207,10 +195,7 @@ def q_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast for the SSE pass (whitelisted). §2.B regression family
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     idx = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t")
     )
@@ -222,12 +207,12 @@ def q_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     u, v, y = F.col("u"), F.col("v"), F.col("y")
     m = pts.agg(
         bcount("n"),
-        cd(u, _D15).alias("su"),
-        cd(v, _D15).alias("sv"),
-        cd(y, _D15).alias("sy"),
-        cd(u * u, _D15).alias("suu"),
-        cd(v * v, _D15).alias("svv"),
-        cd(u * v, _D15).alias("suv"),
+        cd(u, D15).alias("su"),
+        cd(v, D15).alias("sv"),
+        cd(y, D15).alias("sy"),
+        cd(u * u, D15).alias("suu"),
+        cd(v * v, D15).alias("svv"),
+        cd(u * v, D15).alias("suv"),
         cd(u * y).alias("suy"),
         cd(v * y).alias("svy"),
         cd(y * y).alias("syy"),
@@ -302,12 +287,8 @@ def q_harmonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_drawdown_duration",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     flagged AS (
       SELECT d,
              CASE WHEN y < MAX(y) OVER (ORDER BY d
@@ -351,10 +332,7 @@ def q_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two prefix windows + one rollup on the bounded day grid.
     §2.B window family [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     flagged = daily.select(
         "d",

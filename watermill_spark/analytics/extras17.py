@@ -385,7 +385,7 @@ _BFS_STEP_SQL = """
 @register(
     "q_bfs_nation_hops",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     d0 AS (SELECT CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist),
     d1 AS ({_BFS_STEP_SQL.format(prev="d0")}),
     d2 AS ({_BFS_STEP_SQL.format(prev="d1")}),

@@ -22,10 +22,15 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
-from .registry import load, register
+from .det import C10, D15, bcount
+from .registry import register
+from .relations import (
+    DAILY_CLICK_PURCHASE_SQL,
+    DAILY_REVENUE_SQL,
+    daily_click_purchase,
+    daily_revenue,
+)
 
-_D15 = "decimal(38,15)"
 _EM_ROUNDS = 4
 
 # Band twiddle table for periods 6/7/8: identical double literals in
@@ -77,11 +82,7 @@ _EM_STEP_SQL = """
 @register(
     "q_gaussian_mixture_em",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT y,
              CAST(ROW_NUMBER() OVER (ORDER BY y, d) AS BIGINT) AS rn,
@@ -136,10 +137,7 @@ def q_gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row parameter broadcast (whitelisted). §2.B regression family
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     idx = daily.select(
         "y",
         F.row_number().over(Window.orderBy("y", "d")).cast("bigint").alias("rn"),
@@ -149,7 +147,7 @@ def q_gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stats(df: DataFrame, mu: str, sd: str, with_w: bool) -> DataFrame:
         aggs = [
             (
-                F.sum(F.col("y").cast(_D15)).cast("double")
+                F.sum(F.col("y").cast(D15)).cast("double")
                 / F.count(F.lit(1))
             ).alias(mu),
             F.sqrt(
@@ -158,7 +156,7 @@ def q_gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 / F.count(F.lit(1))
                 - F.pow(
-                    F.sum(F.col("y").cast(_D15)).cast("double")
+                    F.sum(F.col("y").cast(D15)).cast("double")
                     / F.count(F.lit(1)),
                     2,
                 )
@@ -195,14 +193,14 @@ def q_gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = idx.crossJoin(F.broadcast(p)).select(
             "y", r.alias("r")
         )
-        sr = F.sum(F.col("r").cast(_D15)).cast("double")
+        sr = F.sum(F.col("r").cast(D15)).cast("double")
         sry = F.sum((F.col("r") * F.col("y")).cast("decimal(38,10)")).cast(
             "double"
         )
         sryy = F.sum(
             (F.col("r") * F.col("y") * F.col("y")).cast("decimal(38,10)")
         ).cast("double")
-        s1r = F.sum((1.0 - F.col("r")).cast(_D15)).cast("double")
+        s1r = F.sum((1.0 - F.col("r")).cast(D15)).cast("double")
         s1ry = F.sum(
             ((1.0 - F.col("r")) * F.col("y")).cast("decimal(38,10)")
         ).cast("double")
@@ -238,16 +236,7 @@ def q_gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_spectral_coherence",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS d,
-             CAST(SUM(CASE WHEN event_type = 'click'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS x,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
-                      THEN CAST(value AS DECIMAL(18,6)) ELSE 0 END)
-                  AS DOUBLE) AS y
-      FROM events WHERE value IS NOT NULL GROUP BY 1
-    ),
+    WITH daily AS ({DAILY_CLICK_PURCHASE_SQL}),
     idx AS (
       SELECT x, y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t
       FROM daily
@@ -310,68 +299,51 @@ def q_spectral_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins on (t mod p); two bounded aggregates end it. §2.B window
     family [NS].
     """
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.sum(
-            F.when(F.col("event_type") == "click", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("x"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", dec("value")).otherwise(
-                F.lit(0).cast("decimal(18,6)")
-            )
-        )
-        .cast("double")
-        .alias("y"),
-    )
+    daily = daily_click_purchase(spark, sf_dir)
     idx = daily.select(
         "x",
         "y",
         F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t"),
     )
     mu = idx.agg(
-        (F.sum(F.col("x").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("x").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "mx"
         ),
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "my"
         ),
     )
     band = spark.createDataFrame(_BAND, "p long, k long, c double, s double")
-    c10 = "decimal(38,10)"
     proj = (
         idx.crossJoin(F.broadcast(mu))
         .join(F.broadcast(band), F.col("k") == F.col("t") % F.col("p"))
         .groupBy("p")
         .agg(
-            F.sum(((F.col("x") - F.col("mx")) * F.col("c")).cast(c10))
+            F.sum(((F.col("x") - F.col("mx")) * F.col("c")).cast(C10))
             .cast("double")
             .alias("ax"),
-            F.sum(((F.col("x") - F.col("mx")) * F.col("s")).cast(c10))
+            F.sum(((F.col("x") - F.col("mx")) * F.col("s")).cast(C10))
             .cast("double")
             .alias("bx"),
-            F.sum(((F.col("y") - F.col("my")) * F.col("c")).cast(c10))
+            F.sum(((F.col("y") - F.col("my")) * F.col("c")).cast(C10))
             .cast("double")
             .alias("ay"),
-            F.sum(((F.col("y") - F.col("my")) * F.col("s")).cast(c10))
+            F.sum(((F.col("y") - F.col("my")) * F.col("s")).cast(C10))
             .cast("double")
             .alias("by"),
         )
     )
     sm = proj.agg(
-        F.sum((F.col("ax") * F.col("ax") + F.col("bx") * F.col("bx")).cast(c10))
+        F.sum((F.col("ax") * F.col("ax") + F.col("bx") * F.col("bx")).cast(C10))
         .cast("double")
         .alias("pxx"),
-        F.sum((F.col("ay") * F.col("ay") + F.col("by") * F.col("by")).cast(c10))
+        F.sum((F.col("ay") * F.col("ay") + F.col("by") * F.col("by")).cast(C10))
         .cast("double")
         .alias("pyy"),
-        F.sum((F.col("ax") * F.col("ay") + F.col("bx") * F.col("by")).cast(c10))
+        F.sum((F.col("ax") * F.col("ay") + F.col("bx") * F.col("by")).cast(C10))
         .cast("double")
         .alias("co"),
-        F.sum((F.col("bx") * F.col("ay") - F.col("ax") * F.col("by")).cast(c10))
+        F.sum((F.col("bx") * F.col("ay") - F.col("ax") * F.col("by")).cast(C10))
         .cast("double")
         .alias("qu"),
     )
@@ -390,12 +362,8 @@ def q_spectral_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_yule_walker_ar2",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(l_shipdate AS DATE) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_REVENUE_SQL}),
     idx AS (
       SELECT y, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
       FROM daily
@@ -458,15 +426,12 @@ def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins once; everything after reads 3 rows. §2.B regression family
     [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.col("l_shipdate").cast("date").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
+    daily = daily_revenue(spark, sf_dir)
     idx = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).cast("bigint").alias("rn")
     )
     mu = idx.agg(
-        (F.sum(F.col("y").cast(_D15)).cast("double") / F.count(F.lit(1))).alias(
+        (F.sum(F.col("y").cast(D15)).cast("double") / F.count(F.lit(1))).alias(
             "m"
         ),
         bcount("n"),

@@ -20,11 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .extras167 import _NATION_EFF_SQL, _nation_eff
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _Z = 1.96
 _Z2 = _Z * _Z
 
@@ -166,7 +165,7 @@ def q_i2_heterogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("wt") * F.col("diff")).cast("decimal(38,10)")).cast(
                 "double"
             )
-            / F.sum(F.col("wt").cast(_D15)).cast("double")
+            / F.sum(F.col("wt").cast(D15)).cast("double")
         ).alias("theta"),
     )
     q = (
@@ -263,7 +262,7 @@ def q_gamma_fit_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,10)"))
         .cast("double")
         .alias("ss"),
-        F.sum(F.log("y").cast(_D15)).cast("double").alias("slog"),
+        F.sum(F.log("y").cast(D15)).cast("double").alias("slog"),
     )
     mean = F.col("s") / F.col("n")
     var = (F.col("ss") - F.col("s") * F.col("s") / F.col("n")) / (

@@ -24,8 +24,6 @@ from .det import bcount
 from .distrib import two_level_order
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
-
 
 @register(
     "q_species_richness_chao",
@@ -176,8 +174,6 @@ def q_rarefaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation family + text mandate [NS].
     """
     docs = load(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
     toks = (
         docs.select(
             "doc_id",

@@ -25,8 +25,6 @@ from .extras121 import phi_cdf_sql, phi_cdf_col
 from .extras167 import _NATION_EFF_SQL, _nation_eff
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
-
 
 @register(
     "q_holm_bonferroni",

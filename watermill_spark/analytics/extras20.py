@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .registry import load, register
 
@@ -293,15 +293,13 @@ def q_zscore_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HEX = "0123456789abcdef"
-
 
 def _sql_bucket(key_expr: str, seed_expr: str = "s") -> str:
     """Portable md5→[0,256) bucket: two 4-bit hex digits."""
     h = f"md5(CAST({seed_expr} AS VARCHAR) || ':' || {key_expr})"
     return (
-        f"(instr('{_HEX}', substr({h}, 1, 1)) - 1) * 16"
-        f" + (instr('{_HEX}', substr({h}, 2, 1)) - 1)"
+        f"{sql_hexval(f'substr({h}, 1, 1)')} * 16"
+        f" + {sql_hexval(f'substr({h}, 2, 1)')}"
     )
 
 
@@ -354,14 +352,9 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     seeds = F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("s")
+    h = "md5(CAST(s AS STRING) || ':' || CAST(user_id AS STRING))"
     bucket = (
-        (
-            F.expr(f"instr('{_HEX}', substr(md5(CAST(s AS STRING) || ':' || CAST(user_id AS STRING)), 1, 1))")
-            - 1
-        )
-        * 16
-        + F.expr(f"instr('{_HEX}', substr(md5(CAST(s AS STRING) || ':' || CAST(user_id AS STRING)), 2, 1))")
-        - 1
+        hexval(F.expr(f"substr({h}, 1, 1)")) * 16 + hexval(F.expr(f"substr({h}, 2, 1)"))
     ).alias("b")
     # single scan (r6): the sketch counted raw event rows per (seed,
     # bucket) with a second events scan; every event of a user lands in

@@ -29,7 +29,7 @@ from .registry import load, register, spread
 # w > avg(w): no doubles anywhere in graph construction, so membership is
 # trivially identical across engines.
 _SQL_TRADE_GRAPH = f"""
-    WITH de AS ({NATION_TRADE_EDGES_SQL}),
+    WITH de AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     ue AS (
       SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
              CAST(SUM(w) AS BIGINT) AS w

@@ -16,8 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register
+from .relations import STL_SEASONAL_SQL, stl_seasonal
 
 # all-integer magnitude bucket: 0 for value<1, else bit-length of floor(value)
 _SQL_BUCKET = """CASE WHEN value < 1.0 THEN 0
@@ -213,32 +214,8 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stl_lite",
-    oracle="""
-    WITH daily AS (
-      SELECT date_trunc('day', l_shipdate) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
-    ord AS (
-      SELECT d, y,
-             ROW_NUMBER() OVER (ORDER BY d) AS rn,
-             COUNT(*) OVER () AS n,
-             CAST(SUM(CAST(y AS DECIMAL(18,6))) OVER (
-               ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING
-             ) AS DOUBLE) / 7.0 AS trend
-      FROM daily
-    ),
-    det AS (
-      SELECT CAST(isodow(d) AS BIGINT) AS dow, y - trend AS detr
-      FROM ord WHERE rn >= 4 AND rn <= n - 3
-    ),
-    seas AS (
-      SELECT dow, detr,
-             CAST(SUM(CAST(detr AS DECIMAL(18,9))) OVER (PARTITION BY dow)
-                  AS DOUBLE)
-               / CAST(COUNT(*) OVER (PARTITION BY dow) AS DOUBLE) AS seasonal
-      FROM det
-    )
+    oracle=f"""
+    WITH seas AS ({STL_SEASONAL_SQL})
     SELECT dow,
            CAST(COUNT(*) AS BIGINT) AS n_days,
            round(MAX(seasonal), 6) AS seasonal_component,
@@ -263,35 +240,7 @@ def q_stl_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid (post-aggregate); the one ordered window is over that grid, never
     raw rows. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
-    w_ord = Window.orderBy("d")
-    ord_df = daily.select(
-        "d",
-        "y",
-        F.row_number().over(w_ord).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-        (
-            F.sum(dec("y")).over(w_ord.rowsBetween(-3, 3)).cast("double") / 7.0
-        ).alias("trend"),
-    )
-    det = ord_df.filter(
-        (F.col("rn") >= 4) & (F.col("rn") <= F.col("n") - 3)
-    ).select(
-        (F.weekday("d") + 1).cast("bigint").alias("dow"),
-        (F.col("y") - F.col("trend")).alias("detr"),
-    )
-    w_dow = Window.partitionBy("dow")
-    seas = det.select(
-        "dow",
-        "detr",
-        (
-            F.sum(F.col("detr").cast("decimal(18,9)")).over(w_dow).cast("double")
-            / F.count(F.lit(1)).over(w_dow).cast("double")
-        ).alias("seasonal"),
-    )
+    seas = stl_seasonal(spark, sf_dir)
     return seas.groupBy("dow").agg(
         bcount("n_days"),
         F.round(F.max("seasonal"), 6).alias("seasonal_component"),

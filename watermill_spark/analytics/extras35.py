@@ -14,39 +14,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
 
 _BLOOM_M = 4096  # bits
 _BLOOM_K = 3  # hash functions (seeds)
-
-
-def _sql_hexval(expr: str) -> str:
-    return f"(instr('{_HEX}', {expr}) - 1)"
 
 
 def _sql_bloom_pos(key: str, seed: str) -> str:
     """md5-derived bit position in [0, 4096): three hex digits."""
     h = f"md5(CAST({seed} AS VARCHAR) || ':' || CAST({key} AS VARCHAR))"
     return (
-        f"({_sql_hexval(f'substr({h}, 1, 1)')} * 256"
-        f" + {_sql_hexval(f'substr({h}, 2, 1)')} * 16"
-        f" + {_sql_hexval(f'substr({h}, 3, 1)')})"
+        f"({sql_hexval(f'substr({h}, 1, 1)')} * 256"
+        f" + {sql_hexval(f'substr({h}, 2, 1)')} * 16"
+        f" + {sql_hexval(f'substr({h}, 3, 1)')})"
     )
-
-
-def _hexval(col: F.Column) -> F.Column:
-    return F.instr(F.lit(_HEX), col) - 1
 
 
 def _bloom_pos(key: F.Column, seed: F.Column) -> F.Column:
     h = F.md5(F.concat(seed.cast("string"), F.lit(":"), key.cast("string")))
     return (
-        _hexval(F.substring(h, 1, 1)) * 256
-        + _hexval(F.substring(h, 2, 1)) * 16
-        + _hexval(F.substring(h, 3, 1))
+        hexval(F.substring(h, 1, 1)) * 256
+        + hexval(F.substring(h, 2, 1)) * 16
+        + hexval(F.substring(h, 3, 1))
     )
 
 
@@ -179,11 +169,11 @@ _HLL_M = 256  # registers (2 hex digits)
     ),
     reg AS (
       SELECT event_type,
-             {_sql_hexval("substr(hx, 1, 1)")} * 16
-               + {_sql_hexval("substr(hx, 2, 1)")} AS bucket,
+             {sql_hexval("substr(hx, 1, 1)")} * 16
+               + {sql_hexval("substr(hx, 2, 1)")} AS bucket,
              LEAST(
                length(regexp_extract(substr(hx, 3, 30), '^0*')) * 4
-               + 4 - length(bin({_sql_hexval("substr(hx, 3 + length(regexp_extract(substr(hx, 3, 30), '^0*')), 1)")}))
+               + 4 - length(bin({sql_hexval("substr(hx, 3 + length(regexp_extract(substr(hx, 3, 30), '^0*')), 1)")}))
                + 1, 40) AS rho
       FROM h
     ),
@@ -245,14 +235,14 @@ def q_hll_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "user_id",
         (
-            _hexval(F.substring(hx, 1, 1)) * 16 + _hexval(F.substring(hx, 2, 1))
+            hexval(F.substring(hx, 1, 1)) * 16 + hexval(F.substring(hx, 2, 1))
         ).alias("bucket"),
         F.least(
             zeros * 4
             + 4
             - F.length(
                 F.bin(
-                    _hexval(F.expr("substr(substr(md5(CAST(user_id AS STRING)), 3, 30), length(regexp_extract(substr(md5(CAST(user_id AS STRING)), 3, 30), '^0*', 0)) + 1, 1)"))
+                    hexval(F.expr("substr(substr(md5(CAST(user_id AS STRING)), 3, 30), length(regexp_extract(substr(md5(CAST(user_id AS STRING)), 3, 30), '^0*', 0)) + 1, 1)"))
                 )
             )
             + 1,
@@ -303,7 +293,7 @@ def q_hll_manual(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH assign AS (
       SELECT user_id,
-             CASE WHEN {_sql_hexval("substr(md5('ab1:' || CAST(user_id AS VARCHAR)), 1, 1)")} % 2 = 0
+             CASE WHEN {sql_hexval("substr(md5('ab1:' || CAST(user_id AS VARCHAR)), 1, 1)")} % 2 = 0
                   THEN 'A' ELSE 'B' END AS arm
       FROM (SELECT DISTINCT user_id FROM events)
     )
@@ -331,7 +321,7 @@ def q_ab_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy. §2.B [NS].
     """
     ev = load(spark, sf_dir, "events")
-    arm_hash = _hexval(
+    arm_hash = hexval(
         F.substring(F.md5(F.concat(F.lit("ab1:"), F.col("user_id").cast("string"))), 1, 1)
     )
     assign = ev.select("user_id").distinct().select(

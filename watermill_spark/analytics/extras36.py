@@ -15,10 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register, spread
-
-_HEX = "0123456789abcdef"
+from .relations import STL_SEASONAL_SQL, stl_seasonal
 
 
 @register(
@@ -27,8 +26,8 @@ _HEX = "0123456789abcdef"
     WITH names AS (SELECT DISTINCT p_name FROM part),
     hashed AS (
       SELECT p_name,
-             (instr('{_HEX}', substr(md5(p_name), 1, 1)) - 1) * 16
-             + (instr('{_HEX}', substr(md5(p_name), 2, 1)) - 1) AS bucket
+             {sql_hexval("substr(md5(p_name), 1, 1)")} * 16
+             + {sql_hexval("substr(md5(p_name), 2, 1)")} AS bucket
       FROM names
     ),
     loads AS (
@@ -56,8 +55,8 @@ def q_feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
     h = F.md5(F.col("p_name"))
     bucket = (
-        (F.instr(F.lit(_HEX), F.substring(h, 1, 1)) - 1) * 16
-        + (F.instr(F.lit(_HEX), F.substring(h, 2, 1)) - 1)
+        hexval(F.substring(h, 1, 1)) * 16
+        + hexval(F.substring(h, 2, 1))
     ).alias("bucket")
     loads = (
         part.select("p_name")
@@ -118,31 +117,9 @@ def q_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stl_anomaly_days",
-    oracle="""
-    WITH daily AS (
-      SELECT date_trunc('day', l_shipdate) AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS y
-      FROM lineitem GROUP BY 1
-    ),
-    ord AS (
-      SELECT d, y,
-             ROW_NUMBER() OVER (ORDER BY d) AS rn,
-             COUNT(*) OVER () AS n,
-             CAST(SUM(CAST(y AS DECIMAL(18,6))) OVER (
-               ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING
-             ) AS DOUBLE) / 7.0 AS trend
-      FROM daily
-    ),
-    det AS (
-      SELECT d, y, CAST(isodow(d) AS BIGINT) AS dow, y - trend AS detr
-      FROM ord WHERE rn >= 4 AND rn <= n - 3
-    ),
-    seas AS (
-      SELECT d, y, detr,
-             detr - CAST(SUM(CAST(detr AS DECIMAL(18,9))) OVER (PARTITION BY dow)
-                         AS DOUBLE)
-                    / CAST(COUNT(*) OVER (PARTITION BY dow) AS DOUBLE) AS rem
-      FROM det
+    oracle=f"""
+    WITH seas AS (
+      SELECT d, y, detr, detr - seasonal AS rem FROM ({STL_SEASONAL_SQL})
     ),
     sig AS (
       SELECT sqrt(CAST(SUM(CAST(rem * rem AS DECIMAL(28,9))) AS DOUBLE)
@@ -170,37 +147,8 @@ def q_stl_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to q_stl_lite — ordered windows only ever see the
     ~2.5k-row daily grid; top-10 is TakeOrderedAndProject. §2.B [NS].
     """
-    li = load(spark, sf_dir, "lineitem")
-    daily = li.groupBy(F.date_trunc("day", "l_shipdate").alias("d")).agg(
-        F.sum(dec("l_extendedprice")).cast("double").alias("y")
-    )
-    w_ord = Window.orderBy("d")
-    ord_df = daily.select(
-        "d",
-        "y",
-        F.row_number().over(w_ord).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-        (
-            F.sum(dec("y")).over(w_ord.rowsBetween(-3, 3)).cast("double") / 7.0
-        ).alias("trend"),
-    )
-    det = ord_df.filter(
-        (F.col("rn") >= 4) & (F.col("rn") <= F.col("n") - 3)
-    ).select(
-        "d",
-        "y",
-        (F.weekday("d") + 1).cast("bigint").alias("dow"),
-        (F.col("y") - F.col("trend")).alias("detr"),
-    )
-    w_dow = Window.partitionBy("dow")
-    seas = det.select(
-        "d",
-        "y",
-        (
-            F.col("detr")
-            - F.sum(F.col("detr").cast("decimal(18,9)")).over(w_dow).cast("double")
-            / F.count(F.lit(1)).over(w_dow).cast("double")
-        ).alias("rem"),
+    seas = stl_seasonal(spark, sf_dir).select(
+        "d", "y", (F.col("detr") - F.col("seasonal")).alias("rem")
     )
     sig = seas.agg(
         F.sqrt(

@@ -125,7 +125,6 @@ def q_logistic_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    b0, b1 = 0.0, 0.0
     it = None
     for step in range(3):
         if it is None:

@@ -12,11 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register, spread
 from .similarity import _dot
-
-_HEX = "0123456789abcdef"
 
 
 @register(
@@ -103,8 +101,7 @@ def q_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_ab_srm_check",
     oracle=f"""
     WITH assign AS (
-      SELECT CASE WHEN (instr('{_HEX}',
-                  substr(md5('ab1:' || CAST(user_id AS VARCHAR)), 1, 1)) - 1)
+      SELECT CASE WHEN {sql_hexval("substr(md5('ab1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
                   % 2 = 0
                   THEN 'A' ELSE 'B' END AS arm
       FROM (SELECT DISTINCT user_id FROM events)
@@ -143,16 +140,8 @@ def q_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one distinct + map-side expression. §2.B [NS].
     """
     ev = load(spark, sf_dir, "events")
-    arm_hash = (
-        F.instr(
-            F.lit(_HEX),
-            F.substring(
-                F.md5(F.concat(F.lit("ab1:"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-        )
-        - 1
+    arm_hash = hexval(
+        F.substring(F.md5(F.concat(F.lit("ab1:"), F.col("user_id").cast("string"))), 1, 1)
     )
     assign = ev.select("user_id").distinct().select(
         F.when(arm_hash % 2 == 0, F.lit("A")).otherwise(F.lit("B")).alias("arm")

@@ -16,10 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval8, sql_hexval8
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
 
 
 @register(
@@ -256,25 +254,6 @@ def q_cvar_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 64
 
 
-def _sql_hexval8(expr: str) -> str:
-    """DuckDB expression: first-8-hex-chars of ``expr`` as a BIGINT."""
-    terms = " + ".join(
-        f"CAST((instr('{_HEX}', substr({expr}, {i + 1}, 1)) - 1) AS BIGINT)"
-        f" * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-    return f"({terms})"
-
-
-def _spark_hexval8(col):
-    """Spark column: first-8-hex-chars of an md5 string as a BIGINT."""
-    total = F.lit(0).cast("bigint")
-    for i in range(8):
-        digit = (F.instr(F.lit(_HEX), F.substring(col, i + 1, 1)) - 1).cast("bigint")
-        total = total + digit * F.lit(16 ** (7 - i))
-    return total
-
-
 @register(
     "q_kmv_distinct_estimate",
     oracle=f"""
@@ -286,7 +265,7 @@ def _spark_hexval8(col):
       SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rn FROM hashed
     ),
     kth AS (
-      SELECT {_sql_hexval8("h")} AS kth_val FROM bottomk WHERE rn = {_KMV_K}
+      SELECT {sql_hexval8("h")} AS kth_val FROM bottomk WHERE rn = {_KMV_K}
     ),
     exact AS (
       SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users FROM events
@@ -331,7 +310,7 @@ def q_kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     kth = (
         hashed.select("h", F.row_number().over(Window.orderBy("h")).alias("rn"))
         .filter(F.col("rn") == _KMV_K)
-        .select(_spark_hexval8(F.col("h")).alias("kth_val"))
+        .select(hexval8(F.col("h")).alias("kth_val"))
     )
     exact = du.agg(
         F.count_distinct("user_id").cast("bigint").alias("exact_users")

@@ -15,10 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
 
 # 1995 daily revenue with a time index, plus the closed-form OLS fit
 # (rev ~ a + b*t) from exact decimal moment sums.
@@ -223,7 +221,7 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_chi2_hash_uniformity",
     oracle=f"""
     WITH buckets AS (
-      SELECT (instr('{_HEX}', substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1)
+      SELECT {sql_hexval("substr(md5(CAST(user_id AS VARCHAR)), 1, 1)")}
                AS b
       FROM (SELECT DISTINCT user_id FROM events)
     ),
@@ -261,13 +259,7 @@ def q_chi2_hash_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     buckets = ev.select("user_id").distinct().select(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 1),
-            )
-            - 1
-        ).alias("b")
+        hexval(F.substring(F.md5(F.col("user_id").cast("string")), 1, 1)).alias("b")
     )
     # checkpointed once (r6): the total and the chi2 join both re-derived
     # the distinct-user hash (2 events scans in the plan); the 16-row

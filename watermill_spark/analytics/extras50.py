@@ -32,7 +32,7 @@ _APSP_STEP_SQL = """
 @register(
     "q_harmonic_centrality",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     nodes AS (
       SELECT src AS node FROM edges UNION SELECT dst FROM edges
     ),

@@ -15,10 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
 
 
 @register(
@@ -217,9 +215,7 @@ _N_SAMPLE = 20  # vec_id < 20 -> 190 pairs measured
     outs AS (SELECT UNNEST(range(1, {_JL_K} + 1)) AS j),
     signs AS (
       SELECT j, i,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('jl:' || CAST(j AS VARCHAR) || ':'
-                               || CAST(i AS VARCHAR)), 1, 1)) - 1) % 2 = 0
+             CASE WHEN {sql_hexval("substr(md5('jl:' || CAST(j AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 1)")} % 2 = 0
                   THEN 1.0 ELSE -1.0 END AS sgn
       FROM outs, dims
     ),
@@ -290,23 +286,19 @@ def q_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "j",
         "i",
         F.when(
-            (
-                F.instr(
-                    F.lit(_HEX),
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("jl:"),
-                                F.col("j").cast("string"),
-                                F.lit(":"),
-                                F.col("i").cast("string"),
-                            )
-                        ),
-                        1,
-                        1,
+            hexval(
+                F.substring(
+                    F.md5(
+                        F.concat(
+                            F.lit("jl:"),
+                            F.col("j").cast("string"),
+                            F.lit(":"),
+                            F.col("i").cast("string"),
+                        )
                     ),
+                    1,
+                    1,
                 )
-                - 1
             )
             % 2
             == 0,

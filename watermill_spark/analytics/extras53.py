@@ -15,10 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register
+from .relations import FIRST_EVENT_TYPES_SQL, first_event_types
 
-_HEX = "0123456789abcdef"
 _MK_ROUNDS = 12
 
 # one relaxation round: t_{k+1}(s) = 1 + sum_{s'} p(s,s') * t_k(s')
@@ -137,20 +137,10 @@ def q_markov_steps_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_uplift_by_segment",
     oracle=f"""
-    WITH firsts AS (
-      SELECT user_id, event_type AS first_type
-      FROM (
-        SELECT user_id, event_type,
-               ROW_NUMBER() OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS rn
-        FROM events) s
-      WHERE rn = 1
-    ),
+    WITH firsts AS ({FIRST_EVENT_TYPES_SQL}),
     arms AS (
       SELECT f.user_id, f.first_type,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('up1:' || CAST(f.user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0
+             CASE WHEN {sql_hexval("substr(md5('up1:' || CAST(f.user_id AS VARCHAR)), 1, 1)")} % 2 = 0
                   THEN 'A' ELSE 'B' END AS arm,
              MAX(CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END)
                AS converted
@@ -191,28 +181,10 @@ def q_uplift_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of rows. §2.B [NS].
     """
     ev = load(spark, sf_dir, "events")
-    firsts = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.row_number()
-            .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("first_type"))
-    )
+    firsts = first_event_types(spark, sf_dir)
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("up1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("up1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,

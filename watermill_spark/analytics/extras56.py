@@ -14,10 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register, spread
 
-_HEX = "0123456789abcdef"
 _K_ANON = 5
 
 
@@ -195,8 +194,7 @@ _N_FOLDS = 5
     oracle=f"""
     WITH assign AS (
       SELECT label,
-             (instr('{_HEX}',
-                    substr(md5('fold:' || CAST(vec_id AS VARCHAR)), 1, 1)) - 1)
+             {sql_hexval("substr(md5('fold:' || CAST(vec_id AS VARCHAR)), 1, 1)")}
                % {_N_FOLDS} AS fold
       FROM embeddings
     ),
@@ -241,14 +239,8 @@ def q_kfold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ML-ops surface [NS].
     """
     emb = load(spark, sf_dir, "embeddings")
-    fold = (
-        F.instr(
-            F.lit(_HEX),
-            F.substring(
-                F.md5(F.concat(F.lit("fold:"), F.col("vec_id").cast("string"))), 1, 1
-            ),
-        )
-        - 1
+    fold = hexval(
+        F.substring(F.md5(F.concat(F.lit("fold:"), F.col("vec_id").cast("string"))), 1, 1)
     ) % _N_FOLDS
     assign = emb.select("label", fold.alias("fold"))
     cell = assign.groupBy("fold", "label").agg(bcount("n"))

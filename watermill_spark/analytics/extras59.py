@@ -14,10 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
 
-_HEX = "0123456789abcdef"
 _EULER = 0.5772156649015329  # Euler–Mascheroni γ
 _SQRT6_PI = 0.779696801233676  # √6/π
 _RL100 = 4.600149226776579  # −ln(−ln(0.99)): 100-block Gumbel return factor
@@ -233,9 +232,8 @@ def q_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH life AS (
       SELECT user_id,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('lr1:' || CAST(user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
+             CASE WHEN {sql_hexval("substr(md5('lr1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
              CAST(date_diff('day', MIN(ts), MAX(ts)) AS BIGINT) AS life_days
       FROM events GROUP BY 1
     ),
@@ -294,16 +292,8 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("lr1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("lr1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,

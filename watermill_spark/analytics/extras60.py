@@ -20,7 +20,7 @@ from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 @register(
     "q_graph_reciprocity",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     e AS (SELECT src, dst FROM edges),
     nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM nodes),

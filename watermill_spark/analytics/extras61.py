@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import OLS_SLOPE_SQL, bcount, dec, ols_slope
 from .distrib import two_level_order
 from .registry import load, register
 
@@ -97,7 +97,7 @@ def q_negative_binomial_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_simpsons_paradox",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT p.p_brand AS g, l.l_discount AS x, l.l_quantity AS y
       FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
@@ -120,11 +120,11 @@ def q_negative_binomial_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     slopes AS (
       SELECT g, n,
-             (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b
+             {OLS_SLOPE_SQL} AS b
       FROM per_g WHERE n * sxx - sx * sx > 0
     ),
     pooled_b AS (
-      SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM pooled
+      SELECT {OLS_SLOPE_SQL} AS b FROM pooled
     )
     SELECT CAST((SELECT COUNT(*) FROM slopes) AS BIGINT) AS n_groups,
            round((SELECT b FROM pooled_b), 6) AS pooled_slope,
@@ -193,9 +193,7 @@ def q_simpsons_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("dsxx").cast("double").alias("sxx"),
     )
 
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    slope = ols_slope()
     det = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     slopes = per_g.filter(det > 0).select("g", slope.alias("b"))
     pooled_b = pooled_m.select(slope.alias("pb"))

@@ -14,10 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
 
-_HEX = "0123456789abcdef"
 _RBO_P = 0.9
 _RBO_K = 10
 # (1-p)/p * p^d weights, d = 1..K, precomputed as shared literals
@@ -117,9 +116,8 @@ def q_rbo_rank_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(COUNT(*) AS BIGINT) AS n_events,
              MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                AS converted,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('sa1:' || CAST(user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
+             CASE WHEN {sql_hexval("substr(md5('sa1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm
       FROM events GROUP BY 1
     ),
     strat AS (
@@ -178,16 +176,8 @@ def q_stratified_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("sa1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("sa1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,

@@ -15,14 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import OLS_SLOPE_SQL, bcount, dec, ols_slope
 from .distrib import two_level_order
 from .registry import load, register
 
 
 @register(
     "q_weibull_median_rank",
-    oracle="""
+    oracle=f"""
     WITH life AS (
       SELECT CAST(date_diff('second', MIN(ts), MAX(ts)) AS BIGINT) AS t_s
       FROM events GROUP BY user_id
@@ -51,15 +51,15 @@ from .registry import load, register
       FROM pts
     )
     SELECT n AS n_lifetimes,
-           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
+           round({OLS_SLOPE_SQL}, 6)
              AS weibull_shape_k,
-           round(exp(-((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
+           round(exp(-((sy - {OLS_SLOPE_SQL} * sx)
                        / n)
-                     / ((n * sxy - sx * sy) / (n * sxx - sx * sx))) / 3600,
+                     / ({OLS_SLOPE_SQL})) / 3600,
                  4) AS weibull_scale_hours,
-           CASE WHEN (n * sxy - sx * sy) / (n * sxx - sx * sx) < 1.0
+           CASE WHEN {OLS_SLOPE_SQL} < 1.0
                 THEN 'infant_mortality'
-                WHEN (n * sxy - sx * sy) / (n * sxx - sx * sx) > 1.0
+                WHEN {OLS_SLOPE_SQL} > 1.0
                 THEN 'wearout' ELSE 'exponential' END AS hazard_regime
     FROM m
     """,
@@ -125,9 +125,7 @@ def q_weibull_median_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sxx"),
     )
-    k = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    k = ols_slope()
     intercept = (F.col("sy") - k * F.col("sx")) / F.col("n")
     return m.select(
         F.col("n").alias("n_lifetimes"),

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import OLS_SLOPE_SQL, bcount, dec, ols_slope
 from .registry import load, register
 
 
@@ -110,7 +110,7 @@ def q_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_taylors_law",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT p.p_brand AS g, CAST(o.o_orderdate AS DATE) AS d,
              CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS q
@@ -144,13 +144,13 @@ def q_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM pts
     )
     SELECT n AS n_brands,
-           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
+           round({OLS_SLOPE_SQL}, 6)
              AS taylor_exponent_b,
-           round(exp((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
+           round(exp((sy - {OLS_SLOPE_SQL} * sx)
                      / n), 6) AS taylor_coeff_a,
-           CASE WHEN (n * sxy - sx * sy) / (n * sxx - sx * sx) < 1.3
+           CASE WHEN {OLS_SLOPE_SQL} < 1.3
                 THEN 'poisson_like'
-                WHEN (n * sxy - sx * sy) / (n * sxx - sx * sx) > 1.7
+                WHEN {OLS_SLOPE_SQL} > 1.7
                 THEN 'aggregated' ELSE 'intermediate' END AS regime
     FROM m
     """,
@@ -221,9 +221,7 @@ def q_taylors_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sxx"),
     )
-    b = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    b = ols_slope()
     return m.select(
         F.col("n").alias("n_brands"),
         F.round(b, 6).alias("taylor_exponent_b"),

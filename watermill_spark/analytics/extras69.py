@@ -15,10 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
 
 
 @register(
@@ -238,9 +236,8 @@ def q_sax_symbolization(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id,
              CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT)
                AS k,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('es1:' || CAST(user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
+             CASE WHEN {sql_hexval("substr(md5('es1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm
       FROM events GROUP BY user_id
     ),
     mom AS (
@@ -297,16 +294,8 @@ def q_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("es1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("es1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,

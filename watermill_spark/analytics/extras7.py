@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dsum
 from .registry import load, register, spread
+from .text import _SQL_STOPLIST
 
 # Word-boundary denylist (RE2-compatible: identical semantics in Java regex).
 _DENY = r"\b(customer|key|hash)\b"
@@ -227,9 +228,7 @@ def q_events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
                  FROM kept k WHERE k.rn = 1 AND k.source = s.source)
                 AS BIGINT) AS tokens_kept
     FROM scored s GROUP BY s.source
-    """.replace("{stoplist}", _SQL_STOPLIST_TXT := "'" + "','".join(
-        ("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
-    ) + "'"),
+    """.replace("{stoplist}", _SQL_STOPLIST),
 )
 def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation funnel — the composed training-data pipeline:

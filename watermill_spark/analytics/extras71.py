@@ -14,35 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval8, sql_hexval8
 from .distrib import two_level_order
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
-
-
-def _sql_hexval8(expr: str) -> str:
-    terms = " + ".join(
-        f"CAST((instr('{_HEX}', substr({expr}, {i + 1}, 1)) - 1) AS BIGINT)"
-        f" * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-    return f"({terms})"
-
-
-def _spark_hexval8(col):
-    total = F.lit(0).cast("bigint")
-    for i in range(8):
-        digit = (F.instr(F.lit(_HEX), F.substring(col, i + 1, 1)) - 1).cast("bigint")
-        total = total + digit * F.lit(16 ** (7 - i))
-    return total
 
 
 @register(
     "q_ks_hash_uniformity",
     oracle=f"""
     WITH hashed AS (
-      SELECT {_sql_hexval8("md5('ks1:' || CAST(user_id AS VARCHAR))")} AS hv
+      SELECT {sql_hexval8("md5('ks1:' || CAST(user_id AS VARCHAR))")} AS hv
       FROM (SELECT DISTINCT user_id FROM events)
     ),
     ranked AS (
@@ -83,7 +64,7 @@ def q_ks_hash_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     hashed = ev.select("user_id").distinct().select(
-        _spark_hexval8(
+        hexval8(
             F.md5(F.concat(F.lit("ks1:"), F.col("user_id").cast("string")))
         ).alias("hv")
     )

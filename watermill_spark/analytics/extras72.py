@@ -22,7 +22,7 @@ from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 @register(
     "q_gravity_model",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     exp_m AS (
       SELECT src, CAST(SUM(w) AS BIGINT) AS out_w FROM edges GROUP BY src
     ),

@@ -236,7 +236,7 @@ def q_interarrival_exponential_ks(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "q_trade_modularity",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     comm AS (
       SELECT n_nationkey AS node, CAST(n_regionkey AS BIGINT) AS c
       FROM nation

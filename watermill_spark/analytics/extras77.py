@@ -14,33 +14,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
+from .relations import FIRST_EVENT_TYPES_SQL, first_event_types
 
 
 @register(
     "q_bonferroni_metrics",
     oracle=f"""
-    WITH firsts AS (
-      SELECT user_id, event_type,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn
-      FROM events
-    ),
+    WITH firsts AS ({FIRST_EVENT_TYPES_SQL}),
     users AS (
       SELECT e.user_id,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('bf1:' || CAST(e.user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
+             CASE WHEN {sql_hexval("substr(md5('bf1:' || CAST(e.user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
              CAST(COUNT(*) AS BIGINT) AS n_events,
-             MAX(CASE WHEN f.event_type = 'purchase' THEN 1 ELSE 0 END)
+             MAX(CASE WHEN f.first_type = 'purchase' THEN 1 ELSE 0 END)
                AS conv,
              CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS val
       FROM events e
-      JOIN (SELECT user_id, event_type FROM firsts WHERE rn = 1) f
-        ON f.user_id = e.user_id
+      JOIN firsts f ON f.user_id = e.user_id
       GROUP BY 1, 2
     ),
     metrics AS (
@@ -116,32 +108,14 @@ def q_bonferroni_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("bf1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("bf1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,
         "A",
     ).otherwise("B")
-    firsts = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.row_number()
-            .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("first_type"))
-    )
+    firsts = first_event_types(spark, sf_dir)
     users = (
         ev.join(firsts, "user_id")
         .groupBy("user_id", arm.alias("arm"))

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
+from .relations import FIRST_EVENT_TYPES_SQL, first_event_types
 
 _EPS_S = 300  # seconds
 _MINPTS = 5
@@ -141,20 +142,14 @@ def q_dbscan_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_pr_curve",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id, event_type,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn
-      FROM events
-    ),
+    oracle=f"""
+    WITH firsts AS ({FIRST_EVENT_TYPES_SQL}),
     users AS (
       SELECT e.user_id,
              CAST(COUNT(*) AS BIGINT) AS score,
-             MAX(CASE WHEN f.event_type = 'purchase' THEN 1 ELSE 0 END) AS y
+             MAX(CASE WHEN f.first_type = 'purchase' THEN 1 ELSE 0 END) AS y
       FROM events e
-      JOIN (SELECT user_id, event_type FROM firsts WHERE rn = 1) f
-        ON f.user_id = e.user_id
+      JOIN firsts f ON f.user_id = e.user_id
       GROUP BY e.user_id
     ),
     ranked AS (
@@ -199,17 +194,7 @@ def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the ranked grid. §2.B ML-ops surface [NS].
     """
     ev = load(spark, sf_dir, "events")
-    firsts = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.row_number()
-            .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("first_type"))
-    )
+    firsts = first_event_types(spark, sf_dir)
     users = (
         ev.join(firsts, "user_id")
         .groupBy("user_id")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import OLS_SLOPE_SQL, bcount, dec, ols_slope
 from .registry import load, register
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
@@ -224,7 +224,7 @@ def q_month_end_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_lotka_law",
-    oracle="""
+    oracle=f"""
     WITH per_cust AS (
       SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS k
       FROM orders GROUP BY 1
@@ -249,11 +249,11 @@ def q_month_end_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM pts
     )
     SELECT n AS n_points,
-           round(-(n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
+           round(-{OLS_SLOPE_SQL}, 6)
              AS lotka_exponent,
-           round(exp((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx)
+           round(exp((sy - {OLS_SLOPE_SQL}
                       * sx) / n), 2) AS lotka_c,
-           CASE WHEN abs(-(n * sxy - sx * sy) / (n * sxx - sx * sx) - 2.0)
+           CASE WHEN abs(-{OLS_SLOPE_SQL} - 2.0)
                      < 0.5
                 THEN 'lotka_like' ELSE 'non_lotka' END AS verdict
     FROM m
@@ -299,9 +299,7 @@ def q_lotka_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sxx"),
     )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    slope = ols_slope()
     return m.select(
         F.col("n").alias("n_points"),
         F.round(-slope, 6).alias("lotka_exponent"),

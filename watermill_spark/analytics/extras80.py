@@ -13,10 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec, telescoped_lambda
+from .det import bcount, dec, hexval, sql_hexval, telescoped_lambda
 from .registry import load, register
 
-_HEX = "0123456789abcdef"
 # 5*H_5 = 5*(1 + 1/2 + 1/3 + 1/4 + 1/5)
 _COUPON_EXPECTED = 11.416666666666666
 
@@ -154,9 +153,8 @@ def q_coupon_collector(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH users AS (
       SELECT user_id,
              CAST(COUNT(*) AS BIGINT) AS k,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('w1:' || CAST(user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
+             CASE WHEN {sql_hexval("substr(md5('w1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm
       FROM events GROUP BY 1
     ),
     support AS (
@@ -212,16 +210,8 @@ def q_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("w1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("w1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,

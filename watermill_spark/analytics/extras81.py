@@ -15,10 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import bcount, hexval, sql_hexval
 from .registry import load, register
-
-_HEX = "0123456789abcdef"
+from .relations import FIRST_EVENT_TYPES_SQL, first_event_types
 
 
 @register(
@@ -27,9 +26,8 @@ _HEX = "0123456789abcdef"
     WITH users AS (
       SELECT user_id,
              CAST(COUNT(*) AS BIGINT) AS k,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('hl1:' || CAST(user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
+             CASE WHEN {sql_hexval("substr(md5('hl1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm
       FROM events GROUP BY 1
     ),
     ha AS (
@@ -83,16 +81,8 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("hl1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("hl1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,
@@ -153,20 +143,14 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_youden_threshold",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id, event_type,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn
-      FROM events
-    ),
+    oracle=f"""
+    WITH firsts AS ({FIRST_EVENT_TYPES_SQL}),
     users AS (
       SELECT e.user_id,
              CAST(COUNT(*) AS BIGINT) AS score,
-             MAX(CASE WHEN f.event_type = 'purchase' THEN 1 ELSE 0 END) AS y
+             MAX(CASE WHEN f.first_type = 'purchase' THEN 1 ELSE 0 END) AS y
       FROM events e
-      JOIN (SELECT user_id, event_type FROM firsts WHERE rn = 1) f
-        ON f.user_id = e.user_id
+      JOIN firsts f ON f.user_id = e.user_id
       GROUP BY e.user_id
     ),
     support AS (
@@ -218,17 +202,7 @@ def q_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered window + argmax. §2.B ML-ops surface [NS].
     """
     ev = load(spark, sf_dir, "events")
-    firsts = (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.row_number()
-            .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .select("user_id", F.col("event_type").alias("first_type"))
-    )
+    firsts = first_event_types(spark, sf_dir)
     users = (
         ev.join(firsts, "user_id")
         .groupBy("user_id")

@@ -14,12 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 from .extras50 import _APSP_STEP_SQL
-
-_HEX = "0123456789abcdef"
 
 
 @register(
@@ -278,9 +276,8 @@ def q_trending_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT event_type,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('ma1:' || CAST(user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
+             CASE WHEN {sql_hexval("substr(md5('ma1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
              value
       FROM events
     ),
@@ -347,16 +344,8 @@ def q_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("ma1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("ma1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,

@@ -14,10 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
 
-_HEX = "0123456789abcdef"
 _TOL_S = 3600
 
 
@@ -125,9 +124,8 @@ def q_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH users AS (
       SELECT user_id,
-             CASE WHEN (instr('{_HEX}',
-                    substr(md5('tp1:' || CAST(user_id AS VARCHAR)), 1, 1))
-                    - 1) % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
+             CASE WHEN {sql_hexval("substr(md5('tp1:' || CAST(user_id AS VARCHAR)), 1, 1)")}
+               % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
              CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT)
                AS k,
              CAST(SUM(CAST(CASE WHEN event_type = 'purchase'
@@ -181,16 +179,8 @@ def q_two_part_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        (
-            F.instr(
-                F.lit(_HEX),
-                F.substring(
-                    F.md5(F.concat(F.lit("tp1:"), F.col("user_id").cast("string"))),
-                    1,
-                    1,
-                ),
-            )
-            - 1
+        hexval(
+            F.substring(F.md5(F.concat(F.lit("tp1:"), F.col("user_id").cast("string"))), 1, 1)
         )
         % 2
         == 0,

@@ -280,7 +280,7 @@ _PR_STEP_SQL = """
 @register(
     "q_pagerank_nations",
     oracle=f"""
-    WITH edges AS ({NATION_TRADE_EDGES_SQL}),
+    WITH edges AS MATERIALIZED ({NATION_TRADE_EDGES_SQL}),
     nodes AS (
       SELECT src AS node FROM edges UNION SELECT dst FROM edges
     ),

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount, dec, sql_hexval
 from .extras48 import _SQL_DAILY_1995, _spark_centered_daily
 from .registry import load, register
 
@@ -197,7 +197,6 @@ def q_caliper_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HEX = "0123456789abcdef"
 _R = 20
 # Poisson(1) CDF thresholds: P(X <= k) for k = 0..5
 _POIS = (
@@ -214,7 +213,7 @@ def _sql_u24(key: str, salt: str) -> str:
     """First 6 md5 hex digits of salt:key as a uniform in [0,1)."""
     h = f"md5({salt} || ':' || CAST({key} AS VARCHAR))"
     terms = " + ".join(
-        f"(instr('{_HEX}', substr({h}, {i + 1}, 1)) - 1) * {16 ** (5 - i)}"
+        f"{sql_hexval(f'substr({h}, {i + 1}, 1)')} * {16 ** (5 - i)}"
         for i in range(6)
     )
     return f"(CAST({terms} AS DOUBLE) / 16777216.0)"

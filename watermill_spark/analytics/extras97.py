@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
-
-_D15 = "decimal(38,15)"
 
 
 @register(
@@ -108,7 +106,7 @@ def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = (
         pos.crossJoin(F.broadcast(glob))
         .agg(
-            F.sum((ratio * F.log(ratio)).cast(_D15)).cast("double").alias("tsum"),
+            F.sum((ratio * F.log(ratio)).cast(D15)).cast("double").alias("tsum"),
             F.max("n").alias("n"),
             F.max("mu").alias("mu"),
         )
@@ -123,7 +121,7 @@ def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.col("ng").cast("double") / F.col("n"))
                     * (mug / F.col("mu"))
                     * F.log(mug / F.col("mu"))
-                ).cast(_D15)
+                ).cast(D15)
             )
             .cast("double")
             .alias("tb")

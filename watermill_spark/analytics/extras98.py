@@ -17,10 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import D15, bcount, dec
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _ALPHA = 0.10
 
 
@@ -264,7 +263,7 @@ def q_gtest_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * F.col("nn")
                         / (F.col("ro").cast("double") * F.col("co"))
                     )
-                ).cast(_D15)
+                ).cast(D15)
             )
             .cast("double")
             .alias("g"),
@@ -277,7 +276,7 @@ def q_gtest_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sr = (
         rt.crossJoin(F.broadcast(n))
         .agg(
-            F.sum((F.col("nn").cast("double") / F.col("ro")).cast(_D15))
+            F.sum((F.col("nn").cast("double") / F.col("ro")).cast(D15))
             .cast("double")
             .alias("sr"),
             bcount("nr"),
@@ -286,7 +285,7 @@ def q_gtest_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = (
         ct.crossJoin(F.broadcast(n))
         .agg(
-            F.sum((F.col("nn").cast("double") / F.col("co")).cast(_D15))
+            F.sum((F.col("nn").cast("double") / F.col("co")).cast(D15))
             .cast("double")
             .alias("sc"),
             bcount("nc"),

@@ -16,12 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount
+from .det import D15, OLS_SLOPE_SQL, bcount, hexval8, sql_hexval8
 from .distrib import two_level_order
-from .extras71 import _spark_hexval8, _sql_hexval8
 from .registry import load, register
 
-_D15 = "decimal(38,15)"
 _TAU_DAYS = 60
 _CENSOR_GAP_DAYS = 14
 _US_PER_DAY = 86400000000
@@ -158,10 +156,10 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_risk",
         "n_total",
         F.exp(
-            F.coalesce(F.sum(lnterm.cast(_D15)).over(w_excl), F.lit(0).cast(_D15))
+            F.coalesce(F.sum(lnterm.cast(D15)).over(w_excl), F.lit(0).cast(D15))
             .cast("double")
         ).alias("s_prev"),
-        F.exp(F.sum(lnterm.cast(_D15)).over(w_incl).cast("double")).alias("s_at"),
+        F.exp(F.sum(lnterm.cast(D15)).over(w_incl).cast("double")).alias("s_at"),
         F.coalesce(F.lag("t").over(Window.orderBy("t")), F.lit(0)).alias("t_prev"),
         F.row_number().over(Window.orderBy(F.col("t").desc())).alias("rn_desc"),
     )
@@ -176,15 +174,15 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").cast("bigint").alias("n_censored"),
         F.lit(_TAU_DAYS).cast("bigint").alias("tau_days"),
         F.round(
-            F.sum(contrib.cast(_D15)).cast("double")
+            F.sum(contrib.cast(D15)).cast("double")
             + F.max(F.when(F.col("rn_desc") == 1, F.col("s_at")))
             * F.greatest(F.lit(0.0), tau - F.max("t").cast("double")),
             6,
         ).alias("rmst_days"),
         F.round(
             F.sum(
-                F.when(F.col("t") <= _TAU_DAYS, lnterm.cast(_D15)).otherwise(
-                    F.lit(0).cast(_D15)
+                F.when(F.col("t") <= _TAU_DAYS, lnterm.cast(D15)).otherwise(
+                    F.lit(0).cast(D15)
                 )
             ).cast("double"),
             10,
@@ -194,7 +192,7 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_retention_decay_fit",
-    oracle="""
+    oracle=f"""
     WITH anchor AS (
       SELECT date_trunc('month', MAX(ts)) AS am FROM events
     ),
@@ -237,10 +235,10 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM pts
     )
     SELECT n AS n_points,
-           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS decay_slope,
-           round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6)
+           round({OLS_SLOPE_SQL}, 6) AS decay_slope,
+           round((sy - {OLS_SLOPE_SQL} * sx) / n, 6)
              AS log_intercept,
-           round(-ln(2.0) / ((n * sxy - sx * sy) / (n * sxx - sx * sx)), 4)
+           round(-ln(2.0) / ({OLS_SLOPE_SQL}), 4)
              AS half_life_months,
            round(pow(n * sxy - sx * sy, 2)
                  / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
@@ -306,11 +304,11 @@ def q_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, y = F.col("x"), F.col("y")
     s = pts.agg(
         bcount("n"),
-        F.sum(x.cast(_D15)).cast("double").alias("sx"),
-        F.sum(y.cast(_D15)).cast("double").alias("sy"),
-        F.sum((x * x).cast(_D15)).cast("double").alias("sxx"),
-        F.sum((x * y).cast(_D15)).cast("double").alias("sxy"),
-        F.sum((y * y).cast(_D15)).cast("double").alias("syy"),
+        F.sum(x.cast(D15)).cast("double").alias("sx"),
+        F.sum(y.cast(D15)).cast("double").alias("sy"),
+        F.sum((x * x).cast(D15)).cast("double").alias("sxx"),
+        F.sum((x * y).cast(D15)).cast("double").alias("sxy"),
+        F.sum((y * y).cast(D15)).cast("double").alias("syy"),
     )
     n = F.col("n")
     slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -338,7 +336,7 @@ def q_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_ad_uniformity",
     oracle=f"""
     WITH hashed AS (
-      SELECT {_sql_hexval8("md5('ad1:' || CAST(user_id AS VARCHAR))")} AS hv
+      SELECT {sql_hexval8("md5('ad1:' || CAST(user_id AS VARCHAR))")} AS hv
       FROM (SELECT DISTINCT user_id FROM events)
     ),
     ranked AS (
@@ -379,7 +377,7 @@ def q_ad_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     hashed = ev.select("user_id").distinct().select(
-        _spark_hexval8(
+        hexval8(
             F.md5(F.concat(F.lit("ad1:"), F.col("user_id").cast("string")))
         ).alias("hv")
     )
@@ -402,7 +400,7 @@ def q_ad_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) * F.log(F.lit(1.0) - F.col("u"))
     t = ranked.agg(
         F.max("n").alias("n"),
-        F.sum(term.cast(_D15)).cast("double").alias("t"),
+        F.sum(term.cast(D15)).cast("double").alias("t"),
     )
     a2 = -F.col("n").cast("double") - F.col("t") / F.col("n")
     return t.select(

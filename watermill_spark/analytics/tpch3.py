@@ -28,13 +28,7 @@ from pyspark.sql import functions as F
 
 from .det import DEC, bcount, dec
 from .registry import load, register
-
-
-def _disc_price():
-    return (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC)
-
-
-_SQL_DISC_PRICE = "CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))"
+from .tpch import _SQL_DISC_PRICE, _disc_price
 
 
 @register(

@@ -596,9 +596,11 @@ def circuit_breaker(
 
     Failure detection: raised exceptions always count. The default
     ``strict=True`` additionally sniffs for `_wm_error` rows emitted by
-    inner middleware (recoverer / fail_rows), which forces the plan (one
-    extra Spark job per batch — amortized, since the row is cached and the
-    router's own sink-pass error check reuses the cache). ``strict=False``
+    inner middleware (recoverer / fail_rows), which forces the plan into an
+    eager ``localCheckpoint`` snapshot and runs one extra Spark job per
+    batch for the sniff. The router's sink pass (``Router._process_batch``)
+    does not reuse that sniff: it re-reads the snapshot, caches a second
+    copy of its rows and counts the error rows again. ``strict=False``
     keeps the happy path fully lazy but then error-*rowed* batches are
     invisible to the breaker: the router's error-row raise happens at the
     sink pass, outside this wrapper, and on checkpoint replay the handler
