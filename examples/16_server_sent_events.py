@@ -35,7 +35,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from watermill_spark.message import messages_df, new_message
+from watermill_spark.message import messages_df, new_message, with_metadata
 from watermill_spark.sources import GroupSubscriber, SQLitePubSub
 from watermill_spark.streaming.middleware import recoverer
 from watermill_spark.streaming.router import Router
@@ -103,14 +103,7 @@ def main(spark=None, base_dir: str | None = None) -> dict:
         src = F.col("payload").cast("string")
         tags = F.from_json(F.get_json_object(src, "$.tags"), ArrayType(StringType()))
         return (
-            df.withColumn("tag", F.explode(tags))
-            .withColumn(
-                "metadata",
-                F.map_concat(
-                    F.coalesce(F.col("metadata"), F.create_map()),
-                    F.create_map(F.lit("tag"), F.col("tag")),
-                ),
-            )
+            with_metadata(df.withColumn("tag", F.explode(tags)), tag=F.col("tag"))
             .withColumn("uuid", F.expr("uuid()"))  # one message per (tag, post)
             .drop("tag")
         )

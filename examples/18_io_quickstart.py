@@ -23,9 +23,7 @@ import json
 import tempfile
 from pathlib import Path
 
-from pyspark.sql import functions as F
-
-from watermill_spark.message import messages_df, new_message
+from watermill_spark.message import messages_df, new_message, with_metadata
 from watermill_spark.sources import FilePubSub, IOSubscriber
 from watermill_spark.streaming import Router
 
@@ -55,11 +53,7 @@ def main(spark=None, base_dir: str | None = None) -> dict:
     router = Router()
     router.add_handler(
         "enrich", "clicks", ps, "clicks-enriched", ps,
-        lambda df: df.withColumn(
-            "metadata",
-            F.map_concat(F.coalesce("metadata", F.expr("map()")),
-                         F.create_map(F.lit("state"), F.lit("enriched"))),
-        ),
+        lambda df: with_metadata(df, state="enriched"),
     )
     router.run_once()
 

@@ -31,7 +31,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from watermill_spark.message import new_message, messages_df
+from watermill_spark.message import messages_df, new_message, with_metadata
 from watermill_spark.sources import ParquetPubSub
 from watermill_spark.streaming import Router
 from watermill_spark.streaming.dedup import DUP_OF, StreamingNearDupFilter
@@ -83,10 +83,7 @@ def main(spark=None, base_dir: str | None = None, sf_dir: str = "/root/testdata/
     )
     router.add_handler(
         "quality_reject", "docs_raw", ps, "docs_lowq", ps,
-        lambda df: df.filter(reason.isNotNull()).withColumn(
-            "metadata",
-            F.map_concat("metadata", F.create_map(F.lit("reject_reason"), reason)),
-        ),
+        lambda df: with_metadata(df.filter(reason.isNotNull()), reject_reason=reason),
     )
     router.run_once()
 

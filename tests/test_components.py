@@ -173,6 +173,43 @@ def test_requeuer_fixed_destination_with_delay(ps, spark):
     assert all(DELAYED_UNTIL in r["metadata"] for r in rows)
 
 
+class _RoutingStub(MemoryPubSub):
+    """A transport that routes per row itself (as KafkaPubSub does): every
+    routed publish is recorded, then stored topic by topic."""
+
+    def __init__(self, spark):
+        super().__init__(spark)
+        self.routed_calls = 0
+
+    def publish_routed(self, df):
+        self.routed_calls += 1
+        for r in df.collect():
+            assert r["topic"] is not None, "a NULL-topic row reached the writer"
+            self.publish(r["topic"], df.filter(F.col("uuid") == r["uuid"]))
+
+
+@pytest.mark.parametrize("component", ["forwarder", "requeuer"])
+def test_route_by_topic_uses_publish_routed_and_drops_null_topics(ps, spark, component):
+    """Forwarder and Requeuer share one route-by-topic publish: a publisher
+    with ``publish_routed`` gets a single routed write, and rows without a
+    destination are dropped before it on both paths."""
+    src, a, b = _t("src"), _t("a"), _t("b")
+    dests = [a, b, None]
+    if component == "forwarder":
+        for i, d in enumerate(dests):
+            ps.publish(src, envelope_wrap(_msgs(spark, 1, i=str(i)), F.lit(d).cast("string")))
+        run = Forwarder(ps, _RoutingStub(spark), src)
+    else:
+        for i, d in enumerate(dests):
+            meta = {POISONED_TOPIC: d} if d else {}
+            ps.publish(src, _msgs(spark, 1, i=str(i), **meta))
+        run = Requeuer(ps, _RoutingStub(spark), src)
+    run.run_once()
+    out = run.publisher
+    assert out.routed_calls == 1
+    assert [out.topic_count(t) for t in (a, b)] == [1, 1]
+
+
 def test_request_reply_roundtrip(spark):
     """Command with operation id -> handler reply on reply topic -> await
     filtered on the id (`components/requestreply/backend_pubsub.go:126-291`).

@@ -91,15 +91,7 @@ def test_middleware_order_first_added_outermost(ps, spark):
         def m(fn):
             def wrapped(df):
                 trail = F.coalesce(metadata_get("trail"), F.lit(""))
-                return fn(
-                    df.withColumn(
-                        "metadata",
-                        F.map_concat(
-                            F.coalesce(F.col("metadata"), F.create_map()),
-                            F.create_map(F.lit("trail"), F.concat(trail, F.lit(tag))),
-                        ),
-                    )
-                )
+                return fn(with_metadata(df, trail=F.concat(trail, F.lit(tag))))
             return wrapped
         return m
 
@@ -756,3 +748,27 @@ def test_poison_queue_with_filter_shared_dlq_keeps_both_handlers(ps, spark):
     # and a replay of the same deliveries stays suppressed per handler
     r.run_once()
     assert ps.subscribe(dlq).count() == 2
+
+
+def test_lax_router_batch_runs_one_job(ps, spark):
+    """With fail_on_unhandled_errors=False the error rows are dropped, so
+    nothing counts them: one pass over a batch is the publish alone, one
+    Spark job (no cache and no error count beside it)."""
+    tin, tout = _topic("in"), _topic("out")
+    ps.publish(tin, _msgs(spark, 4))
+    r = Router(RouterConfig(fail_on_unhandled_errors=False))
+    r.add_handler(
+        "h", tin, ps, tout, ps, passthrough_handler,
+        middleware=[mw.fail_rows(metadata_get("n") == "0", "bad")],
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("lax-router-pass", "one run_once pass")
+    try:
+        r.run_once()
+        jobs = sc.statusTracker().getJobIdsForGroup("lax-router-pass")
+    finally:
+        sc.setJobGroup("", "")
+    assert len(jobs) == 1
+    assert sorted(r["metadata"]["n"] for r in ps.subscribe(tout).collect()) == [
+        "1", "2", "3"
+    ]

@@ -1,7 +1,7 @@
 """Static hygiene of the library source: no unused module-level imports,
 no imports from the test suite, no round-numbered copies of root tools,
 one materialization idiom, one definition per shared analytics constant
-or helper.
+or helper, one module that builds message metadata.
 
 Unused imports hide which helpers a module really depends on, and they
 accumulate when code is moved between modules. Library code or a root
@@ -14,8 +14,12 @@ plans in the same session print; an eager ``localCheckpoint`` is released
 by the ContextCleaner instead. A string constant or helper function
 retyped in two analytics modules drifts apart the first time one copy is
 edited; shared ones live in ``det.py`` or ``relations.py`` (or in the
-first module that defined them) and are imported. The checks are plain AST and glob passes
-(no Spark session, well under a second).
+first module that defined them) and are imported. A metadata stamp that
+``map_concat``s a key the message already carries builds a map with a
+repeated key, which Spark rejects under its default map-key dedup policy;
+``message.py`` overwrites without one, so every stamp goes through it and
+no code sets the session policy to hide a repeat. The checks are plain AST
+and glob passes (no Spark session, well under a second).
 
 Exempt: package ``__init__.py`` files (their imports are re-exports or
 registration side effects), ``from __future__`` imports, and any import
@@ -185,4 +189,47 @@ def test_no_duplicate_definitions_in_analytics():
     dups = shared_definitions()
     assert not dups, "defined in more than one analytics module:\n" + "\n".join(
         f"{name}: {', '.join(mods)}" for (name, _), mods in sorted(dups.items())
+    )
+
+
+# The program: the library, the examples and the root scripts. Analytics
+# queries build maps over tables, never over message metadata.
+PROGRAM = [
+    p
+    for p in sorted(PKG.rglob("*.py"))
+    + sorted((REPO / "examples").glob("*.py"))
+    + sorted(REPO.glob("*.py"))
+    if "analytics" not in p.relative_to(REPO).parts[:2]
+]
+MAP_BUILDERS = {"map_concat", "map_from_entries"}
+
+
+def metadata_writes(path: Path) -> list[str]:
+    """``path:line`` of each call that writes the map-key dedup policy (a
+    string argument naming it: ``conf.set``, ``.config``, ``SET``) and,
+    outside ``message.py``, each ``map_concat``/``map_from_entries``."""
+    builds_maps_here = path == PKG / "message.py"
+    found = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(node, ast.Call):
+            continue
+        func = node.func
+        name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
+        sets_policy = any(
+            isinstance(a, ast.Constant)
+            and isinstance(a.value, str)
+            and "mapKeyDedupPolicy" in a.value
+            for a in node.args
+        )
+        if sets_policy or (name in MAP_BUILDERS and not builds_maps_here):
+            found.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    return found
+
+
+def test_metadata_is_written_only_by_message_module():
+    offenders = [hit for path in PROGRAM for hit in metadata_writes(path)]
+    assert not offenders, (
+        "set metadata through watermill_spark.message (with_metadata, "
+        "metadata_set, ...), never map_concat or the dedup policy:\n"
+        + "\n".join(offenders)
     )

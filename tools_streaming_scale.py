@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from watermill_spark.observability import RouterMetricsListener  # noqa: E402
+from watermill_spark.message import with_metadata  # noqa: E402
 from watermill_spark.session import get_spark  # noqa: E402
 from watermill_spark.sources.parquet import ParquetPubSub  # noqa: E402
 
@@ -390,10 +391,7 @@ def scenario_soak(spark, sf_dir, work, n_msgs=150_000):
         )
         r.add_handler(
             "stamp", "tin", ps, "t_stamp", ps,
-            lambda df: df.withColumn(
-                "metadata",
-                F.map_concat(F.col("metadata"), F.create_map(F.lit("s"), F.lit("1"))),
-            ),
+            lambda df: with_metadata(df, s="1"),
         )
         r.add_handler("pass", "tin", ps, "t_pass", ps, lambda df: df)
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec, hexval8, sql_hexval8
 from .registry import load, register
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 
 
 @register(
@@ -181,12 +182,8 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_cvar_expected_shortfall",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     ret AS (
       SELECT d, rev / lag(rev) OVER (ORDER BY d) - 1.0 AS r
       FROM daily
@@ -221,10 +218,7 @@ def q_cvar_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows is a single-partition window by construction (size fixed by the
     calendar, not the corpus — same stance as q_mann_kendall). §2.B [NS].
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    )
+    daily = daily_order_revenue(spark, sf_dir)
     ret = daily.select(
         "d", (F.col("rev") / F.lag("rev").over(Window.orderBy("d")) - 1.0).alias("r")
     ).filter(F.col("r").isNotNull())

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec, hexval, sql_hexval
 from .registry import load, register
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 
 # 1995 daily revenue with a time index, plus the closed-form OLS fit
 # (rev ~ a + b*t) from exact decimal moment sums.
@@ -288,12 +289,8 @@ def q_chi2_hash_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_omega_ratio",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     ret AS (
       SELECT rev / lag(rev) OVER (ORDER BY d) - 1.0 AS r FROM daily
     )
@@ -327,10 +324,7 @@ def q_omega_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: daily rollup map-side combines; one lag window over
     calendar-bounded rows; final agg is 1 row. §2.B [NS].
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    )
+    daily = daily_order_revenue(spark, sf_dir)
     ret = daily.select(
         (F.col("rev") / F.lag("rev").over(Window.orderBy("d")) - 1.0).alias("r")
     ).filter(F.col("r").isNotNull())

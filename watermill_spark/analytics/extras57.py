@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 
 
 def _fold(term: Column, order_cols: list[str], alias: str) -> Column:
@@ -233,12 +234,8 @@ def q_cohen_kappa_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_page_hinkley",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     idx AS (
       SELECT d, rev,
              CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t,
@@ -308,10 +305,7 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     production — state is (count, sum, running max)). §2.B streaming
     surface [NS].
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    )
+    daily = daily_order_revenue(spark, sf_dir)
     # checkpointed once (r6): the PH fold, sigma, and the alarm/total
     # legs each re-derived the fact rollup (6 orders scans in the plan);
     # the calendar-bounded day grid materializes once

@@ -14,19 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .det import bcount, dec
+from .det import bcount
 from .registry import load, register
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 from .extras9 import NATION_TRADE_EDGES_SQL, nation_trade_edges
 
 
 @register(
     "q_forecast_accuracy",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     lagd AS (
       SELECT d, rev,
              LAG(rev, 1) OVER (ORDER BY d) AS prev1,
@@ -77,10 +74,7 @@ def q_forecast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lag window over the calendar-bounded grid, 1-row metrics.
     §2.B [NS].
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    )
+    daily = daily_order_revenue(spark, sf_dir)
     w = Window.orderBy("d")
     lagd = daily.select(
         "rev",

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 
 _SEATS = 100
 
@@ -219,12 +220,8 @@ def q_dhondt_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_var_backtest",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     ret AS (
       SELECT d, rev / lag(rev) OVER (ORDER BY d) - 1.0 AS r FROM daily
     ),
@@ -281,13 +278,10 @@ def q_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: calendar-bounded daily grid, two ordered windows, 1-row
     verdict. §2.B [NS].
     """
-    o = load(spark, sf_dir, "orders")
     # checkpointed once (r6): the VaR cutoff and the exceedance flags
     # both re-derived the rollup (2 orders scans in the plan); the
     # calendar-bounded day grid materializes once
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    ).localCheckpoint(eager=True)
+    daily = daily_order_revenue(spark, sf_dir).localCheckpoint(eager=True)
     ret = daily.select(
         "d", (F.col("rev") / F.lag("rev").over(Window.orderBy("d")) - 1.0).alias("r")
     ).filter(F.col("r").isNotNull())

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 
 
 @register(
@@ -185,12 +186,8 @@ def q_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_forecast_interval_coverage",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     resid AS (
       SELECT d, rev - LAG(rev) OVER (ORDER BY d) AS e,
              CAST(year(d) AS BIGINT) AS yr
@@ -242,10 +239,7 @@ def q_forecast_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lag window, one train-period sort, one 1-row coverage
     count. §2.B [NS].
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    )
+    daily = daily_order_revenue(spark, sf_dir)
     resid = daily.select(
         "d",
         (F.col("rev") - F.lag("rev").over(Window.orderBy("d"))).alias("e"),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .det import bcount, dec
 from .registry import load, register
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 
 
 @register(
@@ -209,12 +210,8 @@ def q_topsis_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_arch_effect",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     ret AS (
       SELECT d, rev / LAG(rev) OVER (ORDER BY d) - 1.0 AS r FROM daily
     ),
@@ -267,10 +264,7 @@ def q_arch_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two lag windows over the calendar-bounded grid → 1 row.
     §2.B [NS].
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    )
+    daily = daily_order_revenue(spark, sf_dir)
     w = Window.orderBy("d")
     ret = daily.select(
         "d", (F.col("rev") / F.lag("rev").over(w) - 1.0).alias("r")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from .det import bcount, dec
 from .distrib import grid_rank_of, two_level_order
 from .registry import load, register, spread
+from .relations import DAILY_ORDER_REVENUE_SQL, daily_order_revenue
 
 
 @register(
@@ -209,12 +210,8 @@ def q_cohort_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_peak_over_threshold",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(o_orderdate AS DATE) AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({DAILY_ORDER_REVENUE_SQL}),
     thr AS (
       SELECT rev AS u FROM (
         SELECT rev, ROW_NUMBER() OVER (ORDER BY rev, d) AS rn,
@@ -262,10 +259,7 @@ def q_peak_over_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one daily rollup + one sort for the threshold + one excess
     moment pass. §2.B [NS].
     """
-    o = load(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(dec("o_totalprice")).cast("double").alias("rev")
-    )
+    daily = daily_order_revenue(spark, sf_dir)
     # checkpointed once (r6): the threshold rank, exceedance join and
     # day count each re-derived the fact rollup (3 orders scans in the
     # plan); the calendar-bounded day grid materializes once

@@ -30,6 +30,22 @@ def daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Daily orders revenue: one row per order date, rev = exact sum of
+# o_totalprice.
+DAILY_ORDER_REVENUE_SQL = """
+      SELECT CAST(o_orderdate AS DATE) AS d,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
+      FROM orders GROUP BY 1"""
+
+
+def daily_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``DAILY_ORDER_REVENUE_SQL``'s twin: (d date, rev double)."""
+    o = load(spark, sf_dir, "orders")
+    return o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
+        F.sum(dec("o_totalprice")).cast("double").alias("rev")
+    )
+
+
 # Daily event value grid: x = click value, y = purchase value per day,
 # over events with a value.
 DAILY_CLICK_PURCHASE_SQL = """

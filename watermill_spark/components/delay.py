@@ -33,10 +33,7 @@ def delay_for(df: DataFrame, seconds: int) -> DataFrame:
         F.to_timestamp(F.from_unixtime(F.unix_timestamp(F.current_timestamp()) + seconds)),
         _RFC3339,
     )
-    return with_metadata(df, **{DELAYED_FOR: f"{seconds}s"}).withColumn(
-        "metadata",
-        F.map_concat(F.col("metadata"), F.create_map(F.lit(DELAYED_UNTIL), until)),
-    )
+    return with_metadata(df, **{DELAYED_FOR: f"{seconds}s", DELAYED_UNTIL: until})
 
 
 def delay_until(df: DataFrame, when: _dt.datetime) -> DataFrame:

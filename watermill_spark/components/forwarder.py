@@ -86,18 +86,23 @@ class Forwarder:
     def run_once(self) -> None:
         """One bounded pass: unwrap everything on the forwarder topic and
         publish each message to its embedded destination topic."""
-        unwrapped = envelope_unwrap(
-            self.subscriber.subscribe(self.forwarder_topic)
-        ).localCheckpoint(eager=True)
-        # per-row routing: enumerate the (small) set of destinations, one
-        # filtered publish each; Kafka transports route natively instead
-        if hasattr(self.publisher, "publish_routed"):
-            self.publisher.publish_routed(unwrapped)  # type: ignore[attr-defined]
-            return
-        topics = [r["topic"] for r in unwrapped.select("topic").distinct().collect()]
-        for t in topics:
-            if t is None:
-                continue  # malformed envelope: no destination (forwarder.go:125-131 nacks; we skip+log)
-            self.publisher.publish(
-                t, unwrapped.filter(F.col("topic") == t).select(*MESSAGE_COLUMNS)
-            )
+        publish_by_topic(
+            self.publisher,
+            envelope_unwrap(self.subscriber.subscribe(self.forwarder_topic)),
+        )
+
+
+def publish_by_topic(publisher: PubSub, df: DataFrame) -> None:
+    """Publish each message to the topic in its `topic` column. Rows with a
+    NULL topic are dropped (a malformed envelope or an unstamped requeue:
+    `forwarder.go:125-131` nacks; we skip). Transports with
+    `publish_routed` (Kafka) route per row in one write; others get one
+    filtered publish per distinct topic over a snapshot of `df` (the topic
+    list is small even when the data is not)."""
+    routed = df.filter(F.col("topic").isNotNull()).select(*MESSAGE_COLUMNS)
+    if hasattr(publisher, "publish_routed"):
+        publisher.publish_routed(routed)  # type: ignore[attr-defined]
+        return
+    routed = routed.localCheckpoint(eager=True)
+    for r in routed.select("topic").distinct().collect():
+        publisher.publish(r["topic"], routed.filter(F.col("topic") == r["topic"]))

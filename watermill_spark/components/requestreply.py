@@ -26,7 +26,7 @@ import uuid as _uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from watermill_spark.message import with_metadata
+from watermill_spark.message import metadata_set, with_metadata
 from watermill_spark.sources.base import PubSub
 from watermill_spark.streaming.router import ERROR_COL, HandlerFn
 
@@ -66,16 +66,10 @@ def replying(handler: HandlerFn, publisher: PubSub, reply_topic: str) -> Handler
         err_str = F.col(ERROR_COL) if ERROR_COL in out.columns else F.lit(None)
         notification = out.withColumn(
             "metadata",
-            F.map_concat(
-                F.coalesce(F.col("metadata"), F.create_map()),
-                F.when(
-                    has_err,
-                    F.create_map(
-                        F.lit(REPLY_HAS_ERROR), F.lit("1"),
-                        F.lit(REPLY_ERROR), err_str,
-                    ),
-                ).otherwise(F.create_map(F.lit(REPLY_HAS_ERROR), F.lit("0"))),
-            ),
+            F.when(
+                has_err,
+                metadata_set(**{REPLY_HAS_ERROR: "1", REPLY_ERROR: err_str}),
+            ).otherwise(metadata_set(**{REPLY_HAS_ERROR: "0"})),
         )
         publisher.publish(reply_topic, notification)
         return out

@@ -15,13 +15,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from watermill_spark.message import MESSAGE_COLUMNS
-from watermill_spark.sources.base import PubSub
-from watermill_spark.streaming.middleware import (
+from watermill_spark.message import (
+    MESSAGE_COLUMNS,
     POISONED_TOPIC,
     REQUEUER_RETRIES,
+    metadata_get,
+    with_metadata,
 )
+from watermill_spark.sources.base import PubSub
+
 from .delay import delay_for
+from .forwarder import publish_by_topic
 
 
 class Requeuer:
@@ -43,29 +47,11 @@ class Requeuer:
 
     def run_once(self) -> None:
         df = self.subscriber.subscribe(self.requeue_topic)
-        meta = F.coalesce(F.col("metadata"), F.create_map())
-        retries = F.coalesce(F.element_at(meta, REQUEUER_RETRIES).cast("int"), F.lit(0)) + 1
-        df = df.withColumn(
-            "metadata",
-            F.map_concat(
-                meta,
-                F.create_map(F.lit(REQUEUER_RETRIES), retries.cast("string")),
-            ),
-        )
+        retries = F.coalesce(metadata_get(REQUEUER_RETRIES).cast("int"), F.lit(0)) + 1
+        df = with_metadata(df, **{REQUEUER_RETRIES: retries})
         if self.delay_sec:
             df = delay_for(df, self.delay_sec)
-        # snapshot: the per-destination publish loop re-reads df; blocks are
-        # GC-released after the pass (no CacheManager entry left behind)
-        df = df.localCheckpoint(eager=True)
         if self.destination_topic is not None:
             self.publisher.publish(self.destination_topic, df.select(*MESSAGE_COLUMNS))
             return
-        dest = F.element_at(F.col("metadata"), POISONED_TOPIC)
-        routed = df.withColumn("topic", dest)
-        topics = [r["topic"] for r in routed.select("topic").distinct().collect()]
-        for t in topics:
-            if t is None:
-                continue
-            self.publisher.publish(
-                t, routed.filter(F.col("topic") == t).select(*MESSAGE_COLUMNS)
-            )
+        publish_by_topic(self.publisher, df.withColumn("topic", metadata_get(POISONED_TOPIC)))

@@ -10,6 +10,13 @@ deliberately congruent with Spark's Kafka source schema
 not a conversion. Ack/Nack do not exist per-row: delivery state is carried by
 micro-batch checkpoint commits (batch-granular ack; replay = nack), which
 preserves the at-least-once contract (`docs/content/docs/pub-sub.md:45-52`).
+
+Metadata writes: this module is the one place that builds a message's
+metadata map. A Set overwrites: the key is dropped from the existing map
+(map_filter) before the new entry is appended (map_concat), so no map is
+ever built with a repeated key. Stamps are therefore correct under Spark's
+default map-key dedup policy (EXCEPTION), and no session setting is read or
+written for them.
 """
 
 from __future__ import annotations
@@ -118,23 +125,59 @@ def ensure_message_df(df: DataFrame) -> DataFrame:
     return out.select(*MESSAGE_COLUMNS)
 
 
-def with_metadata(df: DataFrame, **kv: str) -> DataFrame:
-    """Set metadata keys on every message (Metadata.Set analog,
-    `message/metadata.go:13-18`). Existing keys are overwritten —
-    map_concat keeps the last occurrence under spark.sql.mapKeyDedupPolicy
-    LAST_WIN; we set it explicitly for determinism."""
-    if not kv:
-        return df
-    pairs: list = []
-    for k, v in kv.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v) if not isinstance(v, F.Column) else v)
-    sess = df.sparkSession
-    sess.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    return df.withColumn(
-        "metadata",
-        F.map_concat(F.coalesce(F.col("metadata"), F.create_map()), F.create_map(*pairs)),
+_META_TYPE = MapType(StringType(), StringType())
+
+
+def _metadata() -> F.Column:
+    return F.coalesce(F.col("metadata"), F.create_map().cast(_META_TYPE))
+
+
+def _set(meta: F.Column, entries: list[tuple[F.Column, F.Column]]) -> F.Column:
+    """`meta` with each (key, value) entry set: the keys are first dropped
+    with map_filter, then the entries appended."""
+    keys = [k for k, _ in entries]
+    kept = F.map_filter(meta, lambda k, _v: ~k.isin(*keys))
+    return F.map_concat(
+        kept, F.create_map(*[c for k, v in entries for c in (k, v.cast("string"))])
     )
+
+
+def metadata_set(**kv: str | F.Column) -> F.Column:
+    """The `metadata` column with `kv` set (Metadata.Set analog,
+    `message/metadata.go:13-18`): a key already present is overwritten and
+    a NULL map counts as empty. For a stamp on some rows only:
+    ``F.when(cond, metadata_set(...)).otherwise(F.col("metadata"))``."""
+    return _set(_metadata(), [(F.lit(k), F.lit(v)) for k, v in kv.items()])
+
+
+def metadata_setdefault(key: str, value: str | F.Column) -> F.Column:
+    """The `metadata` column with `key` added where it is absent; a present
+    value is kept. No map_filter runs, so it is the cheaper stamp for
+    every-row adds."""
+    meta = _metadata()
+    return F.map_concat(
+        meta,
+        F.when(
+            F.element_at(meta, key).isNull(), F.create_map(F.lit(key), F.lit(value))
+        ).otherwise(F.create_map()),
+    )
+
+
+def metadata_from_headers(headers: F.Column) -> F.Column:
+    """Metadata map from an array of (key, value binary) structs, Kafka's
+    ``headers`` column. Each header is a Set in order, so the last header
+    of a repeated key wins."""
+    return F.aggregate(
+        F.coalesce(headers, F.array()),
+        F.create_map().cast(_META_TYPE),
+        lambda meta, h: _set(meta, [(h["key"], h["value"])]),
+    )
+
+
+def with_metadata(df: DataFrame, **kv: str | F.Column) -> DataFrame:
+    """Set metadata keys on every message (Metadata.Set analog,
+    `message/metadata.go:13-18`); see `metadata_set`."""
+    return df.withColumn("metadata", metadata_set(**kv)) if kv else df
 
 
 def metadata_get(key: str) -> F.Column:

@@ -17,7 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import MapType, StringType
+
+from watermill_spark.message import metadata_from_headers
 
 from .base import PubSub
 
@@ -63,14 +64,7 @@ class KafkaPubSub(PubSub):
         )
 
     def _from_kafka_shape(self, df: DataFrame) -> DataFrame:
-        meta = F.map_from_entries(
-            F.transform(
-                F.coalesce(F.col("headers"), F.array()),
-                lambda h: F.struct(
-                    h["key"].alias("key"), h["value"].cast("string").alias("value")
-                ),
-            )
-        ).cast(MapType(StringType(), StringType()))
+        meta = metadata_from_headers(F.col("headers"))
         return df.select(
             F.coalesce(
                 F.element_at(meta, "uuid"), F.col("key").cast("string")

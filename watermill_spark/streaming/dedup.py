@@ -79,6 +79,7 @@ from watermill_spark.analytics.dedup import (
     _banded,
     minhash_signatures,
 )
+from watermill_spark.message import with_metadata
 from watermill_spark.streaming.exactly_once import IdempotentBatchSink
 
 _LOG = logging.getLogger(__name__)
@@ -453,13 +454,9 @@ class _RegistryFilter:
                 .unionByName(unkeyed)
             )
             dup = (
-                keyed.join(rejected, "doc_id", "inner")
-                .withColumn(
-                    "metadata",
-                    F.map_concat(
-                        F.coalesce("metadata", F.create_map()),
-                        F.create_map(F.lit(DUP_OF), F.col("dup_of").cast("string")),
-                    ),
+                with_metadata(
+                    keyed.join(rejected, "doc_id", "inner"),
+                    **{DUP_OF: F.col("dup_of")},
                 )
                 .drop("doc_id", "dup_of")
             )

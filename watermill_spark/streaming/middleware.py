@@ -19,7 +19,12 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from watermill_spark.message import with_metadata
+from watermill_spark.message import (
+    metadata_get,
+    metadata_set,
+    metadata_setdefault,
+    with_metadata,
+)
 from watermill_spark.sources.base import PubSub
 
 from .router import CTX_HANDLER, CTX_SUB_TOPIC, ERROR_COL, HandlerFn, Middleware
@@ -114,16 +119,13 @@ def poison_queue(publisher: PubSub, topic: str) -> Middleware:
             out = fn(df).localCheckpoint(eager=True)
             errs = out.filter(F.col(ERROR_COL).isNotNull())
             if errs.limit(1).count():
-                stamped = errs.withColumn(
-                    "metadata",
-                    F.map_concat(
-                        F.coalesce(F.col("metadata"), F.create_map()),
-                        F.create_map(
-                            F.lit(REASON_POISONED), F.col(ERROR_COL),
-                            F.lit(POISONED_TOPIC), F.col(CTX_SUB_TOPIC),
-                            F.lit(POISONED_HANDLER), F.col(CTX_HANDLER),
-                        ),
-                    ),
+                stamped = with_metadata(
+                    errs,
+                    **{
+                        REASON_POISONED: F.col(ERROR_COL),
+                        POISONED_TOPIC: F.col(CTX_SUB_TOPIC),
+                        POISONED_HANDLER: F.col(CTX_HANDLER),
+                    },
                 )
                 publisher.publish(topic, stamped)
             return out.filter(F.col(ERROR_COL).isNull())
@@ -247,18 +249,14 @@ def poison_queue_with_filter(
                     seen.distinct(), "_dlq_key", "left_anti"
                 ).localCheckpoint(eager=True)
             if fresh.limit(1).count():
-                stamped = fresh.drop("_dlq_key").withColumn(
-                    "metadata",
-                    F.map_concat(
-                        F.coalesce(F.col("metadata"), F.create_map()),
-                        F.create_map(
-                            F.lit(REASON_POISONED), err_col,
-                            F.lit(POISONED_TOPIC), F.col(CTX_SUB_TOPIC),
-                            F.lit(POISONED_HANDLER), F.col(CTX_HANDLER),
-                            F.lit(POISONED_AT),
-                            F.date_format(F.current_timestamp(), _RFC3339),
-                        ),
-                    ),
+                stamped = with_metadata(
+                    fresh.drop("_dlq_key"),
+                    **{
+                        REASON_POISONED: err_col,
+                        POISONED_TOPIC: F.col(CTX_SUB_TOPIC),
+                        POISONED_HANDLER: F.col(CTX_HANDLER),
+                        POISONED_AT: F.date_format(F.current_timestamp(), _RFC3339),
+                    },
                 )
                 publisher.publish(topic, stamped)
                 if not dlq_readable:
@@ -455,14 +453,7 @@ def correlation_id(fn: HandlerFn) -> HandlerFn:
 
     def wrapped(df: DataFrame) -> DataFrame:
         seeded = df.withColumn(
-            "metadata",
-            F.map_concat(
-                F.coalesce(F.col("metadata"), F.create_map()),
-                F.when(
-                    F.element_at(F.coalesce(F.col("metadata"), F.create_map()), CORRELATION_ID).isNull(),
-                    F.create_map(F.lit(CORRELATION_ID), F.expr("uuid()")),
-                ).otherwise(F.create_map()),
-            ),
+            "metadata", metadata_setdefault(CORRELATION_ID, F.expr("uuid()"))
         )
         return fn(seeded)
 
@@ -509,30 +500,24 @@ def delay_on_error(base_sec: int = 10, multiplier: int = 2, max_sec: int = 600) 
     def mw(fn: HandlerFn) -> HandlerFn:
         def wrapped(df: DataFrame) -> DataFrame:
             out = fn(df)
-            meta = F.coalesce(F.col("metadata"), F.create_map())
-            retries = F.coalesce(
-                F.element_at(meta, REQUEUER_RETRIES).cast("int"), F.lit(0)
-            )
+            retries = F.coalesce(metadata_get(REQUEUER_RETRIES).cast("int"), F.lit(0))
             delay_sec = F.least(
                 F.lit(base_sec) * F.pow(F.lit(multiplier), retries), F.lit(max_sec)
             ).cast("long")
             delayed_until = F.to_timestamp(
                 F.from_unixtime(F.unix_timestamp(F.current_timestamp()) + delay_sec)
             )
+            stamp = metadata_set(
+                **{
+                    DELAYED_UNTIL: F.date_format(delayed_until, _RFC3339),
+                    DELAYED_FOR: F.concat(delay_sec.cast("string"), F.lit("s")),
+                }
+            )
             return out.withColumn(
                 "metadata",
-                F.when(
-                    F.col(ERROR_COL).isNotNull(),
-                    F.map_concat(
-                        meta,
-                        F.create_map(
-                            F.lit(DELAYED_UNTIL),
-                            F.date_format(delayed_until, "yyyy-MM-dd'T'HH:mm:ssXXX"),
-                            F.lit(DELAYED_FOR),
-                            F.concat(delay_sec.cast("string"), F.lit("s")),
-                        ),
-                    ),
-                ).otherwise(F.col("metadata")),
+                F.when(F.col(ERROR_COL).isNotNull(), stamp).otherwise(
+                    F.col("metadata")
+                ),
             )
 
         return wrapped

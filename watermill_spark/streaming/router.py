@@ -230,27 +230,28 @@ class Router:
         )
 
     def _process_batch(self, h: _Handler, batch_df: DataFrame) -> None:
-        # metadata stamping via map_concat needs last-wins on key collision
-        batch_df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         out = self._onion(h)(self._enrich(batch_df, h))
         cached = None
         try:
             if ERROR_COL in out.columns:
-                # cache: the error split inspects `out` twice; without it
-                # the handler lineage would recompute (and chaos middleware
-                # would re-roll its dice). Unpersisted in the finally —
-                # publish is eager, so nothing references the cache after
-                # this batch, and a long-running stream must not accumulate
-                # one CacheManager entry per micro-batch.
-                cached = out = out.cache()
-                errs = out.filter(F.col(ERROR_COL).isNotNull())
-                n_err = errs.count()
-                if n_err and self.config.fail_on_unhandled_errors:
-                    examples = [r[ERROR_COL] for r in errs.select(ERROR_COL).head(3)]
-                    raise RuntimeError(
-                        f"handler {h.name!r}: {n_err} unhandled message errors "
-                        f"(nack ⇒ replay). examples: {examples}"
-                    )
+                if self.config.fail_on_unhandled_errors:
+                    # cache: the error split inspects `out` twice; without
+                    # it the handler lineage would recompute (and chaos
+                    # middleware would re-roll its dice). Unpersisted in the
+                    # finally — publish is eager, so nothing references the
+                    # cache after this batch, and a long-running stream must
+                    # not accumulate one CacheManager entry per micro-batch.
+                    cached = out = out.cache()
+                    errs = out.filter(F.col(ERROR_COL).isNotNull())
+                    n_err = errs.count()
+                    if n_err:
+                        examples = [r[ERROR_COL] for r in errs.select(ERROR_COL).head(3)]
+                        raise RuntimeError(
+                            f"handler {h.name!r}: {n_err} unhandled message errors "
+                            f"(nack ⇒ replay). examples: {examples}"
+                        )
+                # lax mode drops error rows here uncounted, so its publish
+                # is the batch's one Spark job
                 out = out.filter(F.col(ERROR_COL).isNull())
             if h.publisher is not None and h.pub_topic is not None:
                 _, pub = self._endpoints(h)
